@@ -21,18 +21,6 @@ object Curation {
 
   import Relational.Q
 
-  /** Small-side cap (in grams) for the containment key's
-    * asymmetry-aware supplement above the banded volume switch: docs
-    * at or under this gram count get the full lossless index
-    * ([[PairJoins.smallSideCandidates]]), so a contained pair's
-    * recall is exact at ANY size ratio whenever its smaller side is
-    * this small. 256 bigrams ≈ a 258-token document — comfortably
-    * past the quote/boilerplate sizes the tiny-inside-huge signal
-    * targets, while keeping the supplement's predicted volume
-    * Σ dfS·df linear-ish (small docs contribute few grams each).
-    */
-  val SmallSideGrams: Int = 256
-
   // ------------------------------------------- benchmark decontamination
 
   /** Docs sharing ≥1 word-4-gram with the eval set (`doc_id % 20 = 0`
@@ -91,157 +79,12 @@ object Curation {
     * what Jaccard structurally cannot: a short document embedded in a
     * much longer one (quotes, boilerplate wrappers, excerpt pages).
     * `containment(A,B) = |A∩B| / min(|A|,|B|)` is 1.0 for a perfect
-    * quote even when Jaccard is ~|A|/|B| ≈ 0.
-    *
-    * Same inverted-index shape as [[Llm2.dedupNgramJaccard]]: explode
-    * distinct grams, self-join on the hashed 8-byte gram key
-    * (shuffle_hash — a 100 TB gram index never broadcasts), count
-    * shared hashes per packed-long pair, prefilter on the integer
-    * containment bound, then verify the few survivors exactly with
-    * `array_intersect` on the true gram arrays. Hash collisions can
-    * only INFLATE the counted overlap, so the prefilter admits every
-    * true pair; the verify restores exactness. Note there is NO
-    * length-ratio prune here — unlike Jaccard, a tiny-inside-huge pair
-    * is precisely the signal, so the size asymmetry must survive.
-    *
-    * Cost is Σ df² (measured 19 M pair rows at sf0.1 — uniform df,
-    * max 152, so a df-cap prunes nothing). The PPJoin-style prefix
-    * filter was implemented and A/B'd (ScratchPrefixFilter): on a
-    * uniform vocabulary like this one it LOSES (3.0 vs 5.4 s — the
-    * rarity-ranking machinery isn't repaid), on a planted Zipf
-    * vocabulary it wins 4–7× (41–74 vs 10.3 s, hot-gram df²
-    * explosion, identical outputs).
-    *
-    * Round 7 AUTOMATES the switch: a one-row df-profile probe picks
-    * the join shape per corpus. The discriminator is the hot-gram
-    * share `maxDf²/Σdf` — the pair rows the single hottest gram
-    * generates per gram row of input. Measured (ScratchDfProfile):
-    * 0.09 on documents sf0.1 and 0.04 on the uniform fixture (both
-    * corpora where shared-count wins the A/B) vs 24.4 on the Zipf
-    * fixture (where prefix wins 4–7×) — three orders of magnitude
-    * of separation around the 1.0 threshold. Either path feeds the
-    * SAME exact verify, so the result is identical whichever shape
-    * runs (ScratchPrefixFilter asserts pair-set equality on both
-    * corpora); the probe's driver-side state is one row.
-    *
-    * EXACTNESS CONTRACT, by corpus (r15 ADVICE — surfaced here, the
-    * key's primary doc, not just the dispatch comment): below
-    * [[PairJoins.BandedPairVolume]] — every oracle-gate corpus — the
-    * key is EXACT at any size asymmetry (no ratio prune anywhere).
-    * ABOVE the volume switch the candidate front-end is
-    * MinHash-banded, whose per-pair collision probability DEGRADES
-    * with size ratio (a τ = 0.8-contained pair at ratio k has
-    * J = 0.8/(k + 0.2): P ≈ 1.0 at k ≤ 2 under 64 × 2 bands, 0.87 at
-    * k = 4, 0.71 at k = 5, worse beyond) — yet tiny-inside-huge is
-    * precisely this key's signal. Round 16 closes most of that gap
-    * with an ASYMMETRY-AWARE supplement: docs whose gram set is
-    * ≤ [[SmallSideGrams]] get the full lossless index
-    * ([[PairJoins.smallSideCandidates]] — its own volume probe gates
-    * it), so a contained pair is missed only when BOTH sides exceed
-    * [[SmallSideGrams]] grams AND the ratio is high enough to
-    * degrade banding — the one residual, seeded-probabilistic with
-    * the stated per-pair bound. Output is a verified subset in every
-    * branch (precision 1 by construction).
+    * quote even when Jaccard is ~|A|/|B| ≈ 0. The pipeline and its
+    * exactness contract are [[PairJoins]]'s, under
+    * [[PairJoins.Containment]].
     */
-  val dedupNgramContainment: Q = (s, dir) => {
-    val tau = 0.8 // integer form: 5·shared ≥ 4·min(|A|,|B|)
-    val grams = graft.functions.TextExpressions.wordShingles(col("text"), 2)
-    val d = table(s, dir, "documents")
-      .select(col("doc_id"), col("lang"), grams.as("grams"))
-      .filter(size(col("grams")) > 0)
-      .select(col("doc_id"), col("lang"), size(col("grams")).as("gsz"), col("grams"))
-    // session-shared inverted index (round 14): identical to the
-    // jaccard twin's relation — one SessionCache checkpoint serves
-    // both keys and the eager df probe (the per-key localCheckpoint
-    // this replaces was the r7 ADVICE fix; sharing subsumes it)
-    val inv = PairJoins.bigramInv(s, dir)
-    val dfreq = PairJoins.bigramDfreq(s, dir)
-    // Round 15: third dispatch branch (see [[Llm2.dedupNgramJaccard]]
-    // — same measured rationale): above [[PairJoins.BandedPairVolume]]
-    // on a uniform vocabulary the Σ df² join cannot run (sf1 DNF,
-    // BASELINE.md r14 scaling row) and the MinHash-banded front-end
-    // generates candidates for the SAME exact verify. Containment
-    // banding is 64 bands × 2 rows, NO size-ratio bound (tiny-inside-
-    // huge is the signal). Parameter reasoning, because containment
-    // is NOT what minhash natively approximates: a τ = 0.8-contained
-    // pair at size ratio k has Jaccard J = 0.8/(k + 0.2), so the
-    // collision curve P = 1−(1−J²)⁶⁴ reads ≈ 1.0 at k ≤ 2, 0.98 at
-    // k = 3, 0.87 at k = 4, 0.71 at k = 5, then degrades — while a
-    // 1-row band (whose curve stays high at low J) was MEASURED
-    // unusable here: at this corpus's background J ≈ 0.006 it admits
-    // ~13 % of ALL in-lang pairs (28.8 s vs 18.8 s exact at sf0.3 —
-    // slower than the join it replaces), where 2-row bands admit
-    // ~0.2 %. So the banded branch certifies recall for moderate
-    // asymmetry (ratio ≲ 4) and the gate SFs keep the exact branches;
-    // EXTREME tiny-inside-huge at 100 TB is the substring family's
-    // job ([[SubstringIndex]]/`dedup_substring_span`), whose index
-    // scales linearly and catches verbatim quotes at any ratio.
-    // Measured recall per corpus is pinned in the BASELINE.md r15 row.
-    val (hotShare, predVolume) = PairJoins.dfProfile(dfreq)
-    val candidates = if (hotShare <= 1.0 &&
-        predVolume > PairJoins.BandedPairVolume) {
-      val banded = PairJoins.bandedCandidates(d, nPerm = 128, bands = 64,
-        sizeRatio = None).select(col("a_id"), col("b_id"))
-      // Asymmetry-aware supplement (round 16, r15 ADVICE — see the
-      // contract paragraph above): small docs get the full lossless
-      // index so high-ratio contained pairs with a small small-side
-      // are found exactly; gated on ITS OWN predicted volume so a
-      // mostly-small corpus cannot reopen the Σ df² door banding
-      // just closed.
-      if (PairJoins.smallSideVolume(inv, dfreq, Curation.SmallSideGrams)
-          <= PairJoins.BandedPairVolume) {
-        banded.union(
-          PairJoins.smallSideCandidates(inv, Curation.SmallSideGrams,
-            num = 4, den = 5)).distinct()
-      } else banded
-    } else if (hotShare <= 1.0) {
-      // shared-count shape. The pair join emits BARE packed keys:
-      // Σ df² rows is the join's irreducible volume, so every byte on
-      // those rows is paid Σ df² times. Doc sizes re-attach AFTER the
-      // count from the tiny (doc_id, gsz) dimension via broadcast —
-      // the counted relation is pair-distinct (orders of magnitude
-      // smaller), and the integer containment bound prunes it before
-      // the verify.
-      val a = inv.select(col("gh"), col("doc_id").as("a_id"))
-      val b = inv.select(col("gh").as("b_gh"), col("doc_id").as("b_id"))
-        .hint("shuffle_hash")
-      val sizes = d.select(col("doc_id"), col("gsz"))
-      a.join(b, col("gh") === col("b_gh") && col("a_id") < col("b_id"))
-        .select(shiftleft(col("a_id").cast("long"), 32)
-          .bitwiseOR(col("b_id").cast("long")).as("pk"))
-        .groupBy(col("pk"))
-        .agg(count(lit(1)).as("shared_h"))
-        .select(shiftright(col("pk"), 32).cast("int").as("a_id"),
-          col("pk").bitwiseAND(lit(0xFFFFFFFFL)).cast("int").as("b_id"),
-          col("shared_h"))
-        .join(broadcast(sizes.select(col("doc_id").cast("int").as("a_id"),
-          col("gsz").as("a_sz"))), "a_id")
-        .join(broadcast(sizes.select(col("doc_id").cast("int").as("b_id"),
-          col("gsz").as("b_sz"))), "b_id")
-        .filter(lit(5) * col("shared_h") >= lit(4) * least(col("a_sz"), col("b_sz")))
-        .select(col("a_id"), col("b_id"))
-    } else {
-      // τ = 0.8 pigeonhole: a qualifying pair leaves the smaller doc
-      // fewer than ⌊gsz/5⌋+1 unshared grams; no size-ratio bound —
-      // tiny-inside-huge is exactly the containment signal
-      PairJoins.prefixCandidates(inv, dfreq, prefixDivisor = 5,
-        sizeRatio = None).select(col("a_id"), col("b_id"))
-    }
-    candidates
-      .join(d.select(col("doc_id").as("a_id"), col("lang"),
-        col("grams").as("a_grams"), col("gsz").as("a_sz")), "a_id")
-      .join(d.select(col("doc_id").as("b_id"), col("lang").as("b_lang"),
-        col("grams").as("b_grams"), col("gsz").as("b_sz")), "b_id")
-      // lang blocking rides the gram hash; re-check so a 64-bit
-      // collision cannot admit a cross-lang pair
-      .filter(col("lang") === col("b_lang"))
-      .withColumn("shared", size(array_intersect(col("a_grams"), col("b_grams"))))
-      .withColumn("containment",
-        col("shared").cast("double") / least(col("a_sz"), col("b_sz")).cast("double"))
-      .filter(col("containment") >= tau)
-      .select("lang", "a_id", "b_id", "containment")
-      .orderBy("lang", "a_id", "b_id")
-  }
+  val dedupNgramContainment: Q = (s, dir) =>
+    PairJoins.nearDupPairs(s, dir, PairJoins.Containment).orderBy("lang", "a_id", "b_id")
 
   // --------------------------------------------------- per-domain cap
 

@@ -531,9 +531,9 @@ object Graph {
     * and the same plan runs as a shuffle join — still no hash-agg
     * over the wedge stream) and only the 3·|triangles| surviving
     * rows reach the count agg. Two UNCONSTRAINED all-pairs variants
-    * were measured and rejected (ScratchJaccard, BASELINE.md r8):
-    * counting all wedge pairs hash-aggs ~20 M near-unique (a,b)
-    * keys at sf0.1 — 9–28 s of agg-table thrash (and a row-local
+    * were measured and rejected (BASELINE.md r8 graph_jaccard_neighbors
+    * shape A/B row): counting all wedge pairs hash-aggs ~20 M
+    * near-unique (a,b) keys at sf0.1 — 9–28 s of agg-table thrash (and a row-local
     * HOF pair explode is worse still: higher-order functions do not
     * whole-stage-codegen) vs 2.8 s end-to-end for this form; an
     * all-pairs top-k needs a similarity-join formulation, not a

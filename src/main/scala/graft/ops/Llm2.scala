@@ -165,260 +165,20 @@ object Llm2 {
 
   // --------------------------------------------------- n-gram Jaccard
 
-  /** Token-bigram Jaccard near-dup pairs within a language block —
-    * the exact (non-probabilistic) counterpart to MinHash; fully
-    * SQL-expressible so it carries an oracle.
-    *
-    * Shape: inverted-index set-similarity join with a HASHED gram key
-    * and an exact verify pass. Explode distinct grams → self-join on
-    * `xxhash64(lang, gram)` (one fixed-width long, not a string — the
-    * string-keyed variant's shuffle was ~4× heavier and dominated the
-    * runtime) → count shared hashes per (a,b) with a length-ratio
-    * prune (J ≥ τ ⇒ τ·|B| ≤ |A| ≤ |B|/τ) → keep pairs whose hashed
-    * count reaches the τ overlap bound → join the few survivors back
-    * to their full gram arrays and recompute |A∩B| with
-    * `array_intersect` (O(|A|+|B|) per pair, native). A 64-bit
-    * collision can only INFLATE the candidate count, so the prefilter
-    * has no false negatives and the verify step restores exactness.
-    *
-    * Pair-generation cost is Σ_g df(g)² over narrow rows, shuffled on
-    * the hash — never a doc×doc product. (A prefix-filtered
-    * AllPairs/PPJoin candidate scheme — Bayardo WWW'07, Xiao WWW'08 —
-    * was tried and is the right shape for open-vocabulary corpora
-    * where hot grams sort out of every prefix; on THIS corpus the
-    * vocabulary is so small/dense (4.6 k grams, 5 k docs, max df 152)
-    * that 57 % of all in-lang pairs share a prefix gram, and hauling
-    * full arrays to 1.4 M candidates cost more than counting the 9.4 M
-    * narrow hash-pair rows. At 100 TB with a realistic heavy-tailed
-    * vocabulary, layer the prefix filter on top of the hashed count
-    * join: both compose — prefix bounds which rows enter the index,
-    * the hash keeps them narrow.)
-    *
-    * DENSE-vocabulary 100 TB escape (round 14, MEASURED — BASELINE.md
-    * MinHash-front-end row; PROMOTED round 15 as the third dispatch
-    * branch below): on a uniform tiny vocabulary neither shape
-    * survives corpus growth — Σ df² is corpus-quadratic (containment
-    * DNF'd at 50 k docs on a 1.5·10⁹-row shuffle) and the prefix
-    * filter selects nothing (nothing is rare). The fix is a
-    * MinHash-LSH front-end feeding THIS key's exact verify.
-    *
-    * EXACTNESS CONTRACT, by corpus (r15 ADVICE — the bound consumers
-    * must know): below [[PairJoins.BandedPairVolume]] (every oracle
-    * gate corpus: sf0.01 ≈ 2·10⁵, sf0.1 ≈ 2·10⁷ vs the 10⁸ switch)
-    * the key is EXACT — candidates come from a lossless join and the
-    * verify is exact. Above the switch the result is a verified
-    * SUBSET (precision 1 by construction) whose recall is
-    * seeded-probabilistic with per-pair bound
-    * P[candidate | J = τ] = 1 − (1 − τ^r)^b = 0.990 at the 16 × 2
-    * parameters (raised from 12 × 2's 0.968, round 16) and → 1
-    * rapidly above τ; measured recall on the real corpora above the
-    * switch is 1.0000 (sf0.3, sf1 — ScratchNgramPromoted, BASELINE.md
-    * r15/r16 rows). The SURVEY §2 row carries the same bound.
+  /** Token-bigram Jaccard ≥ 0.5 near-dup pairs within a language
+    * block — the exact (non-probabilistic) counterpart to MinHash,
+    * fully SQL-expressible so it carries an oracle. The pipeline and
+    * its exactness contract are [[PairJoins]]'s, under
+    * [[PairJoins.Jaccard]].
     */
-  val dedupNgramJaccard: Q = (s, dir) => {
-    val tau = 0.5
-    val grams = graft.functions.TextExpressions.wordShingles(col("text"), 2)
-    // NOT materialized: unlike dedup_simhash's banded relation, the
-    // gram arrays are wide — serializing them to the block store
-    // measured slower than re-running the map-only tokenize per
-    // consumer (2.74 vs 2.58 s same-JVM A/B at sf0.1)
-    val d = table(s, dir, "documents")
-      .select(col("doc_id"), col("lang"), grams.as("grams"))
-      .filter(size(col("grams")) > 0)
-      .select(col("doc_id"), col("lang"), size(col("grams")).as("gsz"), col("grams"))
-    // session-shared inverted index (round 14): the containment twin
-    // builds the IDENTICAL narrow relation — one SessionCache
-    // checkpoint serves both (and the eager df probe), replacing the
-    // per-key localCheckpoint that answered the r7 ADVICE
-    val inv = PairJoins.bigramInv(s, dir)
-    // Adaptive pair-join shape (round 7, same probe as
-    // [[Curation.dedupNgramContainment]]): the hot-gram share
-    // maxDf²/Σdf decides between the shared-count join (wins on
-    // uniform vocabularies — measured, BASELINE.md r6) and a
-    // PPJoin prefix filter (wins 4–7× under a Zipf hot tail). For
-    // Jaccard ≥ τ with the size-ratio bound τ·|B| ≤ |A|, the smaller
-    // doc's unshared grams number ≤ |A|·(1−τ)/(1+τ) = |A|/3 at
-    // τ = 0.5, so indexing each doc's ⌊gsz/3⌋+1 RAREST grams
-    // guarantees every true pair collides inside a prefix; both
-    // shapes feed the same exact verify, so results are identical.
-    val dfreq = PairJoins.bigramDfreq(s, dir)
-    // Round 15: the measured dense-vocabulary escape is now the THIRD
-    // dispatch branch (r14 verdict item 2 / §8.r15 item 3): when the
-    // predicted shared-count volume Σ df² crosses
-    // [[PairJoins.BandedPairVolume]] on a uniform vocabulary (where
-    // the prefix filter selects nothing), the MinHash-banded
-    // front-end generates candidates instead — 12 bands × 2 rows,
-    // P[candidate | J = τ] = 0.968, measured recall 1.0000 at
-    // sf0.1/sf0.3/sf1 with ~500× less pair traffic (BASELINE.md r14
-    // row) — and the SAME exact verify below restores precision 1.
-    // The oracle-gate corpora sit 1–2 orders under the switch, so
-    // this key stays hash-exact where the contract demands it and
-    // seeded-probabilistic only where the exact join cannot run.
-    val (hotShare, predVolume) = PairJoins.dfProfile(dfreq)
-    // Round 20 (guide §2.3 — narrower agg state on the hottest
-    // structure): downstream only ever uses a_sz + b_sz (the jaccard
-    // denominator is szsum − shared), so the gate branch's pair
-    // hash-agg now carries the BARE packed key and a count — sizes
-    // stay on the JOIN rows (the ratio bound needs them) but are
-    // dropped before the agg and re-attached to the pair-distinct
-    // counted relation via two broadcast joins of the tiny
-    // (doc_id, gsz) dimension, the shape the containment twin already
-    // ships. Isolated 32c REPS=3 ladder: 2.82/3.26 s (count+2 maxes,
-    // r19) → 2.44/2.58 (count+max szsum) → 2.21/2.06 (bare count +
-    // re-attach). Oracle hash-gated sf0.01/sf0.1 at each step.
-    val counted = if (hotShare > 1.0) {
-      // τ = 0.5 pigeonhole with the size-ratio bound 2·min ≥ max:
-      // the smaller doc's unshared grams number ≤ gsz·(1−τ)/(1+τ)
-      // = gsz/3
-      PairJoins.prefixCandidates(inv, dfreq, prefixDivisor = 3,
-        sizeRatio = Some(2))
-        .select(col("a_id"), col("b_id"), (col("a_sz") + col("b_sz")).as("szsum"))
-    } else if (predVolume > PairJoins.BandedPairVolume) {
-      // 16 bands × 2 rows (round 16, r15 ADVICE): boundary recall
-      // P[candidate | J = τ = 0.5] = 1 − (1 − 0.25)¹⁶ = 0.990 (was
-      // 0.968 at 12×2) for +8 minhashes/doc; measured recall on the
-      // real corpora stays 1.0000 (ScratchNgramPromoted r16 rerun)
-      PairJoins.bandedCandidates(d, nPerm = 32, bands = 16, sizeRatio = Some(2))
-        .select(col("a_id"), col("b_id"), (col("a_sz") + col("b_sz")).as("szsum"))
-    } else {
-      val a = inv.select(col("gh"), col("doc_id").as("a_id"), col("gsz").as("a_sz"))
-      // shuffle_hash, not broadcast: partitioning both sides on the gram
-      // hash gives each task a small local map (measured 1.8× faster
-      // than probing one big broadcast map at sf0.1), and a 100 TB gram
-      // index could never broadcast anyway — this hint IS the scale plan.
-      val b = inv.select(col("gh").as("b_gh"), col("doc_id").as("b_id"),
-        col("gsz").as("b_sz")).hint("shuffle_hash")
-      // Integer forms of the τ=0.5 bounds (no per-row double casts):
-      // τ·|B| ≤ |A| ⟺ 2·|A| ≥ |B|;  J ≥ τ ⟺ shared·(1+τ) ≥ τ·(|A|+|B|)
-      // ⟺ 3·shared ≥ |A|+|B|. The pair key is packed into ONE long —
-      // the partial-aggregation hash map over the 2.6 M distinct pairs
-      // (sf0.1) is the hottest structure in the query, and a single-long
-      // key measured ~30 % faster than a 4-column row key. Packing
-      // assumes non-negative doc ids < 2³²; corpora with wider ids group
-      // by (a_id, b_id) instead — same plan, slightly heavier map.
-      a.join(b,
-          col("gh") === col("b_gh") && col("a_id") < col("b_id") &&
-          lit(2) * col("a_sz") >= col("b_sz") &&
-          lit(2) * col("b_sz") >= col("a_sz"))
-        .select(shiftleft(col("a_id").cast("long"), 32)
-          .bitwiseOR(col("b_id").cast("long")).as("pk"))
-        .groupBy(col("pk"))
-        .agg(count(lit(1)).as("shared_h"))
-        .select(shiftright(col("pk"), 32).cast("int").as("a_id"),
-          col("pk").bitwiseAND(lit(0xFFFFFFFFL)).cast("int").as("b_id"),
-          col("shared_h"))
-        .join(broadcast(d.select(col("doc_id").cast("int").as("a_id"),
-          col("gsz").as("a_sz"))), "a_id")
-        .join(broadcast(d.select(col("doc_id").cast("int").as("b_id"),
-          col("gsz").as("b_sz"))), "b_id")
-        .filter(lit(3) * col("shared_h") >= col("a_sz") + col("b_sz"))
-        .select(col("a_id"), col("b_id"),
-          (col("a_sz") + col("b_sz")).as("szsum"))
-    }
-    counted
-      .join(d.select(col("doc_id").as("a_id"), col("lang"),
-        col("grams").as("a_grams")), "a_id")
-      .join(d.select(col("doc_id").as("b_id"), col("lang").as("b_lang"),
-        col("grams").as("b_grams")), "b_id")
-      // lang blocking is carried by xxhash64(lang, gram); re-check it
-      // here so even a 64-bit collision cannot admit a cross-lang pair
-      .filter(col("lang") === col("b_lang"))
-      .withColumn("shared", size(array_intersect(col("a_grams"), col("b_grams"))))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("szsum") - col("shared")).cast("double"))
-      .filter(col("jaccard") >= tau)
-      .select("lang", "a_id", "b_id", "jaccard")
-      .orderBy("lang", "a_id", "b_id")
-  }
+  val dedupNgramJaccard: Q = (s, dir) =>
+    PairJoins.nearDupPairs(s, dir, PairJoins.Jaccard).orderBy("lang", "a_id", "b_id")
 
-  /** Exact Jaccard ≥ τ near-dup pairs over an arbitrary documents
-    * frame — the shared-count join + exact verify of
-    * [[dedupNgramJaccard]]'s gate branch, factored over a frame
-    * (round 16) for [[CurationPipeline]]'s survivor-set dedup stage,
-    * where the pair semantics must hold on the FILTERED corpus (a
-    * near-dup whose canonical copy died upstream must still dedup
-    * against the surviving copies, so pairs cannot be precomputed on
-    * the raw corpus). Groups on the (a_id, b_id) pair directly
-    * rather than the packed-long key — the composite makes no
-    * id-width assumption; the registry key keeps the measured-faster
-    * packed form. VOLUME-DISPATCHED like the registry key (round 16:
-    * the survivor set at 100 TB carries the same dense-vocabulary
-    * Σ df² exposure as the raw corpus — the composite must not DNF
-    * where the per-key form escapes): the same eager (hot-share,
-    * pair-volume) probe picks prefix-filter / banded / shared-count
-    * candidate generation, every branch feeding the same exact
-    * verify. The composite's own spec pins pair-set equality against
-    * the registry key on the unfiltered corpus, so the two
-    * constructions cannot drift.
-    */
-  private[graft] def jaccardPairsOf(docs: org.apache.spark.sql.DataFrame,
-      tau: Double = 0.5): org.apache.spark.sql.DataFrame = {
-    val grams = graft.functions.TextExpressions.wordShingles(col("text"), 2)
-    val d = docs
-      .select(col("doc_id"), col("lang"), grams.as("grams"))
-      .filter(size(col("grams")) > 0)
-      .select(col("doc_id"), col("lang"), size(col("grams")).as("gsz"), col("grams"))
-    // round 19 exchange-lens A/B, measured NEGATIVE and reverted
-    // (guide §1.2): checkpointing this narrow inverted index for its
-    // three consumers (the eager df probe + both join sides) read
-    // composite stages 4/5 at 3.94/4.29 s vs 3.21/3.07 s lazy —
-    // within the main action ReuseExchange already recovers the
-    // aliased b-side, and the probe's one extra derivation is cheaper
-    // than the materialization barrier. Same lesson as
-    // modularityCells; localCheckpoint only wins here when a
-    // derivation compounds (k-core) or crosses actions un-reused
-    // (abc_xyz's sample seeding).
-    val inv = d.select(col("doc_id"), col("gsz"),
-      explode(col("grams")).as("gram"), col("lang"))
-      .select(col("doc_id"), col("gsz"), xxhash64(col("lang"), col("gram")).as("gh"))
-    val dfreq = inv.groupBy(col("gh")).agg(count(lit(1)).as("df"))
-    val (hotShare, predVolume) = PairJoins.dfProfile(dfreq)
-    val counted0 = if (hotShare > 1.0) {
-      PairJoins.prefixCandidates(inv, dfreq, prefixDivisor = 3, sizeRatio = Some(2))
-        .select(col("a_id"), col("b_id"))
-    } else if (predVolume > PairJoins.BandedPairVolume) {
-      PairJoins.bandedCandidates(d, nPerm = 32, bands = 16, sizeRatio = Some(2))
-        .select(col("a_id"), col("b_id"))
-    } else {
-      val a = inv.select(col("gh"), col("doc_id").as("a_id"), col("gsz").as("a_sz"))
-      val b = inv.select(col("gh").as("b_gh"), col("doc_id").as("b_id"),
-        col("gsz").as("b_sz")).hint("shuffle_hash")
-      // integer τ = 0.5 bounds, as in the registry key's gate branch.
-      // Round 20 (guide §2.3, as in the registry key): the pair
-      // hash-agg carries the BARE pair key and a count — the sizes
-      // (needed on the JOIN rows for the ratio bound anyway) are
-      // dropped before the agg and re-attached to the pair-distinct
-      // counted relation via two broadcast joins of the tiny
-      // (doc_id, gsz) dimension, the shape the containment twin
-      // already ships. Isolated registry-key A/B: 2.82/3.26 s
-      // (count+2 maxes) → 2.44/2.58 (count+max szsum) → 2.21/2.06
-      // (bare count + re-attach).
-      a.join(b,
-          col("gh") === col("b_gh") && col("a_id") < col("b_id") &&
-          lit(2) * col("a_sz") >= col("b_sz") &&
-          lit(2) * col("b_sz") >= col("a_sz"))
-        .select(col("a_id"), col("b_id"))
-        .groupBy(col("a_id"), col("b_id"))
-        .agg(count(lit(1)).as("shared_h"))
-        .join(broadcast(d.select(col("doc_id").as("a_id"), col("gsz").as("a_sz"))),
-          "a_id")
-        .join(broadcast(d.select(col("doc_id").as("b_id"), col("gsz").as("b_sz"))),
-          "b_id")
-        .filter(lit(3) * col("shared_h") >= col("a_sz") + col("b_sz"))
-        .select(col("a_id"), col("b_id"))
-    }
-    counted0
-      .join(d.select(col("doc_id").as("a_id"), col("lang"),
-        col("grams").as("a_grams"), col("gsz").as("a_sz")), "a_id")
-      .join(d.select(col("doc_id").as("b_id"), col("lang").as("b_lang"),
-        col("grams").as("b_grams"), col("gsz").as("b_sz")), "b_id")
-      .filter(col("lang") === col("b_lang"))
-      .withColumn("shared", size(array_intersect(col("a_grams"), col("b_grams"))))
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("a_sz") + col("b_sz") - col("shared")).cast("double"))
-      .filter(col("jaccard") >= tau)
-      .select(col("lang"), col("a_id"), col("b_id"), col("jaccard"))
-  }
+  /** [[dedupNgramJaccard]]'s pairs over an arbitrary documents frame
+    * — [[CurationPipeline]]'s survivor-set near-dedup stage. */
+  private[graft] def jaccardPairsOf(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    PairJoins.nearDupPairs(docs, PairJoins.Jaccard)
 
   // ---------------------------------------------------------- SimHash
 

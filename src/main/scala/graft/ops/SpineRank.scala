@@ -37,8 +37,7 @@ import org.apache.spark.sql.functions._
   * largest spines are ≤ ~2·10⁵ rows) and stay on the window branch;
   * the bucketed branch is measured on planted big-group spines in
   * ScratchSpineTier (equality asserted vs the window branch on the
-  * same data — the ScratchNgramPromoted pattern; BASELINE.md r16 row
-  * pins the crossover).
+  * same data; BASELINE.md r16 row pins the crossover).
   *
   * PRECONDITION shared by every caller: spine rows are DISTINCT per
   * (groups, orderCol) — they are group-by results, so the cumulative

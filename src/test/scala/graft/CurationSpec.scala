@@ -32,23 +32,40 @@ class CurationSpec extends SparkSpec {
 
   // ------------------------------------------- containment dedup
 
+  /** A copy of `src`'s documents table with every doc_id moved past
+    * the 32-bit range — documents.doc_id is int64, and the near-dup
+    * keys must carry such ids through every branch. */
+  private def offsetIds(src: String): String = {
+    val out = java.nio.file.Files.createTempDirectory("docs64").toString
+    io.Readers.table(spark, src, "documents")
+      .withColumn("doc_id", col("doc_id") + 3000000000L)
+      .write.mode("overwrite").parquet(s"$out/documents.parquet")
+    out
+  }
+
+  /** A pair id column of a result row, whatever its integral type. */
+  private def id(r: org.apache.spark.sql.Row, i: Int): Long = r.getAs[Number](i).longValue
+
   test("dedup_ngram_containment matches the brute-force pair set") {
-    val out = ops.Curation.dedupNgramContainment(spark, dir).collect()
-      .map(r => (r.getString(0), r.getInt(1).toLong, r.getInt(2).toLong, r.getDouble(3)))
-    val grams = graft.functions.TextExpressions.wordShingles(col("text"), 2)
-    val d = io.Readers.table(spark, dir, "documents")
-      .select(col("doc_id"), col("lang"), grams.as("grams"))
-      .filter(size(col("grams")) > 0)
-    val a = d.select(col("doc_id").as("a_id"), col("lang"), col("grams").as("ag"))
-    val b = d.select(col("doc_id").as("b_id"), col("lang").as("bl"), col("grams").as("bg"))
-    val truth = a.crossJoin(b)
-      .filter(col("lang") === col("bl") && col("a_id") < col("b_id"))
-      .withColumn("c", size(array_intersect(col("ag"), col("bg"))).cast("double")
-        / least(size(col("ag")), size(col("bg"))).cast("double"))
-      .filter(col("c") >= 0.8)
-      .select("lang", "a_id", "b_id", "c").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(out.toSet == truth)
+    for (in <- Seq(dir, offsetIds(dir))) {
+      val out = ops.Curation.dedupNgramContainment(spark, in).collect()
+        .map(r => (r.getString(0), id(r, 1), id(r, 2), r.getDouble(3)))
+      val grams = graft.functions.TextExpressions.wordShingles(col("text"), 2)
+      val d = io.Readers.table(spark, in, "documents")
+        .select(col("doc_id"), col("lang"), grams.as("grams"))
+        .filter(size(col("grams")) > 0)
+      val a = d.select(col("doc_id").as("a_id"), col("lang"), col("grams").as("ag"))
+      val b = d.select(col("doc_id").as("b_id"), col("lang").as("bl"), col("grams").as("bg"))
+      val truth = a.crossJoin(b)
+        .filter(col("lang") === col("bl") && col("a_id") < col("b_id"))
+        .withColumn("c", size(array_intersect(col("ag"), col("bg"))).cast("double")
+          / least(size(col("ag")), size(col("bg"))).cast("double"))
+        .filter(col("c") >= 0.8)
+        .select("lang", "a_id", "b_id", "c").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+      assert(truth.nonEmpty, s"fixture must contain true pairs ($in)")
+      assert(out.toSet == truth, s"($in)")
+    }
   }
 
   test("containment's adaptive switch takes the prefix-filter path on a hot-gram corpus, exactly") {
@@ -78,21 +95,23 @@ class CurationSpec extends SparkSpec {
     val hotShare = prof.getLong(1).toDouble * prof.getLong(1) / prof.getLong(0)
     assert(hotShare > 1.0, s"fixture must trip the switch (hotShare=$hotShare)")
     // and the operator's output still equals brute force
-    val out = ops.Curation.dedupNgramContainment(spark, dirT).collect()
-      .map(r => (r.getInt(1).toLong, r.getInt(2).toLong)).toSet
-    val d = spark.read.parquet(s"$dirT/documents.parquet")
-      .select(col("doc_id"), col("lang"), grams2.as("grams"))
-    val a2 = d.select(col("doc_id").as("a_id"), col("lang"), col("grams").as("ag"))
-    val b2 = d.select(col("doc_id").as("b_id"), col("lang").as("bl"), col("grams").as("bg"))
-    val truth = a2.crossJoin(b2)
-      .filter(col("lang") === col("bl") && col("a_id") < col("b_id"))
-      .filter(size(array_intersect(col("ag"), col("bg"))).cast("double")
-        / least(size(col("ag")), size(col("bg"))).cast("double") >= 0.8)
-      .select("a_id", "b_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(truth.nonEmpty, "fixture must contain true pairs")
-    assert(out == truth,
-      s"prefix path must be exact: missing=${(truth -- out).take(3)} extra=${(out -- truth).take(3)}")
+    for (in <- Seq(dirT, offsetIds(dirT))) {
+      val out = ops.Curation.dedupNgramContainment(spark, in).collect()
+        .map(r => (id(r, 1), id(r, 2))).toSet
+      val d = spark.read.parquet(s"$in/documents.parquet")
+        .select(col("doc_id"), col("lang"), grams2.as("grams"))
+      val a2 = d.select(col("doc_id").as("a_id"), col("lang"), col("grams").as("ag"))
+      val b2 = d.select(col("doc_id").as("b_id"), col("lang").as("bl"), col("grams").as("bg"))
+      val truth = a2.crossJoin(b2)
+        .filter(col("lang") === col("bl") && col("a_id") < col("b_id"))
+        .filter(size(array_intersect(col("ag"), col("bg"))).cast("double")
+          / least(size(col("ag")), size(col("bg"))).cast("double") >= 0.8)
+        .select("a_id", "b_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(truth.nonEmpty, "fixture must contain true pairs")
+      assert(out == truth, s"prefix path must be exact ($in): " +
+        s"missing=${(truth -- out).take(3)} extra=${(out -- truth).take(3)}")
+    }
   }
 
   test("jaccard dedup's adaptive switch takes the prefix-filter path on a hot-gram corpus, exactly") {
@@ -112,21 +131,23 @@ class CurationSpec extends SparkSpec {
     (pairs ++ hot).toDF("doc_id", "lang", "text")
       .write.mode("overwrite").parquet(s"$dirT/documents.parquet")
     val grams2 = graft.functions.TextExpressions.wordShingles(col("text"), 2)
-    val out = ops.Llm2.dedupNgramJaccard(spark, dirT).collect()
-      .map(r => (r.getInt(1).toLong, r.getInt(2).toLong)).toSet
-    val d = spark.read.parquet(s"$dirT/documents.parquet")
-      .select(col("doc_id"), col("lang"), grams2.as("grams"))
-    val a2 = d.select(col("doc_id").as("a_id"), col("lang"), col("grams").as("ag"))
-    val b2 = d.select(col("doc_id").as("b_id"), col("lang").as("bl"), col("grams").as("bg"))
-    val truth = a2.crossJoin(b2)
-      .filter(col("lang") === col("bl") && col("a_id") < col("b_id"))
-      .withColumn("sh", size(array_intersect(col("ag"), col("bg"))).cast("double"))
-      .filter(col("sh") / (size(col("ag")) + size(col("bg")) - col("sh")) >= 0.5)
-      .select("a_id", "b_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(truth.nonEmpty, "fixture must contain true pairs")
-    assert(out == truth,
-      s"prefix path must be exact: missing=${(truth -- out).take(3)} extra=${(out -- truth).take(3)}")
+    for (in <- Seq(dirT, offsetIds(dirT))) {
+      val out = ops.Llm2.dedupNgramJaccard(spark, in).collect()
+        .map(r => (id(r, 1), id(r, 2))).toSet
+      val d = spark.read.parquet(s"$in/documents.parquet")
+        .select(col("doc_id"), col("lang"), grams2.as("grams"))
+      val a2 = d.select(col("doc_id").as("a_id"), col("lang"), col("grams").as("ag"))
+      val b2 = d.select(col("doc_id").as("b_id"), col("lang").as("bl"), col("grams").as("bg"))
+      val truth = a2.crossJoin(b2)
+        .filter(col("lang") === col("bl") && col("a_id") < col("b_id"))
+        .withColumn("sh", size(array_intersect(col("ag"), col("bg"))).cast("double"))
+        .filter(col("sh") / (size(col("ag")) + size(col("bg")) - col("sh")) >= 0.5)
+        .select("a_id", "b_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(truth.nonEmpty, "fixture must contain true pairs")
+      assert(out == truth, s"prefix path must be exact ($in): " +
+        s"missing=${(truth -- out).take(3)} extra=${(out -- truth).take(3)}")
+    }
   }
 
   test("containment catches a quote pair Jaccard misses") {
