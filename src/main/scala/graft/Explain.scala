@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan-dump tool for the optimization rounds: writes
   * `explain("formatted")` of each named registry query to
@@ -20,15 +19,7 @@ object Explain {
     require(args.length == 3, "usage: Explain <outDir> <suffix> <key,key,...>")
     val Array(outDir, suffix, keysCsv) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     keysCsv.split(",").map(_.trim).filter(_.nonEmpty).foreach { key =>

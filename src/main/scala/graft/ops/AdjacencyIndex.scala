@@ -50,7 +50,7 @@ object AdjacencyIndex {
   private def publish(spark: SparkSession, name: String, rows: DataFrame,
       buckets: Int, version: Option[Long], beforeCommit: () => Unit,
       afterCommit: () => Unit,
-      appliedBatch: Option[Long] = None): Unit = {
+      appliedBatch: Option[Long]): Unit = {
     val v = version.getOrElse(TableManifest.nextVersion(spark, name))
     val t = TableManifest.physicalName(name, v)
     spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only

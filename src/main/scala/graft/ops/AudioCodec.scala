@@ -157,7 +157,7 @@ object AudioCodec {
   def decodeWav(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] = {
     if (!isWav(bytes)) return None
     for {
-      (fo, fl, dOff, dLen) <- chunks(bytes)
+      (fo, _, dOff, _) <- chunks(bytes)
       (rate, nCh, bits, nFrames) <- wavMeta(bytes)
       // Int-sample expansion is ≤4× the data bytes — cap in LONG math
       // before allocating (the ImageCodec bomb gate).

@@ -257,8 +257,8 @@ object Bpe {
     * COLLECTED (k-bounded driver data — the rule rows ARE the
     * output), dead rounds exit instead of planning, and the round
     * needs one checkpoint instead of two plus no broadcast join.
-    * A/B'd vs the in-plan form in ScratchBpeFixpoint (BASELINE.md
-    * r10-resume); spec-pinned equal in BpeMergeSpec.
+    * A/B'd vs the in-plan form (BASELINE.md r10-resume row);
+    * spec-pinned equal in BpeMergeSpec.
     */
   private[graft] def rulesTableDriver(docs: DataFrame, k: Int,
       minCount: Long): DataFrame = {

@@ -37,8 +37,8 @@ import graft.io.TableManifest
   * 100 TB: the ingest fold's exchange carries |labels|·partitions
   * buffers, never vectors; the stored table is
   * O(|labels|·d · batches-since-compaction) rows — corpus-size
-  * independent; serving reads KBs. Measured (ScratchCentroidScale,
-  * BASELINE.md r12 fifth-session row): serve cost flat while the
+  * independent; serving reads KBs. Measured (BASELINE.md
+  * r12 fifth-session CentroidService row): serve cost flat while the
   * re-fold grows with the corpus, and the aggregator fold beats the
   * posexplode fold by a margin that grows with corpus size — the
   * Gram lesson transferred to the first moment.

@@ -65,8 +65,8 @@ object Embeddings {
     * row before exploding — measured 3.0× slower at sf0.1's 2000
     * vectors (2.07 vs 0.68 s isolated — mostly fixed overhead) and
     * ~50× at 10⁶ / ~100× at 10⁷-corpus scale (37.5 vs 0.7 s, and
-    * 237–257 vs 2.4 s on the same 10⁶ subset — ScratchGramScale,
-    * BASELINE.md r12 fourth-session rows): the gap is pure per-row
+    * 237–257 vs 2.4 s on the same 10⁶ subset — BASELINE.md r12
+    * fourth-session Gram-family row): the gap is pure per-row
     * allocation and GROWS with corpus size, since both shapes
     * exchange the same ≤ d²·partitions cells.
     */
@@ -103,7 +103,8 @@ object Embeddings {
     * — one (d+1)-long array per partition per group instead of d
     * exploded rows per VECTOR (the same allocation argument that made
     * the Gram aggregator ~50–100× the declarative fold at 10⁶–10⁷
-    * vectors; A/B'd for the first moment in ScratchCentroidScale).
+    * vectors; A/B'd for the first moment in BASELINE.md's r12
+    * CentroidService row).
     */
   final class CentroidAgg extends Aggregator[Array[Long], Array[Long], Array[Long]] {
     override def zero: Array[Long] = Array.emptyLongArray
@@ -234,7 +235,7 @@ object Embeddings {
     * — d rows per VECTOR — is kept as [[centroidCellsDeclarative]],
     * the A/B control; the Gram lesson says the allocation gap grows
     * with corpus size, measured for the first moment in
-    * ScratchCentroidScale). Overflow: |Σq| ≤ n·2¹⁴ — int64-safe to
+    * BASELINE.md's r12 CentroidService row). Overflow: |Σq| ≤ n·2¹⁴ — int64-safe to
     * ~5·10¹⁴ vectors per label.
     */
   def centroidCellsOf(emb: DataFrame): DataFrame =

@@ -196,7 +196,7 @@ object Graph {
     * away entirely without a distinct. The degree-ordered "forward"
     * refinement (Schank & Wagner: orient each edge from its
     * lower-degree endpoint → Σ outdeg², outdeg ≤ √2m) was
-    * IMPLEMENTED AND MEASURED BOTH WAYS (ScratchTriangleSkew):
+    * IMPLEMENTED AND MEASURED BOTH WAYS (BASELINE.md r6 triangle row):
     * on THIS corpus (294k edges / 20k nodes, near-uniform degrees)
     * it loses — 2.66 vs 2.05 s at sf0.1, the orientation pass is
     * not repaid; on a planted hub-skew fixture (4 middle-id hubs of
@@ -837,16 +837,16 @@ object Graph {
     * volume-dispatched (round 18, second session): a frontier at or
     * under [[HarmonicBroadcastRows]] BROADCASTS into it, so the edge
     * relation streams in place instead of shuffling each round
-    * (measured −40 % at sf0.1, outputs bit-identical —
-    * ScratchHarmonicForms); the many-seeds regime falls back to the
+    * (measured −40 % at sf0.1, outputs bit-identical — BASELINE.md
+    * r18 harmonic-frontier row); the many-seeds regime falls back to the
     * shuffle join.
     */
   /** Per-round frontier-broadcast gate for [[graphHarmonicBounded]]:
     * a frontier at or under this many (seed, node) rows broadcasts
     * into the edge join — the 904 k-row edge relation streams in
     * place from its checkpoint instead of shuffling EVERY round
-    * (measured −40 %: 3.9–4.5 s vs 6.2–10.4 s at sf0.1,
-    * ScratchHarmonicForms, outputs bit-identical). Above it — the
+    * (measured −40 %: 3.9–4.5 s vs 6.2–10.4 s at sf0.1, outputs
+    * bit-identical; BASELINE.md r18 harmonic-frontier row). Above it — the
     * many-seeds × dense-ring regime — the round falls back to the
     * shuffle join. Every join input is a checkpoint, so the per-round
     * row count is a cheap driver scalar (the iterative-operator
@@ -923,8 +923,8 @@ object Graph {
     * Scale: state is |nodes| registers (KBs each at lgK 10)
     * regardless of reach — the whole point at 10⁹-node graphs where
     * exact per-seed frontiers explode. The round structure is
-    * volume-dispatched on the register-table size (round 18,
-    * ScratchHyperballForms): below [[HyperballBroadcastNodes]] the
+    * volume-dispatched on the register-table size (BASELINE.md r18
+    * HyperBall broadcast row): below [[HyperballBroadcastNodes]] the
     * register frame BROADCASTS to src-partitioned self-looped edges
     * and the round is shuffle-free — the per-round exchange of
     * partially-combined registers (the "~80 GB/round merge traffic"
@@ -948,10 +948,10 @@ object Graph {
     * dense at lgK 10 ⟹ ≤ ~2 GiB here) rides a per-round broadcast
     * and the round is shuffle-FREE; above it, registers must shuffle
     * to meet the edges. The broadcast path is MEASURED through
-    * 1.25 M nodes / 2·10⁷ undirected edges (the r12
-    * ScratchHyperballScale graph whose hop-3 round the shuffle form
-    * never finished): 184 s steady-state local[32]
-    * (ScratchHyperballForms synthetic mode, BASELINE r18 row). The
+    * 1.25 M nodes / 2·10⁷ undirected edges (the r12 HyperBall-at-scale
+    * graph whose hop-3 round the shuffle form never finished): 184 s
+    * steady-state local[32] (BASELINE.md r18 HyperBall broadcast row,
+    * synthetic mode). The
     * dial an analyst raises with driver/executor memory — at the gate
     * the register frame is ~2 GiB dense, so the driver needs
     * spark.driver.memory and spark.driver.maxResultSize sized above
@@ -1016,7 +1016,7 @@ object Graph {
       }
     if (nNodes <= gate) {
       // broadcast form (round 18, measured ~7× at sf0.1: steady-state
-      // loop 1.9–2.1 s vs 15 s — ScratchHyperballForms / BASELINE):
+      // loop 1.9–2.1 s vs 15 s — BASELINE.md r18 HyperBall row):
       // self-loops fold the node's own h−1 register into the neighbor
       // union (the trailing left-join is gone), edges ∪ self-loops are
       // src-repartitioned ONCE, and each round joins them against a

@@ -3,36 +3,43 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Incremental curation — the OPERATIONAL twin of the batch composite
-  * (round 16, §8.r17 item 3 pulled in): [[CurationPipeline]] curates
-  * a corpus in one pass; a production corpus instead receives a DELTA
-  * batch per day, and re-running O(corpus) dedup per batch is exactly
-  * what a 100 TB pipeline cannot afford. This module admits a delta
-  * against two PERSISTED indexes in O(batch) work:
+/** Incremental curation — the OPERATIONAL twin of the batch composite:
+  * [[CurationPipeline]] curates a corpus in one pass; a production
+  * corpus instead receives a DELTA batch per day, and re-running
+  * O(corpus) dedup per batch is exactly what a 100 TB pipeline cannot
+  * afford. This module admits a delta against two PERSISTED indexes in
+  * O(batch) work:
   *
   *   quality gate ([[Curation2.gopherScored]], row-local)
-  *   → exact-dedup probe of the (text_hash, keep_id) index — v1
-  *     bucketed (index side joins as the files lie, no shuffle) or
-  *     v2 hp-partitioned (directory-pruned O(touched) read, round
-  *     17), pointer-dispatched like the band index below
+  *   → exact-dedup probe of the (text_hash, keep_id) hash index
   *   → within-batch exact dedup (min doc_id per hash)
   *   → near-dedup probe of the MinHash band index
-  *     ([[IncrementalDedup.matchAgainstIndex]] /
-  *     [[IncrementalDedup.matchAgainstIndexPartitioned]])
+  *     ([[IncrementalDedup.matchAgainstIndex]])
   *   → within-batch near dedup (band self-join at batch size +
   *     connected-components closure, min id per cluster)
   *   → ADMISSION: append the survivors' band rows to the band index,
   *     and ONE hash row per fresh normalized text to the hash index —
   *     admitted docs map to themselves, near-DROPPED docs map to
-  *     their cluster keeper (TOMBSTONES, round 18: the smallest
-  *     verified index match, or the within-batch component root —
-  *     an admitted doc either way). Without tombstones an exact
-  *     duplicate of a near-dropped doc re-entered in a later batch:
-  *     its canonical's hash was never indexed, and its bands need not
-  *     reach the keeper when the near chain ran THROUGH the dropped
-  *     doc (the r17 ScratchReconcile finding). The trade is append
-  *     volume: hash rows grow per fresh quality-passing text, not per
-  *     admitted doc.
+  *     their cluster keeper (TOMBSTONES: the smallest verified index
+  *     match, or the within-batch component root — an admitted doc
+  *     either way). Without tombstones an exact duplicate of a
+  *     near-dropped doc re-enters in a later batch: its canonical's
+  *     hash was never indexed, and its bands need not reach the keeper
+  *     when the near chain ran THROUGH the dropped doc. The trade is
+  *     append volume: hash rows grow per fresh quality-passing text,
+  *     not per admitted doc.
+  *
+  * Both indexes are partitioned on a leading byte of their uniform
+  * hash key — `bp` for the band index ([[IncrementalDedup]]), `hp`
+  * (the first hex byte of the sha2 text hash, 256 directories) for the
+  * hash index — so each probe collects the batch's partition set and
+  * reads only those directories: O(touched) I/O per delta, where a
+  * whole-index read would be O(corpus). Uniform keys defeat parquet
+  * row-group pruning (the IN filter collapses to a full-range
+  * min/max), which is why the pruning is by directory. Both are
+  * versioned through [[graft.io.TableManifest]]; an index committed
+  * under an older schema version fails fast in [[curateBatch]] before
+  * anything is read or appended, and needs a rebuild.
   *
   * IDEMPOTENT ADMISSION is the crash/replay contract: the hash index
   * stores (text_hash, keep_id), so a re-presented doc whose indexed
@@ -46,17 +53,18 @@ import org.apache.spark.sql.functions._
   * CONVERGE to `drop_exact_index` (they hit their own tombstone):
   * drop ATTRIBUTION may shift class across re-presentation, the
   * admitted/dropped partition never does, and a consumer reading
-  * admitted states as {admitted, readmitted} is unaffected. APPEND
-  * ORDER is load-bearing (round 17): band rows append BEFORE hash
-  * rows, so a crash between the two appends leaves
-  * band-present/hash-absent, which replays as FRESH — the near probe
-  * filters self-matches (`indexed_id =!= new_id`), the doc re-admits,
-  * and both appends re-run; its duplicate band rows are harmless (the
-  * probe aggregates per pair; [[IncrementalDedup.compact]] collapses
-  * the growth). The opposite order would leave the fatal window:
-  * hash-present/band-absent reads back as `readmitted` and appends
-  * nothing, so the doc's bands would be PERMANENTLY absent and its
-  * future near-dups undetectable (spec'd in both directions).
+  * admitted states as {admitted, readmitted} is unaffected.
+  *
+  * APPEND ORDER is load-bearing: band rows append BEFORE hash rows, so
+  * a crash between the two appends leaves band-present/hash-absent,
+  * which replays as FRESH — the near probe filters self-matches
+  * (`indexed_id =!= new_id`), the doc re-admits, and both appends
+  * re-run; its duplicate band rows are harmless (the probe aggregates
+  * per pair; [[IncrementalDedup.compact]] collapses the growth). The
+  * opposite order would leave the fatal window: hash-present/band-absent
+  * reads back as `readmitted` and appends nothing, so the doc's bands
+  * would be PERMANENTLY absent and its future near-dups undetectable
+  * (spec'd in both directions).
   *
   * The admission ledger (doc_id, status) is localCheckpoint'd BEFORE
   * any append (and so is the admitted slice): the appends mutate the
@@ -65,15 +73,21 @@ import org.apache.spark.sql.functions._
   * rows and drop everything — the read-your-own-writes trap the
   * checkpoint exists to close (spec'd by re-presentation).
   *
+  * Reads and writes ride the DELTA's session, and [[curateBatch]]
+  * refreshes both index tables before it reads them: inside a
+  * streaming foreachBatch the delta belongs to the query's CLONED
+  * session, and a write through one session invalidates only that
+  * session's relation cache, so a table read earlier in another session
+  * would otherwise serve a stale file list.
+  *
   * Near-dup semantics match [[IncrementalDedup]]: the MinHash
   * signature-agreement estimator (E[agreement] = J), seeded and
   * corpus-access-free — the default path never touches the corpus
   * store (the standard production trade). A policy that needs the
-  * batch composite's PRECISION passes `verifyCorpus` (round 17 — the
-  * r16 verdict's item 2): every estimator match then joins back to
-  * the admitted document store and must survive the exact word-bigram
-  * Jaccard at `tau` within its language block
-  * ([[Llm2.jaccardPairsOf]]'s verify semantics, lang re-check
+  * batch composite's PRECISION passes `verifyCorpus`: every estimator
+  * match then joins back to the admitted document store and must
+  * survive the exact word-bigram Jaccard at `tau` within its language
+  * block ([[Llm2.jaccardPairsOf]]'s verify semantics, lang re-check
   * included) before it may drop a doc — still O(candidates), never a
   * corpus-sized pass, because only the probe's few matches join. An
   * estimator false positive (band agreement ≥ `minAgree`, true
@@ -82,17 +96,17 @@ import org.apache.spark.sql.functions._
   * default path and admitted on the verified path (planted-case and
   * reconciliation spec'd).
   *
-  * POLICY STABILITY is part of the replay contract (r18, the r17
-  * ADVICE): the same `verifyCorpus` policy (verified or default) must
-  * be used when a crashed batch replays. The crash-window convergence
-  * above assumes it — a VERIFIED run that co-admits a band-colliding
-  * rescued pair, crashes inside the band-before-hash window, and is
-  * replayed UNVERIFIED reads the pair's mutual stranded bands as
+  * POLICY STABILITY is part of the replay contract: the same
+  * `verifyCorpus` policy (verified or default) must be used when a
+  * crashed batch replays. The crash-window convergence above assumes
+  * it — a VERIFIED run that co-admits a band-colliding rescued pair,
+  * crashes inside the band-before-hash window, and is replayed
+  * UNVERIFIED reads the pair's mutual stranded bands as
   * `drop_near_index` and permanently drops both docs (the verified
   * replay instead discards the store-missing candidates and
   * re-admits). A streaming deployment pins the policy for the life of
   * the checkpoint directory, exactly as it pins the indexes.
-  * Tombstones make the pin bite in the other direction too (r18): a
+  * Tombstones make the pin bite in the other direction too: a
   * DEFAULT-path near drop — estimator verdict, false positives
   * included — tombstones its hash, so a later verified run cannot
   * rescue the doc on the same indexes (it reads `drop_exact_index`
@@ -107,10 +121,13 @@ object IncrementalCuration {
   /** Bump when the hash-index row layout changes ([[graft.io
     * .TableManifest]] fails fast on mismatch).
     */
-  val HashSchemaVersion = 1
+  val HashSchemaVersion = 2
 
   private def hashOf(c: org.apache.spark.sql.Column) =
     sha2(Llm.normText(c), 256)
+
+  private def withHp(rows: DataFrame): DataFrame =
+    rows.withColumn("hp", substring(col("text_hash"), 1, 2))
 
   /** Current physical table of the logical hash-index name. */
   def resolveHashTable(spark: SparkSession, tableName: String): String =
@@ -118,10 +135,10 @@ object IncrementalCuration {
 
   /** Create the exact-dedup hash index from an already-curated corpus
     * as a fresh manifest version: one (text_hash, keep_id) row per
-    * distinct normalized text, bucketed on the hash so delta probes
-    * leave the index side shuffle-free.
+    * distinct normalized text, partitioned on `hp` (see the object
+    * scaladoc).
     */
-  def buildHashIndex(docs: DataFrame, tableName: String, buckets: Int = 8): Unit = {
+  def buildHashIndex(docs: DataFrame, tableName: String): Unit = {
     val spark = docs.sparkSession
     val v = graft.io.TableManifest.nextVersion(spark, tableName)
     val t = graft.io.TableManifest.physicalName(tableName, v)
@@ -129,29 +146,27 @@ object IncrementalCuration {
     val rows = docs.filter(trim(col("text")) =!= "")
       .select(hashOf(col("text")).as("text_hash"), col("doc_id"))
       .groupBy(col("text_hash")).agg(min(col("doc_id")).as("keep_id"))
-    graft.io.Sinks.writeBucketed(rows, t, "text_hash", buckets)
+    withHp(rows)
+      .repartition(col("hp"))
+      .write.mode("overwrite").format("parquet").partitionBy("hp")
+      .saveAsTable(t)
     graft.io.TableManifest.commit(spark, tableName, v, HashSchemaVersion)
     graft.io.TableManifest.vacuum(spark, tableName)
   }
 
-  /** Append prepared (text_hash, keep_id) rows to the current v1
-    * index version — bucket spec read from the catalog, parquet
-    * append adds files per bucket, never rewrites (the
+  /** Append prepared (text_hash, keep_id) rows to the current index
+    * version — parquet append adds files under the touched `hp=`
+    * directories only, never rewrites (the
     * [[IncrementalDedup.appendToIndex]] discipline). [[curateBatch]]
     * feeds this BOTH admitted docs' self-rows and near-drop
-    * TOMBSTONES (round 18 — see the object scaladoc).
+    * TOMBSTONES (see the object scaladoc).
     */
   private[graft] def appendHashRows(rows: DataFrame, tableName: String): Unit = {
     val spark = rows.sparkSession
     val t = resolveHashTable(spark, tableName)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.map(_.numBuckets).getOrElse(throw new IllegalStateException(
-        s"$t has no bucket spec — appending would mix layouts; rebuild the index"))
-    rows.select(col("text_hash"), col("keep_id"))
-      .write.mode("append")
-      .bucketBy(buckets, "text_hash").sortBy("text_hash")
-      .format("parquet").saveAsTable(t)
+    withHp(rows.select(col("text_hash"), col("keep_id")))
+      .write.mode("append").format("parquet").partitionBy("hp")
+      .saveAsTable(t)
   }
 
   /** Append admitted docs' self-mapped hash rows to the current index
@@ -166,143 +181,33 @@ object IncrementalCuration {
   /** Collapse hash-index append growth into a fresh manifest version
     * — atomic publish; probes racing it serve the old snapshot (the
     * [[IncrementalDedup.compact]] discipline via
-    * [[graft.io.TableManifest.compactBucketed]]).
+    * [[graft.io.TableManifest.compactPartitioned]]).
     */
   def compactHashIndex(spark: SparkSession, tableName: String,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => ()): Unit =
-    graft.io.TableManifest.compactBucketed(
-      spark, tableName, HashSchemaVersion, beforeCommit, afterCommit)
-
-  // ------------------------------------------- hash-index layout v2
-
-  /** Layout v2 — the PARTITIONED hash index (round 17, completing
-    * the [[IncrementalDedup.PartitionedSchemaVersion]] symmetry): the
-    * v1 bucketed layout gives a zero-shuffle probe join but READS the
-    * whole index per delta — O(corpus) I/O, and uniform sha2 keys
-    * defeat row-group pruning for exactly the reason the band index's
-    * IN-pushdown experiment failed (uniform keys collapse parquet's
-    * IN filter to a full-range min/max). v2 partitions on the hash's
-    * first hex byte (`hp`: 256 directories, uniform under sha2), so a
-    * batch's hashes touch a bounded partition set the probe prunes
-    * EXACTLY via partition filters; the pruned slice then shuffles
-    * for the join — O(touched) I/O traded for v1's zero-shuffle, the
-    * right trade as soon as the index dwarfs a batch. Same row
-    * semantics, same manifest discipline; [[curateBatch]] dispatches
-    * probe AND append on the committed pointer's schema version, so
-    * admission is layout-independent (ledger spec'd identical across
-    * layout combinations).
-    */
-  val HashPartitionedSchemaVersion = 2
-
-  private def withHp(rows: DataFrame): DataFrame =
-    rows.withColumn("hp", substring(col("text_hash"), 1, 2))
-
-  /** Current physical table of a logical v2 hash-index name. */
-  def resolveHashTablePartitioned(spark: SparkSession, tableName: String): String =
-    graft.io.TableManifest.resolve(spark, tableName, HashPartitionedSchemaVersion)
-
-  /** Create the v2 (partitioned) hash index as a fresh manifest
-    * version.
-    */
-  def buildHashIndexPartitioned(docs: DataFrame, tableName: String): Unit = {
-    val spark = docs.sparkSession
-    val v = graft.io.TableManifest.nextVersion(spark, tableName)
-    val t = graft.io.TableManifest.physicalName(tableName, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    val rows = docs.filter(trim(col("text")) =!= "")
-      .select(hashOf(col("text")).as("text_hash"), col("doc_id"))
-      .groupBy(col("text_hash")).agg(min(col("doc_id")).as("keep_id"))
-    withHp(rows)
-      .repartition(col("hp"))
-      .write.mode("overwrite").format("parquet").partitionBy("hp")
-      .saveAsTable(t)
-    graft.io.TableManifest.commit(spark, tableName, v, HashPartitionedSchemaVersion)
-    graft.io.TableManifest.vacuum(spark, tableName)
-  }
-
-  /** [[appendHashRows]] for the v2 layout — parquet append adds files
-    * under the touched `hp=` directories only.
-    */
-  private[graft] def appendHashRowsPartitioned(rows: DataFrame,
-      tableName: String): Unit = {
-    val spark = rows.sparkSession
-    val t = resolveHashTablePartitioned(spark, tableName)
-    withHp(rows.select(col("text_hash"), col("keep_id")))
-      .write.mode("append").format("parquet").partitionBy("hp")
-      .saveAsTable(t)
-  }
-
-  /** Append admitted docs' self-mapped hash rows to the current v2
-    * version.
-    */
-  def appendToHashIndexPartitioned(admitted: DataFrame, tableName: String): Unit =
-    appendHashRowsPartitioned(admitted
-      .select(hashOf(col("text")).as("text_hash"), col("doc_id").as("keep_id")),
-      tableName)
-
-  /** Collapse v2 append growth into a fresh manifest version. */
-  def compactHashIndexPartitioned(spark: SparkSession, tableName: String,
-      beforeCommit: () => Unit = () => (),
-      afterCommit: () => Unit = () => ()): Unit =
     graft.io.TableManifest.compactPartitioned(
-      spark, tableName, "hp", HashPartitionedSchemaVersion, Nil,
-      beforeCommit, afterCommit)
+      spark, tableName, "hp", HashSchemaVersion, Nil, beforeCommit, afterCommit)
 
-  /** Migrate a v1 (bucketed) hash index to layout v2 IN PLACE, from
-    * the index rows alone — (text_hash, keep_id) carries everything
-    * v2 needs, so the corpus is never re-scanned. Publishes an
-    * hp-partitioned table as the next manifest version: probes racing
-    * the migration serve the v1 snapshot, the pointer flip is atomic,
-    * and from the next [[curateBatch]] the dispatch prunes
-    * directories with zero caller change. Fails fast (resolve's
-    * schema check) if the index is already v2.
+  /** Left-probe a hashed delta against the index: collect the delta's
+    * `hp` byte set (≤ 256 values, driver-bounded) and prune the index
+    * scan to the touched directories before the join. The delta is
+    * materialized HERE unless the caller already did: an
+    * unmaterialized nondeterministic frame would collect one `hp` set
+    * and join another, silently missing partitions and re-admitting
+    * duplicates.
     */
-  def migrateHashIndexToPartitioned(spark: SparkSession, tableName: String): Unit = {
-    val cur = resolveHashTable(spark, tableName)
-    // appends from OTHER sessions (a streaming query's cloned session)
-    // invalidate only their own relation cache — refresh, or the
-    // migrated v2 silently misses stream-admitted rows
-    spark.catalog.refreshTable(cur)
-    val v = graft.io.TableManifest.nextVersion(spark, tableName)
-    val t = graft.io.TableManifest.physicalName(tableName, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    withHp(spark.table(cur))
-      .repartition(col("hp"))
-      .write.mode("overwrite").format("parquet").partitionBy("hp")
-      .saveAsTable(t)
-    graft.io.TableManifest.commit(spark, tableName, v, HashPartitionedSchemaVersion)
-    graft.io.TableManifest.vacuum(spark, tableName)
-  }
-
-  /** Left-probe a hashed delta against the index in whichever layout
-    * the committed pointer names: v1 joins the bucketed table as the
-    * files lie (zero shuffle, whole-index read); v2 collects the
-    * delta's `hp` byte set (≤ 256 values, driver-bounded) and prunes
-    * the index scan to the touched directories before the join.
-    * When `v2` the delta is materialized HERE (r17 ADVICE: the
-    * precondition used to live as a caller note, and an unmaterialized
-    * nondeterministic frame would collect one `hp` set and join
-    * another, silently missing partitions and re-admitting duplicates).
-    */
-  private[graft] def hashProbe(withHash0: DataFrame, hashIndex: String,
-      v2: Boolean): DataFrame = {
+  private[graft] def hashProbe(withHash0: DataFrame, hashIndex: String): DataFrame = {
     val sess = withHash0.sparkSession
     // skip re-checkpointing an input the caller already materialized
     // (the caller then owns the handle and its free — curateBatch does)
     val withHash =
-      if (v2 && !Checkpoints.isHandle(withHash0)) withHash0.localCheckpoint()
-      else withHash0
-    val idx =
-      if (v2) {
-        val hps = withHash.select(substring(col("text_hash"), 1, 2).as("hp"))
-          .distinct().collect().map(_.getString(0)).toSeq
-        sess.table(resolveHashTablePartitioned(sess, hashIndex))
-          .filter(col("hp").isin(hps: _*))
-          .select(col("text_hash"), col("keep_id"))
-      } else
-        sess.table(resolveHashTable(sess, hashIndex))
-          .select(col("text_hash"), col("keep_id"))
+      if (Checkpoints.isHandle(withHash0)) withHash0 else withHash0.localCheckpoint()
+    val hps = withHp(withHash).select(col("hp"))
+      .distinct().collect().map(_.getString(0)).toSeq
+    val idx = sess.table(resolveHashTable(sess, hashIndex))
+      .filter(col("hp").isin(hps: _*))
+      .select(col("text_hash"), col("keep_id"))
     withHash.join(idx, Seq("text_hash"), "left")
   }
 
@@ -496,55 +401,24 @@ object IncrementalCuration {
       minAgree: Double = 0.5,
       verifyCorpus: Option[DataFrame] = None,
       tau: Double = 0.5): DataFrame = {
-    // Reads and writes ride the DELTA's session: inside a streaming
-    // foreachBatch the delta belongs to the query's CLONED session,
-    // and a write through one session invalidates only that
-    // session's relation cache — mixing a caller handle with the
-    // delta's made batch N+1 read batch N's index through a stale
-    // file list (caught by the streaming spec). The refreshes guard
-    // the same staleness for any session the tables were previously
-    // read in.
+    // reads and writes ride the delta's session, refreshed first (the
+    // staleness guard in the object scaladoc); resolve fails fast on a
+    // missing index or an older schema version
     val sess = delta.sparkSession
-    // the band index serves in EITHER layout (round 16): v1 bucketed
-    // (zero-shuffle join, whole-index scan — the small-index default)
-    // or v2 partitioned (directory-pruned O(touched) probe — the
-    // index-scale form); the committed pointer's schema version
-    // dispatches probe and append together, so admission semantics
-    // are layout-independent (spec'd on both)
-    val bandV2 = graft.io.TableManifest.readPointer(sess, bandIndex)
-      .map(_.schemaVersion == IncrementalDedup.PartitionedSchemaVersion)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed index at '$bandIndex' — build it first"))
-    // the hash index likewise serves in either layout (round 17):
-    // v1 bucketed or v2 hp-partitioned, pointer-dispatched
-    val hashV2 = graft.io.TableManifest.readPointer(sess, hashIndex)
-      .map(_.schemaVersion == HashPartitionedSchemaVersion)
-      .getOrElse(throw new IllegalStateException(
-        s"no committed index at '$hashIndex' — build it first"))
-    sess.catalog.refreshTable(
-      if (hashV2) resolveHashTablePartitioned(sess, hashIndex)
-      else resolveHashTable(sess, hashIndex))
-    sess.catalog.refreshTable(
-      if (bandV2) IncrementalDedup.resolvePartitionedTable(sess, bandIndex)
-      else IncrementalDedup.resolveTable(sess, bandIndex))
+    sess.catalog.refreshTable(resolveHashTable(sess, hashIndex))
+    sess.catalog.refreshTable(IncrementalDedup.resolveTable(sess, bandIndex))
     val d0 = delta.filter(trim(col("text")) =!= "")
       .select(col("doc_id"), col("lang"), col("text"))
     val withQ = d0.join(
       Curation2.gopherScored(d0).select(col("doc_id"), col("pass")), "doc_id")
     val q = withQ.filter(col("pass")).drop("pass")
 
-    // exact probe, layout-dispatched: v1 bucketed (index side joins
-    // without shuffle; only the small delta side exchanges into the
-    // index's buckets), v2 partitioned (directory-pruned O(touched)
-    // read). The probe result is materialized ONCE (r18 review): the
-    // ledger's branches, the near stage's inputs, and the hash-row
-    // keeper join all read `probed` — lazy, each consumer re-ran the
-    // index join (a whole-index scan per branch on v1); checkpointed,
-    // the index is scanned once per batch and every consumer reads
-    // the O(batch) result.
-    val withHash0 = q.withColumn("text_hash", hashOf(col("text")))
-    val withHash = if (hashV2) withHash0.localCheckpoint() else withHash0
-    val probed = hashProbe(withHash, hashIndex, hashV2).localCheckpoint()
+    // exact probe, directory-pruned O(touched) read. The probe result
+    // is materialized ONCE: the ledger's branches, the near stage's
+    // inputs, and the hash-row keeper join all read `probed` — lazy,
+    // each consumer would re-run the index join.
+    val withHash = q.withColumn("text_hash", hashOf(col("text"))).localCheckpoint()
+    val probed = hashProbe(withHash, hashIndex).localCheckpoint()
     val fresh = probed.filter(col("keep_id").isNull)
     val keepB = fresh.groupBy(col("text_hash")).agg(min(col("doc_id")).as("kid"))
     val exactSurv = fresh.join(keepB, "text_hash")
@@ -552,11 +426,8 @@ object IncrementalCuration {
       .select(col("doc_id"), col("lang"), col("text"))
 
     // near probe against the band index, then within-batch closure
-    val idxCand = if (bandV2)
-        IncrementalDedup.matchAgainstIndexPartitioned(sess, exactSurv,
-          bandIndex, minAgree)
-      else
-        IncrementalDedup.matchAgainstIndex(sess, exactSurv, bandIndex, minAgree)
+    val idxCand =
+      IncrementalDedup.matchAgainstIndex(sess, exactSurv, bandIndex, minAgree)
     val idxPairs = verifyCorpus.fold(idxCand)(corpus =>
         verifiedPairs(idxCand, "new_id", exactSurv, "indexed_id", corpus, tau))
       .select(col("new_id"), col("indexed_id"))
@@ -598,8 +469,7 @@ object IncrementalCuration {
         "admitted"))
       .localCheckpoint() // BEFORE appends — see the scaladoc contract
 
-    // NEAR-DROP HASH TOMBSTONES (round 18, the r17 verdict's item 2 /
-    // the ScratchReconcile finding): every FRESH text_hash appends one
+    // NEAR-DROP HASH TOMBSTONES: every FRESH text_hash appends one
     // row mapped to its resolved cluster keeper — not just the
     // admitted docs' self-rows. A near-dropped doc's keeper is the
     // smallest verified index match (an admitted doc by construction:
@@ -627,19 +497,13 @@ object IncrementalCuration {
         Seq("doc_id"), "left_semi")
       .localCheckpoint() // lineage must not re-read the indexes post-append
     try {
-      if (!admitted.isEmpty) {
-        // band rows FIRST — the crash-window direction the replay
-        // contract relies on (see the object scaladoc): a crash between
-        // the appends leaves band-present/hash-absent, which replays as
-        // fresh and converges; hash-first would leave a `readmitted`
-        // read with permanently missing bands.
-        if (bandV2) IncrementalDedup.appendToIndexPartitioned(admitted, bandIndex)
-        else IncrementalDedup.appendToIndex(admitted, bandIndex)
-      }
-      if (!hashRows.isEmpty) {
-        if (hashV2) appendHashRowsPartitioned(hashRows, hashIndex)
-        else appendHashRows(hashRows, hashIndex)
-      }
+      // band rows FIRST — the crash-window direction the replay
+      // contract relies on (see the object scaladoc): a crash between
+      // the appends leaves band-present/hash-absent, which replays as
+      // fresh and converges; hash-first would leave a `readmitted`
+      // read with permanently missing bands.
+      if (!admitted.isEmpty) IncrementalDedup.appendToIndex(admitted, bandIndex)
+      if (!hashRows.isEmpty) appendHashRows(hashRows, hashIndex)
     } catch { case t: Throwable =>
       // an aborted batch returns nothing — its ledger frame would
       // otherwise leak alongside the five below (r18 review: repeated
@@ -655,7 +519,7 @@ object IncrementalCuration {
       // terminal state frees inside connectedComponents' endgame;
       // verifiedPairs' candidate frames are O(candidates) and stay
       // GC-reclaimed.
-      if (hashV2) Checkpoints.free(withHash)
+      Checkpoints.free(withHash)
       Checkpoints.free(probed)
       Checkpoints.free(idxPairs)
       Checkpoints.free(hashRows)

@@ -15,12 +15,17 @@ import graft.functions.TextExpressions
   *
   * Index layout: one row per (bk, doc_id, sig), where `bk` =
   * xxhash64(band, band minhash rows) is the single-long band key and
-  * `sig` the full nPerm MinHash signature. The table is BUCKETED and
-  * sorted by `bk` ([[graft.io.Sinks.writeBucketed]]), so the per-batch
-  * candidate join leaves the index side exactly as the files lie on
-  * disk — no shuffle, no sort; only the (small) new-batch side
-  * exchanges, into the index's bucket count. Asserted in
-  * IncrementalDedupSpec against the executed plan.
+  * `sig` the full nPerm MinHash signature. The table is PARTITIONED
+  * on the band key's top byte (`bp` = bk >>> 56: 256 directories,
+  * uniform under the hash), so a batch's band keys — 4 per doc,
+  * batch-bounded — touch a bounded partition set that the probe
+  * prunes EXACTLY via partition filters; only the pruned slice is read
+  * and shuffled for the join, so probe I/O is O(touched), not
+  * O(corpus). Row-group pruning could not do this: band keys are
+  * uniform xxhash64 values, and past parquet's IN-filter threshold the
+  * pushed predicate collapses to a min/max range spanning the whole
+  * key space. Asserted in IncrementalDedupSpec against the executed
+  * plan.
   *
   * Candidate verification uses the signature agreement fraction
   * (matching MinHash positions / nPerm) — the standard
@@ -31,16 +36,18 @@ import graft.functions.TextExpressions
   * corpus-sized input.
   *
   * Scale: new-batch work is O(batch bands) + candidates; index growth
-  * is append-only ([[appendToIndex]]) and never rewritten. Band
-  * parameters are shared with dedupMinhashLsh (16 perms, 4 bands of 4
-  * — P(band collision) = J⁴ per band, the LSH S-curve knee at ~0.5).
+  * is append-only ([[appendToIndex]]), never rewritten, and collapsed
+  * by [[compact]]. Band parameters are shared with dedupMinhashLsh
+  * (16 perms, 4 bands of 4 — P(band collision) = J⁴ per band, the LSH
+  * S-curve knee at ~0.5).
   *
-  * Round 8: the index is versioned through
-  * [[graft.io.TableManifest]] — `tableName` is a LOGICAL name whose
-  * current physical table the manifest pointer resolves; rebuilds and
-  * compactions publish a fresh version with one atomic pointer
-  * rename, so probes racing a [[compact]] always serve a complete
-  * snapshot (crash-injection spec'd in IndexManifestSpec).
+  * The index is versioned through [[graft.io.TableManifest]] —
+  * `tableName` is a LOGICAL name whose current physical table the
+  * manifest pointer resolves; rebuilds and compactions publish a fresh
+  * version with one atomic pointer rename, so probes racing a
+  * [[compact]] always serve a complete snapshot (crash-injection
+  * spec'd in IndexManifestSpec). An index committed under an older
+  * [[SchemaVersion]] fails fast on resolve and needs a rebuild.
   */
 object IncrementalDedup {
 
@@ -48,7 +55,7 @@ object IncrementalDedup {
     * .resolve]] fails fast on a version mismatch instead of letting
     * probes silently mis-join against an old layout.
     */
-  val SchemaVersion = 1
+  val SchemaVersion = 2
 
   private val nPerm = 16
   private val bands = 4
@@ -59,6 +66,9 @@ object IncrementalDedup {
     */
   def resolveTable(spark: SparkSession, tableName: String): String =
     graft.io.TableManifest.resolve(spark, tableName, SchemaVersion)
+
+  private def withBp(rows: DataFrame): DataFrame =
+    rows.withColumn("bp", shiftrightunsigned(col("bk"), 56).cast("int"))
 
   /** (bk, doc_id, sig) band rows of a (doc_id, text, …) relation —
     * map-only: native shingles + one-pass signatures, bands folded
@@ -81,48 +91,43 @@ object IncrementalDedup {
     * (the previous version, if any, stays readable until vacuum's
     * retention window passes).
     */
-  def buildIndex(docs: DataFrame, tableName: String, buckets: Int = 8): Unit = {
+  def buildIndex(docs: DataFrame, tableName: String): Unit = {
     val spark = docs.sparkSession
     val v = graft.io.TableManifest.nextVersion(spark, tableName)
     val t = graft.io.TableManifest.physicalName(tableName, v)
     spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    graft.io.Sinks.writeBucketed(
-      bandRows(docs).select("bk", "doc_id", "sig"), t, "bk", buckets)
+    withBp(bandRows(docs).select("bk", "doc_id", "sig"))
+      .repartition(col("bp"))
+      .write.mode("overwrite").format("parquet").partitionBy("bp")
+      .saveAsTable(t)
     graft.io.TableManifest.commit(spark, tableName, v, SchemaVersion)
     graft.io.TableManifest.vacuum(spark, tableName)
   }
 
-  /** Append a new batch's bands to the current index version. The
-    * bucket spec comes from the CATALOG (a caller-supplied count that
-    * disagreed with the table's real spec would fail the append);
-    * parquet append adds files per bucket, never rewrites.
+  /** Append a new batch's bands to the current index version — parquet
+    * append adds files under the touched `bp=` directories only, never
+    * rewrites.
     */
   def appendToIndex(docs: DataFrame, tableName: String): Unit = {
     val spark = docs.sparkSession
     val t = resolveTable(spark, tableName)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.map(_.numBuckets).getOrElse(throw new IllegalStateException(
-        s"$t has no bucket spec — appending would mix layouts; rebuild the index"))
-    bandRows(docs).select("bk", "doc_id", "sig")
-      .write.mode("append")
-      .bucketBy(buckets, "bk").sortBy("bk")
-      .format("parquet").saveAsTable(t)
+    withBp(bandRows(docs).select("bk", "doc_id", "sig"))
+      .write.mode("append").format("parquet").partitionBy("bp")
+      .saveAsTable(t)
   }
 
   /** Collapse append growth into a fresh manifest version — atomic
     * publish, probes racing it serve the old snapshot
-    * ([[graft.io.TableManifest.compactBucketed]]).
+    * ([[graft.io.TableManifest.compactPartitioned]]).
     */
   def compact(spark: SparkSession, tableName: String,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => ()): Unit =
-    graft.io.TableManifest.compactBucketed(
-      spark, tableName, SchemaVersion, beforeCommit, afterCommit)
+    graft.io.TableManifest.compactPartitioned(
+      spark, tableName, "bp", SchemaVersion, Nil, beforeCommit, afterCommit)
 
-  /** The shared estimator tail of both probe layouts: band-key join,
-    * signature-agreement Jaccard estimate (E[agreement] = J, nPerm
-    * trials), per-pair rollup.
+  /** The estimator tail of the probe: band-key join, signature-agreement
+    * Jaccard estimate (E[agreement] = J, nPerm trials), per-pair rollup.
     */
   private def matchTail(idx: DataFrame, nb: DataFrame,
       minAgree: Double): DataFrame =
@@ -140,119 +145,17 @@ object IncrementalDedup {
 
   /** Near-dup matches of a new batch against the index: one row per
     * (new_id, indexed_id) candidate pair whose estimated Jaccard
-    * (signature agreement) reaches `minAgree`.
+    * (signature agreement) reaches `minAgree`. The batch's partition
+    * set (≤ 256 values, driver-bounded by construction) prunes the
+    * index scan to the touched directories before the join.
     */
   def matchAgainstIndex(spark: SparkSession, newDocs: DataFrame,
       tableName: String, minAgree: Double = 0.5): DataFrame = {
     val nb = bandRows(newDocs)
       .select(col("bk"), col("doc_id").as("new_id"), col("sig").as("new_sig"))
-    val idx = spark.table(resolveTable(spark, tableName))
-      .select(col("bk"), col("doc_id").as("indexed_id"), col("sig").as("idx_sig"))
-    matchTail(idx, nb, minAgree)
-  }
-
-  // ------------------------------------------------- layout v2 (bp)
-
-  /** Layout v2 — the PARTITIONED band index (round 16, §8.r17 item
-    * 5b shipped): v1's bucketed layout optimizes SHUFFLE (the index
-    * side joins as the files lie) but every probe READS the whole
-    * index — O(corpus) I/O per delta batch, and row-group pruning
-    * cannot save it (band keys are uniform xxhash64 values: past
-    * parquet's IN-filter threshold the pushed predicate collapses to
-    * a min/max range spanning the whole key space). v2 partitions on
-    * the band key's top byte (`bp` = bk >>> 56: 256 directories,
-    * uniform under the hash), so a batch's band keys — 4 per doc,
-    * batch-bounded — touch a bounded partition set that the probe
-    * prunes EXACTLY via partition filters (directory pruning, no
-    * threshold games). The pruned slice then shuffles for the join:
-    * v2 trades v1's zero-shuffle for O(touched) I/O — the right
-    * trade as soon as the index dwarfs a batch, i.e. at exactly the
-    * scale the incremental path exists for. Same bandRows, same
-    * estimator tail, same manifest discipline; probe results are
-    * IDENTICAL to v1's (spec'd).
-    */
-  val PartitionedSchemaVersion = 2
-
-  private def withBp(rows: DataFrame): DataFrame =
-    rows.withColumn("bp", shiftrightunsigned(col("bk"), 56).cast("int"))
-
-  /** Current physical table of a logical v2 index name. */
-  def resolvePartitionedTable(spark: SparkSession, tableName: String): String =
-    graft.io.TableManifest.resolve(spark, tableName, PartitionedSchemaVersion)
-
-  /** Create the v2 (partitioned) band index as a fresh manifest
-    * version.
-    */
-  def buildIndexPartitioned(docs: DataFrame, tableName: String): Unit = {
-    val spark = docs.sparkSession
-    val v = graft.io.TableManifest.nextVersion(spark, tableName)
-    val t = graft.io.TableManifest.physicalName(tableName, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    withBp(bandRows(docs).select("bk", "doc_id", "sig"))
-      .repartition(col("bp"))
-      .write.mode("overwrite").format("parquet").partitionBy("bp")
-      .saveAsTable(t)
-    graft.io.TableManifest.commit(spark, tableName, v, PartitionedSchemaVersion)
-    graft.io.TableManifest.vacuum(spark, tableName)
-  }
-
-  /** Append a new batch's bands to the current v2 version — parquet
-    * append adds files under the touched `bp=` directories only.
-    */
-  def appendToIndexPartitioned(docs: DataFrame, tableName: String): Unit = {
-    val spark = docs.sparkSession
-    val t = resolvePartitionedTable(spark, tableName)
-    withBp(bandRows(docs).select("bk", "doc_id", "sig"))
-      .write.mode("append").format("parquet").partitionBy("bp")
-      .saveAsTable(t)
-  }
-
-  /** Migrate a v1 (bucketed) band index to layout v2 IN PLACE, from
-    * the index rows alone — (bk, doc_id, sig) carries everything v2
-    * needs, so the corpus is never re-scanned (no re-shingling, no
-    * re-hashing). Publishes a bp-partitioned table as the next
-    * manifest version: probes racing the migration serve the v1
-    * snapshot, the pointer flip is atomic, and pointer-dispatched
-    * callers ([[IncrementalCuration.curateBatch]]) start pruning with
-    * zero change. Fails fast if the index is already v2.
-    */
-  def migrateIndexToPartitioned(spark: SparkSession, tableName: String): Unit = {
-    val cur = resolveTable(spark, tableName)
-    // appends from OTHER sessions (a streaming query's cloned session)
-    // invalidate only their own relation cache — refresh, or the
-    // migrated v2 silently misses stream-admitted rows
-    spark.catalog.refreshTable(cur)
-    val v = graft.io.TableManifest.nextVersion(spark, tableName)
-    val t = graft.io.TableManifest.physicalName(tableName, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    withBp(spark.table(cur))
-      .repartition(col("bp"))
-      .write.mode("overwrite").format("parquet").partitionBy("bp")
-      .saveAsTable(t)
-    graft.io.TableManifest.commit(spark, tableName, v, PartitionedSchemaVersion)
-    graft.io.TableManifest.vacuum(spark, tableName)
-  }
-
-  /** Collapse v2 append growth into a fresh manifest version. */
-  def compactPartitionedIndex(spark: SparkSession, tableName: String,
-      beforeCommit: () => Unit = () => (),
-      afterCommit: () => Unit = () => ()): Unit =
-    graft.io.TableManifest.compactPartitioned(
-      spark, tableName, "bp", PartitionedSchemaVersion, Nil,
-      beforeCommit, afterCommit)
-
-  /** [[matchAgainstIndex]] against a v2 index: the batch's partition
-    * set (≤ 256 values, driver-bounded by construction) prunes the
-    * index scan to the touched directories before the join.
-    */
-  def matchAgainstIndexPartitioned(spark: SparkSession, newDocs: DataFrame,
-      tableName: String, minAgree: Double = 0.5): DataFrame = {
-    val nb = bandRows(newDocs)
-      .select(col("bk"), col("doc_id").as("new_id"), col("sig").as("new_sig"))
       .localCheckpoint() // read twice: the partition probe + the join
-    val bps = nb.select(shiftrightunsigned(col("bk"), 56).cast("int").as("bp"))
-      .distinct().collect().map(_.getInt(0))
-    val idx = spark.table(resolvePartitionedTable(spark, tableName))
+    val bps = withBp(nb).select(col("bp")).distinct().collect().map(_.getInt(0))
+    val idx = spark.table(resolveTable(spark, tableName))
       .filter(col("bp").isin(bps.map(Int.box): _*))
       .select(col("bk"), col("doc_id").as("indexed_id"), col("sig").as("idx_sig"))
     matchTail(idx, nb, minAgree)

@@ -119,14 +119,13 @@ object InfoTheory {
     * entropy/perplexity family — and adds only a second tiny
     * exchange of the per-(doc, tok) partials down to doc_id. The
     * old measured trade (one fat doc_id exchange, no combine:
-    * 0.43 vs 0.51 s warm at sf0.1, ScratchEntropyPlan) was a
-    * per-key optimum; once the rollup is SHARED, its build
+    * 0.43 vs 0.51 s warm at sf0.1) was a per-key optimum; once the rollup is SHARED, its build
     * amortizes across every consumer and the combine-first shape
     * wins outright — the family's marginal cost per key is the
     * small second exchange. The old skew caveat inverts with it:
     * (doc, tok) hashing SPREADS a mega-doc across tasks
-    * (ScratchEntropyScale's 10⁸-token straggler applied to the
-    * retired repartition shape, not this one); the residual skew
+    * (the BASELINE.md r10 entropy-scale row's 10⁸-token straggler
+    * applied to the retired repartition shape, not this one); the residual skew
     * unit is one (doc, tok) pair — a degenerate single-token
     * mega-doc — which the combine absorbs map-side.
     */

@@ -1598,8 +1598,8 @@ object Insights {
   /** The sampled estimator over an arbitrary events relation —
     * exposed so consumers with wide channel vocabularies (the
     * exact key's 2^|C| wall) can dial P themselves;
-    * ScratchShapleyWide runs it at 16 channels where the power-set
-    * method would need 65k subset states.
+    * BASELINE.md's r13 sampled-Shapley row runs it at 16 channels
+    * where the power-set method would need 65k subset states.
     */
   def shapleySampledOver(e: org.apache.spark.sql.DataFrame,
       nPerms: Int): org.apache.spark.sql.DataFrame = {

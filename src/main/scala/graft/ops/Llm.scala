@@ -36,18 +36,9 @@ object Llm {
   private def asDouble(v: Column): Column =
     transform(v, x => x.cast("double"))
 
-  /** Sequential left fold sum — bitwise deterministic. */
-  private def foldSum(v: Column): Column =
-    aggregate(v, lit(0.0), (acc, x) => acc + x)
-
-  /** Squared L2 norm of a double vector. */
-  private def norm2(v: Column): Column = foldSum(transform(v, x => x * x))
-
-  /** Dot product of two double vectors (index-sequential fold). */
-  private def dot(a: Column, b: Column): Column =
-    foldSum(zip_with(a, b, (x, y) => x * y))
-
-  /** Codegen'd cosine (bit-identical to dot/(√n·√n) HOF fold). */
+  /** Codegen'd cosine (bit-identical to the index-sequential
+    * dot/(√n·√n) HOF fold).
+    */
   private def cos(a: Column, b: Column): Column =
     graft.functions.TextExpressions.cosineSim(a, b)
 
@@ -269,7 +260,7 @@ object Llm {
     exactCosinePairs(embRel(s, dir), tau = 0.3, strict = true, lshBands = true)
       .orderBy("label", "a_id", "b_id")
 
-  private val stopwords = Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
+  private[graft] val stopwords = Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
   /** Tokenize → stopword-filter → top-5 terms per language. The
     * (lang, token) counts are the shared [[InfoTheory.tokLangCounts]]

@@ -19,8 +19,7 @@ object Llm2 {
 
   import Relational.Q
 
-  private def toks(c: Column): Column =
-    split(lower(regexp_replace(trim(c), "\\s+", " ")), " ")
+  private def toks(c: Column): Column = split(Llm.normText(c), " ")
 
   // ------------------------------------------------------- language ID
 
@@ -82,15 +81,13 @@ object Llm2 {
 
   // ---------------------------------------------------- quality scoring
 
-  private val qStopwords = Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-
   /** Standalone blended quality expression (identical formula to
     * [[textQualityScore]]'s `quality` column, for composites).
     */
   private[graft] def qualityCol(text: Column): Column = {
     val t = toks(text)
     val nTokens = size(t)
-    val nStop = size(filter(t, x => x.isin(qStopwords.map(lit(_)): _*)))
+    val nStop = size(filter(t, x => x.isin(Llm.stopwords.map(lit(_)): _*)))
     val stopRatio = nStop.cast("double") / nTokens
     val nonalnumRatio =
       (length(text) - length(regexp_replace(text, "[^a-z0-9 ]", "")))
@@ -110,7 +107,7 @@ object Llm2 {
     table(s, dir, "documents")
       .select(col("doc_id"), col("text"),
         size(t).as("n_tokens"),
-        size(filter(t, x => x.isin(qStopwords.map(lit(_)): _*))).as("n_stop"))
+        size(filter(t, x => x.isin(Llm.stopwords.map(lit(_)): _*))).as("n_stop"))
       .withColumn("avg_token_len",
         (length(regexp_replace(col("text"), " ", "")).cast("double") / col("n_tokens")))
       .withColumn("stop_ratio", col("n_stop").cast("double") / col("n_tokens"))

@@ -36,8 +36,8 @@ import graft.functions.NumericExpressions.log2Fixed
   * build (linear, map-side combined); probe cost is
   * O(Σ_t |postings(t)|) — the classic search-engine economics —
   * with the per-doc score rollup shuffling only probed hits.
-  * MEASURED boundary (ScratchBm25Corpus @ 10⁷ docs / 3.7·10⁸
-  * postings, BASELINE.md r11): rare-term probes 3.5 s vs 21–33 s for
+  * MEASURED boundary (BASELINE.md r11 BM25 row: 10⁷ docs / 3.7·10⁸
+  * postings): rare-term probes 3.5 s vs 21–33 s for
   * the indexless full scan — but STOP-WORD-hot terms (~70 % df) on an
   * UNSHARDED index probe SLOWER than the full scan (87–127 s),
   * because bucket pruning collapses read parallelism to the probed
@@ -115,7 +115,7 @@ object PostingIndex {
     * (doc_id, tf) scan of what was just laid down) — NOT from a
     * localCheckpoint of the posting relation: materializing ~40
     * postings/doc through the block manager measured 10× the cost of
-    * the read-back at 10⁷ docs (ScratchBm25Corpus, BASELINE.md r11).
+    * the read-back at 10⁷ docs (BASELINE.md r11 BM25 row).
     */
   def buildIndex(docs: DataFrame, tableName: String, buckets: Int = 8,
       shards: Int = 1): Unit = {

@@ -79,28 +79,6 @@ object SessionCache {
     }
   }
 
-  /** RDD ids of every live cached checkpoint for session `s` — the
-    * PROTECT set for a harness-level leaf reclamation of consumed
-    * result frames (a leaf that IS a session-cached relation must
-    * keep its blocks; later keys in the same session still read it).
-    * Consumer: ScratchResidue, which MEASURED that reclamation as
-    * unnecessary — the drivers' between-key System.gc() plus
-    * ContextCleaner already leave only the cached relations standing
-    * (identical 17 rdds / 267 MB at sf0.1 with and without the free;
-    * BASELINE r18 second-session row) — so no driver calls it; the
-    * accessor stays as the measurement's instrument and the protect
-    * set any future reclamation must honor.
-    */
-  private[graft] def liveRddIds(s: SparkSession): Set[Int] = {
-    import scala.jdk.CollectionConverters._
-    cache.entrySet().asScala.iterator
-      .filter(_.getKey._1 eq s)
-      .flatMap(_.getValue.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      })
-      .toSet
-  }
-
   /** Drop every cached relation derived from `dir` — the hook for an
     * in-session input mutation (tests, long-lived ingest sessions).
     */

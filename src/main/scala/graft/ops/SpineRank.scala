@@ -35,9 +35,9 @@ import org.apache.spark.sql.functions._
   * constant-factor trade, which is what makes it safe to gate on a
   * measured threshold: the oracle gate corpora sit far below (their
   * largest spines are ≤ ~2·10⁵ rows) and stay on the window branch;
-  * the bucketed branch is measured on planted big-group spines in
-  * ScratchSpineTier (equality asserted vs the window branch on the
-  * same data; BASELINE.md r16 row pins the crossover).
+  * the bucketed branch is measured on planted big-group spines
+  * (equality asserted vs the window branch on the same data; the
+  * BASELINE.md r16 SpineRank crossover row pins the crossover).
   *
   * PRECONDITION shared by every caller: spine rows are DISTINCT per
   * (groups, orderCol) — they are group-by results, so the cumulative
@@ -48,7 +48,7 @@ private[graft] object SpineRank {
 
   /** Dispatch point: above this many spine rows in one group, the
     * window branch's single-task sort dominates the bucketed form's
-    * extra phases. Measured (ScratchSpineTier, BASELINE.md r16): at
+    * extra phases. Measured (BASELINE.md r16 SpineRank row): at
     * 2·10⁶-row groups the branches are within noise locally (the
     * local sort is cheap; the bucketed form pays its extra shuffle),
     * by 2·10⁷ the bucketed branch wins — and on a real cluster the

@@ -35,7 +35,7 @@ object Stats {
     * plans N distincts + algebraic aggs together as one Expand whose
     * generated aggregate is big enough to fall out of efficient
     * codegen: 5.9 s warm / 17 s cold at sf0.1, vs 0.3 s for EACH half
-    * run separately (ScratchStats A/B, 2026-08-12). Two cheap scans
+    * run separately (A/B of 2026-08-12). Two cheap scans
     * beat one pathological one; the cross join is 1×1 rows.
     *
     * Min/max aggregate on the NATIVE type (string-casting first would

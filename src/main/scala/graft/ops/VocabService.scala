@@ -241,16 +241,6 @@ object VocabService {
   def zipfOver(spark: SparkSession, name: String): DataFrame =
     InfoTheory.zipfFromCounts(countsOver(spark, name))
 
-  /** Top-k tokens per lang by count (ties → token order). */
-  def topkOver(spark: SparkSession, name: String, k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang")).orderBy(col("cnt").desc, col("tok"))
-    countsOver(spark, name)
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
-      .orderBy("lang", "rn")
-  }
-
   /** Exact counts for a literal term set — the bucket-pruned probe:
     * the isin pushes to the bucketed scan, so only the buckets the
     * terms hash to are read (spec-asserted).

@@ -204,7 +204,6 @@ class AnalyticsSpec extends SparkSpec {
       .filter(col("event_type") === "purchase")
       .select("user_id", "ts", "value")
       .as[(Long, java.sql.Timestamp, Double)].collect()
-    val corpusMax = p.map(_._2.getTime).max / 86400000
     val byUser = p.groupBy(_._1)
     assert(out.map(_.getLong(0)).toSet == byUser.keySet)
     out.foreach { r =>

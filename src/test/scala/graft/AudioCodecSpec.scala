@@ -225,7 +225,6 @@ class AudioCodecSpec extends SparkSpec {
   }
 
   test("end-to-end audio retrieval: WAV corpus (linear + G.711 mixed) -> features -> persisted IVF -> class-pure neighbors") {
-    import org.apache.spark.sql.functions.col
     // three signal classes separated by the Haar band split: period 32
     // (LL-dominant), period 4 (LH), period 1 (high band)
     val periods = Array(32, 4, 1)

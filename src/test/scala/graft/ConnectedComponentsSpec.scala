@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** ops.Llm.connectedComponents: min-id label propagation closure over
   * near-dup pair sets — exactness vs union-find, convergence bounds,
   * idempotence.

@@ -214,7 +214,7 @@ class GraphBfsSpec extends SparkSpec {
     // unreachable — force BOTH through the factored loop and pin
     // parity. NOT exact equality: DataSketches HLL union results are
     // merge-order-sensitive at mid-density (measured ~0.2 % between
-    // forms at sf0.1 — ScratchHyperballForms), so the gate is hop-0
+    // forms at sf0.1 — BASELINE.md r18 HyperBall row), so the gate is hop-0
     // exact + every hop within 1 % (rse at lgK 10 is 3.25 %).
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
@@ -274,7 +274,6 @@ class GraphBfsSpec extends SparkSpec {
   }
 
   test("graph_hyperball_reach: hop-0 exact, monotone, within 5σ of the exact BFS reach sums") {
-    import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
     val rows = ops.Graph.graphHyperballReach(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))

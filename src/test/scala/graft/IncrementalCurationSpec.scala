@@ -30,27 +30,15 @@ class IncrementalCurationSpec extends SparkSpec {
     df.select(col("doc_id").cast("long"), col("status"))
       .as[(Long, String)].collect().toMap
 
-  private def hashCount(name: String, v2: Boolean = false): Long =
-    spark.table(
-      if (v2) ops.IncrementalCuration.resolveHashTablePartitioned(spark, name)
-      else ops.IncrementalCuration.resolveHashTable(spark, name)).count()
+  private def hashCount(name: String): Long =
+    spark.table(ops.IncrementalCuration.resolveHashTable(spark, name)).count()
 
-  // the whole admission contract runs against the layout matrix:
-  // band v1 bucketed / v2 partitioned × hash v1 bucketed / v2
-  // partitioned (round 17 adds the hash side) — curateBatch
-  // dispatches each probe and append on its committed pointer's
-  // schema version and must behave identically, including MIXED
-  // layouts (a production pair migrates one index at a time)
-  for ((bl, hl) <- Seq((1, 1), (2, 2), (1, 2), (2, 1)))
-  test(s"admission ledger (band v$bl, hash v$hl): quality / exact / near drops, fresh admits; re-presentation idempotent; cross-batch near-dedup") {
-    val hashIdx = s"ic1b${bl}h${hl}_hash"; val bandIdx = s"ic1b${bl}h${hl}_band"
-    val hv2 = hl == 2
+  test("admission ledger: quality / exact / near drops, fresh admits; re-presentation idempotent; cross-batch near-dedup") {
+    val hashIdx = "ic1_hash"; val bandIdx = "ic1_band"
     val seed = docs(1L -> text("s1"), 2L -> text("s2"), 3L -> text("s3"))
-    if (hv2) ops.IncrementalCuration.buildHashIndexPartitioned(seed, hashIdx)
-    else ops.IncrementalCuration.buildHashIndex(seed, hashIdx)
-    if (bl == 1) ops.IncrementalDedup.buildIndex(seed, bandIdx)
-    else ops.IncrementalDedup.buildIndexPartitioned(seed, bandIdx)
-    val h0 = hashCount(hashIdx, hv2)
+    ops.IncrementalCuration.buildHashIndex(seed, hashIdx)
+    ops.IncrementalDedup.buildIndex(seed, bandIdx)
+    val h0 = hashCount(hashIdx)
     assert(h0 === 3L)
 
     val batch = docs(
@@ -75,7 +63,7 @@ class IncrementalCurationSpec extends SparkSpec {
     // map to themselves, near-dropped 12 maps to its index keeper
     // (seed 2), near-dropped 15 to its batch component root (13);
     // 14 shares 13's hash, 11's hash is already indexed
-    assert(hashCount(hashIdx, hv2) === h0 + 4,
+    assert(hashCount(hashIdx) === h0 + 4,
       "admitted self-rows plus near-drop tombstones append")
 
     // re-presentation: admitted docs read back as no-op successes,
@@ -91,7 +79,7 @@ class IncrementalCurationSpec extends SparkSpec {
     assert(led2(12L) === "drop_exact_index", "12 hit its own tombstone")
     assert(led2(14L) === "drop_exact_index", "13 is in the corpus now")
     assert(led2(15L) === "drop_exact_index", "15 hit its own tombstone")
-    assert(hashCount(hashIdx, hv2) === h0 + 4, "re-presentation must append nothing")
+    assert(hashCount(hashIdx) === h0 + 4, "re-presentation must append nothing")
 
     // cross-batch: a near dup of batch-1's admission drops against the
     // index (and tombstones); genuinely new content admits
@@ -99,10 +87,10 @@ class IncrementalCurationSpec extends SparkSpec {
       docs(20L -> nearOf("b16"), 21L -> text("b21")),
       hashIdx, bandIdx))
     assert(led3 === Map(20L -> "drop_near_index", 21L -> "admitted"), led3.toString)
-    assert(hashCount(hashIdx, hv2) === h0 + 6)
+    assert(hashCount(hashIdx) === h0 + 6)
 
-    // the re-entry class the tombstones close (round 18, the r17
-    // ScratchReconcile finding): an EXACT duplicate of near-dropped 12
+    // the re-entry class the tombstones close (BASELINE.md r18
+    // reconciliation row): an EXACT duplicate of near-dropped 12
     // presented in a later batch must drop against 12's tombstone —
     // before tombstones its hash probe missed (12 never indexed) and
     // its admission depended on banding against the keeper
@@ -110,148 +98,44 @@ class IncrementalCurationSpec extends SparkSpec {
       docs(30L -> nearOf("s2")), hashIdx, bandIdx))
     assert(led4 === Map(30L -> "drop_exact_index"),
       s"an exact dup of a near-dropped doc must hit the tombstone: $led4")
-    assert(hashCount(hashIdx, hv2) === h0 + 6, "a tombstone hit appends nothing")
+    assert(hashCount(hashIdx) === h0 + 6, "a tombstone hit appends nothing")
   }
 
-  test("hash-index probe joins the index side without a shuffle (bucketed layout IS the join layout)") {
-    val seed = docs((1L to 200L).map(i => i -> text(s"p$i")): _*)
-    ops.IncrementalCuration.buildHashIndex(seed, "ic3_hash")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val probe = docs(400L -> text("p7"))
-        .withColumn("text_hash",
-          sha2(lower(regexp_replace(trim(col("text")), "\\s+", " ")), 256))
-        .join(spark.table(
-          ops.IncrementalCuration.resolveHashTable(spark, "ic3_hash")),
-          Seq("text_hash"), "left")
-      probe.collect()
-      val plan = probe.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"), s"index scan must be bucketed:\n$plan")
-      val finalPlan = plan.split("== Initial Plan ==").head
-      val hashExchanges =
-        "Exchange hashpartitioning\\(text_hash".r.findAllIn(finalPlan).length
-      assert(hashExchanges == 1,
-        s"only the delta side may exchange on text_hash, got $hashExchanges:\n$plan")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      io.TableManifest.drop(spark, "ic3_hash")
-    }
-  }
-
-  test("hash layout v2: probe equals v1, prunes to the batch's hp directories, appends and compacts") {
-    // the IncrementalDedupSpec layout-v2 contract, hash-index side
-    // (round 17): identical probe results, exact directory pruning,
-    // append under touched partitions, compaction invisible to reads
+  test("hash index: probe prunes to the batch's hp directories, appends and compacts") {
+    // the IncrementalDedupSpec partitioned-probe contract, hash-index
+    // side: exact directory pruning, append under touched partitions,
+    // compaction invisible to reads
     val seed = docs((1L to 200L).map(i => i -> text(s"hv$i")): _*)
-    ops.IncrementalCuration.buildHashIndex(seed, "ic9v1_hash")
-    ops.IncrementalCuration.buildHashIndexPartitioned(seed, "ic9v2_hash")
+    ops.IncrementalCuration.buildHashIndex(seed, "ic9_hash")
     try {
-      val delta = docs(900L -> text("hv7"), 901L -> text("hvNovel"))
+      def hashed(d: org.apache.spark.sql.DataFrame) = d
         .withColumn("text_hash",
           sha2(lower(regexp_replace(trim(col("text")), "\\s+", " ")), 256))
         .localCheckpoint()
-      def probeSet(name: String, v2: Boolean) =
-        ops.IncrementalCuration.hashProbe(delta, name, v2)
-          .select(col("doc_id").cast("long"), col("keep_id").cast("long"))
+      def probeSet(q: org.apache.spark.sql.DataFrame) =
+        q.select(col("doc_id").cast("long"), col("keep_id").cast("long"))
           .as[(Long, Option[Long])].collect().toSet
-      val v1 = probeSet("ic9v1_hash", v2 = false)
-      val q2 = ops.IncrementalCuration.hashProbe(delta, "ic9v2_hash", v2 = true)
-      val v2r = q2.select(col("doc_id").cast("long"), col("keep_id").cast("long"))
-        .as[(Long, Option[Long])].collect().toSet
-      assert(v1 === v2r, "both layouts must report identical probe results")
-      assert(v1 === Set((900L, Some(7L)), (901L, None)))
+      val delta = hashed(docs(900L -> text("hv7"), 901L -> text("hvNovel")))
+      val q = ops.IncrementalCuration.hashProbe(delta, "ic9_hash")
+      val m = probeSet(q)
+      assert(m === Set((900L, Some(7L)), (901L, None)))
       // the probe prunes the index scan to the delta's hp directories
-      val plan = q2.queryExecution.executedPlan.toString
+      val plan = q.queryExecution.executedPlan.toString
       val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).mkString
       assert(pf.contains("hp"), s"probe must prune on hp:\n${plan.take(1500)}")
       // append lands under the touched partitions; later probes see it
-      ops.IncrementalCuration.appendToHashIndexPartitioned(
-        docs(950L -> text("hvAppended")), "ic9v2_hash")
-      val probe2 = docs(960L -> text("hvAppended"))
-        .withColumn("text_hash",
-          sha2(lower(regexp_replace(trim(col("text")), "\\s+", " ")), 256))
-        .localCheckpoint()
-      val m2 = ops.IncrementalCuration.hashProbe(probe2, "ic9v2_hash", v2 = true)
-        .select(col("doc_id").cast("long"), col("keep_id").cast("long"))
-        .as[(Long, Option[Long])].collect().toSet
+      ops.IncrementalCuration.appendToHashIndex(
+        docs(950L -> text("hvAppended")), "ic9_hash")
+      val m2 = probeSet(ops.IncrementalCuration.hashProbe(
+        hashed(docs(960L -> text("hvAppended"))), "ic9_hash"))
       assert(m2 === Set((960L, Some(950L))), m2.toString)
       // compaction publishes a fresh version with identical reads
-      val before = hashCount("ic9v2_hash", v2 = true)
-      ops.IncrementalCuration.compactHashIndexPartitioned(spark, "ic9v2_hash")
-      assert(hashCount("ic9v2_hash", v2 = true) === before)
-      val m3 = ops.IncrementalCuration.hashProbe(delta, "ic9v2_hash", v2 = true)
-        .select(col("doc_id").cast("long"), col("keep_id").cast("long"))
-        .as[(Long, Option[Long])].collect().toSet
-      assert(m3 === v1, "compaction must not change probe results")
-    } finally {
-      io.TableManifest.drop(spark, "ic9v1_hash")
-      io.TableManifest.drop(spark, "ic9v2_hash")
-    }
-  }
-
-  test("layout migration v1 -> v2: in place from index rows alone, admission reads identically across the flip") {
-    // round 17: a production pair migrates to the partitioned layouts
-    // WITHOUT re-scanning the corpus — the index rows carry everything
-    // v2 needs, and the manifest pointer flip re-routes curateBatch's
-    // dispatch with zero caller change
-    val seed = docs(1L -> text("m1"), 2L -> text("m2"))
-    ops.IncrementalCuration.buildHashIndex(seed, "icm_hash")
-    ops.IncrementalDedup.buildIndex(seed, "icm_band")
-    val batch = docs(50L -> text("m50"), 51L -> nearOf("m1"))
-    val led = ledgerMap(ops.IncrementalCuration.curateBatch(
-      batch, "icm_hash", "icm_band"))
-    assert(led === Map(50L -> "admitted", 51L -> "drop_near_index"), led.toString)
-
-    ops.IncrementalCuration.migrateHashIndexToPartitioned(spark, "icm_hash")
-    ops.IncrementalDedup.migrateIndexToPartitioned(spark, "icm_band")
-    // v1 resolvers now fail fast; v2 resolvers serve
-    intercept[Exception] {
-      ops.IncrementalCuration.resolveHashTable(spark, "icm_hash") }
-    assert(hashCount("icm_hash", v2 = true) === 4L,
-      "migration must carry every row — post-build appends AND tombstones")
-
-    // identical admission semantics across the flip: re-presentation
-    // is a no-op, drops stay drops (the near drop reads through its
-    // migrated tombstone), and fresh content admits with the appends
-    // landing under the partitioned layout
-    val led2 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      batch, "icm_hash", "icm_band"))
-    assert(led2 === Map(50L -> "readmitted", 51L -> "drop_exact_index"), led2.toString)
-    val led3 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      docs(60L -> nearOf("m50"), 61L -> text("m61")), "icm_hash", "icm_band"))
-    assert(led3 === Map(60L -> "drop_near_index", 61L -> "admitted"), led3.toString)
-    assert(hashCount("icm_hash", v2 = true) === 6L)
-  }
-
-  test("migration survives cross-session appends: the stale relation cache cannot shrink the migrated index") {
-    // round 17 (review fix d78772b): appends from another session —
-    // the streaming foreachBatch model, where writes ride the query's
-    // CLONED session — invalidate only that session's relation cache.
-    // A main-session migration that read the table earlier would
-    // otherwise serve the pre-append file list and publish a v2 index
-    // silently missing the stream-admitted rows.
-    val seed = docs(1L -> text("x1"))
-    ops.IncrementalCuration.buildHashIndex(seed, "icx_hash")
-    ops.IncrementalDedup.buildIndex(seed, "icx_band")
-    // main session reads BOTH tables (populating its relation cache)
-    assert(hashCount("icx_hash") === 1L)
-    assert(spark.table(ops.IncrementalDedup.resolveTable(spark, "icx_band"))
-      .select("doc_id").distinct().count() === 1L)
-    // a different session appends an admission to both indexes
-    val other = spark.newSession()
-    val adm = other.range(1).select(lit(77L).as("doc_id"),
-      lit("en").as("lang"), lit(text("x77")).as("text"))
-    ops.IncrementalCuration.appendToHashIndex(adm, "icx_hash")
-    ops.IncrementalDedup.appendToIndex(adm, "icx_band")
-    // main-session migrations must carry the cross-session rows
-    ops.IncrementalCuration.migrateHashIndexToPartitioned(spark, "icx_hash")
-    ops.IncrementalDedup.migrateIndexToPartitioned(spark, "icx_band")
-    assert(hashCount("icx_hash", v2 = true) === 2L,
-      "hash migration served a stale file list")
-    assert(spark.table(
-        ops.IncrementalDedup.resolvePartitionedTable(spark, "icx_band"))
-      .select("doc_id").distinct().count() === 2L,
-      "band migration served a stale file list")
+      val before = hashCount("ic9_hash")
+      ops.IncrementalCuration.compactHashIndex(spark, "ic9_hash")
+      assert(hashCount("ic9_hash") === before)
+      val m3 = probeSet(ops.IncrementalCuration.hashProbe(delta, "ic9_hash"))
+      assert(m3 === m, "compaction must not change probe results")
+    } finally io.TableManifest.drop(spark, "ic9_hash")
   }
 
   test("streaming front-end: file drops curate continuously, ledger batch-keyed; early poll is empty") {
@@ -319,7 +203,7 @@ class IncrementalCurationSpec extends SparkSpec {
     assert(led3 === Map(31L -> "drop_near_index"))
 
     // compaction collapses append growth into a fresh version; every
-    // admission read is unchanged and the probe layout stays bucketed
+    // admission read is unchanged
     val before = hashCount("ic2_hash")
     ops.IncrementalCuration.compactHashIndex(spark, "ic2_hash")
     assert(hashCount("ic2_hash") === before, "compaction must not lose rows")
@@ -731,35 +615,28 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalCuration.vacuumLedger(spark, s"$dir/nothere")
   }
 
-  // the hash-index compaction↔append interleave (round 18, r17
-  // verdict item 4 — the band side's crash/interleave coverage
-  // mirrored to the hash side), on both hash layouts and the MIXED
-  // band/hash matrix cells: a compaction crash before the pointer
-  // rename is invisible to admission; an append RACING a compaction
-  // (landing between the stage read and the commit) loses its hash
-  // rows to the version flip — the single-maintenance-writer hazard —
-  // and must degrade to exactly the band-present/hash-absent
-  // half-write, which replays as fresh and converges
-  for ((hl, bl) <- Seq((1, 2), (2, 1)))
-  test(s"hash compaction interleave (hash v$hl, band v$bl): pre-commit crash invisible; racing append degrades to the half-write and converges") {
-    val hashIdx = s"ici$hl$bl" + "_hash"; val bandIdx = s"ici$hl$bl" + "_band"
-    val hv2 = hl == 2
-    val tg = s"i$hl$bl"
+  // the hash-index compaction↔append interleave (the band side's
+  // crash/interleave coverage mirrored to the hash side): a compaction
+  // crash before the pointer rename is invisible to admission; an
+  // append RACING a compaction (landing between the stage read and the
+  // commit) loses its hash rows to the version flip — the
+  // single-maintenance-writer hazard — and must degrade to exactly the
+  // band-present/hash-absent half-write, which replays as fresh and
+  // converges
+  test("hash compaction interleave: pre-commit crash invisible; racing append degrades to the half-write and converges") {
+    val hashIdx = "ici_hash"; val bandIdx = "ici_band"
+    val tg = "ici"
     val seed = docs(1L -> text(s"${tg}s"))
-    if (hv2) ops.IncrementalCuration.buildHashIndexPartitioned(seed, hashIdx)
-    else ops.IncrementalCuration.buildHashIndex(seed, hashIdx)
-    if (bl == 2) ops.IncrementalDedup.buildIndexPartitioned(seed, bandIdx)
-    else ops.IncrementalDedup.buildIndex(seed, bandIdx)
+    ops.IncrementalCuration.buildHashIndex(seed, hashIdx)
+    ops.IncrementalDedup.buildIndex(seed, bandIdx)
     def compact(beforeCommit: () => Unit = () => ()): Unit =
-      if (hv2) ops.IncrementalCuration.compactHashIndexPartitioned(
-        spark, hashIdx, beforeCommit)
-      else ops.IncrementalCuration.compactHashIndex(spark, hashIdx, beforeCommit)
+      ops.IncrementalCuration.compactHashIndex(spark, hashIdx, beforeCommit)
     def admit(rows: (Long, String)*): Map[Long, String] =
       ledgerMap(ops.IncrementalCuration.curateBatch(
         docs(rows: _*), hashIdx, bandIdx))
 
     assert(admit(10L -> text(s"${tg}a")) === Map(10L -> "admitted"))
-    val h1 = hashCount(hashIdx, hv2)
+    val h1 = hashCount(hashIdx)
 
     // 1. compaction crash BEFORE the pointer rename: admission keeps
     // reading the old snapshot — re-presentation is still the no-op
@@ -767,24 +644,24 @@ class IncrementalCurationSpec extends SparkSpec {
       compact(beforeCommit = () => throw new RuntimeException("injected")) }
     assert(admit(10L -> text(s"${tg}a")) === Map(10L -> "readmitted"),
       "a crashed compaction must be invisible to admission")
-    assert(hashCount(hashIdx, hv2) === h1)
+    assert(hashCount(hashIdx) === h1)
     compact() // clean recovery over the leftover staging
     assert(admit(10L -> text(s"${tg}a")) === Map(10L -> "readmitted"))
-    assert(hashCount(hashIdx, hv2) === h1, "compaction must not change contents")
+    assert(hashCount(hashIdx) === h1, "compaction must not change contents")
 
     // 2. an admission RACING the compaction: its appends land on the
     // version being superseded, so the flip LOSES its hash rows (and
     // keeps its band rows — the band index is a different table)
     compact(beforeCommit = () =>
       assert(admit(20L -> text(s"${tg}b")) === Map(20L -> "admitted")))
-    assert(hashCount(hashIdx, hv2) === h1,
+    assert(hashCount(hashIdx) === h1,
       "the racing append's hash rows lose to the version flip")
     // exactly the band-present/hash-absent half-write: the replay
     // reads its own stranded bands as self-matches (filtered),
     // re-admits, and completes the hash append
     assert(admit(20L -> text(s"${tg}b")) === Map(20L -> "admitted"),
       "the lost append must replay as FRESH, not readmitted")
-    assert(hashCount(hashIdx, hv2) === h1 + 1)
+    assert(hashCount(hashIdx) === h1 + 1)
     assert(admit(20L -> text(s"${tg}b")) === Map(20L -> "readmitted"),
       "converged after the replay")
     // and the recovered doc's bands still detect near-dups

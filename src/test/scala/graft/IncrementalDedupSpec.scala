@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** ops.IncrementalDedup: persisted MinHash band index, probed per
-  * batch — match correctness, shuffle-free index side, append growth.
+  * batch — match correctness, partition pruning, append growth,
+  * compaction.
   */
 class IncrementalDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -15,44 +16,36 @@ class IncrementalDedupSpec extends SparkSpec {
     (1 to 40).map(i => s"${stem}a$i ${stem}b$i ${stem}c$i").mkString(" ") +
       " " + extra
 
-  test("layout v2: partitioned probe equals v1, prunes to the batch's partitions, appends and compacts") {
+  test("partitioned probe prunes to the batch's partitions, appends and compacts") {
     val corpus = (1L to 120L).map(i => (i, doc("", stem = s"s$i")))
       .toDF("doc_id", "text")
-    ops.IncrementalDedup.buildIndex(corpus, "idx_v1")
-    ops.IncrementalDedup.buildIndexPartitioned(corpus, "idx_v2")
+    ops.IncrementalDedup.buildIndex(corpus, "idx_bp")
     try {
       val batch = Seq(
         (500L, doc("tail change only", stem = "s7")),   // near-dup of doc 7
         (501L, doc("", stem = "novel")))
         .toDF("doc_id", "text")
-      val v1 = ops.IncrementalDedup.matchAgainstIndex(spark, batch, "idx_v1")
-        .as[(Long, Long, Double)].collect().toSet
-      val q2 = ops.IncrementalDedup
-        .matchAgainstIndexPartitioned(spark, batch, "idx_v2")
-      val v2 = q2.as[(Long, Long, Double)].collect().toSet
-      assert(v1 === v2, "both layouts must report the identical matches")
-      assert(v1.map(r => (r._1, r._2)) === Set((500L, 7L)))
+      val q = ops.IncrementalDedup.matchAgainstIndex(spark, batch, "idx_bp")
+      val m = q.as[(Long, Long, Double)].collect().toSet
+      assert(m.map(r => (r._1, r._2)) === Set((500L, 7L)))
       // the probe prunes the index scan to the batch's bp directories
-      val plan = q2.queryExecution.executedPlan.toString
+      val plan = q.queryExecution.executedPlan.toString
       val pf = plan.linesIterator.filter(_.contains("PartitionFilters")).mkString
       assert(pf.contains("bp"), s"probe must prune on bp:\n${plan.take(1500)}")
       // append lands under the touched partitions; later probes see it
-      ops.IncrementalDedup.appendToIndexPartitioned(
-        Seq((600L, doc("", stem = "fresh"))).toDF("doc_id", "text"), "idx_v2")
-      val m2 = ops.IncrementalDedup.matchAgainstIndexPartitioned(spark,
+      ops.IncrementalDedup.appendToIndex(
+        Seq((600L, doc("", stem = "fresh"))).toDF("doc_id", "text"), "idx_bp")
+      val m2 = ops.IncrementalDedup.matchAgainstIndex(spark,
           Seq((700L, doc("tail changed", stem = "fresh"))).toDF("doc_id", "text"),
-          "idx_v2")
+          "idx_bp")
         .as[(Long, Long, Double)].collect().map(r => (r._1, r._2)).toSet
       assert(m2 === Set((700L, 600L)), m2.toString)
       // compaction publishes a fresh version with identical reads
-      ops.IncrementalDedup.compactPartitionedIndex(spark, "idx_v2")
-      val m3 = ops.IncrementalDedup.matchAgainstIndexPartitioned(spark,
-          batch, "idx_v2").as[(Long, Long, Double)].collect().toSet
-      assert(m3 === v2, "compaction must not change probe results")
-    } finally {
-      io.TableManifest.drop(spark, "idx_v1")
-      io.TableManifest.drop(spark, "idx_v2")
-    }
+      ops.IncrementalDedup.compact(spark, "idx_bp")
+      val m3 = ops.IncrementalDedup.matchAgainstIndex(spark,
+          batch, "idx_bp").as[(Long, Long, Double)].collect().toSet
+      assert(m3 === m, "compaction must not change probe results")
+    } finally io.TableManifest.drop(spark, "idx_bp")
   }
 
   test("new batch matches its indexed near-dup, novel docs pass clean") {
@@ -73,69 +66,6 @@ class IncrementalDedupSpec extends SparkSpec {
     } finally io.TableManifest.drop(spark, "idx_md")
   }
 
-  test("compactBucketed collapses append growth and keeps the shuffle-free join layout") {
-    val corpus = (1L to 50L).map(i => (i, doc(s"v$i", stem = s"s$i"))).toDF("doc_id", "text")
-    ops.IncrementalDedup.buildIndex(corpus, "idx_cmp")
-    try {
-      for (i <- 0 until 3)
-        ops.IncrementalDedup.appendToIndex(
-          Seq((100L + i, doc(s"new$i", stem = s"ns$i"))).toDF("doc_id", "text"), "idx_cmp")
-      def current() = spark.table(
-        ops.IncrementalDedup.resolveTable(spark, "idx_cmp"))
-      val before = current().orderBy("bk", "doc_id").collect().toSeq
-      ops.IncrementalDedup.compact(spark, "idx_cmp")
-      val after = current().orderBy("bk", "doc_id").collect().toSeq
-      assert(after === before, "compaction must not change the index contents")
-      // bucket spec comes from the catalog, so the rewrite must have
-      // preserved it — and the aligned repartition leaves ONE file per
-      // non-empty bucket (the point of compacting)
-      val metaAfter = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(
-          ops.IncrementalDedup.resolveTable(spark, "idx_cmp")))
-      assert(metaAfter.bucketSpec.exists(s =>
-        s.numBuckets == 8 && s.bucketColumnNames == Seq("bk")),
-        s"bucket spec must survive compaction: ${metaAfter.bucketSpec}")
-      val dataFiles = new java.io.File(metaAfter.location)
-        .listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(dataFiles.length <= 8,
-        s"compaction must leave at most one file per bucket, got ${dataFiles.length}")
-      // the bucketed-scan join property survives the rewrite
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val q = ops.IncrementalDedup.matchAgainstIndex(spark,
-          Seq((900L, doc("v7", stem = "s7"))).toDF("doc_id", "text"), "idx_cmp")
-        q.collect()
-        val plan = q.queryExecution.executedPlan.toString
-        assert(plan.contains("Bucketed: true"), s"compacted index must stay bucketed:\n$plan")
-      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    } finally io.TableManifest.drop(spark, "idx_cmp")
-  }
-
-  test("index side joins without a shuffle or sort (bucketed layout IS the join layout)") {
-    val corpus = (1L to 500L).map(i => (i, doc(s"variant $i", stem = s"stem$i")))
-      .toDF("doc_id", "text")
-    ops.IncrementalDedup.buildIndex(corpus, "idx_plan")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val batch = Seq((900L, doc("variant 7", stem = "stem7"))).toDF("doc_id", "text")
-      val q = ops.IncrementalDedup.matchAgainstIndex(spark, batch, "idx_plan")
-      q.collect()
-      val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"), s"index scan must be bucketed:\n$plan")
-      // exactly ONE exchange on the band key — the new-batch side moving
-      // into the index's bucket layout; the index side joins as it lies
-      // on disk (the groupBy above the join exchanges on other columns)
-      // AQE prints Final and Initial sections — count the final only
-      val finalPlan = plan.split("== Initial Plan ==").head
-      val bkExchanges = "Exchange hashpartitioning\\(bk".r.findAllIn(finalPlan).length
-      assert(bkExchanges == 1,
-        s"expected exactly the new side to exchange on bk, got $bkExchanges:\n$plan")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      io.TableManifest.drop(spark, "idx_plan")
-    }
-  }
-
   test("append grows the index without rewriting; later batches match appended docs") {
     val corpus = Seq((1L, doc(""))).toDF("doc_id", "text")
     ops.IncrementalDedup.buildIndex(corpus, "idx_app")
@@ -144,8 +74,11 @@ class IncrementalDedupSpec extends SparkSpec {
         val loc = spark.sessionState.catalog.getTableMetadata(
           org.apache.spark.sql.catalyst.TableIdentifier(
             ops.IncrementalDedup.resolveTable(spark, "idx_app"))).location
-        val d = new java.io.File(loc)
-        d.listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+        val d = java.nio.file.Paths.get(loc)
+        val w = java.nio.file.Files.walk(d)
+        try w.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+          .map(p => d.relativize(p).toString).toSet
+        finally w.close()
       }
       val before = files()
       val batch1 = Seq((20L, doc("", stem = "delta"))).toDF("doc_id", "text")

@@ -47,7 +47,7 @@ class IndexManifestSpec extends SparkSpec {
       assert(probe() === baselineProbe,
         "probes racing a crashed compaction must serve the old snapshot unchanged")
       // recovery: a clean compaction re-stages over the leftover and
-      // lands; results unchanged, one file per bucket
+      // lands; results unchanged
       ops.IncrementalDedup.compact(spark, "mf_pre")
       assert(ops.IncrementalDedup.resolveTable(spark, "mf_pre") !== resolvedBefore)
       assert(probe() === baselineProbe, "compaction must not change probe results")
@@ -137,6 +137,36 @@ class IndexManifestSpec extends SparkSpec {
       }
       assert(e2.getMessage.contains("buildIndex"))
     } finally io.TableManifest.drop(spark, "mf_schema")
+
+    // incremental curation over band and hash indexes persisted at
+    // schema v1 (the bucketed layout of an older build): curateBatch
+    // must refuse before it reads or appends anything
+    val seed = Seq((1L, "en", (Seq("the", "of") ++ (1 to 18).map(i => s"wsvx$i")).mkString(" ")))
+      .toDF("doc_id", "lang", "text")
+    val (band, hash) = ("mf_v1_band", "mf_v1_hash")
+    val (bandT, hashT) = (io.TableManifest.physicalName(band, 0),
+      io.TableManifest.physicalName(hash, 0))
+    try {
+      io.Sinks.writeBucketed(ops.IncrementalDedup.bandRows(seed)
+        .select("bk", "doc_id", "sig"), bandT, "bk", 8)
+      io.Sinks.writeBucketed(seed.select(
+        sha2(lower(regexp_replace(trim(col("text")), "\\s+", " ")), 256).as("text_hash"),
+        col("doc_id").as("keep_id")), hashT, "text_hash", 8)
+      io.TableManifest.commit(spark, band, 0, schemaVersion = 1)
+      io.TableManifest.commit(spark, hash, 0, schemaVersion = 1)
+      val rows = Seq(bandT, hashT).map(spark.table(_).count())
+      val fresh = Seq((2L, "en", (Seq("the", "of") ++ (1 to 18).map(i => s"wnewx$i")).mkString(" ")))
+        .toDF("doc_id", "lang", "text")
+      val e3 = intercept[IllegalStateException] {
+        ops.IncrementalCuration.curateBatch(fresh, hash, band).collect()
+      }
+      assert(e3.getMessage.contains("schema v1"), e3.getMessage)
+      assert(Seq(bandT, hashT).map(spark.table(_).count()) === rows,
+        "a refused batch must admit nothing")
+    } finally {
+      io.TableManifest.drop(spark, band)
+      io.TableManifest.drop(spark, hash)
+    }
   }
 
   test("rebuild publishes a fresh version atomically; the superseded one is retained one cycle") {

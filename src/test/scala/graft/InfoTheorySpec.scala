@@ -418,7 +418,7 @@ class InfoTheorySpec extends SparkSpec {
     val rows = ops.InfoTheory.aggGiniImpurity(spark, "/root/testdata/sf0.001")
       .as[(String, Long, Long, Double)].collect()
     assert(rows.nonEmpty)
-    rows.foreach { case (seg, n, k, g) =>
+    rows.foreach { case (seg, _, k, g) =>
       assert(g >= 0.0 && g <= 1.0 - 1.0 / k + 1e-12, s"$seg: $g outside [0, 1-1/$k]")
     }
     // double reference from raw counts

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** ops.Analytics.interpolateSeries — the keyed (unbounded-cardinality)
   * interpolation form, on a generated 200-series fixture with random
   * gaps: exactness vs a driver-side recomputation, spine coverage,

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-
 /** Adversarial join semantics (SURVEY §5.2): NULL keys in every join
   * type, null-safe equality, as-of boundary/tie behavior.
   */

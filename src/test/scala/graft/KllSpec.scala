@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** ops.Udx KLL quantile sketch — the certified-bound property family
   * (the CountMin spec pattern, SURVEY §7.4: approx/seeded → no DuckDB
   * oracle; the guarantees ARE the correctness statement):

@@ -93,7 +93,7 @@ class Llm2Spec extends SparkSpec {
     val centers = Array.fill(4)(Array.fill(16)(rnd.nextGaussian() * 5))
     val raw = (0 until 48).map { i =>
       val c = centers(i % 4)
-      c.zipWithIndex.map { case (x, j) => x + rnd.nextGaussian() * 0.3 }
+      c.map(x => x + rnd.nextGaussian() * 0.3)
     }
     val ids = rnd.shuffle((0L until 48L).toVector)
     val data = ids.zip(raw).map { case (id, v) => (id, v.toSeq) }

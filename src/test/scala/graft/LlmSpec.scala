@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** LLM-op semantics on planted fixtures: exact-dedup grouping +
@@ -371,7 +370,7 @@ class LlmSpec extends SparkSpec {
     assert(gotPerLang === expectQuota.filter(_._2 > 0))
     // quotas never exceed availability, and the binding language is tight
     expectQuota.foreach { case (l, qn) => assert(qn <= avail(l)) }
-    assert(expectQuota.exists { case (l, qn) =>
+    assert(expectQuota.exists { case (l, _) =>
       avail(l) * 1000000L / w(l) == t }, "some language must bind the budget")
     // ranks are 1..quota_l dense per language (deterministic admission)
     out.groupBy(_._2).foreach { case (l, rs) =>

@@ -35,7 +35,6 @@ class Round6OpsSpec extends SparkSpec {
   }
 
   test("agg_heavy_hitters equals the exact GROUP BY ... HAVING result") {
-    import spark.implicits._
     val hh = ops.Udx.aggHeavyHitters(spark, sf)
     val toks = split(lower(regexp_replace(trim(col("text")), "\\s+", " ")), " ")
     val tok = io.Readers.table(spark, sf, "documents")

@@ -5,15 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM per `sbt test` fork). */
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val session: SparkSession = Sessions.local(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    // events.parquet carries TIMESTAMP(NANOS) — see Readers.table
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-wh").toString)
     .getOrCreate()

@@ -13,7 +13,7 @@ import graft.ops.SpineRank
   * bit-for-bit on real corpus spines, a planted-skew spine (point
   * mass + heavy tail — the shape that breaks fixed-width bucketing),
   * and the descending/totals variants. The dispatch threshold itself
-  * is a measured constant (ScratchSpineTier, BASELINE.md r16); these
+  * is a measured constant (BASELINE.md r16 SpineRank row); these
   * specs force each branch via the threshold parameter.
   */
 class SpineRankSpec extends SparkSpec {

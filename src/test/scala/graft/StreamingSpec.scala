@@ -260,7 +260,6 @@ class StreamingSpec extends SparkSpec {
       // advanced watermark
       stream.addData(Seq(ev(4, "2024-01-01 12:00:00", 2, "view")))
       q.processAllAvailable()
-      import org.apache.spark.sql.functions.col
       val sessions = spark.table("twssess")
         .select("user_id", "session_start_ms", "session_end_ms", "n_events")
         .as[(Long, Long, Long, Long)].collect().toSet

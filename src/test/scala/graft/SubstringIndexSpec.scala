@@ -83,11 +83,17 @@ class SubstringIndexSpec extends SparkSpec {
         .listFiles().filter(_.getName.endsWith(".parquet"))
       assert(dataFiles.length <= 8,
         s"at most one file per bucket after compaction, got ${dataFiles.length}")
-      // probing an appended doc still works post-compaction
-      val probe = ops.SubstringIndex.probeSpans(spark,
-        Seq((900L, "en", words("a1-", 15).mkString(" "))).toDF("doc_id", "lang", "text"),
-        "ssi_cmp")
-      assert(probe.collect().exists(_.getLong(1) == 101L))
+      // probing an appended doc still works post-compaction, and the
+      // bucketed-scan join property survives the rewrite
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try {
+        val probe = ops.SubstringIndex.probeSpans(spark,
+          Seq((900L, "en", words("a1-", 15).mkString(" "))).toDF("doc_id", "lang", "text"),
+          "ssi_cmp")
+        assert(probe.collect().exists(_.getLong(1) == 101L))
+        val plan = probe.queryExecution.executedPlan.toString
+        assert(plan.contains("Bucketed: true"), s"compacted index must stay bucketed:\n$plan")
+      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     } finally io.TableManifest.drop(spark, "ssi_cmp")
   }
 

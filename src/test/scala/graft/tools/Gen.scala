@@ -1,7 +1,9 @@
-package graft
+package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+
+import graft.Sessions
 
 /** sf1 corpus generator (round 14 — r13 verdict item 3: convert the
   * heavy families' 100×-scale claims from argument to measurement).
@@ -23,10 +25,10 @@ import org.apache.spark.sql.functions._
   * `spark.range` ids through salted xxhash64 uniforms — no driver
   * RNG, no collect; the generator itself is the 100 TB shape.
   *
-  * Usage: `sbt "Test/runMain graft.ScratchSf1Gen [outDir] [mult]"`
+  * Usage: `sbt "Test/runMain graft.tools.Gen [outDir] [mult]"`
   * (default /tmp/sf1, mult 1.0 = sf1).
   */
-object ScratchSf1Gen {
+object Gen {
 
   private def u(salt: Int): Column =
     pmod(xxhash64(col("id"), lit(salt)), lit(1000000L)).cast("double") / 1e6
@@ -38,14 +40,7 @@ object ScratchSf1Gen {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/sf1")
     val mult = args.drop(1).headOption.map(_.toDouble).getOrElse(1.0)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Sessions.local(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val nCust = (150000 * mult).toLong
