@@ -157,8 +157,9 @@ object TableManifest {
   /** Drop all but the `retain` HIGHEST version tables strictly below
     * current (data and `_`-suffixed sidecars). Retention is by RANK,
     * not numeric distance: committed version numbers can jump by more
-    * than one (the streaming quantile service pins version = batchId+1
-    * and skips empty batches), and `v < current − retain` would then
+    * than one ([[graft.ops.ClusterMaintenance.ingestCommitted]]
+    * commits label version b+1 for engine batch b and skips empty
+    * batches), and `v < current − retain` would then
     * delete the immediately-previous version and violate the one-cycle
     * grace window for in-flight readers. retain = 1 keeps the newest
     * superseded version alive one extra cycle; retain = 0 reclaims
@@ -197,11 +198,27 @@ object TableManifest {
     fsOf(spark, root).delete(root, true)
   }
 
+  /** The catalog bucket spec of a physical table as (bucket column,
+    * bucket count); None when the table is not bucketed. The one
+    * reader of the layout an append or a compaction must replicate —
+    * a caller-supplied spec could silently relayout the table. Every
+    * writer here buckets on one column; a multi-column spec fails
+    * fast rather than being half-replicated.
+    */
+  def bucketSpecOf(spark: SparkSession, physical: String): Option[(String, Int)] =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(physical))
+      .bucketSpec.map { spec =>
+        spec.bucketColumnNames match {
+          case Seq(k) => k -> spec.numBuckets
+          case cols => throw new IllegalArgumentException(
+            s"$physical is bucketed on $cols; only single-column specs are supported")
+        }
+      }
+
   /** Compact the current version of a BUCKETED index into a fresh
     * version table and publish it with one atomic pointer rename.
     * Bucket spec is read from the current version's catalog entry
-    * (caller-supplied specs could silently relayout — [[Sinks
-    * .compactBucketed]]'s rule), the data by PATH (a catalog read of a
+    * ([[bucketSpecOf]]), the data by PATH (a catalog read of a
     * same-spec bucketed table makes the planner elide the aligned
     * repartition and disable the bucketed scan, leaving tasks×buckets
     * files — same observation as Sinks). The staged table is durable
@@ -215,19 +232,14 @@ object TableManifest {
       afterCommit: () => Unit = () => (),
       transform: DataFrame => DataFrame = identity): Unit = {
     val cur = resolve(spark, name, expectSchema)
-    val meta = spark.sessionState.catalog.getTableMetadata(TableIdentifier(cur))
-    val spec = meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
+    val (key, buckets) = bucketSpecOf(spark, cur).getOrElse(throw new IllegalArgumentException(
       s"$cur has no bucket spec — use compactPartitioned"))
-    val key = spec.bucketColumnNames match {
-      case Seq(k) => k
-      case cols => throw new IllegalArgumentException(
-        s"$cur is bucketed on $cols; compactBucketed supports single-column specs")
-    }
+    val location = spark.sessionState.catalog.getTableMetadata(TableIdentifier(cur)).location
     val next = nextVersion(spark, name)
     val nextT = physicalName(name, next)
     spark.sql(s"DROP TABLE IF EXISTS $nextT") // unreferenced leftover staging only
-    Sinks.writeBucketed(transform(spark.read.parquet(meta.location.toString)),
-      nextT, key, spec.numBuckets)
+    Sinks.writeBucketed(transform(spark.read.parquet(location.toString)),
+      nextT, key, buckets)
     beforeCommit()
     commit(spark, name, next, expectSchema) // THE commit point
     afterCommit()

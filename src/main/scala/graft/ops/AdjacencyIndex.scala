@@ -48,10 +48,9 @@ object AdjacencyIndex {
   }
 
   private def publish(spark: SparkSession, name: String, rows: DataFrame,
-      buckets: Int, version: Option[Long], beforeCommit: () => Unit,
-      afterCommit: () => Unit,
+      buckets: Int, beforeCommit: () => Unit, afterCommit: () => Unit,
       appliedBatch: Option[Long]): Unit = {
-    val v = version.getOrElse(TableManifest.nextVersion(spark, name))
+    val v = TableManifest.nextVersion(spark, name)
     val t = TableManifest.physicalName(name, v)
     spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
     rows.write.mode("overwrite").format("parquet")
@@ -65,34 +64,28 @@ object AdjacencyIndex {
 
   /** Build (or rebuild) the adjacency from a (src, dst) relation. */
   def build(spark: SparkSession, name: String, edges: DataFrame,
-      buckets: Int = 32, version: Option[Long] = None,
+      buckets: Int = 32,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit =
-    publish(spark, name, normalized(edges), buckets, version,
+    publish(spark, name, normalized(edges), buckets,
       beforeCommit, afterCommit, appliedBatch)
 
-  /** The stored bucket count (from the catalog, not a sidecar — the
-    * table IS the layout record here).
-    */
-  private def bucketsOf(spark: SparkSession, table: String): Int =
-    spark.sql(s"DESCRIBE EXTENDED $table")
-      .filter(col("col_name") === "Num Buckets")
-      .collect()(0).getString(1).trim.toInt
-
   /** Append new edges: set-union with the stored relation, re-bucketed
-    * under the SAME layout, next version, atomic swap. Idempotent
-    * (edges are facts); a replayed append converges to the same set.
+    * under the SAME layout (the bucket count comes from the catalog,
+    * [[TableManifest.bucketSpecOf]] — the table IS the layout record
+    * here), next version, atomic swap. Idempotent (edges are facts);
+    * a replayed append converges to the same set.
     */
   def appendEdges(spark: SparkSession, name: String, edges: DataFrame,
-      version: Option[Long] = None,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit = {
     val cur = TableManifest.resolve(spark, name, SchemaVersion)
+    val (_, buckets) = TableManifest.bucketSpecOf(spark, cur).getOrElse(
+      throw new IllegalStateException(s"$cur has no bucket spec — rebuild the adjacency"))
     val merged = spark.table(cur).unionByName(normalized(edges)).distinct()
-    publish(spark, name, merged, bucketsOf(spark, cur), version,
-      beforeCommit, afterCommit, appliedBatch)
+    publish(spark, name, merged, buckets, beforeCommit, afterCommit, appliedBatch)
   }
 
   /** The stored undirected edge relation (both orientations). */

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.TableManifest
+import graft.io.{LedgerTable, TableManifest}
 
 /** Persisted bigram-TYPE service — the distinct-set sibling of
   * [[VocabService]] (additive counts) and the exact contrast to the
@@ -38,9 +38,6 @@ object BigramService {
   /** Bump when the stored row layout changes. */
   val SchemaVersion = 1
 
-  private val StatsSuffix = "_stats"
-  private def statsTable(physical: String): String = physical + StatsSuffix
-
   def resolveTable(spark: SparkSession, name: String): String =
     TableManifest.resolve(spark, name, SchemaVersion)
 
@@ -61,55 +58,24 @@ object BigramService {
       .distinct()
   }
 
-  private def ledgerRow(spark: SparkSession, nDocs: Long, batchId: Long): DataFrame = {
-    import spark.implicits._
-    Seq((batchId, nDocs)).toDF("batch_id", "n_docs")
-  }
+  /** Ledger row: batch id and document count. */
+  private def ledgerRow(docs: DataFrame, batchId: Long): DataFrame =
+    docs.agg(count(lit(1)).as("n_docs"))
+      .select(lit(batchId).as("batch_id"), col("n_docs"))
 
   def build(spark: SparkSession, name: String, docs: DataFrame,
-      buckets: Int = 8): Unit = {
-    val v = TableManifest.nextVersion(spark, name)
-    val t = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTable(t)}")
-    graft.io.Sinks.writeBucketed(pairTypes(docs), t, "tok", buckets)
-    ledgerRow(spark, docs.count(), -1L).write.mode("overwrite")
-      .format("parquet").saveAsTable(statsTable(t))
-    TableManifest.commit(spark, name, v, SchemaVersion)
-    TableManifest.vacuum(spark, name)
-  }
-
-  private def bucketLayout(spark: SparkSession, physical: String): (String, Int) = {
-    val spec = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(physical))
-      .bucketSpec.getOrElse(throw new IllegalStateException(
-        s"$physical has no bucket spec — appending would mix layouts; rebuild"))
-    (spec.bucketColumnNames.head, spec.numBuckets)
-  }
+      buckets: Int = 8): Unit =
+    LedgerTable.publish(spark, name, SchemaVersion, pairTypes(docs),
+      Some("tok" -> buckets))(_ => ledgerRow(docs, -1L))
 
   /** Append a batch's pair types. Idempotent by construction — the
     * ledger check only avoids a pointless rewrite on replay (set
     * union absorbs duplicates at serve time either way). Returns true
     * if rows were appended.
     */
-  def appendBatch(docs: DataFrame, batchId: Long, name: String): Boolean = {
-    val spark = docs.sparkSession
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(statsTable(t))
-    val committed = spark.table(statsTable(t))
-      .filter(col("batch_id") >= batchId).limit(1).count() > 0
-    if (committed) false
-    else {
-      val (key, buckets) = bucketLayout(spark, t)
-      val rows = pairTypes(docs).localCheckpoint()
-      rows.write.mode("append")
-        .bucketBy(buckets, key).sortBy(key)
-        .format("parquet").saveAsTable(t)
-      ledgerRow(spark, docs.count(), batchId).write.mode("append")
-        .format("parquet").saveAsTable(statsTable(t))
-      true
-    }
-  }
+  def appendBatch(docs: DataFrame, batchId: Long, name: String): Boolean =
+    LedgerTable.appendBatch(docs.sparkSession, name, SchemaVersion, batchId,
+      () => ())(_ => pairTypes(docs))((_, id) => ledgerRow(docs, id))
 
   /** Manual append (no engine batch id): always appends; serve-time
     * distinct absorbs any overlap with history — appending the same
@@ -117,61 +83,34 @@ object BigramService {
     * opposite of [[VocabService.appendDocs]]' additive contract (both
     * documented; pick the service that matches the statistic).
     *
-    * This service does NOT need the [[ManualIds]] reservation its
-    * additive siblings gained (r12 ADVICE): its data rows carry no
-    * batch collapse — content merges by DISTINCT, which is
+    * It takes the shared manual path
+    * ([[graft.io.LedgerTable.appendManual]]), whose durable id
+    * reservation this service does not need for correctness: its data
+    * rows carry no batch id and merge by DISTINCT, which is
     * idempotent — so a crashed append's orphan rows are repaired (not
-    * corrupted) by retrying the append, and an id collision cannot
+    * corrupted) by retrying the append, and an id collision could not
     * merge unrelated counts because nothing here is a count.
     */
-  def appendDocs(docs: DataFrame, name: String): Unit = {
-    val spark = docs.sparkSession
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(statsTable(t))
-    val manualId = spark.table(statsTable(t))
-      .agg(least(coalesce(min(col("batch_id")), lit(-1L)), lit(-1L)))
-      .head().getLong(0) - 1L
-    val (key, buckets) = bucketLayout(spark, t)
-    val rows = pairTypes(docs).localCheckpoint()
-    rows.write.mode("append")
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet").saveAsTable(t)
-    ledgerRow(spark, docs.count(), manualId).write.mode("append")
-      .format("parquet").saveAsTable(statsTable(t))
-  }
+  def appendDocs(docs: DataFrame, name: String): Unit =
+    LedgerTable.appendManual(docs.sparkSession, name, SchemaVersion,
+      () => ())(_ => pairTypes(docs))((_, id) => ledgerRow(docs, id))
 
   /** Dedup append growth into a fresh version; the collapsed ledger
     * row carries the high-water batch id (the house compaction
     * discipline — here it protects only the rewrite-skip, never
     * correctness).
     */
-  def compact(spark: SparkSession, name: String): Unit = {
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(t)
-    spark.catalog.refreshTable(statsTable(t))
-    val (key, buckets) = bucketLayout(spark, t)
-    val ledger = spark.table(statsTable(t))
-    val hw = ledger.agg(max(col("batch_id"))).head().getLong(0)
-    val nDocs = ledger.agg(sum(col("n_docs"))).head().getLong(0)
-    val v = TableManifest.nextVersion(spark, name)
-    val t2 = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t2")
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTable(t2)}")
-    graft.io.Sinks.writeBucketed(spark.table(t).distinct(), t2, key, buckets)
-    ledgerRow(spark, nDocs, hw).write.mode("overwrite")
-      .format("parquet").saveAsTable(statsTable(t2))
-    TableManifest.commit(spark, name, v, SchemaVersion)
-    TableManifest.vacuum(spark, name)
-  }
+  def compact(spark: SparkSession, name: String): Unit =
+    LedgerTable.compact(spark, name, SchemaVersion)(
+      (t, _) => spark.table(t).distinct(),
+      (t, hw) => LedgerTable.ledger(spark, t).agg(sum(col("n_docs")).as("n_docs"))
+        .select(lit(hw).as("batch_id"), col("n_docs")))
 
   /** The served pair-type relation (exact; replay/overlap-safe by
     * distinct).
     */
-  def typesOver(spark: SparkSession, name: String): DataFrame = {
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(t)
-    spark.table(t).distinct()
-  }
+  def typesOver(spark: SparkSession, name: String): DataFrame =
+    spark.table(LedgerTable.current(spark, name, SchemaVersion)).distinct()
 
   /** The `text_kn_continuation` relation served from THIS service's
     * pair types + a [[VocabService]]'s unigram counts — row-identical
@@ -208,9 +147,7 @@ object BigramService {
     */
   def continuationCounts(spark: SparkSession, name: String,
       words: Seq[String]): DataFrame = {
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(t)
-    spark.table(t)
+    spark.table(LedgerTable.current(spark, name, SchemaVersion))
       .filter(col("tok").isin(words.distinct: _*))
       .distinct()
       .groupBy(col("lang"), col("tok"))

@@ -61,10 +61,10 @@ object CardinalityService {
         hll_sketch_agg(col(keyCol), lit(LgK)).as("sk"))
 
   private def publish(spark: SparkSession, name: String, rows: DataFrame,
-      version: Option[Long], beforeCommit: () => Unit,
+      beforeCommit: () => Unit,
       afterCommit: () => Unit, schemaVersion: Int = SchemaVersion,
       appliedBatch: Option[Long] = None): Unit = {
-    val v = version.getOrElse(TableManifest.nextVersion(spark, name))
+    val v = TableManifest.nextVersion(spark, name)
     val t = TableManifest.physicalName(name, v)
     spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
     rows.write.mode("overwrite").format("parquet").saveAsTable(t)
@@ -76,11 +76,11 @@ object CardinalityService {
 
   /** Build (or rebuild) the service table from scratch. */
   def build(spark: SparkSession, name: String, events: DataFrame,
-      keyCol: String = "user_id", version: Option[Long] = None,
+      keyCol: String = "user_id",
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit =
-    publish(spark, name, daySketches(events, keyCol), version,
+    publish(spark, name, daySketches(events, keyCol),
       beforeCommit, afterCommit, appliedBatch = appliedBatch)
 
   /** Append newly-arrived days: existing rows carry over verbatim
@@ -96,12 +96,12 @@ object CardinalityService {
     val incoming = daySketches(events, keyCol)
     val kept = spark.table(cur)
       .join(incoming.select(col("day")), Seq("day"), "left_anti")
-    publish(spark, name, kept.unionByName(incoming), None,
+    publish(spark, name, kept.unionByName(incoming),
       beforeCommit, afterCommit)
   }
 
   /** Incremental MERGE of possibly-partial day data — the streaming
-    * ingest semantics ([[Streaming.foreachBatchCardinality]]): where
+    * ingest semantics ([[Streaming.applyCardinalityBatch]]): where
     * [[appendDays]] REPLACES an overlapping day (batch re-ingest of a
     * closed day), mergeDays COMBINES the stored sketch with the
     * incoming one (micro-batches keep arriving for an open day).
@@ -111,7 +111,7 @@ object CardinalityService {
     * served estimates.
     */
   def mergeDays(spark: SparkSession, name: String, events: DataFrame,
-      keyCol: String = "user_id", version: Option[Long] = None,
+      keyCol: String = "user_id",
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit = {
@@ -127,7 +127,7 @@ object CardinalityService {
         when(col("sk_old").isNull, col("sk_new"))
           .when(col("sk_new").isNull, col("sk_old"))
           .otherwise(hll_union(col("sk_old"), col("sk_new"))).as("sk"))
-    publish(spark, name, merged, version, beforeCommit, afterCommit,
+    publish(spark, name, merged, beforeCommit, afterCommit,
       appliedBatch = appliedBatch)
   }
 
@@ -173,11 +173,10 @@ object CardinalityService {
   /** Build (or rebuild) a keyed service table from scratch. */
   def buildKeyed(spark: SparkSession, name: String, events: DataFrame,
       dimCol: String = "event_type", keyCol: String = "user_id",
-      version: Option[Long] = None,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit =
-    publish(spark, name, keyedDaySketches(events, dimCol, keyCol), version,
+    publish(spark, name, keyedDaySketches(events, dimCol, keyCol),
       beforeCommit, afterCommit, KeyedSchemaVersion, appliedBatch)
 
   /** Incremental merge of possibly-partial (dim, day) data — the
@@ -187,7 +186,6 @@ object CardinalityService {
     */
   def mergeDaysKeyed(spark: SparkSession, name: String, events: DataFrame,
       dimCol: String = "event_type", keyCol: String = "user_id",
-      version: Option[Long] = None,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit = {
@@ -204,7 +202,7 @@ object CardinalityService {
         when(col("sk_old").isNull, col("sk_new"))
           .when(col("sk_new").isNull, col("sk_old"))
           .otherwise(hll_union(col("sk_old"), col("sk_new"))).as("sk"))
-    publish(spark, name, merged, version, beforeCommit, afterCommit,
+    publish(spark, name, merged, beforeCommit, afterCommit,
       KeyedSchemaVersion, appliedBatch)
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
-import graft.io.TableManifest
+import graft.io.{LedgerTable, TableManifest}
 
 /** Persisted PER-LABEL first-moment service — the keyed sibling of
   * [[GramService]] (§8.r13 item 13, decided FOR against the measured
@@ -28,8 +28,8 @@ import graft.io.TableManifest
   * label-free (batch_id, n_vecs, d) — replay guards and compaction
   * are corpus-level concerns, not per-label ones.
   *
-  * Exactly-once under streaming replay: the [[VocabService]] triple
-  * verbatim (partials-first ledger-last; high-water guard; replay
+  * Exactly-once under streaming replay: the [[graft.io.LedgerTable]]
+  * protocol (partials-first ledger-last; high-water guard; replay
   * duplicates collapse exactly via max over (label, pos, batch_id)
   * because a batch's fold is deterministic). Crash-injected in
   * CentroidServiceSpec at the post-partials/pre-ledger window.
@@ -48,10 +48,6 @@ object CentroidService {
   /** Bump when the stored row layout changes. */
   val SchemaVersion = 1
 
-  private val StatsSuffix = "_stats"
-
-  private def statsTable(physical: String): String = physical + StatsSuffix
-
   def resolveTable(spark: SparkSession, name: String): String =
     TableManifest.resolve(spark, name, SchemaVersion)
 
@@ -69,91 +65,45 @@ object CentroidService {
       .select(col("label"), col("pos").cast("long").as("pos"), col("v"),
         lit(batchId).as("batch_id"))
 
-  private def ledgerRow(spark: SparkSession, emb: DataFrame,
-      batchId: Long): DataFrame = {
-    val d = emb.select(size(col("embedding"))).limit(1).collect()
-      .headOption.map(_.getInt(0).toLong).getOrElse(0L)
-    emb.agg(count(lit(1)).as("n_vecs"))
-      .select(lit(batchId).as("batch_id"), col("n_vecs"), lit(d).as("d"))
-  }
-
   /** Fold + persist a labeled embeddings table as a fresh manifest
     * version (batch id −1).
     */
-  def build(spark: SparkSession, name: String, emb: DataFrame): Unit = {
-    val v = TableManifest.nextVersion(spark, name)
-    val t = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTable(t)}")
-    partial(emb, -1L).write.mode("overwrite").format("parquet").saveAsTable(t)
-    ledgerRow(spark, emb, -1L).write.mode("overwrite")
-      .format("parquet").saveAsTable(statsTable(t))
-    TableManifest.commit(spark, name, v, SchemaVersion)
-    TableManifest.vacuum(spark, name)
-  }
+  def build(spark: SparkSession, name: String, emb: DataFrame): Unit =
+    LedgerTable.publish(spark, name, SchemaVersion, partial(emb, -1L), None)(
+      _ => GramService.vecLedgerRow(emb, -1L))
 
   /** Manual append (additive; descending manual ids keep repeated
     * same-content appends distinct — the [[GramService]] contract,
-    * with the id reserved durably before partials land via
-    * [[ManualIds]]; `afterPartialsAppend` is the crash-injection
-    * seam).
+    * with the id reserved durably before partials land
+    * ([[graft.io.LedgerTable.appendManual]]); `afterPartialsAppend`
+    * is the crash-injection seam).
     */
   def appendVecs(emb: DataFrame, name: String,
-      afterPartialsAppend: () => Unit = () => ()): Unit = {
-    val spark = emb.sparkSession
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(statsTable(t))
-    val manualId = ManualIds.reserve(spark, t, statsTable(t))
-    partial(emb, manualId).write.mode("append").format("parquet").saveAsTable(t)
-    afterPartialsAppend()
-    ledgerRow(spark, emb, manualId).write.mode("append")
-      .format("parquet").saveAsTable(statsTable(t))
-  }
+      afterPartialsAppend: () => Unit = () => ()): Unit =
+    LedgerTable.appendManual(emb.sparkSession, name, SchemaVersion,
+      afterPartialsAppend)(partial(emb, _))((_, id) => GramService.vecLedgerRow(emb, id))
 
   /** Exactly-once-guarded streaming ingest of one engine batch —
     * partials FIRST, ledger row LAST. Returns true if applied.
     */
   private[graft] def appendBatch(emb: DataFrame, batchId: Long,
       name: String,
-      afterPartialsAppend: () => Unit = () => ()): Boolean = {
-    val spark = emb.sparkSession
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(statsTable(t))
-    val committed = spark.table(statsTable(t))
-      .filter(col("batch_id") >= batchId).limit(1).count() > 0
-    if (committed) false
-    else {
-      partial(emb, batchId).write.mode("append").format("parquet").saveAsTable(t)
-      afterPartialsAppend() // crash-injection seam (spec)
-      ledgerRow(spark, emb, batchId).write.mode("append")
-        .format("parquet").saveAsTable(statsTable(t))
-      true
-    }
-  }
+      afterPartialsAppend: () => Unit = () => ()): Boolean =
+    LedgerTable.appendBatch(emb.sparkSession, name, SchemaVersion, batchId,
+      afterPartialsAppend)(partial(emb, _))((_, id) => GramService.vecLedgerRow(emb, id))
 
-  /** Exact effective relation (label, pos, v): replay duplicates
-    * collapse via max over (label, pos, batch_id), orphans drop via
-    * the ledger semi-join, batches sum.
+  /** Exact effective relation (label, pos, v) — the ledger's
+    * max → semi-join → sum collapse ([[graft.io.LedgerTable.effective]]).
     */
-  private def effective(spark: SparkSession, physical: String): DataFrame = {
-    val committed = spark.table(statsTable(physical)).select(col("batch_id"))
-    spark.table(physical)
-      .groupBy(col("label"), col("pos"), col("batch_id"))
-      .agg(max(col("v")).as("v"))
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .groupBy(col("label"), col("pos"))
-      .agg(sum(col("v")).as("v"))
-  }
+  private def effective(spark: SparkSession, physical: String): DataFrame =
+    LedgerTable.effective(spark.table(physical), physical, Seq("label", "pos"), "v")
 
   /** Served per-label centroid cells (label, dim, n_vecs, s_q) —
     * row-identical to `embed_centroid_cells` over the concatenated
     * ingested corpus (spec-asserted).
     */
   def centroidOver(spark: SparkSession, name: String): DataFrame = {
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(t)
-    spark.catalog.refreshTable(statsTable(t))
-    val eff = effective(spark, t)
+    val eff = effective(spark, LedgerTable.current(spark, name, SchemaVersion))
     val n = eff.filter(col("pos") === 0L)
       .select(col("label"), col("v").as("n_vecs"))
     eff.filter(col("pos") >= 1L)
@@ -175,36 +125,13 @@ object CentroidService {
   /** Collapse batch growth at the ledger high water (fresh version,
     * atomic publish; the high-water id keeps the replay guard sound).
     */
-  def compact(spark: SparkSession, name: String): Unit = {
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(t)
-    spark.catalog.refreshTable(statsTable(t))
-    val ledger = spark.table(statsTable(t))
-    val hw = ledger.agg(max(col("batch_id"))).head().getLong(0)
-    val collapsed = effective(spark, t).withColumn("batch_id", lit(hw))
-      .select(col("label"), col("pos"), col("v"), col("batch_id"))
-    val ledgerCollapsed = ledger
-      .agg(sum(col("n_vecs")).as("n_vecs"),
-        coalesce(max(col("d")), lit(0L)).as("d"))
-      .select(lit(hw).as("batch_id"), col("n_vecs"), col("d"))
-    val v = TableManifest.nextVersion(spark, name)
-    val t2 = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t2")
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTable(t2)}")
-    collapsed.write.mode("overwrite").format("parquet").saveAsTable(t2)
-    ledgerCollapsed.write.mode("overwrite").format("parquet")
-      .saveAsTable(statsTable(t2))
-    TableManifest.commit(spark, name, v, SchemaVersion)
-    TableManifest.vacuum(spark, name)
-  }
+  def compact(spark: SparkSession, name: String): Unit =
+    LedgerTable.compact(spark, name, SchemaVersion)(
+      (t, hw) => effective(spark, t).withColumn("batch_id", lit(hw)),
+      (t, hw) => GramService.vecLedgerCollapsed(LedgerTable.ledger(spark, t), hw))
 
   /** Corpus totals from the ledger alone: (batches, vectors, dim). */
-  def stats(spark: SparkSession, name: String): (Long, Long, Int) = {
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(statsTable(t))
-    val r = spark.table(statsTable(t))
-      .agg(count(lit(1)), sum(col("n_vecs")), coalesce(max(col("d")), lit(0L)))
-      .head()
-    (r.getLong(0), r.getLong(1), r.getLong(2).toInt)
-  }
+  def stats(spark: SparkSession, name: String): (Long, Long, Int) =
+    GramService.vecStats(LedgerTable.ledger(spark,
+      LedgerTable.current(spark, name, SchemaVersion)))
 }

@@ -200,17 +200,13 @@ object ClusterMaintenance {
       indexName: String, labelsName: String,
       indexedProfilesOf: SparkSession => DataFrame,
       p: Int = 19, q: Int = 20): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val b = batch.toDF().localCheckpoint() // pin: consumed by probe, intra join, and append
-        if (!b.isEmpty)
-          ingestCommitted(s, batchId, b, indexedProfilesOf(s),
-            indexName, labelsName, p = p, q = q)
-        ()
-      }
-      .start()
+    Streaming.sink(stream, checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val b = batch.localCheckpoint() // pin: consumed by probe, intra join, and append
+      if (!b.isEmpty)
+        ingestCommitted(s, batchId, b, indexedProfilesOf(s),
+          indexName, labelsName, p = p, q = q)
+    }
 
   // ---- the self-contained tri-store pipeline (§8.r11 item 2) -------
 
@@ -263,16 +259,12 @@ object ClusterMaintenance {
       checkpointDir: String, indexName: String, labelsName: String,
       nBuckets: Int = 16, p: Int = 19,
       q: Int = 20): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF().localCheckpoint()
-        if (!b.isEmpty)
-          pipelineBatch(batchId, b, snapshotPath, indexName, labelsName,
-            nBuckets, p, q)
-        ()
-      }
-      .start()
+    Streaming.sink(stream, checkpointDir) { (batch, batchId) =>
+      val b = batch.localCheckpoint()
+      if (!b.isEmpty)
+        pipelineBatch(batchId, b, snapshotPath, indexName, labelsName,
+          nBuckets, p, q)
+    }
 
   /** One [[profilePipeline]] batch — split out so the crash-matrix
     * spec can drive every seam directly: `crashAt` injects a failure

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
-import graft.io.TableManifest
+import graft.io.{LedgerTable, TableManifest}
 
 /** Persisted second-moment SERVICE — the Gram-matrix sibling of
   * [[VocabService]] (token counts) and [[CardinalityService]]
@@ -19,16 +19,13 @@ import graft.io.TableManifest
   * a growing embedding corpus read KB-sized stored partials, never
   * re-scan vectors.
   *
-  * Exactly-once under streaming replay: the [[VocabService]] triple —
-  *  1. every partial row carries `batch_id`; the `_stats` ledger (one
-  *     row per committed batch: batch_id, n_vecs, d) is written LAST;
-  *  2. the replay guard skips a batch at-or-under the ledger high
-  *     water (engine ids monotone; compaction preserves high water);
-  *  3. crash between partial append and ledger row → orphan rows a
-  *     restart re-appends; a batch's partial is DETERMINISTIC
-  *     (integer folds), so serving collapses duplicates exactly via
-  *     max over (pos, batch_id) before the ledger semi-join and sum.
-  * Manual ingests take descending ids −1, −2, … (two same-content
+  * Exactly-once under streaming replay: the [[graft.io.LedgerTable]]
+  * protocol — partials carry `batch_id`, the `_stats` ledger (one row
+  * per committed batch: batch_id, n_vecs, d) is written LAST, the
+  * replay guard skips a batch at or under the ledger high water, and
+  * because a batch's partial is DETERMINISTIC (integer folds) serving
+  * collapses replay duplicates exactly via max over (pos, batch_id).
+  * Manual ingests take descending negative ids (two same-content
   * manual appends must stay distinct batches — counts are additive).
   *
   * 100 TB: a batch's fold is the Aggregator's one-buffer-per-
@@ -41,10 +38,6 @@ object GramService {
 
   /** Bump when the stored row layout changes. */
   val SchemaVersion = 1
-
-  private val StatsSuffix = "_stats"
-
-  private def statsTable(physical: String): String = physical + StatsSuffix
 
   def resolveTable(spark: SparkSession, name: String): String =
     TableManifest.resolve(spark, name, SchemaVersion)
@@ -63,52 +56,55 @@ object GramService {
       .select(col("pos").cast("long").as("pos"), col("g"),
         lit(batchId).as("batch_id"))
 
-  /** Ledger row: batch id, vector count, and the dimension (0 for an
-    * empty batch — [[dimOf]] takes the max over the ledger).
+  /** Ledger row of an embeddings batch: batch id, vector count, and
+    * the dimension (0 for an empty batch — [[dimOf]] takes the max
+    * over the ledger). Shared with [[CentroidService]], whose ledger
+    * is the same label-free row.
     */
-  private def ledgerRow(spark: SparkSession, emb: DataFrame,
-      batchId: Long): DataFrame = {
+  private[ops] def vecLedgerRow(emb: DataFrame, batchId: Long): DataFrame = {
     val d = emb.select(size(col("embedding"))).limit(1).collect()
       .headOption.map(_.getInt(0).toLong).getOrElse(0L)
     emb.agg(count(lit(1)).as("n_vecs"))
       .select(lit(batchId).as("batch_id"), col("n_vecs"), lit(d).as("d"))
   }
 
+  /** The single ledger row a compaction of a vector ledger collapses
+    * to, at the high water `hw`.
+    */
+  private[ops] def vecLedgerCollapsed(ledger: DataFrame, hw: Long): DataFrame =
+    ledger
+      .agg(sum(col("n_vecs")).as("n_vecs"),
+        coalesce(max(col("d")), lit(0L)).as("d"))
+      .select(lit(hw).as("batch_id"), col("n_vecs"), col("d"))
+
+  /** Corpus totals from a vector ledger alone: (batches, vectors, dim). */
+  private[ops] def vecStats(ledger: DataFrame): (Long, Long, Int) = {
+    val r = ledger
+      .agg(count(lit(1)), sum(col("n_vecs")), coalesce(max(col("d")), lit(0L)))
+      .head()
+    (r.getLong(0), r.getLong(1), r.getLong(2).toInt)
+  }
+
   /** Fold + persist an embeddings table as a fresh manifest version
     * (batch id −1).
     */
-  def build(spark: SparkSession, name: String, emb: DataFrame): Unit = {
-    val v = TableManifest.nextVersion(spark, name)
-    val t = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTable(t)}")
-    partial(emb, -1L).write.mode("overwrite").format("parquet").saveAsTable(t)
-    ledgerRow(spark, emb, -1L).write.mode("overwrite")
-      .format("parquet").saveAsTable(statsTable(t))
-    TableManifest.commit(spark, name, v, SchemaVersion)
-    TableManifest.vacuum(spark, name)
-  }
+  def build(spark: SparkSession, name: String, emb: DataFrame): Unit =
+    LedgerTable.publish(spark, name, SchemaVersion, partial(emb, -1L), None)(
+      _ => vecLedgerRow(emb, -1L))
 
   /** Manual append of new vectors (additive — the same vector
     * appended twice counts twice, as corpus concatenation would).
     * Descending manual ids keep repeated same-content appends
     * distinct; the id is reserved durably BEFORE partials land
-    * ([[ManualIds]] — the r12 ADVICE crash-window fix: a colliding
-    * reuse after a crashed append would make the max-collapse merge
-    * two unrelated partials' pos cells). `afterPartialsAppend` is
-    * the spec's crash-injection seam.
+    * ([[graft.io.LedgerTable.appendManual]]: a colliding reuse after
+    * a crashed append would make the max-collapse merge two unrelated
+    * partials' pos cells). `afterPartialsAppend` is the spec's
+    * crash-injection seam.
     */
   def appendVecs(emb: DataFrame, name: String,
-      afterPartialsAppend: () => Unit = () => ()): Unit = {
-    val spark = emb.sparkSession
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(statsTable(t))
-    val manualId = ManualIds.reserve(spark, t, statsTable(t))
-    partial(emb, manualId).write.mode("append").format("parquet").saveAsTable(t)
-    afterPartialsAppend()
-    ledgerRow(spark, emb, manualId).write.mode("append")
-      .format("parquet").saveAsTable(statsTable(t))
-  }
+      afterPartialsAppend: () => Unit = () => ()): Unit =
+    LedgerTable.appendManual(emb.sparkSession, name, SchemaVersion,
+      afterPartialsAppend)(partial(emb, _))((_, id) => vecLedgerRow(emb, id))
 
   /** Exactly-once-guarded streaming ingest of one engine batch —
     * partials FIRST, ledger row LAST (see the scaladoc top for the
@@ -116,46 +112,21 @@ object GramService {
     */
   private[graft] def appendBatch(emb: DataFrame, batchId: Long,
       name: String,
-      afterPartialsAppend: () => Unit = () => ()): Boolean = {
-    val spark = emb.sparkSession
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(statsTable(t))
-    val committed = spark.table(statsTable(t))
-      .filter(col("batch_id") >= batchId).limit(1).count() > 0
-    if (committed) false
-    else {
-      partial(emb, batchId).write.mode("append").format("parquet").saveAsTable(t)
-      afterPartialsAppend() // crash-injection seam (spec)
-      ledgerRow(spark, emb, batchId).write.mode("append")
-        .format("parquet").saveAsTable(statsTable(t))
-      true
-    }
-  }
+      afterPartialsAppend: () => Unit = () => ()): Boolean =
+    LedgerTable.appendBatch(emb.sparkSession, name, SchemaVersion, batchId,
+      afterPartialsAppend)(partial(emb, _))((_, id) => vecLedgerRow(emb, id))
 
-  /** The exact effective buffer relation (pos, g): replay duplicates
-    * collapse via max over (pos, batch_id) — a batch's partial is
-    * deterministic — then uncommitted orphans drop via the ledger
-    * semi-join, then batches sum.
+  /** The exact effective buffer relation (pos, g) — the ledger's
+    * max → semi-join → sum collapse ([[graft.io.LedgerTable.effective]]).
     */
-  private def effective(spark: SparkSession, physical: String): DataFrame = {
-    val committed = spark.table(statsTable(physical)).select(col("batch_id"))
-    spark.table(physical)
-      .groupBy(col("pos"), col("batch_id"))
-      .agg(max(col("g")).as("g"))
-      .join(broadcast(committed), Seq("batch_id"), "left_semi")
-      .groupBy(col("pos"))
-      .agg(sum(col("g")).as("g"))
-  }
+  private def effective(spark: SparkSession, physical: String): DataFrame =
+    LedgerTable.effective(spark.table(physical), physical, Seq("pos"), "g")
 
   /** The stored dimension (max over ledger rows — empty batches
     * record 0).
     */
-  def dimOf(spark: SparkSession, name: String): Int = {
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(statsTable(t))
-    spark.table(statsTable(t))
-      .agg(coalesce(max(col("d")), lit(0L))).head().getLong(0).toInt
-  }
+  def dimOf(spark: SparkSession, name: String): Int =
+    vecStats(LedgerTable.ledger(spark, LedgerTable.current(spark, name, SchemaVersion)))._3
 
   /** The served Gram relation (i, j, n_vecs, g) — row-identical to
     * [[Embeddings.embedGramCells]] over the concatenated ingested
@@ -163,10 +134,8 @@ object GramService {
     * proof). Empty service → empty relation.
     */
   def cellsOver(spark: SparkSession, name: String): DataFrame = {
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(t)
-    spark.catalog.refreshTable(statsTable(t))
-    val d = dimOf(spark, name)
+    val t = LedgerTable.current(spark, name, SchemaVersion)
+    val d = vecStats(LedgerTable.ledger(spark, t))._3
     val idx = spark.createDataFrame(
       (for { i <- 0 until d; j <- i until d } yield (i, j)).zipWithIndex
         .map { case ((i, j), k) => (k.toLong + 1L, i.toLong, j.toLong) })
@@ -180,40 +149,15 @@ object GramService {
   }
 
   /** Collapse batch growth into one partial at the ledger high water
-    * (fresh version, atomic publish — the [[PostingIndex.compact]]
-    * discipline: the high-water id keeps the replay guard sound after
-    * compaction).
+    * (fresh version, atomic publish — [[graft.io.LedgerTable.compact]]:
+    * the high-water id keeps the replay guard sound after compaction).
     */
-  def compact(spark: SparkSession, name: String): Unit = {
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(t)
-    spark.catalog.refreshTable(statsTable(t))
-    val ledger = spark.table(statsTable(t))
-    val hw = ledger.agg(max(col("batch_id"))).head().getLong(0)
-    val collapsed = effective(spark, t).withColumn("batch_id", lit(hw))
-      .select(col("pos"), col("g"), col("batch_id"))
-    val ledgerCollapsed = ledger
-      .agg(sum(col("n_vecs")).as("n_vecs"),
-        coalesce(max(col("d")), lit(0L)).as("d"))
-      .select(lit(hw).as("batch_id"), col("n_vecs"), col("d"))
-    val v = TableManifest.nextVersion(spark, name)
-    val t2 = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t2")
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTable(t2)}")
-    collapsed.write.mode("overwrite").format("parquet").saveAsTable(t2)
-    ledgerCollapsed.write.mode("overwrite").format("parquet")
-      .saveAsTable(statsTable(t2))
-    TableManifest.commit(spark, name, v, SchemaVersion)
-    TableManifest.vacuum(spark, name)
-  }
+  def compact(spark: SparkSession, name: String): Unit =
+    LedgerTable.compact(spark, name, SchemaVersion)(
+      (t, hw) => effective(spark, t).withColumn("batch_id", lit(hw)),
+      (t, hw) => vecLedgerCollapsed(LedgerTable.ledger(spark, t), hw))
 
   /** Corpus totals from the ledger alone: (batches, vectors, dim). */
-  def stats(spark: SparkSession, name: String): (Long, Long, Int) = {
-    val t = resolveTable(spark, name)
-    spark.catalog.refreshTable(statsTable(t))
-    val r = spark.table(statsTable(t))
-      .agg(count(lit(1)), sum(col("n_vecs")), coalesce(max(col("d")), lit(0L)))
-      .head()
-    (r.getLong(0), r.getLong(1), r.getLong(2).toInt)
-  }
+  def stats(spark: SparkSession, name: String): (Long, Long, Int) =
+    vecStats(LedgerTable.ledger(spark, LedgerTable.current(spark, name, SchemaVersion)))
 }

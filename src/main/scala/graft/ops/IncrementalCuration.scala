@@ -253,18 +253,14 @@ object IncrementalCuration {
       .option("header", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(watchDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val led = curateBatch(batch.toDF(), hashIndex, bandIndex,
-          verifyCorpus = verifyCorpus.map(_()))
-        led.write.mode("overwrite").parquet(s"$ledgerPath/batch=$batchId")
-        // durable now — free the per-batch checkpoint (r18 review: a
-        // forever-stream otherwise leaks one ledger frame per batch)
-        Checkpoints.free(led)
-        ()
-      }
-      .start()
+    Streaming.sink(stream, checkpointDir) { (batch, batchId) =>
+      val led = curateBatch(batch, hashIndex, bandIndex,
+        verifyCorpus = verifyCorpus.map(_()))
+      led.write.mode("overwrite").parquet(s"$ledgerPath/batch=$batchId")
+      // durable now — free the per-batch checkpoint (r18 review: a
+      // forever-stream otherwise leaks one ledger frame per batch)
+      Checkpoints.free(led)
+    }
   }
 
   /** Read the accumulated admission ledger (all batches). Before the

@@ -92,14 +92,10 @@ object IngestPipeline {
       // provenance must be captured ON the source relation — the
       // _metadata struct does not survive into foreachBatch
       .select(col("*"), col("_metadata.file_path").as("_src_file"))
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        ingestBatch(batch.toDF(), batchId, snapshotPath, quarantinePath,
-          nBuckets, beforeCommit, afterCommit)
-        ()
-      }
-      .start()
+    Streaming.sink(stream, checkpointDir) { (batch, batchId) =>
+      ingestBatch(batch, batchId, snapshotPath, quarantinePath,
+        nBuckets, beforeCommit, afterCommit)
+    }
   }
 
   /** One micro-batch of the composite — factored out so the spec can

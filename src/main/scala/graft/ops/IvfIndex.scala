@@ -164,12 +164,7 @@ object IvfIndex {
     */
   def streamAppend(stream: DataFrame, tableName: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        appendBatch(batch.toDF(), batchId, tableName, checkpointDir)
-      }
-      .start()
+    Streaming.sink(stream, checkpointDir)(appendBatch(_, _, tableName, checkpointDir))
 
   /** Top-k cosine neighbors of each probe `(p_id, pv)` against the
     * index: probes rank the stored centroids map-side, explode their

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.NumericExpressions.log2Fixed
+import graft.io.{LedgerTable, TableManifest}
 
 /** Persisted inverted index with BM25 probe — the AD-HOC half of the
   * retrieval story: [[InfoTheory.textBm25Topk]] handles a literal
@@ -28,9 +29,10 @@ import graft.functions.NumericExpressions.log2Fixed
   * postings themselves — df is a per-term count over exactly the rows
   * already read, never a second corpus pass.
   *
-  * Versioning: [[graft.io.TableManifest]] — the postings table and its
-  * stats sidecar publish under one atomic pointer; depth of the
-  * layout is the row schema itself ([[SchemaVersion]]).
+  * Versioning: [[graft.io.LedgerTable]] — the postings table and its
+  * stats sidecar publish under one atomic pointer, and streaming
+  * appends use its replay guard; depth of the layout is the row
+  * schema itself ([[SchemaVersion]]).
   *
   * 100 TB: the index is one tokenize + one (doc,term) aggregate at
   * build (linear, map-side combined); probe cost is
@@ -61,12 +63,8 @@ object PostingIndex {
     */
   val SchemaVersion = 2
 
-  private val StatsSuffix = "_stats"
-
   def resolveTable(spark: SparkSession, tableName: String): String =
-    graft.io.TableManifest.resolve(spark, tableName, SchemaVersion)
-
-  private def statsTable(physical: String): String = physical + StatsSuffix
+    TableManifest.resolve(spark, tableName, SchemaVersion)
 
   private def toks(c: org.apache.spark.sql.Column) =
     split(lower(regexp_replace(trim(c), "\\s+", " ")), " ")
@@ -107,7 +105,7 @@ object PostingIndex {
 
   /** The index's doc-shard fan-out, read from the stats sidecar. */
   private def shardsOf(spark: SparkSession, physical: String): Int =
-    spark.table(statsTable(physical))
+    LedgerTable.ledger(spark, physical)
       .agg(coalesce(max(col("shards")), lit(1L))).head().getLong(0).toInt
 
   /** Tokenize + index a documents table as a fresh manifest version.
@@ -119,17 +117,10 @@ object PostingIndex {
     */
   def buildIndex(docs: DataFrame, tableName: String, buckets: Int = 8,
       shards: Int = 1): Unit = {
-    val spark = docs.sparkSession
-    val v = graft.io.TableManifest.nextVersion(spark, tableName)
-    val t = graft.io.TableManifest.physicalName(tableName, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTable(t)}")
     val key = if (shards > 1) "ts" else "term"
-    graft.io.Sinks.writeBucketed(postingRows(docs, shards), t, key, buckets)
-    batchStats(spark.table(t), -1L, shards).write.mode("overwrite")
-      .format("parquet").saveAsTable(statsTable(t))
-    graft.io.TableManifest.commit(spark, tableName, v, SchemaVersion)
-    graft.io.TableManifest.vacuum(spark, tableName)
+    LedgerTable.publish(docs.sparkSession, tableName, SchemaVersion,
+      postingRows(docs, shards), Some(key -> buckets))(
+      t => batchStats(docs.sparkSession.table(t), -1L, shards))
   }
 
   /** Append a NEW batch of documents (caller contract: doc_ids not
@@ -145,30 +136,18 @@ object PostingIndex {
     */
   def appendToIndex(docs: DataFrame, tableName: String): Unit = {
     val spark = docs.sparkSession
-    val t = resolveTable(spark, tableName)
-    // same cross-session staleness class as the probe's refresh (r11):
-    // the shards read below must see the committed sidecar, not a
-    // cached pre-append file listing
-    spark.catalog.refreshTable(statsTable(t))
-    val (key, buckets) = bucketLayout(spark, t)
-    val shards = shardsOf(spark, t)
-    val rows = postingRows(docs, shards).localCheckpoint()
-    rows.write.mode("append")
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet").saveAsTable(t)
-    batchStats(rows, -1L, shards).write.mode("append").format("parquet")
-      .saveAsTable(statsTable(t))
+    appendPostings(docs, LedgerTable.current(spark, tableName, SchemaVersion),
+      -1L, () => ())
   }
 
-  /** The committed table's (bucket key, bucket count) — appends must
-    * replicate the existing layout exactly or the bucketed scan lies.
+  /** Postings then stats row ([[graft.io.LedgerTable.append]]), at the
+    * index's recorded doc-shard fan-out.
     */
-  private def bucketLayout(spark: SparkSession, physical: String): (String, Int) = {
-    val spec = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(physical))
-      .bucketSpec.getOrElse(throw new IllegalStateException(
-        s"$physical has no bucket spec — appending would mix layouts; rebuild the index"))
-    (spec.bucketColumnNames.head, spec.numBuckets)
+  private def appendPostings(docs: DataFrame, physical: String, batchId: Long,
+      afterPostingsAppend: () => Unit): Unit = {
+    val shards = shardsOf(docs.sparkSession, physical)
+    LedgerTable.append(docs.sparkSession, physical, postingRows(docs, shards),
+      batchStats(_, batchId, shards), afterPostingsAppend)
   }
 
   /** Collapse append growth into a fresh version (atomic publish).
@@ -206,9 +185,9 @@ object PostingIndex {
     // doc), so a duplicated query term would score once here but
     // per-position in the row-local reference — both paths normalize
     val terms = terms0.distinct
-    val t = resolveTable(spark, tableName)
+    val t = LedgerTable.current(spark, tableName, SchemaVersion)
     val hits = probeHits(spark, t, terms)
-    val corp = spark.table(statsTable(t))
+    val corp = LedgerTable.ledger(spark, t)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("total_tok")).as("total_tok"))
       .withColumn("avgdl_u", expr("total_tok * 1000000 div n_docs"))
     val idf = hits.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -239,12 +218,11 @@ object PostingIndex {
     * tf, dl), bucket-pruned and replay-dedup'd — the shared front end
     * of every probe ([[bm25Topk]], [[lmTopk]]).
     *
-    * Probe-time freshness: appends may come from OTHER sessions (the
-    * streaming microbatch clone) whose saveAsTable invalidates only
-    * their own relation cache — this session's cached file listing
-    * would silently serve the pre-append corpus (found when the
-    * build's stats read-back started priming that cache). A refresh
-    * is a metadata re-list, not a data read.
+    * Probe-time freshness: the probes resolve `t` through
+    * [[graft.io.LedgerTable.current]], which re-lists the postings and
+    * the stats sidecar — appends from OTHER sessions (the streaming
+    * microbatch clone) invalidate only their own relation cache, so a
+    * cached listing would silently serve the pre-append corpus.
     *
     * Doc-sharded index: enumerate the (term, shard) composite keys so
     * the isin stays a literal list and bucket pruning still applies —
@@ -271,8 +249,6 @@ object PostingIndex {
     */
   private def probeHits(spark: SparkSession, t: String,
       terms: Seq[String]): DataFrame = {
-    spark.catalog.refreshTable(t)
-    spark.catalog.refreshTable(statsTable(t))
     val shards = shardsOf(spark, t)
     if (shards <= 1)
       spark.table(t).filter(col("term").isin(terms: _*))
@@ -308,9 +284,9 @@ object PostingIndex {
   def lmTopk(spark: SparkSession, tableName: String, terms0: Seq[String],
       k: Int = 10, mu: Long = InfoTheory.LmMu): DataFrame = {
     val terms = terms0.distinct
-    val t = resolveTable(spark, tableName)
+    val t = LedgerTable.current(spark, tableName, SchemaVersion)
     val hits = probeHits(spark, t, terms)
-    val corp = spark.table(statsTable(t))
+    val corp = LedgerTable.ledger(spark, t)
       .agg(sum(col("total_tok")).as("c_tok"))
     val cf = hits.groupBy(col("term")).agg(sum(col("tf")).as("cf"))
     val scal = cf.crossJoin(broadcast(corp))
@@ -339,57 +315,25 @@ object PostingIndex {
   }
 
   /** Exactly-once-guarded streaming ingest of one engine batch:
-    * SKIP if the stats sidecar already carries this batch_id (the
-    * batch fully committed before a restart); otherwise append
-    * postings FIRST, stats row LAST. Crash windows, by order:
-    * after postings / before stats → replay re-appends the postings
-    * (verbatim duplicates — neutral: the probe dedups on
+    * SKIP if the stats sidecar is at or above this batch_id
+    * ([[graft.io.LedgerTable.committed]] — the high-water guard, sound
+    * across [[compact]]; manual batches' −1 rows never satisfy it);
+    * otherwise append postings FIRST, stats row LAST. Crash windows,
+    * by order: after postings / before stats → replay re-appends the
+    * postings (verbatim duplicates — neutral: the probe dedups on
     * (term, doc_id) and [[compactDedup]] reclaims) and writes the
     * stats row once, so N and Σdl are EXACTLY-once — scores never
     * drift under replay. Returns true if the batch was applied.
-    *
-    * The committed check is `batch_id >= batchId`, not equality:
-    * engine batch ids are monotone and applied in order, so ANY stats
-    * row at-or-above the replayed id proves it committed — including
-    * the single high-water row a [[compact]] collapses the ledger to
-    * (an equality guard would forget compacted batches and re-apply
-    * them). Manual batches' −1 rows can never satisfy the guard for an
-    * engine id (those start at 0).
-    *
-    * HARD CONTRACT — single-stream ownership (r12 ADVICE made this
-    * explicit): exactly ONE streaming query may feed an index, and a
-    * rebased checkpoint (restarting the stream from an id below the
-    * recorded high water) is out of contract — the monotone `>=`
-    * guard is only sound when engine ids arrive in order from one
-    * writer. Two concurrent streams, or a re-based restart, can have
-    * a later-id commit mask an earlier UNCOMMITTED batch, which is
-    * then skipped as a replay. If multi-writer ingest is ever
-    * needed, the guard must become per-batch exact-id ledger rows
-    * with compaction preserving the full committed-id set (cost:
-    * ledger rows grow with batch count between compactions). The
-    * same contract binds the sibling services' appendBatch guards
-    * ([[VocabService]], [[GramService]], [[CentroidService]],
-    * [[BigramService]]).
+    * Single-stream ownership is a hard contract
+    * ([[graft.io.LedgerTable]]).
     */
   private[graft] def appendBatch(docs: DataFrame, batchId: Long,
       tableName: String,
       afterPostingsAppend: () => Unit = () => ()): Boolean = {
-    val spark = docs.sparkSession
-    val t = resolveTable(spark, tableName)
-    spark.catalog.refreshTable(statsTable(t)) // replay guard must see the latest commit
-    val committed = spark.table(statsTable(t))
-      .filter(col("batch_id") >= batchId).limit(1).count() > 0
-    if (committed) false
+    val t = LedgerTable.current(docs.sparkSession, tableName, SchemaVersion)
+    if (LedgerTable.committed(docs.sparkSession, t, batchId)) false
     else {
-      val (key, buckets) = bucketLayout(spark, t)
-      val shards = shardsOf(spark, t)
-      val rows = postingRows(docs, shards).localCheckpoint()
-      rows.write.mode("append")
-        .bucketBy(buckets, key).sortBy(key)
-        .format("parquet").saveAsTable(t)
-      afterPostingsAppend() // crash-injection seam (spec)
-      batchStats(rows, batchId, shards).write.mode("append").format("parquet")
-        .saveAsTable(statsTable(t))
+      appendPostings(docs, t, batchId, afterPostingsAppend)
       true
     }
   }
@@ -401,13 +345,9 @@ object PostingIndex {
     */
   def maintenanceSink(stream: DataFrame, checkpointDir: String,
       tableName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF()
-        if (!b.isEmpty) { appendBatch(b, batchId, tableName); () }
-      }
-      .start()
+    Streaming.sink(stream, checkpointDir) { (b, batchId) =>
+      if (!b.isEmpty) appendBatch(b, batchId, tableName)
+    }
 
   /** [[compact]] that also reclaims replay-duplicated posting rows:
     * duplicates are VERBATIM row copies (same (term, doc_id, tf, dl)
@@ -422,18 +362,18 @@ object PostingIndex {
   private def compactWith(spark: SparkSession, tableName: String,
       transform: DataFrame => DataFrame): Unit = {
     val cur = resolveTable(spark, tableName)
-    graft.io.TableManifest.compactBucketed(spark, tableName, SchemaVersion,
+    TableManifest.compactBucketed(spark, tableName, SchemaVersion,
       beforeCommit = () => {
-        val nextT = graft.io.TableManifest.physicalName(tableName,
-          graft.io.TableManifest.nextVersion(spark, tableName))
-        spark.sql(s"DROP TABLE IF EXISTS ${statsTable(nextT)}")
-        spark.table(statsTable(cur))
+        val nextT = TableManifest.physicalName(tableName,
+          TableManifest.nextVersion(spark, tableName))
+        spark.sql(s"DROP TABLE IF EXISTS ${LedgerTable.statsTable(nextT)}")
+        LedgerTable.ledger(spark, cur)
           .agg(sum(col("n_docs")).as("n_docs"),
             sum(col("total_tok")).as("total_tok"),
             coalesce(max(col("batch_id")), lit(-1L)).as("batch_id"),
             coalesce(max(col("shards")), lit(1L)).as("shards"))
           .write.mode("overwrite").format("parquet")
-          .saveAsTable(statsTable(nextT))
+          .saveAsTable(LedgerTable.statsTable(nextT))
       },
       transform = transform)
   }

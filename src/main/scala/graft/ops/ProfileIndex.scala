@@ -75,9 +75,8 @@ object ProfileIndex {
   def appendToIndex(profiles: DataFrame, tableName: String): Unit = {
     val spark = profiles.sparkSession
     val t = resolveTable(spark, tableName)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.map(_.numBuckets).getOrElse(throw new IllegalStateException(
+    val (_, buckets) = graft.io.TableManifest.bucketSpecOf(spark, t).getOrElse(
+      throw new IllegalStateException(
         s"$t has no bucket spec — appending would mix layouts; rebuild the index"))
     Bipartite.signatureRows(profiles, Depth).select("sig", "c", "sz", "sl")
       .write.mode("append")

@@ -62,17 +62,16 @@ object QuantileService {
   }
 
   /** Build (or rebuild) the service table from scratch: stage an
-    * immutable version table, publish with one atomic pointer rename.
-    * `version` defaults to the next free one; a caller replaying a
-    * known unit of work (the streaming sink) pins it so a replayed
-    * commit is detectable (see [[Streaming.foreachBatchQuantiles]]).
+    * immutable version table at the next free version, publish with
+    * one atomic pointer rename. The streaming sink passes
+    * `appliedBatch` so the same rename records the engine batch it
+    * folded in (the replay guard of [[Streaming.applyQuantileBatch]]).
     */
   def build(spark: SparkSession, name: String, events: DataFrame,
-      version: Option[Long] = None,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit = {
-    val v = version.getOrElse(TableManifest.nextVersion(spark, name))
+    val v = TableManifest.nextVersion(spark, name)
     val t = TableManifest.physicalName(name, v)
     spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
     daySketches(spark, events)
@@ -109,7 +108,7 @@ object QuantileService {
   }
 
   /** Incremental MERGE of possibly-partial day data — the streaming
-    * ingest semantics ([[Streaming.foreachBatchQuantiles]]): where
+    * ingest semantics ([[Streaming.applyQuantileBatch]]): where
     * [[appendDays]] REPLACES an overlapping day (batch re-ingest of a
     * closed day), mergeDays COMBINES the stored sketch with the
     * incoming one (micro-batches keep arriving for an open day).
@@ -120,7 +119,6 @@ object QuantileService {
     * can push errBound beyond the sum of the parts.
     */
   def mergeDays(spark: SparkSession, name: String, events: DataFrame,
-      version: Option[Long] = None,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit = {
@@ -141,7 +139,7 @@ object QuantileService {
       .withColumn("m", mergeU(col("sk_old"), col("sk_new")))
       .select(col("day"), col("m._1").as("n"), col("m._2").as("err_bound"),
         col("m._3").as("sk"))
-    val v = version.getOrElse(TableManifest.nextVersion(spark, name))
+    val v = TableManifest.nextVersion(spark, name)
     val t = TableManifest.physicalName(name, v)
     spark.sql(s"DROP TABLE IF EXISTS $t")
     merged.write.mode("overwrite").format("parquet").saveAsTable(t)
@@ -206,9 +204,9 @@ object QuantileService {
   }
 
   private def publishKeyed(spark: SparkSession, name: String, rows: DataFrame,
-      version: Option[Long], beforeCommit: () => Unit, afterCommit: () => Unit,
+      beforeCommit: () => Unit, afterCommit: () => Unit,
       appliedBatch: Option[Long]): Unit = {
-    val v = version.getOrElse(TableManifest.nextVersion(spark, name))
+    val v = TableManifest.nextVersion(spark, name)
     val t = TableManifest.physicalName(name, v)
     spark.sql(s"DROP TABLE IF EXISTS $t")
     rows.write.mode("overwrite").format("parquet").saveAsTable(t)
@@ -220,19 +218,19 @@ object QuantileService {
 
   /** Build (or rebuild) a keyed service table from scratch. */
   def buildKeyed(spark: SparkSession, name: String, events: DataFrame,
-      dimCol: String = "event_type", version: Option[Long] = None,
+      dimCol: String = "event_type",
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit =
     publishKeyed(spark, name, keyedDaySketches(spark, events, dimCol),
-      version, beforeCommit, afterCommit, appliedBatch)
+      beforeCommit, afterCommit, appliedBatch)
 
   /** Incremental MERGE of possibly-partial (dim, day) data — the
     * keyed [[mergeDays]]: stored and incoming sketches combine
     * row-locally over a full-outer (dim, day) join.
     */
   def mergeDaysKeyed(spark: SparkSession, name: String, events: DataFrame,
-      dimCol: String = "event_type", version: Option[Long] = None,
+      dimCol: String = "event_type",
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit = {
@@ -254,7 +252,7 @@ object QuantileService {
       .withColumn("m", mergeU(col("sk_old"), col("sk_new")))
       .select(col("dim"), col("day"), col("m._1").as("n"),
         col("m._2").as("err_bound"), col("m._3").as("sk"))
-    publishKeyed(spark, name, merged, version, beforeCommit, afterCommit,
+    publishKeyed(spark, name, merged, beforeCommit, afterCommit,
       appliedBatch)
   }
 

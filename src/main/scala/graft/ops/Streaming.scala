@@ -147,13 +147,24 @@ object Streaming {
       checkpointDir: String, nBuckets: Int = 16,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => ()): org.apache.spark.sql.streaming.StreamingQuery =
+    sink(stream, checkpointDir) { (batch, batchId) =>
+      upsertBatchInto(snapshotPath, batch.withColumn("bucket", upsertBucket(nBuckets)),
+        batchId, upsertLatest, beforeCommit, afterCommit)
+    }
+
+  /** Start `stream` as a checkpointed foreachBatch query running
+    * `f(batch, batchId)` per micro-batch — the one sink builder of
+    * every streaming writer here. foreachBatch is AT-LEAST-ONCE: the
+    * checkpoint advances only after `f` returns, so a restart replays
+    * the last batch under the same `batchId`, and each `f` carries its
+    * own replay guard.
+    */
+  def sink(stream: DataFrame, checkpointDir: String)(
+      f: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        upsertBatchInto(snapshotPath,
-          batch.toDF().withColumn("bucket", upsertBucket(nBuckets)),
-          batchId, upsertLatest, beforeCommit, afterCommit)
-        ()
+        f(batch.toDF(), batchId)
       }
       .start()
 
@@ -225,320 +236,149 @@ object Streaming {
     }
   }
 
-  /** Per-user cumulative stats carried in CUSTOM state via
-    * `flatMapGroupsWithState` — the arbitrary-stateful-processing
-    * surface (beyond built-in windows). State is one small record per
-    * user, hash-partitioned by the group key and exact (BigDecimal
-    * sum, so partition/batch order cannot change the emitted double).
-    * In batch mode the same code runs with empty initial state, which
-    * makes the result equal to a plain group-by — that equivalence is
-    * the oracle; cross-batch state accumulation is asserted in
-    * `StreamingSpec`.
-    */
-  /** One micro-batch of the streaming quantile service — factored out
-    * of [[foreachBatchQuantiles]] so the spec can drive replay
-    * directly. Idempotence contract: each batch commits manifest
-    * version `batchId + 1`, and a batch whose version is already at
-    * or behind the pointer is a REPLAY (crash after commit, before
-    * the checkpoint advanced) and must be a no-op — the sketch merge
-    * is not idempotent, so double-applying a batch would double-count
-    * its rows. First-ever batch builds the table; later batches
-    * MERGE day sketches ([[QuantileService.mergeDays]]: micro-batches
-    * keep arriving for an open day, so replace semantics would drop
-    * the day's earlier batches).
-    */
-  /** True iff engine batch `batchId` is already folded into `name`.
-    * Primary: the pointer's EXPLICIT appliedBatch marker (written in
-    * the same atomic rename as the data version — r12 ADVICE fix:
-    * version-number inference breaks once a manual build/merge/
-    * compact inflates the version past the stream's, silently
-    * dropping live batches as phantom replays). Legacy pointers
-    * (pre-marker) fall back to the version inference, which is
-    * correct exactly when the sink owned the table from version 0.
+  /** True iff engine batch `batchId` is already folded into `name`:
+    * the pointer's EXPLICIT appliedBatch marker, written in the same
+    * atomic rename as the data version, is at or above it. A pointer
+    * with no marker (a table only ever built or merged by hand) has
+    * applied no engine batch — version-number inference would read
+    * a live batch as a phantom replay once a manual build/merge/
+    * compact has moved the version. Tables a stream fed before the
+    * marker existed are not supported: rebuild them.
     */
   private def batchApplied(spark: org.apache.spark.sql.SparkSession,
       name: String, batchId: Long): Boolean =
-    graft.io.TableManifest.readPointer(spark, name).exists { p =>
-      p.appliedBatch match {
-        case Some(b) => b >= batchId
-        case None => p.version >= batchId + 1
-      }
-    }
+    graft.io.TableManifest.readPointer(spark, name)
+      .exists(_.appliedBatch.exists(_ >= batchId))
 
-  def applyQuantileBatch(name: String)(batch: DataFrame, batchId: Long): Unit = {
+  /** One micro-batch of a POINTER-MARKER service (Quantile,
+    * Cardinality, their keyed twins, Adjacency): a batch already
+    * folded in ([[batchApplied]]) is a REPLAY (crash after commit,
+    * before the checkpoint advanced) and a no-op, as is an empty
+    * batch; otherwise the first-ever batch builds the table and later
+    * ones merge into it, each commit carrying `Some(batchId)` as the
+    * table's applied marker.
+    */
+  private def applyMarked(name: String, batch: DataFrame, batchId: Long)(
+      build: Option[Long] => Unit, merge: Option[Long] => Unit): Unit = {
     val spark = batch.sparkSession
     if (!batchApplied(spark, name, batchId) && !batch.isEmpty) {
-      if (graft.io.TableManifest.readPointer(spark, name).isEmpty)
-        QuantileService.build(spark, name, batch,
-          appliedBatch = Some(batchId))
-      else
-        QuantileService.mergeDays(spark, name, batch,
-          appliedBatch = Some(batchId))
+      if (graft.io.TableManifest.readPointer(spark, name).isEmpty) build(Some(batchId))
+      else merge(Some(batchId))
     }
   }
 
-  /** Streaming ingest for [[QuantileService]]: sketch each
-    * micro-batch's (ts, value) rows once at arrival and fold them
-    * into the persisted per-day sketch table under the same atomic
-    * manifest commit the batch paths use — after any batch, a
-    * quantile query over any day range is served from the stored
-    * sketches alone. The per-batch work scans ONLY the batch plus
-    * the calendar-bounded day table; history is never rescanned.
+  /** One micro-batch of a LEDGERED service (Vocab, Bigram, Gram,
+    * Centroid): the first non-empty batch bootstraps an EMPTY table
+    * (its data goes through `append` so the exactly-once ledger
+    * covers it — a build carrying batch 0 under manual id −1 would
+    * replay-double it); `append` is the service's ledger-guarded
+    * appendBatch ([[graft.io.LedgerTable.appendBatch]]).
     */
-  def foreachBatchQuantiles(stream: DataFrame, name: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyQuantileBatch(name)(batch.toDF(), batchId)
-      }
-      .outputMode("append")
-      .start()
-
-  /** [[applyQuantileBatch]]'s cardinality twin: same idempotence
-    * contract (manifest version = batchId + 1; an at-or-behind
-    * pointer marks a replay → no-op — n_rows would double-count even
-    * though the HLL union itself is idempotent), same first-batch
-    * build / later-batch [[CardinalityService.mergeDays]] split.
-    */
-  def applyCardinalityBatch(name: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (!batchApplied(spark, name, batchId) && !batch.isEmpty) {
-      if (graft.io.TableManifest.readPointer(spark, name).isEmpty)
-        CardinalityService.build(spark, name, batch,
-          appliedBatch = Some(batchId))
-      else
-        CardinalityService.mergeDays(spark, name, batch,
-          appliedBatch = Some(batchId))
+  private def applyLedgered(name: String, batch: DataFrame)(
+      bootstrap: DataFrame => Unit, append: => Boolean): Unit =
+    if (!batch.isEmpty) {
+      if (graft.io.TableManifest.readPointer(batch.sparkSession, name).isEmpty)
+        bootstrap(batch.limit(0))
+      append
     }
-  }
 
-  /** Streaming ingest for [[CardinalityService]]: sketch each
-    * micro-batch's (ts, user_id) rows once at arrival and union them
-    * into the persisted per-day sketch table under the same atomic
-    * manifest commit — after any batch, a distinct-count query over
-    * any day range is served from the stored sketches alone. Per
-    * batch this scans ONLY the batch plus the calendar-bounded day
-    * table; history is never rescanned.
+  /** One micro-batch of the streaming [[QuantileService]] — run it
+    * through [[sink]] for streaming ingest: each micro-batch's (ts,
+    * value) rows are sketched once at arrival and folded into the
+    * persisted per-day sketch table under the same atomic manifest
+    * commit the batch paths use; after any batch, a quantile query
+    * over any day range is served from the stored sketches alone.
+    * Later batches MERGE day sketches ([[QuantileService.mergeDays]]:
+    * micro-batches keep arriving for an open day, so replace
+    * semantics would drop the day's earlier batches). The sketch
+    * merge is not idempotent, so the replay guard is what keeps a
+    * replayed batch from double-counting.
     */
-  def foreachBatchCardinality(stream: DataFrame, name: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyCardinalityBatch(name)(batch.toDF(), batchId)
-      }
-      .outputMode("append")
-      .start()
+  def applyQuantileBatch(name: String)(batch: DataFrame, batchId: Long): Unit =
+    applyMarked(name, batch, batchId)(
+      a => QuantileService.build(batch.sparkSession, name, batch, appliedBatch = a),
+      a => QuantileService.mergeDays(batch.sparkSession, name, batch, appliedBatch = a))
+
+  /** [[applyQuantileBatch]]'s cardinality twin: (ts, user_id) rows
+    * union into the per-day HLL table ([[CardinalityService.mergeDays]]).
+    * The replay guard matters even though the HLL union is
+    * idempotent: n_rows would double-count.
+    */
+  def applyCardinalityBatch(name: String)(batch: DataFrame, batchId: Long): Unit =
+    applyMarked(name, batch, batchId)(
+      a => CardinalityService.build(batch.sparkSession, name, batch, appliedBatch = a),
+      a => CardinalityService.mergeDays(batch.sparkSession, name, batch, appliedBatch = a))
 
   /** Keyed twin of [[applyCardinalityBatch]] — per-(dim, day) sketch
-    * maintenance under the same version-pinned replay guard: a batch
-    * whose version is already committed is a no-op, so post-commit
-    * crash replays never double-count n_rows (the sketch union
-    * itself is lossless either way).
+    * maintenance fed straight from the event stream: after any batch,
+    * per-type distinct curves and the sketched type-overlap matrix are
+    * served from stored registers alone
+    * ([[CardinalityService.pairOverlapEstimates]]).
     */
-  def applyCardinalityKeyedBatch(name: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (!batchApplied(spark, name, batchId) && !batch.isEmpty) {
-      if (graft.io.TableManifest.readPointer(spark, name).isEmpty)
-        CardinalityService.buildKeyed(spark, name, batch,
-          appliedBatch = Some(batchId))
-      else
-        CardinalityService.mergeDaysKeyed(spark, name, batch,
-          appliedBatch = Some(batchId))
-    }
-  }
-
-  /** Streaming ingest for the KEYED [[CardinalityService]] — the
-    * per-event-type audience service fed straight from the event
-    * stream: after any batch, per-type distinct curves and the
-    * sketched type-overlap matrix are served from stored registers
-    * alone ([[CardinalityService.pairOverlapEstimates]]).
-    */
-  def foreachBatchCardinalityKeyed(stream: DataFrame, name: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyCardinalityKeyedBatch(name)(batch.toDF(), batchId)
-      }
-      .outputMode("append")
-      .start()
+  def applyCardinalityKeyedBatch(name: String)(batch: DataFrame, batchId: Long): Unit =
+    applyMarked(name, batch, batchId)(
+      a => CardinalityService.buildKeyed(batch.sparkSession, name, batch, appliedBatch = a),
+      a => CardinalityService.mergeDaysKeyed(batch.sparkSession, name, batch, appliedBatch = a))
 
   /** Keyed twin of [[applyQuantileBatch]] — per-(dim, day) KLL
-    * sketches under the same explicit appliedBatch replay ledger.
+    * sketches (the latency-SLO curve per type): after any batch,
+    * per-dim quantile queries over any day range serve from stored
+    * sketches alone.
     */
-  def applyQuantileKeyedBatch(name: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (!batchApplied(spark, name, batchId) && !batch.isEmpty) {
-      if (graft.io.TableManifest.readPointer(spark, name).isEmpty)
-        QuantileService.buildKeyed(spark, name, batch,
-          appliedBatch = Some(batchId))
-      else
-        QuantileService.mergeDaysKeyed(spark, name, batch,
-          appliedBatch = Some(batchId))
-    }
-  }
+  def applyQuantileKeyedBatch(name: String)(batch: DataFrame, batchId: Long): Unit =
+    applyMarked(name, batch, batchId)(
+      a => QuantileService.buildKeyed(batch.sparkSession, name, batch, appliedBatch = a),
+      a => QuantileService.mergeDaysKeyed(batch.sparkSession, name, batch, appliedBatch = a))
 
-  /** Streaming ingest for the KEYED [[QuantileService]] — per-type
-    * value percentiles (the latency-SLO curve) fed straight from the
-    * event stream: after any batch, per-dim quantile queries over any
-    * day range serve from stored sketches alone.
-    */
-  def foreachBatchQuantilesKeyed(stream: DataFrame, name: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyQuantileKeyedBatch(name)(batch.toDF(), batchId)
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming ingest for the [[VocabService]] — the vocabulary
-    * member of the foreachBatch-sink family: document micro-batches
-    * tokenize ONCE into additive partials under the service's
-    * exactly-once contract ([[VocabService.appendBatch]]: sidecar
-    * high-water guard, partials-first ledger-last, deterministic
-    * replay collapse). Unlike the sketch sinks the folded state is
-    * EXACT — after any batch, served curves equal a from-scratch
-    * build over everything ingested (spec-asserted).
-    */
-  def applyVocabBatch(name: String)(batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      // first batch bootstraps an EMPTY table (batch data goes through
-      // appendBatch so the exactly-once ledger covers it — a build
-      // carrying batch 0 under manual id −1 would replay-double it)
-      if (graft.io.TableManifest.readPointer(spark, name).isEmpty)
-        VocabService.build(spark, name, batch.limit(0))
-      VocabService.appendBatch(batch, batchId, name)
-      ()
-    }
-
-  def foreachBatchVocab(stream: DataFrame, name: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyVocabBatch(name)(batch.toDF(), batchId)
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming ingest for the [[BigramService]] — the IDEMPOTENT
-    * member of the foreachBatch-sink family: pair types union into
-    * the stored set, so replay is harmless by construction (the
-    * ledger check only skips a pointless rewrite). Bootstrap mirrors
-    * the vocab sink.
-    */
-  def applyBigramBatch(name: String)(batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (graft.io.TableManifest.readPointer(spark, name).isEmpty)
-        BigramService.build(spark, name, batch.limit(0))
-      BigramService.appendBatch(batch, batchId, name)
-      ()
-    }
-
-  def foreachBatchBigrams(stream: DataFrame, name: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyBigramBatch(name)(batch.toDF(), batchId)
-      }
-      .outputMode("append")
-      .start()
-
-  /** Streaming ingest for the [[GramService]] — the second-moment
-    * member of the foreachBatch-sink family: embedding micro-batches
-    * fold ONCE through the Gram accumulator into additive integer
-    * partials under the service's exactly-once contract
-    * ([[GramService.appendBatch]]: ledger high-water guard,
-    * partials-first ledger-last, deterministic replay collapse). Like
-    * the vocab sink the folded state is EXACT — after any batch,
-    * served cells equal a from-scratch build over everything ingested
+  /** The [[VocabService]] micro-batch: documents tokenize ONCE into
+    * additive partials under the service's exactly-once ledger. Unlike
+    * the sketch services the folded state is EXACT — after any batch,
+    * served curves equal a from-scratch build over everything ingested
     * (spec-asserted).
     */
+  def applyVocabBatch(name: String)(batch: DataFrame, batchId: Long): Unit =
+    applyLedgered(name, batch)(VocabService.build(batch.sparkSession, name, _),
+      VocabService.appendBatch(batch, batchId, name))
+
+  /** The [[BigramService]] micro-batch — the IDEMPOTENT ledgered
+    * service: pair types union into the stored set, so replay is
+    * harmless by construction (the ledger check only skips a
+    * pointless rewrite).
+    */
+  def applyBigramBatch(name: String)(batch: DataFrame, batchId: Long): Unit =
+    applyLedgered(name, batch)(BigramService.build(batch.sparkSession, name, _),
+      BigramService.appendBatch(batch, batchId, name))
+
+  /** The [[GramService]] micro-batch: embeddings fold ONCE through the
+    * Gram accumulator into additive integer partials; after any
+    * batch, served cells equal a from-scratch build over everything
+    * ingested (spec-asserted).
+    */
   def applyGramBatch(name: String)(batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (graft.io.TableManifest.readPointer(spark, name).isEmpty)
-        GramService.build(spark, name, batch.limit(0))
-      GramService.appendBatch(batch, batchId, name)
-      ()
-    }
+    applyLedgered(name, batch)(GramService.build(batch.sparkSession, name, _),
+      GramService.appendBatch(batch, batchId, name))
 
-  def foreachBatchGram(stream: DataFrame, name: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyGramBatch(name)(batch.toDF(), batchId)
-      }
-      .outputMode("append")
-      .start()
-
-  /** The keyed (per-label) member of the embedding-sink pair:
-    * labeled micro-batches fold through [[CentroidService]] under the
-    * same exactly-once triple as the Gram sink; after any batch the
-    * served centroid cells AND the affinity matrix equal a
-    * from-scratch build over everything ingested (spec-asserted).
+  /** The [[CentroidService]] micro-batch — the keyed (per-label)
+    * member of the embedding pair: after any batch the served
+    * centroid cells AND the affinity matrix equal a from-scratch
+    * build over everything ingested (spec-asserted).
     */
   def applyCentroidBatch(name: String)(batch: DataFrame, batchId: Long): Unit =
-    if (!batch.isEmpty) {
-      val spark = batch.sparkSession
-      if (graft.io.TableManifest.readPointer(spark, name).isEmpty)
-        CentroidService.build(spark, name, batch.limit(0))
-      CentroidService.appendBatch(batch, batchId, name)
-      ()
-    }
+    applyLedgered(name, batch)(CentroidService.build(batch.sparkSession, name, _),
+      CentroidService.appendBatch(batch, batchId, name))
 
-  def foreachBatchCentroid(stream: DataFrame, name: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyCentroidBatch(name)(batch.toDF(), batchId)
-      }
-      .outputMode("append")
-      .start()
-
-  /** The adjacency member of the foreachBatch-sink family: edge
-    * micro-batches fold into [[AdjacencyIndex]] under the same
-    * version-pinned idempotence contract. Unlike the sketch sinks,
-    * the merge itself (set-union) is idempotent — the batchId+1 pin
-    * exists to make a replay a NO-OP rather than a harmless-but-full
-    * table rewrite (append re-buckets the whole relation; the class
+  /** The [[AdjacencyIndex]] micro-batch: (src, dst) edges set-union
+    * into the persisted bucketed adjacency; after any batch, BFS/
+    * degree/neighbor probes serve the graph-so-far from the stored
+    * layout. The set-union itself is idempotent — the replay guard
+    * makes a replay a NO-OP rather than a harmless-but-full table
+    * rewrite (append re-buckets the whole relation; the class
     * scaladoc's large-batch economics apply doubly under streaming).
     */
-  def applyAdjacencyBatch(name: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (!batchApplied(spark, name, batchId) && !batch.isEmpty) {
-      if (graft.io.TableManifest.readPointer(spark, name).isEmpty)
-        AdjacencyIndex.build(spark, name, batch,
-          appliedBatch = Some(batchId))
-      else
-        AdjacencyIndex.appendEdges(spark, name, batch,
-          appliedBatch = Some(batchId))
-    }
-  }
-
-  /** Streaming ingest for [[AdjacencyIndex]]: each micro-batch of
-    * (src, dst) edges set-unions into the persisted bucketed
-    * adjacency; after any batch, BFS/degree/neighbor probes serve
-    * the full graph-so-far from the stored layout.
-    */
-  def foreachBatchAdjacency(stream: DataFrame, name: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        applyAdjacencyBatch(name)(batch.toDF(), batchId)
-      }
-      .outputMode("append")
-      .start()
+  def applyAdjacencyBatch(name: String)(batch: DataFrame, batchId: Long): Unit =
+    applyMarked(name, batch, batchId)(
+      a => AdjacencyIndex.build(batch.sparkSession, name, batch, appliedBatch = a),
+      a => AdjacencyIndex.appendEdges(batch.sparkSession, name, batch, appliedBatch = a))
 
   /** Per-KEY streaming quantiles — the state-store half of the
     * percentile-service story ([[QuantileService]] persists per-DAY
@@ -608,6 +448,16 @@ object Streaming {
 
   case class UserAgg(n: Long, sum: BigDecimal)
 
+  /** Per-user cumulative stats carried in CUSTOM state via
+    * `flatMapGroupsWithState` — the arbitrary-stateful-processing
+    * surface (beyond built-in windows). State is one small record per
+    * user, hash-partitioned by the group key and exact (BigDecimal
+    * sum, so partition/batch order cannot change the emitted double).
+    * In batch mode the same code runs with empty initial state, which
+    * makes the result equal to a plain group-by — that equivalence is
+    * the oracle; cross-batch state accumulation is asserted in
+    * `StreamingSpec`.
+    */
   def customStateStats(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._

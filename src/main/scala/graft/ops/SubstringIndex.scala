@@ -89,9 +89,8 @@ object SubstringIndex {
   def appendToIndex(docs: DataFrame, tableName: String): Unit = {
     val spark = docs.sparkSession
     val t = resolveTable(spark, tableName)
-    val buckets = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.map(_.numBuckets).getOrElse(throw new IllegalStateException(
+    val (_, buckets) = graft.io.TableManifest.bucketSpecOf(spark, t).getOrElse(
+      throw new IllegalStateException(
         s"$t has no bucket spec — appending would mix layouts; rebuild the index"))
     gramRows(docs).select("gh", "gram", "lang", "doc_id", "pos")
       .write.mode("append")

@@ -94,8 +94,8 @@ class AdjacencyIndexSpec extends SparkSpec {
     val name = "adj_stream"
     val ckpt = java.nio.file.Files.createTempDirectory("adj_ckpt").toString
     val stream = MemoryStream[(Long, Long)]
-    val q = ops.Streaming.foreachBatchAdjacency(
-      stream.toDF().toDF("src", "dst"), name, ckpt)
+    val q = ops.Streaming.sink(
+      stream.toDF().toDF("src", "dst"), ckpt)(ops.Streaming.applyAdjacencyBatch(name))
     try {
       stream.addData(Seq(1L -> 2L, 2L -> 3L))
       q.processAllAvailable()

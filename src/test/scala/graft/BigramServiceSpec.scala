@@ -102,8 +102,8 @@ class BigramServiceSpec extends SparkSpec {
     val name = "bsvc_e"
     val ckpt = java.nio.file.Files.createTempDirectory("bsvc_ckpt").toString
     val stream = MemoryStream[(Long, String, String)]
-    val q = ops.Streaming.foreachBatchBigrams(
-      stream.toDF().toDF("doc_id", "lang", "text"), name, ckpt)
+    val q = ops.Streaming.sink(
+      stream.toDF().toDF("doc_id", "lang", "text"), ckpt)(ops.Streaming.applyBigramBatch(name))
     try {
       stream.addData(Seq((1L, "en", "a b a"), (2L, "en", "b c")))
       q.processAllAvailable()

@@ -111,8 +111,8 @@ class CardinalityServiceSpec extends SparkSpec {
     val name = "csvc_stream"
     val ckpt = java.nio.file.Files.createTempDirectory("csvc_ckpt").toString
     val stream = MemoryStream[(java.sql.Timestamp, Long)]
-    val q = ops.Streaming.foreachBatchCardinality(
-      stream.toDF().toDF("ts", "user_id"), name, ckpt)
+    val q = ops.Streaming.sink(
+      stream.toDF().toDF("ts", "user_id"), ckpt)(ops.Streaming.applyCardinalityBatch(name))
     try {
       // batches 0 and 1 both feed day 1 (open-day micro-batches MERGE,
       // not replace — user 7 recurs across batches and must count once)
@@ -259,8 +259,8 @@ class CardinalityServiceSpec extends SparkSpec {
     val name = "csvc_kstream"
     val ckpt = java.nio.file.Files.createTempDirectory("csvc_kckpt").toString
     val stream = MemoryStream[(java.sql.Timestamp, String, Long)]
-    val q = ops.Streaming.foreachBatchCardinalityKeyed(
-      stream.toDF().toDF("ts", "event_type", "user_id"), name, ckpt)
+    val q = ops.Streaming.sink(
+      stream.toDF().toDF("ts", "event_type", "user_id"), ckpt)(ops.Streaming.applyCardinalityKeyedBatch(name))
     try {
       // user 7 recurs in 'click' across batches: must count once there,
       // and independently in 'view' (dims keep separate registers)

@@ -128,8 +128,8 @@ class CentroidServiceSpec extends SparkSpec {
     val b1 = Seq((1L, "a", vec(1)), (2L, "b", vec(2)))
     val b2 = Seq((3L, "a", vec(3)), (4L, "c", vec(4)))
     val stream = MemoryStream[(Long, String, Array[Float])]
-    val q = ops.Streaming.foreachBatchCentroid(
-      stream.toDF().toDF("vec_id", "label", "embedding"), name, ckpt)
+    val q = ops.Streaming.sink(
+      stream.toDF().toDF("vec_id", "label", "embedding"), ckpt)(ops.Streaming.applyCentroidBatch(name))
     try {
       stream.addData(b1)
       q.processAllAvailable()

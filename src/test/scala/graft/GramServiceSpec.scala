@@ -49,7 +49,7 @@ class GramServiceSpec extends SparkSpec {
   }
 
   test("crashed MANUAL append never shares its id with the next append (r12 ADVICE)") {
-    // without the ManualIds reservation, a crashed manual append's
+    // without the LedgerTable id reservation, a crashed manual append's
     // orphan pos cells would collide with the NEXT manual id and the
     // max() collapse would merge unrelated partials' cells
     val t0 = emb.filter(col("vec_id") % 3 === 0)
@@ -120,8 +120,8 @@ class GramServiceSpec extends SparkSpec {
     val b1 = Seq((1L, vec(1)), (2L, vec(2)))
     val b2 = Seq((3L, vec(3)), (4L, vec(4)))
     val stream = MemoryStream[(Long, Array[Float])]
-    val q = ops.Streaming.foreachBatchGram(
-      stream.toDF().toDF("vec_id", "embedding"), name, ckpt)
+    val q = ops.Streaming.sink(
+      stream.toDF().toDF("vec_id", "embedding"), ckpt)(ops.Streaming.applyGramBatch(name))
     try {
       stream.addData(b1)
       q.processAllAvailable()

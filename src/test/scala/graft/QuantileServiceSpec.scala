@@ -134,8 +134,8 @@ class QuantileServiceSpec extends SparkSpec {
     val name = "qsvc_stream"
     val ckpt = java.nio.file.Files.createTempDirectory("qsvc_ckpt").toString
     val stream = MemoryStream[(java.sql.Timestamp, Double)]
-    val q = ops.Streaming.foreachBatchQuantiles(
-      stream.toDF().toDF("ts", "value"), name, ckpt)
+    val q = ops.Streaming.sink(
+      stream.toDF().toDF("ts", "value"), ckpt)(ops.Streaming.applyQuantileBatch(name))
     try {
       // batch 0 and batch 1 both feed day 1 (open-day micro-batches
       // MERGE, not replace); batch 1 also opens day 2
@@ -250,29 +250,35 @@ class QuantileServiceSpec extends SparkSpec {
 
   test("manual merge between stream batches must not mask the next live batch (r12 ADVICE)") {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val name = "qsvc_manual_mix"
-    try {
-      ops.Streaming.applyQuantileBatch(name)(
-        Seq((ts("2024-03-01 10:00:00"), 1.0)).toDF("ts", "value"), 0L)
-      assert(ops.QuantileService.mergedSketch(spark, name).n == 1)
-      // a MANUAL merge lands between stream batches: the version
-      // inflates past batchId+1 — the old version-inference guard
-      // would then read every later live batch as a phantom replay
-      ops.QuantileService.mergeDays(spark, name,
-        Seq((ts("2024-03-01 11:00:00"), 2.0)).toDF("ts", "value"))
-      val p = io.TableManifest.readPointer(spark, name).get
-      assert(p.appliedBatch === Some(0L),
-        "manual commits must carry the applied marker forward")
-      ops.Streaming.applyQuantileBatch(name)(
-        Seq((ts("2024-03-02 09:00:00"), 3.0)).toDF("ts", "value"), 1L)
-      assert(ops.QuantileService.mergedSketch(spark, name).n == 3,
-        "live batch after a manual merge must still fold in")
-      // and batch 1's replay is still a no-op
-      ops.Streaming.applyQuantileBatch(name)(
-        Seq((ts("2024-03-02 09:00:00"), 3.0)).toDF("ts", "value"), 1L)
-      assert(ops.QuantileService.mergedSketch(spark, name).n == 3,
-        "replay stays a no-op under the explicit marker")
-    } finally io.TableManifest.drop(spark, name)
+    // two seedings: the stream's batch 0 builds the table, or the table
+    // is built and merged by hand before the stream's first batch
+    Seq(true, false).foreach { streamFirst =>
+      val name = s"qsvc_manual_mix_$streamFirst"
+      val firstLive = if (streamFirst) 1L else 0L
+      try {
+        val seed = Seq((ts("2024-03-01 10:00:00"), 1.0)).toDF("ts", "value")
+        if (streamFirst) ops.Streaming.applyQuantileBatch(name)(seed, 0L)
+        else ops.QuantileService.build(spark, name, seed)
+        assert(ops.QuantileService.mergedSketch(spark, name).n == 1)
+        // a MANUAL merge lands between stream batches: the version
+        // inflates past batchId+1 — the old version-inference guard
+        // would then read every later live batch as a phantom replay
+        ops.QuantileService.mergeDays(spark, name,
+          Seq((ts("2024-03-01 11:00:00"), 2.0)).toDF("ts", "value"))
+        val p = io.TableManifest.readPointer(spark, name).get
+        assert(p.appliedBatch === (if (streamFirst) Some(0L) else None),
+          "manual commits must carry the applied marker forward")
+        ops.Streaming.applyQuantileBatch(name)(
+          Seq((ts("2024-03-02 09:00:00"), 3.0)).toDF("ts", "value"), firstLive)
+        assert(ops.QuantileService.mergedSketch(spark, name).n == 3,
+          s"live batch $firstLive after a manual merge must still fold in")
+        // and the live batch's replay is still a no-op
+        ops.Streaming.applyQuantileBatch(name)(
+          Seq((ts("2024-03-02 09:00:00"), 3.0)).toDF("ts", "value"), firstLive)
+        assert(ops.QuantileService.mergedSketch(spark, name).n == 3,
+          "replay stays a no-op under the explicit marker")
+      } finally io.TableManifest.drop(spark, name)
+    }
   }
 
   test("per-key streaming KLL state accumulates across batches with a valid certificate") {

@@ -134,8 +134,8 @@ class VocabServiceSpec extends SparkSpec {
     val name = "vsvc_e"
     val ckpt = java.nio.file.Files.createTempDirectory("vsvc_ckpt").toString
     val stream = MemoryStream[(Long, String, String)]
-    val q = ops.Streaming.foreachBatchVocab(
-      stream.toDF().toDF("doc_id", "lang", "text"), name, ckpt)
+    val q = ops.Streaming.sink(
+      stream.toDF().toDF("doc_id", "lang", "text"), ckpt)(ops.Streaming.applyVocabBatch(name))
     try {
       stream.addData(Seq((1L, "en", "spark joins data"), (2L, "en", "data data")))
       q.processAllAvailable()
