@@ -13,10 +13,9 @@ import org.apache.spark.sql.functions._
   * a single ATOMIC rename of the new manifest over the old one, so a
   * writer killed at ANY point before that rename leaves readers on
   * the previous snapshot in full — there is no window in which some
-  * buckets are new and some old (the flaw of the per-bucket
-  * delete+rename swap this replaces; round-6 verdict, "What's
-  * missing" item 5). Readers resolve the manifest first and then
-  * read only directories it references, never a live write path.
+  * buckets are new and some old. Readers resolve the manifest first
+  * and then read only directories it references, never a live write
+  * path.
   *
   * The manifest is tab-separated `bucket\trelativeDir` lines — small
   * (nBuckets entries), rewritten wholesale each commit, renamed with
@@ -24,11 +23,8 @@ import org.apache.spark.sql.functions._
   * and HDFS; object stores substitute their own atomic-put here, as
   * every table format's committer does).
   *
-  * `vacuum` deletes version directories no longer referenced. It
-  * runs AFTER the commit rename; at scale it would honor a retention
-  * window so in-flight readers of the previous manifest finish their
-  * scans (Delta's VACUUM semantics) — the window is a policy knob,
-  * the commit protocol is unchanged by it.
+  * `vacuum` runs AFTER the commit rename and deletes the version
+  * directories neither this manifest nor the previous one references.
   */
 object Manifest {
 
@@ -100,11 +96,11 @@ object Manifest {
       }
   }
 
-  /** Read the committed snapshot through the manifest: the union of
-    * exactly the directories the current manifest references, with
-    * the bucket id restored as a column. Never lists or reads a
-    * directory the manifest does not name, so a concurrent writer's
-    * in-progress version directories are invisible.
+  /** Read the committed snapshot through the manifest: exactly the
+    * directories it references, as ONE relation ([[readBuckets]]: one
+    * listing, one schema read) with `bucket` restored from the path.
+    * A concurrent writer's in-progress version directories are never
+    * listed or read.
     */
   def readSnapshot(spark: SparkSession, snapshotPath: String): DataFrame = {
     val root = new Path(snapshotPath)
@@ -113,11 +109,17 @@ object Manifest {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val entries = read(fs, root)
     require(entries.nonEmpty, s"no committed snapshot at $snapshotPath")
-    entries.toSeq.sortBy(_._1)
-      .map { case (b, rel) =>
-        spark.read.parquet(new Path(root, rel).toString)
-          .withColumn("bucket", lit(b))
-      }
-      .reduce(_.unionByName(_))
+    readBuckets(spark, root, entries.values.toSeq)
   }
+
+  /** Manifest entries `dirs` (each `vdir/bucket=N` under `root`) as
+    * ONE Parquet relation — one listing, one schema read and one scan,
+    * not one of each per bucket. Each entry is a read root, so
+    * partition discovery finds no `bucket`; it comes from each file's
+    * `bucket=N` parent directory, the bucket by construction.
+    */
+  def readBuckets(spark: SparkSession, root: Path, dirs: Seq[String]): DataFrame =
+    spark.read.parquet(dirs.map(rel => new Path(root, rel).toString): _*)
+      .withColumn("bucket", regexp_extract(col("_metadata.file_path"),
+        "/bucket=(-?[0-9]+)/[^/]*$", 1).cast("int"))
 }

@@ -4,15 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** The live directory-watching ingest composite (round 14 — r13
-  * verdict item 2, the reference-class core loop of SURVEY §0.1
-  * demonstrated END TO END): new CSV files appear under a watched
-  * directory, rows validate against a DECLARED schema, malformed rows
-  * quarantine with their raw line + source file, and good rows upsert
-  * into the manifest-committed bucketed snapshot — one streaming
-  * query wiring the pieces that until now were only spec'd
-  * separately ([[graft.io.Readers.csvWithQuarantine]]'s PERMISSIVE
-  * contract, [[Streaming.foreachBatchUpsert]]'s crash-safe commit).
+/** The live directory-watching ingest composite, the reference-class
+  * core loop of SURVEY §0.1 END TO END: new CSV or JSON-lines files
+  * appear under a watched directory, rows validate against a DECLARED
+  * schema, malformed rows quarantine with their raw line + source
+  * file, and good rows upsert into the manifest-committed bucketed
+  * snapshot ([[Streaming.upsertBatchInto]]) — one streaming query.
   *
   * Pipeline, per micro-batch (all inside ONE foreachBatch, so the
   * file-source checkpoint advances only after both sides landed):
@@ -25,7 +22,8 @@ import org.apache.spark.sql.types.StructType
   *   2. The batch is `localCheckpoint`ed once — both splits read the
   *      materialized rows (a CSV relation whose only referenced
   *      column is the corrupt-record column is disallowed by Spark,
-  *      and re-parsing per split would double the scan).
+  *      and re-parsing per split would double the scan), and freed
+  *      once both writes end: a replay re-reads the source.
   *   3. Bad rows (raw line, source file, batch id) OVERWRITE the
   *      batch-keyed quarantine partition `batch=<id>` — overwrite
   *      makes the quarantine exactly-once under replay without any
@@ -49,10 +47,12 @@ import org.apache.spark.sql.types.StructType
   * Scale: the file source's listing state is O(files seen) on the
   * driver (bounded by `maxFileAge` / compaction in a deployment);
   * parse + split are row-local over the batch; quarantine writes are
-  * batch-sized; the upsert reads only touched buckets. Nothing scans
-  * the accumulated snapshot or quarantine history. At 100 TB the
-  * same query runs unchanged — the knobs are `maxFilesPerTrigger`
-  * (batch sizing) and `nBuckets` (bucket-fits-in-executor-memory).
+  * batch-sized; the upsert reads only the touched buckets, as one
+  * relation (one listing and one schema read per batch, not per
+  * bucket). Nothing scans the accumulated snapshot or quarantine
+  * history. At 100 TB the same query runs unchanged — the knobs are
+  * `maxFilesPerTrigger` (batch sizing) and `nBuckets`
+  * (bucket-fits-in-executor-memory).
   */
 object IngestPipeline {
 
@@ -106,28 +106,28 @@ object IngestPipeline {
       snapshotPath: String, quarantinePath: String, nBuckets: Int,
       beforeCommit: () => Unit, afterCommit: () => Unit): Unit = {
     val b = batch.localCheckpoint()
-    val bad = b.filter(col("_corrupt_record").isNotNull)
-      .select(col("_corrupt_record").as("raw"),
-        col("_src_file").as("src_file"))
-    // overwrite of the batch-keyed partition = exactly-once quarantine
-    // under at-least-once replay
-    bad.write.mode("overwrite").parquet(s"$quarantinePath/batch=$batchId")
-    val good = b.filter(col("_corrupt_record").isNull)
-      .drop("_corrupt_record", "_src_file")
-    Streaming.upsertBatchInto(snapshotPath,
-      good.withColumn("bucket", Streaming.upsertBucket(nBuckets)),
-      batchId, Streaming.upsertLatest, beforeCommit, afterCommit)
+    try {
+      val bad = b.filter(col("_corrupt_record").isNotNull)
+        .select(col("_corrupt_record").as("raw"),
+          col("_src_file").as("src_file"))
+      // overwrite of the batch-keyed partition = exactly-once quarantine
+      // under at-least-once replay
+      bad.write.mode("overwrite").parquet(s"$quarantinePath/batch=$batchId")
+      val good = b.filter(col("_corrupt_record").isNull)
+        .drop("_corrupt_record", "_src_file")
+      Streaming.upsertBatchInto(snapshotPath,
+        good.withColumn("bucket", Streaming.upsertBucket(nBuckets)),
+        batchId, Streaming.upsertLatest, beforeCommit, afterCommit)
+    } finally Checkpoints.free(b)
   }
 
   /** Read the accumulated quarantine (all batches). Before the first
     * micro-batch commits, the root path does not exist yet — a
     * monitoring caller polling early gets an EMPTY relation with the
-    * [[QuarantineColumns]] schema instead of an AnalysisException
-    * (round 15, the r14 ADVICE item). `batch` is LongType on BOTH
-    * branches (round 16, the r15 ADVICE item): ingestBatch's batchId
-    * is a Long, partition discovery infers Int for small ids and
-    * Long past 2³¹, so the read path casts the discovered column —
-    * the early-poll and post-write schemas now agree at any id.
+    * [[QuarantineColumns]] schema instead of an AnalysisException.
+    * `batch` is LongType on BOTH branches: ingestBatch's batchId is a
+    * Long, partition discovery infers Int for small ids and Long past
+    * 2³¹, so the read path casts the discovered column.
     */
   def readQuarantine(spark: SparkSession, quarantinePath: String): DataFrame = {
     // Hadoop FS API, not java.io: the quarantine root is wherever the

@@ -113,17 +113,16 @@ object Streaming {
     * point before that rename leaves readers on the previous
     * snapshot in full (spec'd: StreamingSpec injects a crash between
     * write and commit and proves the old snapshot stays readable and
-    * the replayed batch then lands exactly once) — unlike the
-    * per-bucket delete+rename swap this replaces, which could die
-    * with some buckets new and some old. Untouched buckets are never
-    * read or rewritten; their files AND their manifest entries carry
-    * over verbatim (byte-identity asserted in StreamingSpec). Raise
-    * `nBuckets` so a single bucket fits executor memory at the
-    * target scale. Version directories are keyed by batchId — and a
-    * replayed batch whose PREVIOUS attempt already committed (crash
-    * in the window between the manifest rename and the streaming
-    * checkpoint commit — foreachBatch is at-least-once) stages into
-    * an attempt-suffixed dir instead: a directory the CURRENT
+    * the replayed batch then lands exactly once). Untouched buckets
+    * are never read or rewritten; their files AND their manifest
+    * entries carry over verbatim (byte-identity asserted in
+    * StreamingSpec). Raise `nBuckets` so a single bucket fits
+    * executor memory at the target scale. Version directories are
+    * keyed by batchId — and a replayed batch whose PREVIOUS attempt
+    * already committed (crash in the window between the manifest
+    * rename and the streaming checkpoint commit — foreachBatch is
+    * at-least-once) stages into an attempt-suffixed dir instead: a
+    * directory the CURRENT
     * manifest references is never deleted or overwritten, so the
     * merge's lazy read of the committed snapshot stays intact and
     * the replay re-merges idempotently (latest-wins is idempotent —
@@ -174,10 +173,13 @@ object Streaming {
     * store. `batchB` must carry an int `bucket` column that is a pure
     * function of the upsert key; `merge(current, batchB)` combines
     * the touched buckets' committed rows (bucket column restored)
-    * with the batch. Staging, touched-bucket verification, the
-    * manifest-pointer commit, and retention-grace vacuum are exactly
-    * the discipline the original sink carried (crash-spec'd in
-    * StreamingSpec — those specs now exercise this shared core).
+    * with the batch. The touched buckets are read as ONE relation
+    * ([[graft.io.Manifest.readBuckets]]: one listing, one schema read,
+    * one scan in the merge plan); `bucket` comes from each file's
+    * `bucket=N` directory, a read root that partition discovery does
+    * not see. Staging, touched-bucket verification, the
+    * manifest-pointer commit and the retention-grace vacuum are
+    * crash-spec'd in StreamingSpec.
     */
   private[graft] def upsertBatchInto(snapshotPath: String, batchB: DataFrame,
       batchId: Long, merge: (DataFrame, DataFrame) => DataFrame,
@@ -194,13 +196,9 @@ object Streaming {
       .collect().map(_.getInt(0)).sorted
     if (touched.nonEmpty) {
       val manifest = graft.io.Manifest.read(fs, root)
-      val currentDirs = touched.toSeq.flatMap(b => manifest.get(b).map(b -> _))
-      val current =
-        if (currentDirs.isEmpty) batchB.limit(0)
-        else currentDirs.map { case (b, rel) =>
-          spark.read.parquet(new org.apache.hadoop.fs.Path(root, rel).toString)
-            .withColumn("bucket", lit(b))
-        }.reduce(_.unionByName(_))
+      val currentDirs = touched.toSeq.flatMap(manifest.get)
+      val current = if (currentDirs.isEmpty) batchB.limit(0)
+        else graft.io.Manifest.readBuckets(spark, root, currentDirs)
       val merged = merge(current, batchB)
       // staging dir: attempt-unique w.r.t. the LIVE manifest — a
       // dir the current manifest references must never be deleted
@@ -227,10 +225,8 @@ object Streaming {
       val newManifest = manifest ++ touched.map(b => b -> s"$vdir/bucket=$b")
       beforeCommit()
       graft.io.Manifest.write(fs, root, newManifest) // THE commit point
-      // retention grace: keep the PREVIOUS manifest's dirs one
-      // more batch interval, so a reader that resolved it
-      // pre-commit finishes its lazy scan on intact files; dirs
-      // fall out once two generations stale
+      // retention grace: the PREVIOUS manifest's dirs stay one more
+      // batch, for readers that resolved it before this commit
       graft.io.Manifest.vacuum(fs, root, newManifest, referenced)
       afterCommit()
     }

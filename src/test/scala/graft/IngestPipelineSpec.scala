@@ -40,11 +40,33 @@ class IngestPipelineSpec extends SparkSpec {
       .as[(Long, String, Long, Double)].collect()
       .map(t => (t._1, t._2) -> (t._3, t._4)).toMap
 
+  /** The RDDs whose blocks the block manager stored and nobody has
+    * unpersisted since: each batch's `localCheckpoint` until it is
+    * freed (or, without a free, until a GC lets ContextCleaner drop it).
+    */
+  private class RddBlocks extends org.apache.spark.scheduler.SparkListener {
+    private val live = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    override def onBlockUpdated(e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
+      e.blockUpdatedInfo.blockId.asRDDId.foreach { id =>
+        if (e.blockUpdatedInfo.storageLevel.isValid) live.add(id.rddId)
+      }
+    override def onUnpersistRDD(e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
+      live.remove(e.rddId)
+    def assertNoneLive(): Unit =
+      org.scalatest.concurrent.Eventually.eventually(
+          org.scalatest.concurrent.Eventually.timeout(
+            org.scalatest.time.Span(10, org.scalatest.time.Seconds))) {
+        assert(live.isEmpty, s"ingest batch checkpoints still hold blocks: $live")
+      }
+  }
+
   test("live ingest composite: watched dir -> declared schema -> quarantine + manifest upsert; late files; both crash windows") {
     val dir = java.nio.file.Files.createTempDirectory("ingestp").toString
     val watch = s"$dir/incoming"; val snap = s"$dir/snapshot"
     val quar = s"$dir/quarantine"; val ckpt = s"$dir/ckpt"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(watch))
+    val blocks = new RddBlocks
+    spark.sparkContext.addSparkListener(blocks)
 
     def start(beforeCommit: () => Unit = () => (),
         afterCommit: () => Unit = () => ()) =
@@ -60,6 +82,7 @@ class IngestPipelineSpec extends SparkSpec {
       "5,2024-01-01T10:06:00") // wrong shape
     val q1 = start()
     try q1.processAllAvailable() finally q1.stop()
+    blocks.assertNoneLive()
 
     val s1 = snapshotRows(snap)
     assert(s1.size === 3, s"only valid rows reach the snapshot: $s1")
@@ -128,6 +151,9 @@ class IngestPipelineSpec extends SparkSpec {
     io.Manifest.read(fs, root).values.foreach { rel =>
       assert(fs.exists(new org.apache.hadoop.fs.Path(root, rel)), s"missing $rel")
     }
+    // every batch's checkpoint is freed, on the crashed attempts too
+    blocks.assertNoneLive()
+    spark.sparkContext.removeSparkListener(blocks)
   }
 
   test("JSON-lines arrival format: same quarantine + upsert semantics through the json file source") {

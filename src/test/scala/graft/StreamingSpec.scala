@@ -337,6 +337,68 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("upsert reads every touched bucket through one scan of the snapshot") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("upserts").toString
+    val snap = s"$dir/snapshot"
+    val snapRoot = new org.apache.hadoop.fs.Path(snap).toUri.getPath
+    // per staging write under the snapshot: the number of file scans
+    // below the snapshot root in its executed plan
+    val scans = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener
+        with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+      import org.apache.spark.sql.execution.command.DataWritingCommandExec
+      import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        collect(qe.executedPlan) { case w: DataWritingCommandExec => w }.foreach { w =>
+          w.cmd match {
+            case c: InsertIntoHadoopFsRelationCommand
+                if c.outputPath.toUri.getPath.startsWith(snapRoot) =>
+              val n = collect(w.child) {
+                case f: org.apache.spark.sql.execution.FileSourceScanExec
+                    if f.relation.location.rootPaths.forall(_.toUri.getPath.startsWith(snapRoot)) => f
+              }.size
+              scans.add(c.outputPath.getName -> n)
+            case _ =>
+          }
+        }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    // registered before the query starts: the stream's session copies
+    // the listeners it finds at start
+    spark.listenerManager.register(listener)
+    val stream = MemoryStream[Ev]
+    val q = ops.Streaming.foreachBatchUpsert(stream.toDF(), snap, s"$dir/ckpt", nBuckets = 8)
+    try {
+      stream.addData((1 to 24).map(u => ev(u, "2024-01-01 10:00:00", u)))
+      q.processAllAvailable()
+      val updates = (1 to 8).map(u => ev(100 + u, "2024-01-01 11:00:00", u, v = 9.0))
+      val committed = io.Manifest.read(
+        org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration),
+        new org.apache.hadoop.fs.Path(snap)).keySet
+      val touched = updates.toDF().select(ops.Streaming.upsertBucket(8))
+        .as[Int].collect().toSet.intersect(committed)
+      assert(touched.size >= 4, s"fixture must touch several committed buckets: $touched")
+      stream.addData(updates)
+      q.processAllAvailable()
+      org.scalatest.concurrent.Eventually.eventually(
+          org.scalatest.concurrent.Eventually.timeout(
+            org.scalatest.time.Span(30, org.scalatest.time.Seconds))) {
+        assert(scans.asScala.exists(_._1 == "v1"), "batch 1's staging write seen")
+      }
+      assert(scans.asScala.forall { case (v, n) => v == "v0" || n == 1 },
+        s"each staging write must scan the snapshot once: ${scans.asScala.toSeq}")
+      val r = io.Manifest.readSnapshot(spark, snap)
+        .select("user_id", "event_id").as[(Long, Long)].collect().toMap
+      assert(r.size === 24 && (1L to 8L).forall(u => r(u) == 100L + u))
+    } finally {
+      q.stop()
+      spark.listenerManager.unregister(listener)
+    }
+  }
+
   test("post-commit crash + replay: committed data survives (attempt-unique staging never deletes live dirs)") {
     // foreachBatch is at-least-once: a crash in the window BETWEEN the
     // manifest rename and the streaming checkpoint commit replays a
@@ -371,6 +433,11 @@ class StreamingSpec extends SparkSpec {
     val rec = rows()
     assert(rec(1L) === (99L, 9.0) && rec.size === 6,
       "replay must converge to the same snapshot")
+    // `bucket` is restored from each file's directory, also under the
+    // replay's attempt-suffixed `v1r1/bucket=N`
+    val misplaced = io.Manifest.readSnapshot(spark, snap)
+      .filter(col("bucket").isNull || col("bucket") =!= ops.Streaming.upsertBucket(8))
+    assert(misplaced.isEmpty, "every row's bucket must be its key's bucket")
     // every manifest-referenced dir still exists (nothing live deleted)
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(snap)
