@@ -382,7 +382,7 @@ object TextExpressions {
 
   /** Count of ascending-sorted boundaries at-or-below v — the
     * searchsorted / upper-bound primitive behind count-balanced
-    * bucketing ([[graft.ops.Analytics.balancedBuckets]]): one static
+    * bucketing ([[graft.ops.SpineRank.balancedBuckets]]): one static
     * binary-search call per row inside whole-stage codegen. The HOF
     * spelling `size(filter(bnds, b -> b <= v))` evaluates an
     * interpreted lambda per ELEMENT and breaks the codegen span —

@@ -17,10 +17,6 @@ import org.apache.spark.sql.types.StructType
   */
 object Readers {
 
-  val tableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
       // events.ts has shipped as BOTH parquet TIMESTAMP(NANOS) (rounds

@@ -8,7 +8,7 @@ import graft.Determinism.dec
 import graft.io.Readers.table
 
 /** Round-6 analytics operators: marketing attribution, weighted
-  * median + exact quantiles (bucketed two-phase, no holistic agg),
+  * median + exact quantiles (via [[SpineRank.exactQuantiles]]),
   * statistical anomaly flags, linear gap interpolation (keyed and
   * oracle'd forms), point-in-time (bitemporal) dimension lookup,
   * event-path mining, Markov transitions, per-user EWMA, activation
@@ -66,220 +66,50 @@ object Analytics {
 
   /** Quantity-weighted median price per return flag: the smallest
     * price whose cumulative weight reaches half the group total.
-    * All weights are exact decimal sums, so the `2·cum ≥ tot` pivot
-    * test is integer-exact in both engines; ties share one cumulative
+    * All weights are exact decimal sums, so the pivot test (`2·cum ≥
+    * tot`, which [[SpineRank.exactQuantiles]] states as `100·cum ≥
+    * 50·tot`) is exact in both engines; ties share one cumulative
     * value (a tie can never straddle the pivot).
     *
-    * Scale shape: the naive formulation — a cumulative window
-    * partitioned by the group key — puts an ENTIRE group's rows
-    * through one task (l_returnflag has 3 values; at 100 TB that is
-    * three straggler tasks doing all the work). Instead the same
-    * two-phase distributed-quantile shape as [[Llm.sampleTokenBudget]]:
-    * price-RANGE buckets (order-aligned, bounded count) carry
-    * per-(group, bucket) partial weights; the running sum over the
-    * tiny bucket relation finds each group's pivot bucket; only the
-    * pivot bucket's rows are scanned for the exact answer. The wide
-    * data is touched by partial aggregation only — no per-group
-    * serial pass anywhere.
-    *
-    * Measured at sf0.1: 1.9 s vs the naive window's 1.36 s — the
-    * extra phases cost ~0.5 s at toy scale and remove an unbounded
+    * Scale: [[SpineRank.exactQuantiles]] with weight `qty` — the
+    * naive cumulative window partitioned by the group key would put
+    * an ENTIRE group's rows through one task (l_returnflag has 3
+    * values; at 100 TB that is three straggler tasks doing all the
+    * work). Measured at sf0.1: 1.9 s vs the naive window's 1.36 s —
+    * the extra phases cost ~0.5 s at toy scale and remove an unbounded
     * single-task serial pass at real scale (the same
     * in-suite-slower-by-design tradeoff as the `_lsh` pairwise keys,
     * BASELINE.md r5 row).
-    *
-    * Round-7 skew hardening, same treatment as
-    * [[aggQuantilesBucketed]]: count-balanced buckets via
-    * [[balancedBuckets]] instead of fixed price-width, and the pivot
-    * scan pre-aggregates weights per DISTINCT price (map-side
-    * combinable) before the in-bucket window — a point mass is one
-    * row there, and since tied prices collapse into a single
-    * aggregated row, the rows-frame running sum reproduces the
-    * RANGE-frame tie semantics ("ties share one cumulative value")
-    * exactly.
     */
   val aggWeightedMedian: Q = (s, dir) => {
-    val t0 = table(s, dir, "lineitem")
+    val t = table(s, dir, "lineitem")
       .select(col("l_returnflag"), dec(col("l_extendedprice")).as("price"),
         dec(col("l_quantity")).as("qty"))
-      .localCheckpoint() // narrow relation, scanned by phase 1 AND phase 3
-    val t = balancedBuckets(t0, "l_returnflag", "price", 16)
-    // phase 1: per-(group, bucket) partial weights — map-side combined,
-    // bucket count bounded by the boundary count
-    val parts = t.groupBy(col("l_returnflag"), col("bucket"))
-      .agg(sum(col("qty")).as("bw"))
-    val wRun = Window.partitionBy(col("l_returnflag")).orderBy(col("bucket"))
-    val wTot = Window.partitionBy(col("l_returnflag"))
-    // phase 2: running/total sums over the TINY bucket relation; the
-    // pivot bucket is the first whose cumulative weight crosses half
-    val pivots = parts
-      .withColumn("cumb", sum(col("bw")).over(wRun))
-      .withColumn("tot", sum(col("bw")).over(wTot))
-      .filter(col("cumb") * 2 >= col("tot"))
-      .withColumn("rn", row_number().over(wRun))
-      .filter(col("rn") === 1)
-      .select(col("l_returnflag"), col("bucket").as("pbucket"),
-        (col("cumb") - col("bw")).as("off"), col("tot"))
-    // phase 3: exact scan of the pivot bucket only, collapsed to
-    // distinct prices first — the window input is bounded by the
-    // bucket's distinct-value count even under a point mass
-    val wIn = Window.partitionBy(col("l_returnflag")).orderBy(col("price"))
-    t.join(broadcast(pivots), Seq("l_returnflag"))
-      .filter(col("bucket") === col("pbucket"))
-      .groupBy(col("l_returnflag"), col("off"), col("tot"), col("price"))
-      .agg(sum(col("qty")).as("vw"))
-      .withColumn("cum", col("off") + sum(col("vw")).over(wIn))
-      .filter(col("cum") * 2 >= col("tot"))
-      .groupBy(col("l_returnflag"))
-      .agg(min(col("price")).cast("double").as("weighted_median"))
+      .localCheckpoint() // narrow relation, scanned by every kernel phase
+    SpineRank.exactQuantiles(t, Seq("l_returnflag"), "price", col("qty"), Seq(50))
+      .select(col("l_returnflag"), col("qv").cast("double").as("weighted_median"))
       .orderBy("l_returnflag")
   }
 
   // --------------------------------------- bucketed exact quantiles
 
-  /** Assign a count-balanced bucket id per row: ~`nB` interior
-    * boundaries per group are seeded by a cheap `percentile_approx`
-    * pass (quantile-of-quantiles — the sketch is mergeable, so the
-    * seeding pass is an ordinary partial+final agg), broadcast, and
-    * each row's bucket is the number of boundaries at-or-below its
-    * value — monotone in the value, so cumulative bucket counts stay
-    * rank-order-correct. Unlike fixed VALUE-width buckets
-    * (`floor(v / w)`), these stay ~n/nB rows each under ARBITRARY
-    * value skew: a lognormal tail or a 90 % point mass cannot
-    * concentrate more than its own tied value into one bucket
-    * (balance asserted on a planted-skew fixture in SkewSpec).
-    * Boundary placement only steers performance — every consumer
-    * recomputes exact answers inside the chosen buckets, so the
-    * sketch's error and any partitioning nondeterminism in it cannot
-    * reach the result.
-    */
-  private[graft] def balancedBuckets(t: DataFrame, group: String,
-      value: String, nB: Int): DataFrame = {
-    val fracs = array((1 until nB).map(i => lit(i.toDouble / nB)): _*)
-    // The seeding pass runs on a 10 % sample at accuracy 100:
-    // boundaries a few percent of rank off just shift a little load
-    // between neighbor buckets, so the sketch should be as cheap as
-    // possible. The tiny per-group boundary relation is checkpointed
-    // so consumers that scan the bucketed relation twice don't rerun
-    // the sketch.
-    val bounds = t.sample(withReplacement = false, 0.1, seed = 42)
-      .groupBy(col(group))
-      .agg(percentile_approx(col(value).cast("double"), fracs, lit(100)).as("bnds"))
-      .localCheckpoint()
-    // assignment is codegen'd binary search (bound_rank) on a DOUBLE
-    // view of the value — double-cast is monotone, and the bucket id
-    // only routes rows, so cast tie-collapse cannot affect results.
-    // LEFT join + coalesce: a group the sample missed entirely (tiny
-    // group) must keep its rows — it collapses into bucket 0, which
-    // is exactly right for a group too small to need spreading.
-    t.join(broadcast(bounds), Seq(group), "left")
-      .withColumn("bucket",
-        coalesce(
-          graft.functions.TextExpressions
-            .boundRank(col("bnds"), col(value).cast("double")).cast("long"),
-          lit(0L)))
-      .drop("bnds")
-  }
-
   /** Exact p25/p50/p75/p90 (type-1, "smallest value at-or-above the
-    * rank") of price per return flag — WITHOUT a holistic aggregate:
-    * [[Udx.aggCustomAggregator]]-style `percentile()` buffers every
+    * rank") of price per return flag — WITHOUT a holistic aggregate
+    * ([[Udx.aggCustomAggregator]]-style `percentile()` buffers every
     * value per group in one task's memory, which is exactly what
-    * cannot happen at 100 TB. Same bucketed two-phase shape as
-    * [[aggWeightedMedian]], generalized to a quantile VECTOR: the
-    * per-(group, bucket) count relation is tiny, every requested
-    * quantile finds its pivot bucket from the same running sum
-    * (explode over q — no extra pass over the wide data), and only
-    * pivot buckets get the exact in-bucket scan. The rank test
-    * `100·cum ≥ q·tot` is pure integer.
-    *
-    * Round-7 skew hardening (SURVEY §8.9): buckets are count-balanced
-    * via [[balancedBuckets]] rather than fixed value-width, so a
-    * skewed distribution cannot stuff one bucket (and so one
-    * pivot-scan task) with most of the relation; and the pivot scan
-    * aggregates to DISTINCT values first (map-side combinable), so a
-    * point mass collapses to one row before the in-bucket window —
-    * the window's input is bounded by the bucket's distinct-value
-    * count, ~n/nB even under skew, and ties never straggle a task.
+    * cannot happen at 100 TB): [[SpineRank.exactQuantiles]] with unit
+    * weight over the whole quantile vector, so every quantile finds
+    * its pivot bucket from one running count.
     */
   val aggQuantilesBucketed: Q = (s, dir) => {
-    val qs = Seq(25, 50, 75, 90)
-    val t0 = table(s, dir, "lineitem")
+    val t = table(s, dir, "lineitem")
       .select(col("l_returnflag"), dec(col("l_extendedprice")).as("price"))
-      .localCheckpoint() // narrow relation, scanned by phase 1 AND phase 3
-    // bucket assignment stays LAZY on top of the checkpoint: it is
-    // broadcast-join + array-scan map work, cheaper to recompute per
-    // consumer than to materialize a second copy of the relation
-    val t = balancedBuckets(t0, "l_returnflag", "price", 16)
-    val parts = t.groupBy(col("l_returnflag"), col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-    val wRun = Window.partitionBy(col("l_returnflag")).orderBy(col("bucket"))
-    val wTot = Window.partitionBy(col("l_returnflag"))
-    val ranked = parts
-      .withColumn("cumb", sum(col("bn")).over(wRun))
-      .withColumn("tot", sum(col("bn")).over(wTot))
-    // pivot bucket per (group, q): first bucket whose cumulative count
-    // reaches the q-rank — explode q over the TINY bucket relation
-    val wQ = Window.partitionBy(col("l_returnflag"), col("q")).orderBy(col("bucket"))
-    val pivots = ranked
-      .select(col("l_returnflag"), col("bucket"), col("bn"), col("cumb"),
-        col("tot"), explode(array(qs.map(lit): _*)).as("q"))
-      .filter(col("cumb") * 100 >= col("q") * col("tot"))
-      .withColumn("rn", row_number().over(wQ))
-      .filter(col("rn") === 1)
-      .select(col("l_returnflag"), col("q"), col("bucket").as("pbucket"),
-        (col("cumb") - col("bn")).as("off"), col("tot"))
-    // exact scan of pivot buckets only: collapse to distinct values
-    // (partial-agg, distributed) BEFORE the in-bucket window, so the
-    // single-task portion is bounded by distinct-value count, not rows
-    val wIn = Window.partitionBy(col("l_returnflag"), col("q")).orderBy(col("price"))
-    t.join(broadcast(pivots), Seq("l_returnflag"))
-      .filter(col("bucket") === col("pbucket"))
-      .groupBy(col("l_returnflag"), col("q"), col("off"), col("tot"), col("price"))
-      .agg(count(lit(1)).as("vn"))
-      .withColumn("cum", col("off") + sum(col("vn")).over(wIn))
-      .filter(col("cum") * 100 >= col("q") * col("tot"))
-      .groupBy(col("l_returnflag"), col("q"))
-      .agg(min(col("price")).cast("double").as("quantile_val"))
+      .localCheckpoint() // narrow relation, scanned by every kernel phase
+    SpineRank.exactQuantiles(t, Seq("l_returnflag"), "price", lit(1L),
+        Seq(25, 50, 75, 90))
+      .select(col("l_returnflag"), col("q"),
+        col("qv").cast("double").as("quantile_val"))
       .orderBy("l_returnflag", "q")
-  }
-
-  /** Exact type-1 single quantile per group — the
-    * [[aggQuantilesBucketed]] pivot shape packaged as a reusable
-    * building block (returns one `(group, qv)` row per group; `qv`
-    * keeps the input column's type, so decimal exactness survives
-    * composition). Same scale posture as the quantile key:
-    * count-balanced buckets, tiny per-bucket windows, distinct-value
-    * pivot scan — no phase puts a group's raw rows through one task.
-    */
-  private[graft] def exactQuantile(tIn: DataFrame, group: String,
-      value: String, qPct: Int, reuseInput: Boolean = false): DataFrame = {
-    // scanned by seeding, phase 1, phase 3 — callers whose input is
-    // already a cheap derivation of a checkpoint (a projection, a
-    // broadcast join) pass reuseInput=true to skip a second
-    // materialization of the same bytes
-    val t0 = if (reuseInput) tIn else tIn.localCheckpoint()
-    val t = balancedBuckets(t0, group, value, 16)
-    val parts = t.groupBy(col(group), col("bucket")).agg(count(lit(1)).as("bn"))
-    val wRun = Window.partitionBy(col(group)).orderBy(col("bucket"))
-    val wTot = Window.partitionBy(col(group))
-    val pivots = parts
-      .withColumn("cumb", sum(col("bn")).over(wRun))
-      .withColumn("tot", sum(col("bn")).over(wTot))
-      .filter(col("cumb") * 100 >= lit(qPct) * col("tot"))
-      .withColumn("rn", row_number().over(wRun))
-      .filter(col("rn") === 1)
-      .select(col(group), col("bucket").as("pbucket"),
-        (col("cumb") - col("bn")).as("off"), col("tot"))
-    val wIn = Window.partitionBy(col(group)).orderBy(col(value))
-    t.join(broadcast(pivots), Seq(group))
-      .filter(col("bucket") === col("pbucket"))
-      .groupBy(col(group), col("off"), col("tot"), col(value))
-      .agg(count(lit(1)).as("vn"))
-      .withColumn("cum", col("off") + sum(col("vn")).over(wIn))
-      .filter(col("cum") * 100 >= lit(qPct) * col("tot"))
-      .groupBy(col(group))
-      .agg(min(col(value)).as("qv"))
   }
 
   /** Robust MAD outliers per event type (round 7 — the robust
@@ -287,41 +117,39 @@ object Analytics {
     * can mask by inflating the stddev): flag events whose absolute
     * deviation from the type MEDIAN exceeds 3·1.4826·MAD (the
     * normal-consistency constant). Both medians are EXACT type-1
-    * quantiles computed by composing [[exactQuantile]] twice — the
-    * deviations stay exact decimals (value is 2-dec, the median is a
-    * data value, |v−med| is exact), so the only IEEE arithmetic is
-    * the final threshold compare and ratio, identical in both
-    * engines. mad = 0 (≥half the type tied at the median) is guarded
-    * out like the zscore's degenerate std.
+    * quantiles from [[SpineRank.exactQuantiles]] (unit weight, q 50),
+    * composed twice — the deviations stay exact decimals (value is
+    * 2-dec, the median is a data value, |v−med| is exact), so the
+    * only IEEE arithmetic is the final threshold compare and ratio,
+    * identical in both engines. mad = 0 (≥half the type tied at the
+    * median) is guarded out like the zscore's degenerate std.
     *
-    * Scale: two quantile passes (each the proven bucketed shape) +
-    * two broadcast joins of |event_type|-row relations; the wide
+    * Scale: two quantile passes (each the bucketed kernel) + two
+    * broadcast joins of |event_type|-row relations; the wide
     * relation is only ever scanned, never windowed globally.
     */
   val eventsAnomalyMad: Q = (s, dir) => {
-    // ONE checkpoint of the narrow relation; both quantile passes and
-    // the flag pass derive from it with map-only work (projection /
-    // broadcast join), so no second copy is ever materialized
+    // ONE checkpoint of the narrow relation; the med pass and the flag
+    // pass derive from it with map-only work (projection / broadcast
+    // join)
     val ev = table(s, dir, "events")
       .select(col("event_id"), col("event_type"), dec(col("value")).as("v"))
       .localCheckpoint()
     // med is a |event_type|-row relation: checkpointing it is free
     // and stops every scan of `dev` from re-running the whole first
-    // quantile pipeline. The med pass reuses the ev checkpoint (its
-    // input is a pure projection); the mad pass lets exactQuantile
-    // materialize `dev` once — rebuilding dev per scan trades one
-    // narrow materialization for three more scheduled jobs, and the
-    // job floor costs more (A/B'd: 4.7 s vs 2.4 s at sf0.1).
-    val med = exactQuantile(
-      ev.select(col("event_type"), col("v")), "event_type", "v", 50,
-      reuseInput = true)
-      .withColumnRenamed("qv", "med")
+    // quantile pipeline. The mad pass materializes `dev`'s two columns
+    // once — rebuilding dev per kernel scan trades one narrow
+    // materialization for three more scheduled jobs, and the job
+    // floor costs more (A/B'd: 4.7 s vs 2.4 s at sf0.1).
+    val med = SpineRank.exactQuantiles(ev, Seq("event_type"), "v", lit(1L), Seq(50))
+      .select(col("event_type"), col("qv").as("med"))
       .localCheckpoint()
     val dev = ev.join(broadcast(med), "event_type")
       .withColumn("dev", abs(col("v") - col("med")))
-    val mad = exactQuantile(
-      dev.select(col("event_type"), col("dev")), "event_type", "dev", 50)
-      .withColumnRenamed("qv", "mad")
+    val mad = SpineRank.exactQuantiles(
+        dev.select(col("event_type"), col("dev")).localCheckpoint(),
+        Seq("event_type"), "dev", lit(1L), Seq(50))
+      .select(col("event_type"), col("qv").as("mad"))
       .localCheckpoint()
     dev.join(broadcast(mad), "event_type")
       .filter(col("mad") > 0 &&

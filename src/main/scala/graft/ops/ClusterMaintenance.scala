@@ -58,6 +58,8 @@ object ClusterMaintenance {
     val stars = touchedLabels.filter(col("id") =!= col("comp"))
       .select(col("comp").as("a_id"), col("id").as("b_id"))
     val local = Llm.connectedComponents(stars.unionAll(edges))
+    // the closure pinned its input eagerly, so nothing left reads `edges`
+    Checkpoints.free(edges)
     labels.join(local, Seq("id"), "left_anti").unionAll(local)
   }
 
@@ -81,29 +83,34 @@ object ClusterMaintenance {
     */
   def ingest(spark: SparkSession, labels: DataFrame, newProfiles: DataFrame,
       indexedProfiles: DataFrame, tableName: String, p: Int, q: Int): DataFrame = {
-    val updated = updateLabels(labels,
-      batchEdges(spark, newProfiles, indexedProfiles, tableName, p, q))
+    val (cross, intra) = batchEdges(spark, newProfiles, indexedProfiles, tableName, p, q)
+    val updated = updateLabels(labels, cross.unionAll(intra))
       .localCheckpoint() // pin before the index mutates under the lazy plan
+    Checkpoints.free(intra)
     ProfileIndex.appendToIndex(newProfiles, tableName)
     updated
   }
 
-  /** The batch's qualifying-pair edge set: batch↔indexed via the
-    * index probe + exact verify, batch-internal via the collapsed
-    * join. Duplicate edges across the two paths (possible when the
-    * index already holds part of the batch, e.g. a crash replay) are
-    * harmless — [[updateLabels]] consumes edges as a connectivity
-    * relation.
+  /** The batch's qualifying-pair edge set, as (cross, intra):
+    * batch↔indexed via the index probe + exact verify, batch-internal
+    * via the collapsed join. Duplicate edges across the two paths
+    * (possible when the index already holds part of the batch, e.g. a
+    * crash replay) are harmless — [[updateLabels]] consumes their
+    * union as a connectivity relation. Every checkpoint under `intra`
+    * is the collapsed join's own (it pins its input first), so callers
+    * free it once [[updateLabels]]' eager edge pin has read it;
+    * `cross` reads the caller's frames and is never freed here.
     */
   private def batchEdges(spark: SparkSession, newProfiles: DataFrame,
-      indexedProfiles: DataFrame, tableName: String, p: Int, q: Int): DataFrame = {
+      indexedProfiles: DataFrame, tableName: String, p: Int,
+      q: Int): (DataFrame, DataFrame) = {
     val cross = ProfileIndex.verifyExact(
       ProfileIndex.probe(spark, newProfiles, tableName, p, q),
       newProfiles, indexedProfiles, p, q)
       .select(col("new_id").as("a_id"), col("indexed_id").as("b_id"))
     val intra = Bipartite.deletionPairsCollapsed(newProfiles, p, q,
       ProfileIndex.Depth).select("a_id", "b_id")
-    cross.unionAll(intra)
+    (cross, intra)
   }
 
   // ---- committed label state (the §8.r11 item-1/2 design) ----------
@@ -170,11 +177,15 @@ object ClusterMaintenance {
     if (ptr.version >= batchId + 1) false // replayed batch: fully committed
     else {
       val labels = loadLabels(spark, labelsName)
-      val updated = updateLabels(labels,
-        batchEdges(spark, newProfiles, indexedProfiles, indexName, p, q))
+      val (cross, intra) = batchEdges(spark, newProfiles, indexedProfiles, indexName, p, q)
+      val updated = updateLabels(labels, cross.unionAll(intra))
+      Checkpoints.free(intra)
       val t = graft.io.TableManifest.physicalName(labelsName, batchId + 1)
       spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
       graft.io.Sinks.writeBucketed(updated.select("id", "comp"), t, "comp", buckets)
+      // the closure's state, when it is not driver-side; `labels` is a
+      // table scan
+      Checkpoints.free(updated)
       ProfileIndex.appendToIndex(newProfiles, indexName)
       beforeCommit()
       graft.io.TableManifest.commit(spark, labelsName, batchId + 1,
@@ -203,9 +214,13 @@ object ClusterMaintenance {
     Streaming.sink(stream, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
       val b = batch.localCheckpoint() // pin: consumed by probe, intra join, and append
-      if (!b.isEmpty)
-        ingestCommitted(s, batchId, b, indexedProfilesOf(s),
-          indexName, labelsName, p = p, q = q)
+      // freed once the batch's writes have returned; a replay re-reads
+      // the source
+      try {
+        if (!b.isEmpty)
+          ingestCommitted(s, batchId, b, indexedProfilesOf(s),
+            indexName, labelsName, p = p, q = q)
+      } finally Checkpoints.free(b)
     }
 
   // ---- the self-contained tri-store pipeline (§8.r11 item 2) -------
@@ -231,14 +246,19 @@ object ClusterMaintenance {
       labelsName: String, nBuckets: Int = 16, buckets: Int = 8,
       p: Int = 19, q: Int = 20): Unit = {
     val prof = profiles.localCheckpoint()
-    Streaming.upsertBatchInto(snapshotPath,
-      prof.withColumn("bucket", profileBucket(nBuckets)), -1L, mergeProfiles)
-    ProfileIndex.buildIndex(prof, indexName, buckets)
-    bootstrapLabels(
-      Llm.connectedComponents(
-        Bipartite.deletionPairsCollapsed(prof, p, q, ProfileIndex.Depth)
-          .select("a_id", "b_id")),
-      labelsName, buckets)
+    // the collapsed join pins its own input, so every checkpoint under
+    // `pairs` is its own
+    val pairs = Bipartite.deletionPairsCollapsed(prof, p, q, ProfileIndex.Depth)
+      .select("a_id", "b_id")
+    try {
+      Streaming.upsertBatchInto(snapshotPath,
+        prof.withColumn("bucket", profileBucket(nBuckets)), -1L, mergeProfiles)
+      ProfileIndex.buildIndex(prof, indexName, buckets)
+      bootstrapLabels(Llm.connectedComponents(pairs), labelsName, buckets)
+    } finally {
+      Checkpoints.free(pairs)
+      Checkpoints.free(prof)
+    }
   }
 
   /** The self-contained streaming near-dup pipeline: ONE foreachBatch
@@ -261,9 +281,11 @@ object ClusterMaintenance {
       q: Int = 20): org.apache.spark.sql.streaming.StreamingQuery =
     Streaming.sink(stream, checkpointDir) { (batch, batchId) =>
       val b = batch.localCheckpoint()
-      if (!b.isEmpty)
-        pipelineBatch(batchId, b, snapshotPath, indexName, labelsName,
-          nBuckets, p, q)
+      try {
+        if (!b.isEmpty)
+          pipelineBatch(batchId, b, snapshotPath, indexName, labelsName,
+            nBuckets, p, q)
+      } finally Checkpoints.free(b) // as in labelMaintenanceSink
     }
 
   /** One [[profilePipeline]] batch — split out so the crash-matrix

@@ -34,7 +34,6 @@ object Embeddings {
     * the ≤ d² partials in DECIMAL (documented, not needed here).
     */
   val GramScale = 16384.0    // 2^14
-  val GramScaleBits = 14
 
   /** Upper-triangle Gram-matrix cells of the embedding corpus:
     * G[i,j] = Σ_vec q_i·q_j over the 2¹⁴-fixed-point components —

@@ -57,7 +57,7 @@ object GramService {
         lit(batchId).as("batch_id"))
 
   /** Ledger row of an embeddings batch: batch id, vector count, and
-    * the dimension (0 for an empty batch — [[dimOf]] takes the max
+    * the dimension (0 for an empty batch — [[stats]] takes the max
     * over the ledger). Shared with [[CentroidService]], whose ledger
     * is the same label-free row.
     */
@@ -121,12 +121,6 @@ object GramService {
     */
   private def effective(spark: SparkSession, physical: String): DataFrame =
     LedgerTable.effective(spark.table(physical), physical, Seq("pos"), "g")
-
-  /** The stored dimension (max over ledger rows — empty batches
-    * record 0).
-    */
-  def dimOf(spark: SparkSession, name: String): Int =
-    vecStats(LedgerTable.ledger(spark, LedgerTable.current(spark, name, SchemaVersion)))._3
 
   /** The served Gram relation (i, j, n_vecs, g) — row-identical to
     * [[Embeddings.embedGramCells]] over the concatenated ingested

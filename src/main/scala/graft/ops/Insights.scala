@@ -319,12 +319,12 @@ object Insights {
     // global-sort gate vetoes an unpartitioned window even over a
     // dimension — caught by PlanSpec at gate time): count-balanced
     // revenue buckets via the quantile-family seeding
-    // ([[Analytics.balancedBuckets]]; boundaries only ROUTE rows, so
+    // ([[SpineRank.balancedBuckets]]; boundaries only ROUTE rows, so
     // sketch error shifts load, never results — equal revenues land in
     // one bucket by construction), within-bucket running sums, and a
     // ≤32-row triangular broadcast prefix of higher-revenue buckets
-    val bucketed = Analytics.balancedBuckets(
-      rev.withColumn("g", lit("g")), "g", "rev_e4", 32)
+    val bucketed = SpineRank.balancedBuckets(
+      rev.withColumn("g", lit("g")), Seq("g"), "rev_e4", 32)
     val wIn = Window.partitionBy(col("bucket"))
       .orderBy(col("rev_e4").desc, col("l_partkey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1701,7 +1701,7 @@ object Insights {
     * Scale (round 16 — volume-gated like the SpineRank family): the
     * per-segment median dispatches on measured group volume between
     * the rank window (gate SFs — cheapest constant) and
-    * [[Analytics.exactQuantile]]'s count-balanced bucketed form
+    * [[SpineRank.exactQuantiles]]' count-balanced bucketed form
     * (count-bounded phases, parallelism |segments|·nB) above
     * [[SpineRank.WindowSpineRows]] — both exact: the value at rank
     * ⌈n/2⌉ is an order statistic, tiebreak-independent, and the
@@ -1725,8 +1725,7 @@ object Insights {
           .filter(col("rv") === expr("(n + 1) div 2"))
           .select(col("segment"), col("v").as("med"))
       } else {
-        Analytics.exactQuantile(o.select(col("segment"), col("v")),
-            "segment", "v", 50, reuseInput = true)
+        SpineRank.exactQuantiles(o, Seq("segment"), "v", lit(1L), Seq(50))
           .select(col("segment"), col("qv").as("med"))
       }
     o.join(broadcast(med), Seq("segment"))

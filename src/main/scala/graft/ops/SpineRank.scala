@@ -4,10 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Volume-gated cumulative/rank machinery for the order-statistic
-  * family (round 16 — the r15 verdict's top item): the stat keys'
-  * distinct-value spines (`stat_winsorize`, `stat_spearman_cells`,
-  * `events_gini_activity`, the survival/Mann–Whitney/KS spines) all
+/** The order-statistic module: the count-balanced bucket seeding
+  * ([[balancedBuckets]]), the exact bucketed-pivot quantile kernel
+  * ([[exactQuantiles]]) on those buckets, and the volume-gated
+  * cumulative/rank machinery ([[cumSums]], [[topK]]).
+  *
+  * The gated machinery (round 16 — the r15 verdict's top item): the
+  * stat keys' distinct-value spines (`stat_winsorize`,
+  * `stat_spearman_cells`, `events_gini_activity`, the
+  * survival/Mann–Whitney/KS spines) all
   * end in `sum(...) over (partition by group order by value)`, whose
   * physical plan sorts EVERY spine row of a group in ONE task —
   * parallelism capped at |groups| no matter the cluster. Fine while
@@ -22,11 +27,11 @@ import org.apache.spark.sql.functions._
   *  - the WINDOW branch (the exact per-group cumulative window the
   *    keys always ran — cheapest constant, capped parallelism), and
   *  - the BUCKETED branch: count-balanced value buckets
-  *    ([[Analytics.balancedBuckets]]'s shape generalized to composite
-  *    groups), per-(group, bucket) partial sums, a cumulative window
-  *    over the TINY bucket relation for per-bucket offsets, and
-  *    in-bucket cumulative windows partitioned by (group, bucket) —
-  *    parallelism |groups|·nB, every sort bounded by ~spine/nB rows.
+  *    ([[balancedBuckets]]), per-(group, bucket) partial sums, a
+  *    cumulative window over the TINY bucket relation for per-bucket
+  *    offsets, and in-bucket cumulative windows partitioned by
+  *    (group, bucket) — parallelism |groups|·nB, every sort bounded
+  *    by ~spine/nB rows.
   *
   * BOTH branches are EXACT — bucket boundaries come from a sampled
   * sketch, but they only route rows (the offsets are exact partial
@@ -68,30 +73,105 @@ private[graft] object SpineRank {
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
-  /** [[Analytics.balancedBuckets]] generalized to composite group
-    * keys: ~`nB` count-balanced interior boundaries per group from a
-    * sampled `percentile_approx` (mergeable sketch — ordinary
-    * partial+final agg), broadcast back, bucket id = boundaries
-    * at-or-below the value (monotone, so cumulative bucket order is
-    * rank-order-correct; ties share a bucket). Boundary placement
-    * steers load only — consumers recompute exact sums inside the
-    * chosen buckets. Left join + coalesce keeps groups the sample
-    * missed (they collapse into bucket 0 — right for tiny groups).
+  /** Assign a count-balanced bucket id per row, in column `bucket`
+    * (which `t` must not already carry): ~`nB` interior boundaries
+    * per group are seeded by a cheap `percentile_approx` pass over a
+    * 10 % sample at accuracy 100 (quantile-of-quantiles — the sketch
+    * is mergeable, so the seeding pass is an ordinary partial+final
+    * agg), checkpointed (tiny; consumers that scan the bucketed
+    * relation twice don't rerun the sketch) and broadcast back. A
+    * row's bucket is the number of boundaries at-or-below its value,
+    * found by the codegen'd binary search `bound_rank` on a DOUBLE
+    * view of the value — monotone in the value, so cumulative bucket
+    * order is rank-order-correct and ties share a bucket. Unlike
+    * fixed VALUE-width buckets (`floor(v / w)`), these stay ~n/nB rows
+    * each under ARBITRARY value skew: a lognormal tail or a 90 %
+    * point mass cannot concentrate more than its own tied value into
+    * one bucket (balance asserted on a planted-skew fixture in
+    * SkewSpec). Boundary placement only steers load — every consumer
+    * recomputes exact answers inside the chosen buckets, so sketch
+    * error, double-cast tie collapse and any partitioning
+    * nondeterminism in the sample cannot reach a result. LEFT join +
+    * coalesce: a group the sample missed entirely (a tiny group)
+    * keeps its rows in bucket 0, right for a group too small to need
+    * spreading.
     */
-  private def bucketed(t: DataFrame, groups: Seq[String], value: String,
+  def balancedBuckets(t: DataFrame, groups: Seq[String], value: String,
       nB: Int): DataFrame = {
+    require(!t.columns.contains("bucket"), "balancedBuckets writes `bucket`")
     val fracs = array((1 until nB).map(i => lit(i.toDouble / nB)): _*)
     val bounds = t.sample(withReplacement = false, 0.1, seed = 42)
       .groupBy(groups.map(col): _*)
       .agg(percentile_approx(col(value).cast("double"), fracs, lit(100)).as("bnds"))
       .localCheckpoint()
     t.join(broadcast(bounds), groups, "left")
-      .withColumn("_bkt",
+      .withColumn("bucket",
         coalesce(
           graft.functions.TextExpressions
             .boundRank(col("bnds"), col(value).cast("double")).cast("long"),
           lit(0L)))
       .drop("bnds")
+  }
+
+  /** Exact weighted type-1 quantiles of `value` per `groups`: for each
+    * `q` in `qs` (percent), the smallest value whose cumulative weight
+    * reaches q % of the group total, ties sharing one cumulative
+    * value. Returns `(groups…, q, qv)`; `qv` keeps the value's type, so
+    * decimal exactness survives composition. With `weight = lit(1L)`
+    * this is the plain rank quantile (the value at rank ⌈q·n/100⌉).
+    *
+    * Scale: NO holistic aggregate — `percentile()` buffers every value
+    * of a group in one task, and a cumulative window partitioned by
+    * the group puts the whole group through one task; both are
+    * stragglers at 100 TB when groups are few (three return flags,
+    * five event types). Instead the wide data is touched only by
+    * partial aggregation:
+    *  1. [[balancedBuckets]] (16 per group) and per-(group, bucket)
+    *     partial weights — map-side combined;
+    *  2. running and total weights over the TINY bucket relation;
+    *     every requested quantile finds its pivot bucket from the same
+    *     running sum by exploding `qs` over that relation (no extra
+    *     pass over the wide data);
+    *  3. an exact scan of the pivot buckets only, collapsed to
+    *     DISTINCT values first (map-side combinable) before the
+    *     in-bucket window, so a point mass is one row there, the
+    *     window's input is bounded by the bucket's distinct-value
+    *     count (~n/nB even under skew), and the rows-frame running sum
+    *     reproduces the ties-share-one-cumulative semantics exactly.
+    * The sampled boundaries only decide WHICH bucket is scanned; the
+    * offsets and the in-bucket sums are exact, so the sketch cannot
+    * move a result. The rank test `100·cum ≥ q·tot` is integer (or
+    * exact-decimal) arithmetic in both engines. The kernel never
+    * checkpoints `t`: it is scanned by the seeding, phase 1 and
+    * phase 3, so callers pass a materialized (or cheaply derived)
+    * relation.
+    */
+  def exactQuantiles(t: DataFrame, groups: Seq[String], value: String,
+      weight: Column, qs: Seq[Int]): DataFrame = {
+    val g = groups.map(col)
+    val b = balancedBuckets(t.select(g :+ col(value) :+ weight.as("_w"): _*),
+      groups, value, 16)
+    val wRun = Window.partitionBy(g: _*).orderBy(col("bucket"))
+    val wTot = Window.partitionBy(g: _*)
+    val wQ = Window.partitionBy(g :+ col("q"): _*).orderBy(col("bucket"))
+    val pivots = b.groupBy(g :+ col("bucket"): _*).agg(sum(col("_w")).as("bw"))
+      .withColumn("cumb", sum(col("bw")).over(wRun))
+      .withColumn("tot", sum(col("bw")).over(wTot))
+      .withColumn("q", explode(array(qs.map(lit): _*)))
+      .filter(col("cumb") * 100 >= col("q") * col("tot"))
+      .withColumn("rn", row_number().over(wQ))
+      .filter(col("rn") === 1)
+      .select(g ++ Seq(col("q"), col("bucket").as("pbucket"),
+        (col("cumb") - col("bw")).as("off"), col("tot")): _*)
+    val wIn = Window.partitionBy(g :+ col("q"): _*).orderBy(col(value))
+    b.join(broadcast(pivots), groups)
+      .filter(col("bucket") === col("pbucket"))
+      .groupBy(g ++ Seq(col("q"), col("off"), col("tot"), col(value)): _*)
+      .agg(sum(col("_w")).as("vw"))
+      .withColumn("cum", col("off") + sum(col("vw")).over(wIn))
+      .filter(col("cum") * 100 >= col("q") * col("tot"))
+      .groupBy(g :+ col("q"): _*)
+      .agg(min(col(value)).as("qv"))
   }
 
   /** Exact running sums of `weights` over a (groups, orderCol) spine,
@@ -132,15 +212,15 @@ private[graft] object SpineRank {
       } else {
         val withOrd = spine.withColumn("_ord",
           if (desc) col(orderCol) * lit(-1L) else col(orderCol))
-        val b = bucketed(withOrd, groups, "_ord", nB)
-        val gb = groups :+ "_bkt"
+        val b = balancedBuckets(withOrd, groups, "_ord", nB)
+        val gb = groups :+ "bucket"
         // per-bucket partial sums → offsets over the TINY bucket
         // relation (≤ |groups|·nB rows)
         val per = b.groupBy(gb.map(col): _*)
           .agg(sum(col("_w0")).as("_bw0"),
             outs.indices.tail.map(i => sum(col(s"_w$i")).as(s"_bw$i")): _*)
           .localCheckpoint() // tiny; read by offsets and (opt) totals
-        val wB = Window.partitionBy(groups.map(col): _*).orderBy(col("_bkt"))
+        val wB = Window.partitionBy(groups.map(col): _*).orderBy(col("bucket"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val offs = outs.indices.foldLeft(per) { case (df, i) =>
           df.withColumn(s"_off$i", sum(col(s"_bw$i")).over(wB) - col(s"_bw$i"))
@@ -152,7 +232,7 @@ private[graft] object SpineRank {
         val cum = outs.zipWithIndex.foldLeft(b.join(broadcast(offs), gb)) {
           case (df, (out, i)) =>
             df.withColumn(out, col(s"_off$i") + sum(col(s"_w$i")).over(wIn))
-        }.drop("_ord" :: "_bkt" :: outs.indices.map(i => s"_off$i").toList: _*)
+        }.drop("_ord" :: "bucket" :: outs.indices.map(i => s"_off$i").toList: _*)
         if (!withTotals) cum
         else {
           val tots = per.groupBy(groups.map(col): _*)

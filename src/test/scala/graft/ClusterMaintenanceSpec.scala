@@ -159,6 +159,8 @@ class ClusterMaintenanceSpec extends SparkSpec {
     // maintains it the way a real pipeline's profile store would
     @volatile var corpus = b0
     val stream = MemoryStream[(Long, Seq[String])]
+    val blocks = new RddBlocks
+    spark.sparkContext.addSparkListener(blocks)
     val q = ops.ClusterMaintenance.labelMaintenanceSink(
       stream.toDF().select(col("_1").as("c"), sort_array(col("_2")).as("brands")),
       s"$dir/ckpt", "sidx_cm", "slab_cm", s => profDf(corpus))
@@ -171,6 +173,9 @@ class ClusterMaintenanceSpec extends SparkSpec {
       stream.addData(w2)
       q.processAllAvailable()
       corpus = corpus ++ w2
+      q.stop()
+      // every batch's checkpoints are freed once its writes return
+      blocks.assertNoneLive()
       val got = ops.ClusterMaintenance.loadLabels(spark, "slab_cm")
         .select("id", "comp").as[(Long, Long)].collect().toSet
       val scratch = ops.Llm.connectedComponents(
@@ -180,6 +185,7 @@ class ClusterMaintenanceSpec extends SparkSpec {
       assert(got === Set((1L, 1L), (2L, 1L), (3L, 1L), (40L, 40L), (41L, 40L)))
     } finally {
       q.stop()
+      spark.sparkContext.removeSparkListener(blocks)
       io.TableManifest.drop(spark, "sidx_cm")
       io.TableManifest.drop(spark, "slab_cm")
     }
@@ -193,6 +199,8 @@ class ClusterMaintenanceSpec extends SparkSpec {
     val b0: Seq[(Long, Seq[String])] = Seq(1L -> u, 30L -> u.take(8))
     val dir = java.nio.file.Files.createTempDirectory("tristore").toString
     val snap = s"$dir/profiles"
+    val blocks = new RddBlocks
+    spark.sparkContext.addSparkListener(blocks)
     ops.ClusterMaintenance.bootstrap(profDf(b0), snap, "tidx_cm", "tlab_cm")
     val stream = MemoryStream[(Long, Seq[String])]
     val q = ops.ClusterMaintenance.profilePipeline(
@@ -205,6 +213,9 @@ class ClusterMaintenanceSpec extends SparkSpec {
       q.processAllAvailable()
       stream.addData(w2)
       q.processAllAvailable()
+      q.stop()
+      // the bootstrap's and every batch's checkpoints are freed
+      blocks.assertNoneLive()
       val corpus = b0 ++ w1 ++ w2
       // snapshot holds exactly the corpus
       val snapRows = io.Manifest.readSnapshot(spark, snap)
@@ -228,6 +239,7 @@ class ClusterMaintenanceSpec extends SparkSpec {
       assert(m === Set((900L, 30L), (900L, 50L)))
     } finally {
       q.stop()
+      spark.sparkContext.removeSparkListener(blocks)
       io.TableManifest.drop(spark, "tidx_cm")
       io.TableManifest.drop(spark, "tlab_cm")
     }

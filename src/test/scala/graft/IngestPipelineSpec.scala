@@ -40,26 +40,6 @@ class IngestPipelineSpec extends SparkSpec {
       .as[(Long, String, Long, Double)].collect()
       .map(t => (t._1, t._2) -> (t._3, t._4)).toMap
 
-  /** The RDDs whose blocks the block manager stored and nobody has
-    * unpersisted since: each batch's `localCheckpoint` until it is
-    * freed (or, without a free, until a GC lets ContextCleaner drop it).
-    */
-  private class RddBlocks extends org.apache.spark.scheduler.SparkListener {
-    private val live = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    override def onBlockUpdated(e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
-      e.blockUpdatedInfo.blockId.asRDDId.foreach { id =>
-        if (e.blockUpdatedInfo.storageLevel.isValid) live.add(id.rddId)
-      }
-    override def onUnpersistRDD(e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
-      live.remove(e.rddId)
-    def assertNoneLive(): Unit =
-      org.scalatest.concurrent.Eventually.eventually(
-          org.scalatest.concurrent.Eventually.timeout(
-            org.scalatest.time.Span(10, org.scalatest.time.Seconds))) {
-        assert(live.isEmpty, s"ingest batch checkpoints still hold blocks: $live")
-      }
-  }
-
   test("live ingest composite: watched dir -> declared schema -> quarantine + manifest upsert; late files; both crash windows") {
     val dir = java.nio.file.Files.createTempDirectory("ingestp").toString
     val watch = s"$dir/incoming"; val snap = s"$dir/snapshot"

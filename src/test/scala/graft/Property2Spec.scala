@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -49,6 +50,28 @@ class Property2Spec extends SparkSpec {
           if (cum * 2 >= tot) expect = Some(p)
         }
         assert(got(f) == expect.get.toDouble, s"case $i group $f")
+      }
+      // several weighted quantiles through the kernel itself, on the
+      // same corpus and the same exact-decimal projection as the key
+      val qs = Seq(25, 50, 75, 90)
+      val gotQ = ops.SpineRank.exactQuantiles(
+          graft.io.Readers.table(spark, dir, "lineitem")
+            .select(col("l_returnflag"),
+              Determinism.dec(col("l_extendedprice")).as("price"),
+              Determinism.dec(col("l_quantity")).as("qty")),
+          Seq("l_returnflag"), "price", col("qty"), qs)
+        .collect().map(r => (r.getString(0), r.getInt(1)) -> BigDecimal(r.getDecimal(2)))
+        .toMap
+      rows.groupBy(_._1).foreach { case (f, xs) =>
+        // the same naive definition at each q: ties share one cumulative
+        val byPrice = xs.map(x => (BigDecimal(x._2).setScale(2), BigDecimal(x._3).setScale(2)))
+          .groupBy(_._1).toSeq.sortBy(_._1).map { case (p, ps) => (p, ps.map(_._2).sum) }
+        val cums = byPrice.map(_._2).scanLeft(BigDecimal(0))(_ + _).tail
+        val tot = cums.last
+        qs.foreach { q =>
+          val expect = byPrice.zip(cums).find { case (_, cum) => cum * 100 >= tot * q }.get._1._1
+          assert(gotQ((f, q)) == expect, s"case $i group $f weighted q$q")
+        }
       }
     }
   }

@@ -45,27 +45,32 @@ class SkewSpec extends SparkSpec {
     } ++ (1 to 4000).map(_ => ("G", 7.77))
     val df = heavy.toDF("g", "v")
     val nB = 32
-    val bucketed = ops.Analytics.balancedBuckets(df, "g", "v", nB)
-    val counts = bucketed.groupBy("bucket").count()
-      .as[(Long, Long)].collect().toMap
     val n = heavy.size
     // fixed width on this data: almost everything lands in bucket 0
     val fixedMax = df.withColumn("bucket", floor(col("v") / 1000).cast("long"))
       .groupBy("bucket").count().agg(max("count")).as[Long].collect().head
     assert(fixedMax > n * 9 / 10, "fixture must actually defeat fixed-width bucketing")
-    // balanced: no bucket beyond the point mass + sketch-error slack
-    // (the 40 % tied value is irreducible — ties share one bucket)
-    val cap = n * 40 / 100 + n / nB + n / 20
-    assert(counts.values.max <= cap,
-      s"max bucket ${counts.values.max} exceeds cap $cap (counts: $counts)")
-    // and untied mass spreads: at least half the buckets materialize
-    assert(counts.size >= nB / 2, s"only ${counts.size} buckets materialized")
-    // exactness is untouched by bucketing: the full quantile query on
-    // the real corpus is oracle'd; here assert the bucket ids are
-    // monotone in v (rank-order correctness precondition)
-    val rows = bucketed.select("v", "bucket").as[(Double, Long)].collect().sortBy(_._1)
-    assert(rows.zip(rows.tail).forall { case ((_, b1), (_, b2)) => b1 <= b2 },
-      "bucket ids must be monotone in the value")
+    // the same fixture keyed by one group column and by two (the
+    // composite-key form SpineRank.cumSums buckets)
+    for ((in, groups) <- Seq(df -> Seq("g"),
+        df.withColumn("h", lit(7L)) -> Seq("g", "h"))) {
+      val bucketed = ops.SpineRank.balancedBuckets(in, groups, "v", nB)
+      val counts = bucketed.groupBy("bucket").count()
+        .as[(Long, Long)].collect().toMap
+      // balanced: no bucket beyond the point mass + sketch-error slack
+      // (the 40 % tied value is irreducible — ties share one bucket)
+      val cap = n * 40 / 100 + n / nB + n / 20
+      assert(counts.values.max <= cap,
+        s"$groups: max bucket ${counts.values.max} exceeds cap $cap (counts: $counts)")
+      // and untied mass spreads: at least half the buckets materialize
+      assert(counts.size >= nB / 2, s"$groups: only ${counts.size} buckets materialized")
+      // exactness is untouched by bucketing: the full quantile query on
+      // the real corpus is oracle'd; here assert the bucket ids are
+      // monotone in v (rank-order correctness precondition)
+      val rows = bucketed.select("v", "bucket").as[(Double, Long)].collect().sortBy(_._1)
+      assert(rows.zip(rows.tail).forall { case ((_, b1), (_, b2)) => b1 <= b2 },
+        s"$groups: bucket ids must be monotone in the value")
+    }
   }
 
   test("salt is deterministic per discriminator value") {

@@ -170,8 +170,7 @@ class SpineRankSpec extends SparkSpec {
       .withColumn("n", count(lit(1)).over(Window.partitionBy(col("segment"))))
       .filter(col("rv") === expr("(n + 1) div 2"))
       .select(col("segment"), col("v").as("med"))
-    val bkt = ops.Analytics.exactQuantile(o.select(col("segment"), col("v")),
-        "segment", "v", 50)
+    val bkt = SpineRank.exactQuantiles(o, Seq("segment"), "v", lit(1L), Seq(50))
       .select(col("segment"), col("qv").as("med"))
     assertSame(win, bkt)
   }
