@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * Storage: a [[TableManifest]]-versioned data table plus a `_stats`
   * ledger sidecar, one row per committed batch (`batch_id` plus the
   * service's own totals). Both publish under one atomic pointer
-  * ([[publish]]: DROP → write → ledger → commit → vacuum), and
+  * ([[publish]]: [[TableManifest.publish]] with the ledger written
+  * beside the data), and
   * [[TableManifest.vacuum]] reclaims the sidecars with their version
   * (the `(_.+)?` version pattern).
   *
@@ -96,19 +97,14 @@ object LedgerTable {
     */
   def publish(spark: SparkSession, name: String, schemaVersion: Int,
       rows: DataFrame, bucketBy: Option[(String, Int)])(
-      ledgerOf: String => DataFrame): Unit = {
-    val v = TableManifest.nextVersion(spark, name)
-    val t = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    spark.sql(s"DROP TABLE IF EXISTS ${statsTable(t)}")
-    bucketBy match {
-      case Some((key, buckets)) => Sinks.writeBucketed(rows, t, key, buckets)
-      case None => rows.write.mode("overwrite").format("parquet").saveAsTable(t)
+      ledgerOf: String => DataFrame): Unit =
+    TableManifest.publish(spark, name, schemaVersion) { t =>
+      bucketBy match {
+        case Some((key, buckets)) => Sinks.writeBucketed(rows, t, key, buckets)
+        case None => rows.write.mode("overwrite").format("parquet").saveAsTable(t)
+      }
+      ledgerOf(t).write.mode("overwrite").format("parquet").saveAsTable(statsTable(t))
     }
-    ledgerOf(t).write.mode("overwrite").format("parquet").saveAsTable(statsTable(t))
-    TableManifest.commit(spark, name, v, schemaVersion) // THE commit point
-    TableManifest.vacuum(spark, name)
-  }
 
   /** True iff engine batch `batchId` is already committed in
     * `physical` (the high-water guard — object scaladoc).
@@ -117,9 +113,8 @@ object LedgerTable {
     ledger(spark, physical).filter(col("batch_id") >= batchId).limit(1).count() > 0
 
   /** Append one batch to `physical`: the partial rows FIRST, in the
-    * table's committed layout ([[TableManifest.bucketSpecOf]] — an
-    * append must replicate it exactly or the bucketed scan lies),
-    * then the ledger row `ledgerRow(rows)` LAST. The rows are
+    * table's committed layout ([[TableManifest.append]]), then the
+    * ledger row `ledgerRow(rows)` LAST. The rows are
     * materialized once, so the ledger row never recomputes them, and
     * their checkpoint is freed once both writes landed (a forever
     * stream would otherwise hold one checkpoint per batch).
@@ -128,10 +123,7 @@ object LedgerTable {
   def append(spark: SparkSession, physical: String, rows: DataFrame,
       ledgerRow: DataFrame => DataFrame, afterRowsAppend: () => Unit): Unit = {
     val pinned = rows.localCheckpoint()
-    val w = pinned.write.mode("append").format("parquet")
-    TableManifest.bucketSpecOf(spark, physical)
-      .fold(w) { case (key, buckets) => w.bucketBy(buckets, key).sortBy(key) }
-      .saveAsTable(physical)
+    TableManifest.append(spark, physical, pinned)
     afterRowsAppend()
     ledgerRow(pinned).write.mode("append").format("parquet")
       .saveAsTable(statsTable(physical))
@@ -186,8 +178,10 @@ object LedgerTable {
 
   /** Republish `name` at its ledger's high water: `rows(physical, hw)`
     * and `ledgerRow(physical, hw)` read the current version and carry
-    * `hw` as their batch id (object scaladoc). Atomic; readers keep
-    * serving the old version until the pointer rename.
+    * `hw` as their batch id (object scaladoc). A `rows` that carries
+    * a bucketed table's rows through reads them with
+    * [[TableManifest.rewriteSource]]. Atomic; readers keep serving
+    * the old version until the pointer rename.
     */
   def compact(spark: SparkSession, name: String, schemaVersion: Int)(
       rows: (String, Long) => DataFrame,

@@ -91,8 +91,7 @@ object Sinks {
       .saveAsTable(tableName)
 
   // Compaction of append-grown index tables lives in
-  // [[TableManifest.compactBucketed]]/[[TableManifest.compactPartitioned]]
-  // (round 8): the round-7 stage-then-swap variants that used to live
+  // [[TableManifest.compact]] (round 8): the round-7 stage-then-swap variants that used to live
   // here rewrote the live table in place, so a reader racing the swap
   // could list a half-written table — the manifest-pointer commit
   // removes that window (atomic pointer rename, old version retained

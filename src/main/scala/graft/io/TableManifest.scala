@@ -5,22 +5,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
-/** Manifest-pointer commit for the CATALOG-TABLE indexes
-  * ([[graft.ops.IncrementalDedup]], [[graft.ops.IvfIndex]],
-  * [[graft.ops.SubstringIndex]]) — the same transaction shape
-  * [[Manifest]] gives the streaming upsert snapshot (r7), extended to
-  * tables whose read path must keep CATALOG metadata (bucket specs,
-  * partition columns): physical data lives in IMMUTABLE versioned
-  * tables `name__v{N}` (plus `_`-suffixed sidecars such as the IVF
-  * centroid table), and the only mutable object is one tiny pointer
-  * file naming the current version. Publishing a rebuild or a
-  * compaction is a single ATOMIC rename of that pointer, so a writer
-  * killed at ANY point before the rename leaves every reader on the
-  * previous version in full — the stage-then-overwrite window the
-  * plain [[Sinks.compactBucketed]]/[[Sinks.compactPartitioned]] swap
-  * had (a reader racing the overwrite could list a half-written
-  * table) cannot occur. Asserted in IndexManifestSpec with injected
-  * crashes on both sides of the commit.
+/** Manifest-pointer commit for the CATALOG-TABLE indexes and services
+  * — the same transaction shape [[Manifest]] gives the streaming
+  * upsert snapshot (r7), extended to tables whose read path must keep
+  * CATALOG metadata (bucket specs, partition columns): physical data
+  * lives in IMMUTABLE versioned tables `name__v{N}` (plus
+  * `_`-suffixed sidecars such as the IVF centroid table or a ledger),
+  * and the only mutable object is one tiny pointer file naming the
+  * current version. Every version becomes current through ONE
+  * protocol, [[publish]] (its scaladoc names the steps and the users);
+  * [[compact]] is publish over the current version's own rows.
   *
   * Versioning through TABLES rather than raw paths is what preserves
   * the indexes' scale contracts: a bucketed physical table keeps its
@@ -135,8 +129,50 @@ object TableManifest {
     physicalName(name, p.version)
   }
 
-  def nextVersion(spark: SparkSession, name: String): Long =
-    readPointer(spark, name).map(_.version + 1).getOrElse(0L)
+  /** Publish a fresh version of `name` — THE protocol every
+    * manifest-committed table becomes current through:
+    *  1. take the next free version `v` (current + 1, or 0);
+    *  2. drop every leftover table of `v` — the data table and each
+    *     `_`-suffixed sidecar a crashed earlier attempt staged (found
+    *     by the version pattern, so no caller lists its sidecars);
+    *     nothing references them: only a commit makes `v` visible;
+    *  3. `write(physical)` stages the data table (and any sidecars,
+    *     named `physical + suffix`) durably;
+    *  4. `beforeCommit()`, the [[commit]] rename — THE commit point —
+    *     then `afterCommit()` (the specs' crash-injection seams; no-ops
+    *     in production);
+    *  5. [[vacuum]].
+    * A writer killed at ANY point before the rename leaves every
+    * reader on the previous version in full; the next publish drops
+    * its staging. `appliedBatch` rides the commit (see [[commit]]).
+    *
+    * Users: [[compact]]; [[LedgerTable.publish]] (which adds the
+    * ledger sidecar) and through it [[graft.ops.PostingIndex]],
+    * [[graft.ops.VocabService]], [[graft.ops.BigramService]],
+    * [[graft.ops.GramService]] and [[graft.ops.CentroidService]];
+    * [[graft.ops.QuantileService]], [[graft.ops.CardinalityService]],
+    * [[graft.ops.AdjacencyIndex]]; the `buildIndex`/`buildHashIndex`
+    * of [[graft.ops.IncrementalCuration]], [[graft.ops.IncrementalDedup]],
+    * [[graft.ops.SubstringIndex]], [[graft.ops.ProfileIndex]] and
+    * [[graft.ops.IvfIndex]]. The one exception is
+    * [[graft.ops.ClusterMaintenance]]'s label table, whose version
+    * number is its stream's replay guard.
+    */
+  def publish(spark: SparkSession, name: String, schemaVersion: Int,
+      appliedBatch: Option[Long] = None,
+      beforeCommit: () => Unit = () => (),
+      afterCommit: () => Unit = () => ())(write: String => Unit): Unit = {
+    val v = readPointer(spark, name).map(_.version + 1).getOrElse(0L)
+    allVersionTables(spark, name).foreach { case (t, tv) =>
+      if (tv == v) spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
+    val physical = physicalName(name, v)
+    write(physical)
+    beforeCommit()
+    commit(spark, name, v, schemaVersion, appliedBatch)
+    afterCommit()
+    vacuum(spark, name)
+  }
 
   private def versionPattern(name: String) =
     (java.util.regex.Pattern.quote(name.toLowerCase) + "__v(\\d+)(_.+)?").r
@@ -215,66 +251,72 @@ object TableManifest {
         }
       }
 
-  /** Compact the current version of a BUCKETED index into a fresh
-    * version table and publish it with one atomic pointer rename.
-    * Bucket spec is read from the current version's catalog entry
-    * ([[bucketSpecOf]]), the data by PATH (a catalog read of a
+  /** The rows of physical table `physical` as a rewrite must read
+    * them. A BUCKETED table is read by PATH: a catalog read of a
     * same-spec bucketed table makes the planner elide the aligned
     * repartition and disable the bucketed scan, leaving tasks×buckets
-    * files — same observation as Sinks). The staged table is durable
-    * before the commit; a crash before the rename leaves the pointer
-    * — and every reader — on the old version (IndexManifestSpec).
-    * `beforeCommit`/`afterCommit` are the spec's crash-injection
-    * seams (no-ops in production).
+    * files (same observation as Sinks). Any other table is refreshed
+    * first — appends from OTHER sessions (a streaming query's cloned
+    * session) invalidate only their own relation cache — and read
+    * from the catalog, so its partition columns stay in the schema.
     */
-  def compactBucketed(spark: SparkSession, name: String, expectSchema: Int,
+  def rewriteSource(spark: SparkSession, physical: String): DataFrame =
+    if (bucketSpecOf(spark, physical).isDefined)
+      spark.read.parquet(spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(physical)).location.toString)
+    else {
+      spark.catalog.refreshTable(physical)
+      spark.table(physical)
+    }
+
+  /** Append `rows` to physical table `physical` in its committed
+    * layout — the bucket spec ([[bucketSpecOf]]) or the partition
+    * columns, both read from the catalog: an append must replicate
+    * the layout exactly or the bucketed scan lies. Parquet append
+    * adds files per bucket or per touched partition directory, never
+    * rewrites; any repartition is the caller's.
+    */
+  def append(spark: SparkSession, physical: String, rows: DataFrame): Unit = {
+    val parts = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(physical)).partitionColumnNames
+    val w = rows.write.mode("append").format("parquet").partitionBy(parts: _*)
+    bucketSpecOf(spark, physical)
+      .fold(w) { case (key, buckets) => w.bucketBy(buckets, key).sortBy(key) }
+      .saveAsTable(physical)
+  }
+
+  /** Compact the current version of `name` into a fresh version,
+    * through [[publish]]. The layout comes from the current version's
+    * catalog entry: a bucketed table is rewritten with
+    * [[Sinks.writeBucketed]] under its own spec, a partitioned one
+    * with one writer per partition value (`repartition` +
+    * `partitionBy`). `transform` applies to the rows on the way (a
+    * dedup); the current version's `_`-suffixed sidecars (the IVF
+    * centroid quantizer) are carried verbatim, so a resolved version
+    * is always self-contained.
+    */
+  def compact(spark: SparkSession, name: String, schemaVersion: Int,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       transform: DataFrame => DataFrame = identity): Unit = {
-    val cur = resolve(spark, name, expectSchema)
-    val (key, buckets) = bucketSpecOf(spark, cur).getOrElse(throw new IllegalArgumentException(
-      s"$cur has no bucket spec — use compactPartitioned"))
-    val location = spark.sessionState.catalog.getTableMetadata(TableIdentifier(cur)).location
-    val next = nextVersion(spark, name)
-    val nextT = physicalName(name, next)
-    spark.sql(s"DROP TABLE IF EXISTS $nextT") // unreferenced leftover staging only
-    Sinks.writeBucketed(transform(spark.read.parquet(location.toString)),
-      nextT, key, buckets)
-    beforeCommit()
-    commit(spark, name, next, expectSchema) // THE commit point
-    afterCommit()
-    vacuum(spark, name)
-  }
-
-  /** [[compactBucketed]] for a PARTITIONED index (IVF cells), carrying
-    * any `_`-suffixed sidecar tables (the centroid quantizer) into the
-    * new version so a resolved version is always self-contained.
-    */
-  def compactPartitioned(spark: SparkSession, name: String, partitionCol: String,
-      expectSchema: Int, sidecarSuffixes: Seq[String] = Nil,
-      beforeCommit: () => Unit = () => (),
-      afterCommit: () => Unit = () => ()): Unit = {
-    val cur = resolve(spark, name, expectSchema)
-    // appends from OTHER sessions (a streaming query's cloned session)
-    // invalidate only their own relation cache — refresh, or the
-    // compacted version silently misses stream-appended rows
-    // (compactBucketed is immune: it reads by path, not spark.table)
-    spark.catalog.refreshTable(cur)
-    val next = nextVersion(spark, name)
-    val nextT = physicalName(name, next)
-    (nextT +: sidecarSuffixes.map(nextT + _))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    spark.table(cur)
-      .repartition(col(partitionCol))
-      .write.mode("overwrite").format("parquet").partitionBy(partitionCol)
-      .saveAsTable(nextT)
-    sidecarSuffixes.foreach { sfx =>
-      spark.table(cur + sfx)
-        .write.mode("overwrite").format("parquet").saveAsTable(nextT + sfx)
+    val cur = resolve(spark, name, schemaVersion)
+    val sidecars = allVersionTables(spark, name).map(_._1)
+      .filter(_.startsWith(cur + "_")).map(_.stripPrefix(cur))
+    val rows = transform(rewriteSource(spark, cur))
+    publish(spark, name, schemaVersion, None, beforeCommit, afterCommit) { next =>
+      bucketSpecOf(spark, cur) match {
+        case Some((key, buckets)) => Sinks.writeBucketed(rows, next, key, buckets)
+        case None =>
+          val parts = spark.sessionState.catalog
+            .getTableMetadata(TableIdentifier(cur)).partitionColumnNames
+          rows.repartition(parts.map(col): _*)
+            .write.mode("overwrite").format("parquet").partitionBy(parts: _*)
+            .saveAsTable(next)
+      }
+      sidecars.foreach { sfx =>
+        spark.table(cur + sfx)
+          .write.mode("overwrite").format("parquet").saveAsTable(next + sfx)
+      }
     }
-    beforeCommit()
-    commit(spark, name, next, expectSchema) // THE commit point
-    afterCommit()
-    vacuum(spark, name)
   }
 }

@@ -49,18 +49,13 @@ object AdjacencyIndex {
 
   private def publish(spark: SparkSession, name: String, rows: DataFrame,
       buckets: Int, beforeCommit: () => Unit, afterCommit: () => Unit,
-      appliedBatch: Option[Long]): Unit = {
-    val v = TableManifest.nextVersion(spark, name)
-    val t = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    rows.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "src").sortBy("src")
-      .saveAsTable(t)
-    beforeCommit()
-    TableManifest.commit(spark, name, v, SchemaVersion, appliedBatch) // THE commit point
-    afterCommit()
-    TableManifest.vacuum(spark, name)
-  }
+      appliedBatch: Option[Long]): Unit =
+    TableManifest.publish(spark, name, SchemaVersion, appliedBatch,
+      beforeCommit, afterCommit) {
+      rows.write.mode("overwrite").format("parquet")
+        .bucketBy(buckets, "src").sortBy("src")
+        .saveAsTable(_)
+    }
 
   /** Build (or rebuild) the adjacency from a (src, dst) relation. */
   def build(spark: SparkSession, name: String, edges: DataFrame,

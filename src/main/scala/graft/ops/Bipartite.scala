@@ -222,10 +222,13 @@ object Bipartite {
     */
   /** The (distinct-profile groups, member mapping) pair both collapsed
     * operators below share. `groups`: (brands, gid, g); `members`:
-    * (c, gid, g, sz).
+    * (c, gid, g, sz). The profiles are read twice, so they are pinned
+    * first — unless the caller passed a checkpoint handle, which is
+    * then read in place (freeing the result's leaves frees it too).
     */
   private def collapsedParts(profilesDf: DataFrame): (DataFrame, DataFrame) = {
-    val prof = profilesDf.localCheckpoint()
+    val prof =
+      if (Checkpoints.isHandle(profilesDf)) profilesDf else profilesDf.localCheckpoint()
     val groups = collapseProfiles(prof).localCheckpoint()
     val members = prof.join(groups, "brands")
       .select(col("c"), col("gid"), col("g"), size(col("brands")).as("sz"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -51,28 +51,26 @@ object CardinalityService {
   /** lgConfigK: 2^12 registers → ~0.8 % relative standard error. */
   private val LgK = 12
 
-  /** Per-day sketch rows: one distributed agg over the incoming rows.
-    * Shared by build and append so both store identical layouts.
+  /** Per-(`keys`, day) sketch rows: one distributed agg over the
+    * incoming rows. `keys` is Nil for the day layout and the dim for
+    * the keyed one; build, append and merge share it so all store
+    * identical layouts.
     */
-  private def daySketches(events: DataFrame, keyCol: String): DataFrame =
+  private def daySketches(events: DataFrame, keys: Seq[Column],
+      keyCol: String): DataFrame =
     events
-      .groupBy(to_date(col("ts")).cast("string").as("day"))
+      .groupBy(keys :+ to_date(col("ts")).cast("string").as("day"): _*)
       .agg(count(lit(1)).as("n_rows"),
         hll_sketch_agg(col(keyCol), lit(LgK)).as("sk"))
+
+  private def dimKey(dimCol: String): Seq[Column] = Seq(col(dimCol).as("dim"))
 
   private def publish(spark: SparkSession, name: String, rows: DataFrame,
       beforeCommit: () => Unit,
       afterCommit: () => Unit, schemaVersion: Int = SchemaVersion,
-      appliedBatch: Option[Long] = None): Unit = {
-    val v = TableManifest.nextVersion(spark, name)
-    val t = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    rows.write.mode("overwrite").format("parquet").saveAsTable(t)
-    beforeCommit()
-    TableManifest.commit(spark, name, v, schemaVersion, appliedBatch) // THE commit point
-    afterCommit()
-    TableManifest.vacuum(spark, name)
-  }
+      appliedBatch: Option[Long] = None): Unit =
+    TableManifest.publish(spark, name, schemaVersion, appliedBatch,
+      beforeCommit, afterCommit)(rows.write.mode("overwrite").format("parquet").saveAsTable(_))
 
   /** Build (or rebuild) the service table from scratch. */
   def build(spark: SparkSession, name: String, events: DataFrame,
@@ -80,7 +78,7 @@ object CardinalityService {
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit =
-    publish(spark, name, daySketches(events, keyCol),
+    publish(spark, name, daySketches(events, Nil, keyCol),
       beforeCommit, afterCommit, appliedBatch = appliedBatch)
 
   /** Append newly-arrived days: existing rows carry over verbatim
@@ -93,7 +91,7 @@ object CardinalityService {
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => ()): Unit = {
     val cur = TableManifest.resolve(spark, name, SchemaVersion)
-    val incoming = daySketches(events, keyCol)
+    val incoming = daySketches(events, Nil, keyCol)
     val kept = spark.table(cur)
       .join(incoming.select(col("day")), Seq("day"), "left_anti")
     publish(spark, name, kept.unionByName(incoming),
@@ -114,27 +112,39 @@ object CardinalityService {
       keyCol: String = "user_id",
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
-      appliedBatch: Option[Long] = None): Unit = {
-    val cur = TableManifest.resolve(spark, name, SchemaVersion)
-    val incoming = daySketches(events, keyCol)
+      appliedBatch: Option[Long] = None): Unit =
+    mergeInto(spark, name, SchemaVersion, Nil, daySketches(events, Nil, keyCol),
+      beforeCommit, afterCommit, appliedBatch)
+
+  /** [[mergeDays]] and [[mergeDaysKeyed]]: the register-max union of
+    * stored and incoming sketches over a full-outer join on
+    * (`keys`, day).
+    */
+  private def mergeInto(spark: SparkSession, name: String, schemaVersion: Int,
+      keys: Seq[String], incoming: DataFrame, beforeCommit: () => Unit,
+      afterCommit: () => Unit, appliedBatch: Option[Long]): Unit = {
+    val cur = TableManifest.resolve(spark, name, schemaVersion)
+    val on = keys :+ "day"
     val merged = spark.table(cur)
-      .select(col("day"), col("n_rows").as("n_old"), col("sk").as("sk_old"))
-      .join(incoming.select(col("day"), col("n_rows").as("n_new"),
-        col("sk").as("sk_new")), Seq("day"), "full_outer")
-      .select(col("day"),
+      .select(on.map(col) ++ Seq(col("n_rows").as("n_old"), col("sk").as("sk_old")): _*)
+      .join(incoming.select(on.map(col) ++ Seq(col("n_rows").as("n_new"),
+        col("sk").as("sk_new")): _*), on, "full_outer")
+      .select(on.map(col) ++ Seq(
         (coalesce(col("n_old"), lit(0L)) + coalesce(col("n_new"), lit(0L)))
           .as("n_rows"),
         when(col("sk_old").isNull, col("sk_new"))
           .when(col("sk_new").isNull, col("sk_old"))
-          .otherwise(hll_union(col("sk_old"), col("sk_new"))).as("sk"))
-    publish(spark, name, merged, beforeCommit, afterCommit,
-      appliedBatch = appliedBatch)
+          .otherwise(hll_union(col("sk_old"), col("sk_new"))).as("sk")): _*)
+    publish(spark, name, merged, beforeCommit, afterCommit, schemaVersion,
+      appliedBatch)
   }
 
-  /** Stored sketch rows restricted to an inclusive day range. */
-  private def rangeRows(spark: SparkSession, name: String,
+  /** Stored sketch rows of the `schemaVersion` layout restricted to
+    * an inclusive day range.
+    */
+  private def rangeRows(spark: SparkSession, name: String, schemaVersion: Int,
       fromDay: Option[String], toDay: Option[String]): DataFrame = {
-    val cur = TableManifest.resolve(spark, name, SchemaVersion)
+    val cur = TableManifest.resolve(spark, name, schemaVersion)
     Seq(fromDay.map(d => col("day") >= d), toDay.map(d => col("day") <= d))
       .flatten.foldLeft(spark.table(cur))(_ filter _)
   }
@@ -145,7 +155,7 @@ object CardinalityService {
     */
   def distinctOver(spark: SparkSession, name: String,
       fromDay: Option[String] = None, toDay: Option[String] = None): (Long, Long, Long) = {
-    val r = rangeRows(spark, name, fromDay, toDay)
+    val r = rangeRows(spark, name, SchemaVersion, fromDay, toDay)
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"), lit(false))).as("est"),
         sum(col("n_rows")).as("n_rows"), count(lit(1)).as("days"))
       .collect()(0)
@@ -162,21 +172,13 @@ object CardinalityService {
   // window from stored registers). Layout (dim, day, n_rows, sk)
   // under KeyedSchemaVersion so layouts can't silently mix.
 
-  private def keyedDaySketches(events: DataFrame, dimCol: String,
-      keyCol: String): DataFrame =
-    events
-      .groupBy(col(dimCol).as("dim"),
-        to_date(col("ts")).cast("string").as("day"))
-      .agg(count(lit(1)).as("n_rows"),
-        hll_sketch_agg(col(keyCol), lit(LgK)).as("sk"))
-
   /** Build (or rebuild) a keyed service table from scratch. */
   def buildKeyed(spark: SparkSession, name: String, events: DataFrame,
       dimCol: String = "event_type", keyCol: String = "user_id",
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit =
-    publish(spark, name, keyedDaySketches(events, dimCol, keyCol),
+    publish(spark, name, daySketches(events, dimKey(dimCol), keyCol),
       beforeCommit, afterCommit, KeyedSchemaVersion, appliedBatch)
 
   /** Incremental merge of possibly-partial (dim, day) data — the
@@ -188,31 +190,10 @@ object CardinalityService {
       dimCol: String = "event_type", keyCol: String = "user_id",
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
-      appliedBatch: Option[Long] = None): Unit = {
-    val cur = TableManifest.resolve(spark, name, KeyedSchemaVersion)
-    val incoming = keyedDaySketches(events, dimCol, keyCol)
-    val merged = spark.table(cur)
-      .select(col("dim"), col("day"), col("n_rows").as("n_old"),
-        col("sk").as("sk_old"))
-      .join(incoming.select(col("dim"), col("day"), col("n_rows").as("n_new"),
-        col("sk").as("sk_new")), Seq("dim", "day"), "full_outer")
-      .select(col("dim"), col("day"),
-        (coalesce(col("n_old"), lit(0L)) + coalesce(col("n_new"), lit(0L)))
-          .as("n_rows"),
-        when(col("sk_old").isNull, col("sk_new"))
-          .when(col("sk_new").isNull, col("sk_old"))
-          .otherwise(hll_union(col("sk_old"), col("sk_new"))).as("sk"))
-    publish(spark, name, merged, beforeCommit, afterCommit,
-      KeyedSchemaVersion, appliedBatch)
-  }
-
-  /** Stored keyed sketch rows restricted to an inclusive day range. */
-  private def keyedRangeRows(spark: SparkSession, name: String,
-      fromDay: Option[String], toDay: Option[String]): DataFrame = {
-    val cur = TableManifest.resolve(spark, name, KeyedSchemaVersion)
-    Seq(fromDay.map(d => col("day") >= d), toDay.map(d => col("day") <= d))
-      .flatten.foldLeft(spark.table(cur))(_ filter _)
-  }
+      appliedBatch: Option[Long] = None): Unit =
+    mergeInto(spark, name, KeyedSchemaVersion, Seq("dim"),
+      daySketches(events, dimKey(dimCol), keyCol), beforeCommit, afterCommit,
+      appliedBatch)
 
   /** Per-dimension distinct estimate over an inclusive day range:
     * (dim, est, n_rows, days) — one `hll_union_agg` partitioned by
@@ -220,7 +201,7 @@ object CardinalityService {
     */
   def distinctByDim(spark: SparkSession, name: String,
       fromDay: Option[String] = None, toDay: Option[String] = None): DataFrame =
-    keyedRangeRows(spark, name, fromDay, toDay)
+    rangeRows(spark, name, KeyedSchemaVersion, fromDay, toDay)
       .groupBy(col("dim"))
       .agg(hll_sketch_estimate(hll_union_agg(col("sk"), lit(false))).as("est"),
         sum(col("n_rows")).as("n_rows"), count(lit(1)).as("days"))
@@ -232,18 +213,8 @@ object CardinalityService {
     * partitioned by dim over the |dims|·|days| day table.
     */
   def rollingDistinctKeyed(spark: SparkSession, name: String,
-      windowDays: Int): DataFrame = {
-    val cur = TableManifest.resolve(spark, name, KeyedSchemaVersion)
-    val w = Window.partitionBy(col("dim")).orderBy(col("epoch_day"))
-      .rangeBetween(-(windowDays.toLong - 1), 0)
-    spark.table(cur)
-      .withColumn("epoch_day", unix_date(to_date(col("day"))).cast("long"))
-      .withColumn("days_in_window", count(lit(1)).over(w))
-      .withColumn("est", hll_sketch_estimate(
-        hll_union_agg(col("sk"), lit(false)).over(w)))
-      .select(col("dim"), col("day"), col("days_in_window"), col("est"))
-      .orderBy(col("dim"), col("day"))
-  }
+      windowDays: Int): DataFrame =
+    rolling(spark, name, KeyedSchemaVersion, Seq("dim"), windowDays)
 
   /** Sketched audience-overlap matrix over a day range — the keyed
     * service's consumer and the at-scale form of the exact
@@ -259,7 +230,7 @@ object CardinalityService {
     */
   def pairOverlapEstimates(spark: SparkSession, name: String,
       fromDay: Option[String] = None, toDay: Option[String] = None): DataFrame = {
-    val perDim = keyedRangeRows(spark, name, fromDay, toDay)
+    val perDim = rangeRows(spark, name, KeyedSchemaVersion, fromDay, toDay)
       .groupBy(col("dim"))
       .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
     val a = perDim.select(col("dim").as("dim_a"), col("sk").as("sk_a"))
@@ -282,16 +253,24 @@ object CardinalityService {
     * Output: (day, days_in_window, est) — one row per stored day.
     */
   def rollingDistinct(spark: SparkSession, name: String,
-      windowDays: Int): DataFrame = {
-    val cur = TableManifest.resolve(spark, name, SchemaVersion)
-    val w = Window.orderBy(col("epoch_day"))
+      windowDays: Int): DataFrame =
+    rolling(spark, name, SchemaVersion, Nil, windowDays)
+
+  /** [[rollingDistinct]] and [[rollingDistinctKeyed]]: the RANGE
+    * frame partitioned by `keys` (Nil = the one unpartitioned spec).
+    */
+  private def rolling(spark: SparkSession, name: String, schemaVersion: Int,
+      keys: Seq[String], windowDays: Int): DataFrame = {
+    val cur = TableManifest.resolve(spark, name, schemaVersion)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("epoch_day"))
       .rangeBetween(-(windowDays.toLong - 1), 0)
+    val on = keys :+ "day"
     spark.table(cur)
       .withColumn("epoch_day", unix_date(to_date(col("day"))).cast("long"))
       .withColumn("days_in_window", count(lit(1)).over(w))
       .withColumn("est", hll_sketch_estimate(
         hll_union_agg(col("sk"), lit(false)).over(w)))
-      .select(col("day"), col("days_in_window"), col("est"))
-      .orderBy(col("day"))
+      .select(on.map(col) ++ Seq(col("days_in_window"), col("est")): _*)
+      .orderBy(on.map(col): _*)
   }
 }

@@ -86,8 +86,8 @@ object ClusterMaintenance {
     val (cross, intra) = batchEdges(spark, newProfiles, indexedProfiles, tableName, p, q)
     val updated = updateLabels(labels, cross.unionAll(intra))
       .localCheckpoint() // pin before the index mutates under the lazy plan
-    Checkpoints.free(intra)
     ProfileIndex.appendToIndex(newProfiles, tableName)
+    Checkpoints.free(intra) // after the batch's last read: it may free its pin
     updated
   }
 
@@ -96,10 +96,11 @@ object ClusterMaintenance {
     * via the collapsed join. Duplicate edges across the two paths
     * (possible when the index already holds part of the batch, e.g. a
     * crash replay) are harmless — [[updateLabels]] consumes their
-    * union as a connectivity relation. Every checkpoint under `intra`
-    * is the collapsed join's own (it pins its input first), so callers
-    * free it once [[updateLabels]]' eager edge pin has read it;
-    * `cross` reads the caller's frames and is never freed here.
+    * union as a connectivity relation. The checkpoints under `intra`
+    * are the collapsed join's own plus, when `newProfiles` is a
+    * checkpoint handle, that handle (read in place): callers free
+    * `intra` only after their last read of `newProfiles`; `cross`
+    * reads the caller's frames and is never freed here.
     */
   private def batchEdges(spark: SparkSession, newProfiles: DataFrame,
       indexedProfiles: DataFrame, tableName: String, p: Int,
@@ -164,7 +165,7 @@ object ClusterMaintenance {
     *     reverse order could commit labels whose profiles never
     *     reached the index, silently blinding every future probe.
     * `beforeCommit` is the crash-injection hook (spec'd in
-    * ClusterMaintenanceSpec), mirroring TableManifest.compactBucketed.
+    * ClusterMaintenanceSpec), mirroring [[graft.io.TableManifest.publish]].
     */
   def ingestCommitted(spark: SparkSession, batchId: Long,
       newProfiles: DataFrame, indexedProfiles: DataFrame,
@@ -179,7 +180,6 @@ object ClusterMaintenance {
       val labels = loadLabels(spark, labelsName)
       val (cross, intra) = batchEdges(spark, newProfiles, indexedProfiles, indexName, p, q)
       val updated = updateLabels(labels, cross.unionAll(intra))
-      Checkpoints.free(intra)
       val t = graft.io.TableManifest.physicalName(labelsName, batchId + 1)
       spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
       graft.io.Sinks.writeBucketed(updated.select("id", "comp"), t, "comp", buckets)
@@ -187,6 +187,7 @@ object ClusterMaintenance {
       // table scan
       Checkpoints.free(updated)
       ProfileIndex.appendToIndex(newProfiles, indexName)
+      Checkpoints.free(intra) // after the batch's last read (batchEdges)
       beforeCommit()
       graft.io.TableManifest.commit(spark, labelsName, batchId + 1,
         LabelSchemaVersion)
@@ -246,8 +247,8 @@ object ClusterMaintenance {
       labelsName: String, nBuckets: Int = 16, buckets: Int = 8,
       p: Int = 19, q: Int = 20): Unit = {
     val prof = profiles.localCheckpoint()
-    // the collapsed join pins its own input, so every checkpoint under
-    // `pairs` is its own
+    // the collapsed join reads `prof` in place: freeing `pairs` frees
+    // it too, so both frees wait for the last read
     val pairs = Bipartite.deletionPairsCollapsed(prof, p, q, ProfileIndex.Depth)
       .select("a_id", "b_id")
     try {

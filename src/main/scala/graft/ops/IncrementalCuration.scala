@@ -139,19 +139,15 @@ object IncrementalCuration {
     * scaladoc).
     */
   def buildHashIndex(docs: DataFrame, tableName: String): Unit = {
-    val spark = docs.sparkSession
-    val v = graft.io.TableManifest.nextVersion(spark, tableName)
-    val t = graft.io.TableManifest.physicalName(tableName, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
     val rows = docs.filter(trim(col("text")) =!= "")
       .select(hashOf(col("text")).as("text_hash"), col("doc_id"))
       .groupBy(col("text_hash")).agg(min(col("doc_id")).as("keep_id"))
-    withHp(rows)
-      .repartition(col("hp"))
-      .write.mode("overwrite").format("parquet").partitionBy("hp")
-      .saveAsTable(t)
-    graft.io.TableManifest.commit(spark, tableName, v, HashSchemaVersion)
-    graft.io.TableManifest.vacuum(spark, tableName)
+    graft.io.TableManifest.publish(docs.sparkSession, tableName, HashSchemaVersion) {
+      withHp(rows)
+        .repartition(col("hp"))
+        .write.mode("overwrite").format("parquet").partitionBy("hp")
+        .saveAsTable(_)
+    }
   }
 
   /** Append prepared (text_hash, keep_id) rows to the current index
@@ -163,10 +159,8 @@ object IncrementalCuration {
     */
   private[graft] def appendHashRows(rows: DataFrame, tableName: String): Unit = {
     val spark = rows.sparkSession
-    val t = resolveHashTable(spark, tableName)
-    withHp(rows.select(col("text_hash"), col("keep_id")))
-      .write.mode("append").format("parquet").partitionBy("hp")
-      .saveAsTable(t)
+    graft.io.TableManifest.append(spark, resolveHashTable(spark, tableName),
+      withHp(rows.select(col("text_hash"), col("keep_id"))))
   }
 
   /** Append admitted docs' self-mapped hash rows to the current index
@@ -181,13 +175,13 @@ object IncrementalCuration {
   /** Collapse hash-index append growth into a fresh manifest version
     * — atomic publish; probes racing it serve the old snapshot (the
     * [[IncrementalDedup.compact]] discipline via
-    * [[graft.io.TableManifest.compactPartitioned]]).
+    * [[graft.io.TableManifest.compact]]).
     */
   def compactHashIndex(spark: SparkSession, tableName: String,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => ()): Unit =
-    graft.io.TableManifest.compactPartitioned(
-      spark, tableName, "hp", HashSchemaVersion, Nil, beforeCommit, afterCommit)
+    graft.io.TableManifest.compact(
+      spark, tableName, HashSchemaVersion, beforeCommit, afterCommit)
 
   /** Left-probe a hashed delta against the index: collect the delta's
     * `hp` byte set (≤ 256 values, driver-bounded) and prune the index

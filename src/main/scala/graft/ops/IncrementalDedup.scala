@@ -91,18 +91,13 @@ object IncrementalDedup {
     * (the previous version, if any, stays readable until vacuum's
     * retention window passes).
     */
-  def buildIndex(docs: DataFrame, tableName: String): Unit = {
-    val spark = docs.sparkSession
-    val v = graft.io.TableManifest.nextVersion(spark, tableName)
-    val t = graft.io.TableManifest.physicalName(tableName, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    withBp(bandRows(docs).select("bk", "doc_id", "sig"))
-      .repartition(col("bp"))
-      .write.mode("overwrite").format("parquet").partitionBy("bp")
-      .saveAsTable(t)
-    graft.io.TableManifest.commit(spark, tableName, v, SchemaVersion)
-    graft.io.TableManifest.vacuum(spark, tableName)
-  }
+  def buildIndex(docs: DataFrame, tableName: String): Unit =
+    graft.io.TableManifest.publish(docs.sparkSession, tableName, SchemaVersion) {
+      withBp(bandRows(docs).select("bk", "doc_id", "sig"))
+        .repartition(col("bp"))
+        .write.mode("overwrite").format("parquet").partitionBy("bp")
+        .saveAsTable(_)
+    }
 
   /** Append a new batch's bands to the current index version — parquet
     * append adds files under the touched `bp=` directories only, never
@@ -110,21 +105,19 @@ object IncrementalDedup {
     */
   def appendToIndex(docs: DataFrame, tableName: String): Unit = {
     val spark = docs.sparkSession
-    val t = resolveTable(spark, tableName)
-    withBp(bandRows(docs).select("bk", "doc_id", "sig"))
-      .write.mode("append").format("parquet").partitionBy("bp")
-      .saveAsTable(t)
+    graft.io.TableManifest.append(spark, resolveTable(spark, tableName),
+      withBp(bandRows(docs).select("bk", "doc_id", "sig")))
   }
 
   /** Collapse append growth into a fresh manifest version — atomic
     * publish, probes racing it serve the old snapshot
-    * ([[graft.io.TableManifest.compactPartitioned]]).
+    * ([[graft.io.TableManifest.compact]]).
     */
   def compact(spark: SparkSession, tableName: String,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => ()): Unit =
-    graft.io.TableManifest.compactPartitioned(
-      spark, tableName, "bp", SchemaVersion, Nil, beforeCommit, afterCommit)
+    graft.io.TableManifest.compact(
+      spark, tableName, SchemaVersion, beforeCommit, afterCommit)
 
   /** The estimator tail of the probe: band-key join, signature-agreement
     * Jaccard estimate (E[agreement] = J, nPerm trials), per-pair rollup.

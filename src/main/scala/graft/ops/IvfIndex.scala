@@ -83,23 +83,17 @@ object IvfIndex {
       nlist: Int = 8, trainSampleMod: Long = 1L): Unit = {
     val cents = Llm2.trainCentroids(emb, nlist, trainSampleMod)
     require(cents.nonEmpty, s"cannot train an IVF quantizer on an empty relation ($tableName)")
-    val v = graft.io.TableManifest.nextVersion(spark, tableName)
-    val t = graft.io.TableManifest.physicalName(tableName, v)
-    // unreferenced leftover staging only — a crashed earlier attempt
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"DROP TABLE IF EXISTS ${centsTable(t)}")
-    assign(emb, cents)
-      .repartition(col("cell"))
-      .write.mode("overwrite").format("parquet").partitionBy("cell")
-      .saveAsTable(t)
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .write.mode("overwrite").format("parquet")
-      .saveAsTable(centsTable(t))
-    // both the index and its quantizer sidecar are durable — publish
-    graft.io.TableManifest.commit(spark, tableName, v, SchemaVersion)
-    graft.io.TableManifest.vacuum(spark, tableName)
+    graft.io.TableManifest.publish(spark, tableName, SchemaVersion) { t =>
+      assign(emb, cents)
+        .repartition(col("cell"))
+        .write.mode("overwrite").format("parquet").partitionBy("cell")
+        .saveAsTable(t)
+      import spark.implicits._
+      cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "centroid")
+        .write.mode("overwrite").format("parquet")
+        .saveAsTable(centsTable(t))
+    }
   }
 
   /** Append a batch of new vectors, assigned with the STORED
@@ -108,24 +102,21 @@ object IvfIndex {
     */
   def appendToIndex(spark: SparkSession, newVecs: DataFrame, tableName: String): Unit = {
     val t = resolveTable(spark, tableName)
-    assign(newVecs, loadCentroids(spark, t))
-      .repartition(col("cell"))
-      .write.mode("append").format("parquet").partitionBy("cell")
-      .saveAsTable(t)
+    graft.io.TableManifest.append(spark, t,
+      assign(newVecs, loadCentroids(spark, t)).repartition(col("cell")))
     spark.catalog.refreshTable(t)
   }
 
   /** Collapse append growth into a fresh manifest version (index +
     * centroid sidecar together — a resolved version is always
     * self-contained); atomic publish, probes racing it serve the old
-    * snapshot ([[graft.io.TableManifest.compactPartitioned]]).
+    * snapshot ([[graft.io.TableManifest.compact]]).
     */
   def compact(spark: SparkSession, tableName: String,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => ()): Unit =
-    graft.io.TableManifest.compactPartitioned(
-      spark, tableName, "cell", SchemaVersion, Seq(CentroidSuffix),
-      beforeCommit, afterCommit)
+    graft.io.TableManifest.compact(
+      spark, tableName, SchemaVersion, beforeCommit, afterCommit)
 
   /** One micro-batch of [[streamAppend]], idempotent per `batchId`.
     * foreachBatch is AT-LEAST-ONCE: the checkpoint offset commit

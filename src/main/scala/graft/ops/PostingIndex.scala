@@ -150,15 +150,13 @@ object PostingIndex {
       batchStats(_, batchId, shards), afterPostingsAppend)
   }
 
-  /** Collapse append growth into a fresh version (atomic publish).
-    * The stats sidecar is carried BY HAND in the pre-commit window —
-    * [[graft.io.TableManifest.compactBucketed]] only rewrites the
-    * main table — and its per-batch rows collapse to one summed row
-    * on the way (a resolved version is always self-contained; vacuum
-    * reclaims old sidecars via the version-pattern suffix match).
-    * A crash between the sidecar write and the commit leaves an
-    * unreferenced staging pair, reclaimed by the next compaction's
-    * DROPs — probes keep serving the old version either way.
+  /** Collapse append growth into a fresh version (atomic publish,
+    * [[graft.io.LedgerTable.compact]]): the postings are rewritten
+    * under their bucket spec and the stats sidecar's per-batch rows
+    * collapse to one summed row (a resolved version is always
+    * self-contained). A crash before the commit leaves unreferenced
+    * staging, dropped by the next publish — probes keep serving the
+    * old version either way.
     *
     * The collapsed row's batch_id is the HIGH-WATER committed
     * streaming batch_id (max over the collapsed rows; −1 if only
@@ -360,21 +358,12 @@ object PostingIndex {
     compactWith(spark, tableName, _.distinct())
 
   private def compactWith(spark: SparkSession, tableName: String,
-      transform: DataFrame => DataFrame): Unit = {
-    val cur = resolveTable(spark, tableName)
-    TableManifest.compactBucketed(spark, tableName, SchemaVersion,
-      beforeCommit = () => {
-        val nextT = TableManifest.physicalName(tableName,
-          TableManifest.nextVersion(spark, tableName))
-        spark.sql(s"DROP TABLE IF EXISTS ${LedgerTable.statsTable(nextT)}")
-        LedgerTable.ledger(spark, cur)
-          .agg(sum(col("n_docs")).as("n_docs"),
-            sum(col("total_tok")).as("total_tok"),
-            coalesce(max(col("batch_id")), lit(-1L)).as("batch_id"),
-            coalesce(max(col("shards")), lit(1L)).as("shards"))
-          .write.mode("overwrite").format("parquet")
-          .saveAsTable(LedgerTable.statsTable(nextT))
-      },
-      transform = transform)
-  }
+      transform: DataFrame => DataFrame): Unit =
+    LedgerTable.compact(spark, tableName, SchemaVersion)(
+      (t, _) => transform(TableManifest.rewriteSource(spark, t)),
+      (t, hw) => LedgerTable.ledger(spark, t)
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("total_tok")).as("total_tok"),
+          lit(hw).as("batch_id"),
+          coalesce(max(col("shards")), lit(1L)).as("shards")))
 }

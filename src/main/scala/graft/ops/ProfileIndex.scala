@@ -56,17 +56,12 @@ object ProfileIndex {
   /** Create the signature index for a (c, brands sorted array) profile
     * relation as a fresh manifest version.
     */
-  def buildIndex(profiles: DataFrame, tableName: String, buckets: Int = 8): Unit = {
-    val spark = profiles.sparkSession
-    val v = graft.io.TableManifest.nextVersion(spark, tableName)
-    val t = graft.io.TableManifest.physicalName(tableName, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    graft.io.Sinks.writeBucketed(
-      Bipartite.signatureRows(profiles, Depth).select("sig", "c", "sz", "sl"),
-      t, "sig", buckets)
-    graft.io.TableManifest.commit(spark, tableName, v, SchemaVersion)
-    graft.io.TableManifest.vacuum(spark, tableName)
-  }
+  def buildIndex(profiles: DataFrame, tableName: String, buckets: Int = 8): Unit =
+    graft.io.TableManifest.publish(profiles.sparkSession, tableName, SchemaVersion) {
+      graft.io.Sinks.writeBucketed(
+        Bipartite.signatureRows(profiles, Depth).select("sig", "c", "sz", "sl"),
+        _, "sig", buckets)
+    }
 
   /** Append a new batch's signatures to the current version — parquet
     * append adds files per bucket, never rewrites; the bucket spec
@@ -75,22 +70,20 @@ object ProfileIndex {
   def appendToIndex(profiles: DataFrame, tableName: String): Unit = {
     val spark = profiles.sparkSession
     val t = resolveTable(spark, tableName)
-    val (_, buckets) = graft.io.TableManifest.bucketSpecOf(spark, t).getOrElse(
+    if (graft.io.TableManifest.bucketSpecOf(spark, t).isEmpty)
       throw new IllegalStateException(
-        s"$t has no bucket spec — appending would mix layouts; rebuild the index"))
-    Bipartite.signatureRows(profiles, Depth).select("sig", "c", "sz", "sl")
-      .write.mode("append")
-      .bucketBy(buckets, "sig").sortBy("sig")
-      .format("parquet").saveAsTable(t)
+        s"$t has no bucket spec — appending would mix layouts; rebuild the index")
+    graft.io.TableManifest.append(spark, t,
+      Bipartite.signatureRows(profiles, Depth).select("sig", "c", "sz", "sl"))
   }
 
   /** Collapse append growth into a fresh manifest version — atomic
-    * publish ([[graft.io.TableManifest.compactBucketed]]).
+    * publish ([[graft.io.TableManifest.compact]]).
     */
   def compact(spark: SparkSession, tableName: String,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => ()): Unit =
-    graft.io.TableManifest.compactBucketed(
+    graft.io.TableManifest.compact(
       spark, tableName, SchemaVersion, beforeCommit, afterCommit)
 
   /** [[compact]] that also reclaims replay-duplicated signature rows
@@ -104,7 +97,7 @@ object ProfileIndex {
   def compactDedup(spark: SparkSession, tableName: String,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => ()): Unit =
-    graft.io.TableManifest.compactBucketed(
+    graft.io.TableManifest.compact(
       spark, tableName, SchemaVersion, beforeCommit, afterCommit,
       transform = _.distinct())
 

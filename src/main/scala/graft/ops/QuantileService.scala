@@ -70,17 +70,9 @@ object QuantileService {
   def build(spark: SparkSession, name: String, events: DataFrame,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
-      appliedBatch: Option[Long] = None): Unit = {
-    val v = TableManifest.nextVersion(spark, name)
-    val t = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    daySketches(spark, events)
-      .write.mode("overwrite").format("parquet").saveAsTable(t)
-    beforeCommit()
-    TableManifest.commit(spark, name, v, SchemaVersion, appliedBatch) // THE commit point
-    afterCommit()
-    TableManifest.vacuum(spark, name)
-  }
+      appliedBatch: Option[Long] = None): Unit =
+    publish(spark, name, SchemaVersion, daySketches(spark, events),
+      beforeCommit, afterCommit, appliedBatch)
 
   /** Append newly-arrived days: existing sketch rows carry over
     * verbatim (they are immutable facts about closed days), incoming
@@ -96,15 +88,8 @@ object QuantileService {
     val incoming = daySketches(spark, events)
     val kept = spark.table(cur)
       .join(incoming.select(col("day")), Seq("day"), "left_anti")
-    val v = TableManifest.nextVersion(spark, name)
-    val t = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    kept.unionByName(incoming)
-      .write.mode("overwrite").format("parquet").saveAsTable(t)
-    beforeCommit()
-    TableManifest.commit(spark, name, v, SchemaVersion) // THE commit point
-    afterCommit()
-    TableManifest.vacuum(spark, name)
+    publish(spark, name, SchemaVersion, kept.unionByName(incoming),
+      beforeCommit, afterCommit, None)
   }
 
   /** Incremental MERGE of possibly-partial day data — the streaming
@@ -112,41 +97,55 @@ object QuantileService {
     * [[appendDays]] REPLACES an overlapping day (batch re-ingest of a
     * closed day), mergeDays COMBINES the stored sketch with the
     * incoming one (micro-batches keep arriving for an open day).
-    * The combine is the row-local sketch merge over the full-outer
-    * day join — a UDF is fine here: the relation is the day table
-    * (calendar-bounded), never the raw history, and n/errBound are
-    * re-read from the merged sketch because compaction during merge
-    * can push errBound beyond the sum of the parts.
     */
   def mergeDays(spark: SparkSession, name: String, events: DataFrame,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
-      appliedBatch: Option[Long] = None): Unit = {
-    val cur = TableManifest.resolve(spark, name, SchemaVersion)
-    val incoming = daySketches(spark, events)
-    val mergeU = udf { (a: Array[Byte], b: Array[Byte]) =>
-      val m = (Option(a), Option(b)) match {
-        case (Some(x), Some(y)) => Udx.kllFromBytes(x).mergeWith(Udx.kllFromBytes(y))
-        case (Some(x), None) => Udx.kllFromBytes(x)
-        case (None, Some(y)) => Udx.kllFromBytes(y)
-        case _ => throw new IllegalStateException("full-outer join emitted a null pair")
-      }
-      (m.n, m.errBound, m.toBytes)
+      appliedBatch: Option[Long] = None): Unit =
+    mergeInto(spark, name, SchemaVersion, Nil, daySketches(spark, events),
+      beforeCommit, afterCommit, appliedBatch)
+
+  /** Publish `rows` as the next version of `name` (plain parquet). */
+  private def publish(spark: SparkSession, name: String, schemaVersion: Int,
+      rows: DataFrame, beforeCommit: () => Unit, afterCommit: () => Unit,
+      appliedBatch: Option[Long]): Unit =
+    TableManifest.publish(spark, name, schemaVersion, appliedBatch,
+      beforeCommit, afterCommit)(rows.write.mode("overwrite").format("parquet").saveAsTable(_))
+
+  /** The row-local sketch merge of a full-outer join's two sides:
+    * (n, err_bound, sk) of the merged sketch.
+    */
+  private val mergeSketches = udf { (a: Array[Byte], b: Array[Byte]) =>
+    val m = (Option(a), Option(b)) match {
+      case (Some(x), Some(y)) => Udx.kllFromBytes(x).mergeWith(Udx.kllFromBytes(y))
+      case (Some(x), None) => Udx.kllFromBytes(x)
+      case (None, Some(y)) => Udx.kllFromBytes(y)
+      case _ => throw new IllegalStateException("full-outer join emitted a null pair")
     }
+    (m.n, m.errBound, m.toBytes)
+  }
+
+  /** [[mergeDays]] and [[mergeDaysKeyed]]: stored and incoming
+    * sketches combine row-locally over a full-outer join on
+    * (`keys`, day). A UDF is fine here: the relation is the day
+    * table (calendar-bounded), never the raw history, and
+    * n/errBound are re-read from the merged sketch because
+    * compaction during merge can push errBound beyond the sum of the
+    * parts.
+    */
+  private def mergeInto(spark: SparkSession, name: String, schemaVersion: Int,
+      keys: Seq[String], incoming: DataFrame, beforeCommit: () => Unit,
+      afterCommit: () => Unit, appliedBatch: Option[Long]): Unit = {
+    val cur = TableManifest.resolve(spark, name, schemaVersion)
+    val on = keys :+ "day"
     val merged = spark.table(cur)
-      .select(col("day"), col("sk").as("sk_old"))
-      .join(incoming.select(col("day"), col("sk").as("sk_new")), Seq("day"), "full_outer")
-      .withColumn("m", mergeU(col("sk_old"), col("sk_new")))
-      .select(col("day"), col("m._1").as("n"), col("m._2").as("err_bound"),
-        col("m._3").as("sk"))
-    val v = TableManifest.nextVersion(spark, name)
-    val t = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    merged.write.mode("overwrite").format("parquet").saveAsTable(t)
-    beforeCommit()
-    TableManifest.commit(spark, name, v, SchemaVersion, appliedBatch) // THE commit point
-    afterCommit()
-    TableManifest.vacuum(spark, name)
+      .select(on.map(col) :+ col("sk").as("sk_old"): _*)
+      .join(incoming.select(on.map(col) :+ col("sk").as("sk_new"): _*), on, "full_outer")
+      .withColumn("m", mergeSketches(col("sk_old"), col("sk_new")))
+      .select(on.map(col) ++ Seq(col("m._1").as("n"), col("m._2").as("err_bound"),
+        col("m._3").as("sk")): _*)
+    publish(spark, name, schemaVersion, merged, beforeCommit, afterCommit,
+      appliedBatch)
   }
 
   /** Merged sketch over an inclusive day range (None = unbounded).
@@ -203,26 +202,13 @@ object QuantileService {
       .toDF("dim", "day", "n", "err_bound", "sk")
   }
 
-  private def publishKeyed(spark: SparkSession, name: String, rows: DataFrame,
-      beforeCommit: () => Unit, afterCommit: () => Unit,
-      appliedBatch: Option[Long]): Unit = {
-    val v = TableManifest.nextVersion(spark, name)
-    val t = TableManifest.physicalName(name, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    rows.write.mode("overwrite").format("parquet").saveAsTable(t)
-    beforeCommit()
-    TableManifest.commit(spark, name, v, KeyedSchemaVersion, appliedBatch)
-    afterCommit()
-    TableManifest.vacuum(spark, name)
-  }
-
   /** Build (or rebuild) a keyed service table from scratch. */
   def buildKeyed(spark: SparkSession, name: String, events: DataFrame,
       dimCol: String = "event_type",
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
       appliedBatch: Option[Long] = None): Unit =
-    publishKeyed(spark, name, keyedDaySketches(spark, events, dimCol),
+    publish(spark, name, KeyedSchemaVersion, keyedDaySketches(spark, events, dimCol),
       beforeCommit, afterCommit, appliedBatch)
 
   /** Incremental MERGE of possibly-partial (dim, day) data — the
@@ -233,28 +219,9 @@ object QuantileService {
       dimCol: String = "event_type",
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => (),
-      appliedBatch: Option[Long] = None): Unit = {
-    val cur = TableManifest.resolve(spark, name, KeyedSchemaVersion)
-    val incoming = keyedDaySketches(spark, events, dimCol)
-    val mergeU = udf { (a: Array[Byte], b: Array[Byte]) =>
-      val m = (Option(a), Option(b)) match {
-        case (Some(x), Some(y)) => Udx.kllFromBytes(x).mergeWith(Udx.kllFromBytes(y))
-        case (Some(x), None) => Udx.kllFromBytes(x)
-        case (None, Some(y)) => Udx.kllFromBytes(y)
-        case _ => throw new IllegalStateException("full-outer join emitted a null pair")
-      }
-      (m.n, m.errBound, m.toBytes)
-    }
-    val merged = spark.table(cur)
-      .select(col("dim"), col("day"), col("sk").as("sk_old"))
-      .join(incoming.select(col("dim"), col("day"), col("sk").as("sk_new")),
-        Seq("dim", "day"), "full_outer")
-      .withColumn("m", mergeU(col("sk_old"), col("sk_new")))
-      .select(col("dim"), col("day"), col("m._1").as("n"),
-        col("m._2").as("err_bound"), col("m._3").as("sk"))
-    publishKeyed(spark, name, merged, beforeCommit, afterCommit,
-      appliedBatch)
-  }
+      appliedBatch: Option[Long] = None): Unit =
+    mergeInto(spark, name, KeyedSchemaVersion, Seq("dim"),
+      keyedDaySketches(spark, events, dimCol), beforeCommit, afterCommit, appliedBatch)
 
   /** Per-dim merged sketch over an inclusive day range; answers
     * every requested q per dim with the accumulated certificate:

@@ -82,9 +82,18 @@ object SessionCache {
   /** Drop every cached relation derived from `dir` — the hook for an
     * in-session input mutation (tests, long-lived ingest sessions).
     */
-  def invalidate(dir: String): Unit =
-    cache.keySet.removeIf(_._2 == dir)
+  def invalidate(dir: String): Unit = drop(_._2 == dir)
 
   /** Drop everything (test teardown / full reset). */
-  def reset(): Unit = cache.clear()
+  def reset(): Unit = drop(_ => true)
+
+  /** Remove the matching entries and free their blocks at once rather
+    * than at some later GC. An entry is a bare `localCheckpoint`
+    * handle, so [[Checkpoints.free]] frees exactly that entry; a
+    * caller still holding a dropped entry must not read it again.
+    */
+  private def drop(matches: ((SparkSession, String, String)) => Boolean): Unit =
+    cache.keySet.forEach { k =>
+      if (matches(k)) Option(cache.remove(k)).foreach(Checkpoints.free)
+    }
 }

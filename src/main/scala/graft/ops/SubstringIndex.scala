@@ -70,17 +70,12 @@ object SubstringIndex {
   /** Create the positional-gram index for a corpus as a fresh
     * manifest version (atomic publish).
     */
-  def buildIndex(docs: DataFrame, tableName: String, buckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    val v = graft.io.TableManifest.nextVersion(spark, tableName)
-    val t = graft.io.TableManifest.physicalName(tableName, v)
-    spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
-    graft.io.Sinks.writeBucketed(
-      gramRows(docs).select("gh", "gram", "lang", "doc_id", "pos"),
-      t, "gh", buckets)
-    graft.io.TableManifest.commit(spark, tableName, v, SchemaVersion)
-    graft.io.TableManifest.vacuum(spark, tableName)
-  }
+  def buildIndex(docs: DataFrame, tableName: String, buckets: Int = 8): Unit =
+    graft.io.TableManifest.publish(docs.sparkSession, tableName, SchemaVersion) {
+      graft.io.Sinks.writeBucketed(
+        gramRows(docs).select("gh", "gram", "lang", "doc_id", "pos"),
+        _, "gh", buckets)
+    }
 
   /** Append a new batch's grams to the current version (bucket spec
     * from the catalog — parquet append adds files per bucket, never
@@ -89,22 +84,20 @@ object SubstringIndex {
   def appendToIndex(docs: DataFrame, tableName: String): Unit = {
     val spark = docs.sparkSession
     val t = resolveTable(spark, tableName)
-    val (_, buckets) = graft.io.TableManifest.bucketSpecOf(spark, t).getOrElse(
+    if (graft.io.TableManifest.bucketSpecOf(spark, t).isEmpty)
       throw new IllegalStateException(
-        s"$t has no bucket spec — appending would mix layouts; rebuild the index"))
-    gramRows(docs).select("gh", "gram", "lang", "doc_id", "pos")
-      .write.mode("append")
-      .bucketBy(buckets, "gh").sortBy("gh")
-      .format("parquet").saveAsTable(t)
+        s"$t has no bucket spec — appending would mix layouts; rebuild the index")
+    graft.io.TableManifest.append(spark, t,
+      gramRows(docs).select("gh", "gram", "lang", "doc_id", "pos"))
   }
 
   /** Collapse append growth into a fresh manifest version — atomic
-    * publish ([[graft.io.TableManifest.compactBucketed]]).
+    * publish ([[graft.io.TableManifest.compact]]).
     */
   def compact(spark: SparkSession, tableName: String,
       beforeCommit: () => Unit = () => (),
       afterCommit: () => Unit = () => ()): Unit =
-    graft.io.TableManifest.compactBucketed(
+    graft.io.TableManifest.compact(
       spark, tableName, SchemaVersion, beforeCommit, afterCommit)
 
   /** Shared spans of a new batch against the index: one row per

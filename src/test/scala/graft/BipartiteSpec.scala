@@ -88,6 +88,30 @@ class BipartiteSpec extends SparkSpec {
     }
   }
 
+  test("collapsed join reads a checkpoint-handle input in place instead of copying it") {
+    val u = ('a' to 'l').map(_.toString)
+    val planted: Seq[(Long, Seq[String])] = Seq(
+      1L -> u, 5L -> u, 2L -> u.take(11), 3L -> u.take(6), 4L -> Seq("z"))
+    // the join's checkpoints materialize as it is built, so the RDDs
+    // that gained blocks by then are every copy it made
+    def run(profiles: org.apache.spark.sql.DataFrame): (Set[(Long, Long)], Int) = {
+      def withBlocks = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+      val before = withBlocks
+      val pairs = ops.Bipartite.deletionPairsCollapsed(profiles, 19, 20, 1)
+      val gained = (withBlocks -- before).size
+      (pairs.select("a_id", "b_id").as[(Long, Long)].collect().toSet, gained)
+    }
+    val handle = profDf(planted).localCheckpoint()
+    try {
+      val (plain, plainRdds) = run(profDf(planted))
+      val (viaHandle, handleRdds) = run(handle)
+      assert(viaHandle === plain)
+      assert(plain.contains((1L, 5L)))
+      assert(handleRdds === plainRdds - 1,
+        "a handle input must be read in place, not checkpointed a second time")
+    } finally ops.Checkpoints.free(handle)
+  }
+
   test("cluster composition labels paired customers with min reachable id") {
     val u = ('a' to 'y').map(_.toString)
     val planted: Seq[(Long, Seq[String])] = Seq(

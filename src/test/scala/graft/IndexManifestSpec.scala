@@ -175,17 +175,35 @@ class IndexManifestSpec extends SparkSpec {
     val c2 = Seq((2L, "en", (1 to 15).map(i => s"b$i").mkString(" ")))
       .toDF("doc_id", "lang", "text")
     ops.SubstringIndex.buildIndex(c1, "mf_rebuild")
+    def versionTables() = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("mf_rebuild__v")).toSet
     try {
       val v0 = ops.SubstringIndex.resolveTable(spark, "mf_rebuild")
+      // a crashed earlier attempt left a data table and an `_x` sidecar
+      // at the next version; nothing references them
+      val leftover = io.TableManifest.physicalName("mf_rebuild", 1)
+      for (t <- Seq(leftover, leftover + "_x"))
+        spark.range(3).toDF("junk").write.format("parquet").saveAsTable(t)
+      assert(ops.SubstringIndex.resolveTable(spark, "mf_rebuild") === v0,
+        "leftover staging is never served")
       ops.SubstringIndex.buildIndex(c2, "mf_rebuild") // full re-index
       val v1 = ops.SubstringIndex.resolveTable(spark, "mf_rebuild")
       assert(v1 !== v0)
       assert(spark.catalog.tableExists(v0), "superseded build retained one cycle")
+      // the publish replaced both leftovers: the data table is the new
+      // build's, the sidecar it never wrote is gone
+      assert(v1 === leftover)
+      assert(!spark.table(v1).columns.contains("junk"))
+      assert(versionTables() === Set(v0, v1))
       // probes see ONLY the new corpus
       val probe = ops.SubstringIndex.probeSpans(spark,
         Seq((10L, "en", (1 to 15).map(i => s"a$i").mkString(" ")))
           .toDF("doc_id", "lang", "text"), "mf_rebuild")
       assert(probe.count() === 0, "rebuilt index must not serve the old corpus")
+      // vacuum keeps only the current version and one previous
+      ops.SubstringIndex.buildIndex(c1, "mf_rebuild")
+      val v2 = ops.SubstringIndex.resolveTable(spark, "mf_rebuild")
+      assert(versionTables() === Set(v1, v2))
     } finally io.TableManifest.drop(spark, "mf_rebuild")
   }
 }

@@ -12,6 +12,8 @@ class SessionCacheSpec extends SparkSpec {
   import spark.implicits._
 
   test("builds once per key, serves the checkpoint after; invalidate(dir) forces a rebuild") {
+    val blocks = new RddBlocks
+    spark.sparkContext.addSparkListener(blocks)
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     def rel() = ops.SessionCache.of(spark, "/cache-spec-dirA", "k1") {
       builds.incrementAndGet()
@@ -30,6 +32,9 @@ class SessionCacheSpec extends SparkSpec {
     assert(rel().count() === 2L)
     assert(builds.get() === 3, "invalidate must force a rebuild")
     ops.SessionCache.invalidate("/cache-spec-dirA")
+    // every dropped entry's checkpoint is freed with it, not at some GC
+    try blocks.assertNoneLive()
+    finally spark.sparkContext.removeSparkListener(blocks)
   }
 
   test("nested builds work (the computeIfAbsent 'Recursive update' regression)") {
