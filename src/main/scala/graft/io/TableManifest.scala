@@ -242,14 +242,16 @@ object TableManifest {
     * fast rather than being half-replicated.
     */
   def bucketSpecOf(spark: SparkSession, physical: String): Option[(String, Int)] =
-    spark.sessionState.catalog.getTableMetadata(TableIdentifier(physical))
-      .bucketSpec.map { spec =>
-        spec.bucketColumnNames match {
-          case Seq(k) => k -> spec.numBuckets
-          case cols => throw new IllegalArgumentException(
-            s"$physical is bucketed on $cols; only single-column specs are supported")
-        }
+    metadata(spark, physical).bucketSpec.map { spec =>
+      spec.bucketColumnNames match {
+        case Seq(k) => k -> spec.numBuckets
+        case cols => throw new IllegalArgumentException(
+          s"$physical is bucketed on $cols; only single-column specs are supported")
       }
+    }
+
+  private def metadata(spark: SparkSession, physical: String) =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(physical))
 
   /** The rows of physical table `physical` as a rewrite must read
     * them. A BUCKETED table is read by PATH: a catalog read of a
@@ -262,8 +264,7 @@ object TableManifest {
     */
   def rewriteSource(spark: SparkSession, physical: String): DataFrame =
     if (bucketSpecOf(spark, physical).isDefined)
-      spark.read.parquet(spark.sessionState.catalog
-        .getTableMetadata(TableIdentifier(physical)).location.toString)
+      spark.read.parquet(metadata(spark, physical).location.toString)
     else {
       spark.catalog.refreshTable(physical)
       spark.table(physical)
@@ -277,8 +278,7 @@ object TableManifest {
     * rewrites; any repartition is the caller's.
     */
   def append(spark: SparkSession, physical: String, rows: DataFrame): Unit = {
-    val parts = spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(physical)).partitionColumnNames
+    val parts = metadata(spark, physical).partitionColumnNames
     val w = rows.write.mode("append").format("parquet").partitionBy(parts: _*)
     bucketSpecOf(spark, physical)
       .fold(w) { case (key, buckets) => w.bucketBy(buckets, key).sortBy(key) }
@@ -307,8 +307,7 @@ object TableManifest {
       bucketSpecOf(spark, cur) match {
         case Some((key, buckets)) => Sinks.writeBucketed(rows, next, key, buckets)
         case None =>
-          val parts = spark.sessionState.catalog
-            .getTableMetadata(TableIdentifier(cur)).partitionColumnNames
+          val parts = metadata(spark, cur).partitionColumnNames
           rows.repartition(parts.map(col): _*)
             .write.mode("overwrite").format("parquet").partitionBy(parts: _*)
             .saveAsTable(next)

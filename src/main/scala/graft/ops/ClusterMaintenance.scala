@@ -79,7 +79,9 @@ object ClusterMaintenance {
     * signatures — harmless for correctness, since the probe drops
     * self-matches and duplicate collisions dedupe in stage 1's
     * groupBy, but it grows the index; dedupe arrivals upstream, as
-    * with [[IncrementalDedup]]).
+    * with [[IncrementalDedup]]). A `newProfiles` that is a checkpoint
+    * handle is read in place and freed on return with the batch's
+    * edges: the caller must not read it afterwards.
     */
   def ingest(spark: SparkSession, labels: DataFrame, newProfiles: DataFrame,
       indexedProfiles: DataFrame, tableName: String, p: Int, q: Int): DataFrame = {
