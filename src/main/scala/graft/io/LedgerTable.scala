@@ -115,20 +115,19 @@ object LedgerTable {
   /** Append one batch to `physical`: the partial rows FIRST, in the
     * table's committed layout ([[TableManifest.append]]), then the
     * ledger row `ledgerRow(rows)` LAST. The rows are
-    * materialized once, so the ledger row never recomputes them, and
-    * their checkpoint is freed once both writes landed (a forever
-    * stream would otherwise hold one checkpoint per batch).
+    * materialized once ([[graft.ops.Checkpoints.scoped]]), so the
+    * ledger row never recomputes them.
     * `afterRowsAppend` is the specs' crash-injection seam.
     */
   def append(spark: SparkSession, physical: String, rows: DataFrame,
-      ledgerRow: DataFrame => DataFrame, afterRowsAppend: () => Unit): Unit = {
-    val pinned = rows.localCheckpoint()
-    TableManifest.append(spark, physical, pinned)
-    afterRowsAppend()
-    ledgerRow(pinned).write.mode("append").format("parquet")
-      .saveAsTable(statsTable(physical))
-    graft.ops.Checkpoints.free(pinned)
-  }
+      ledgerRow: DataFrame => DataFrame, afterRowsAppend: () => Unit): Unit =
+    graft.ops.Checkpoints.scoped { pin =>
+      val pinned = pin(rows)
+      TableManifest.append(spark, physical, pinned)
+      afterRowsAppend()
+      ledgerRow(pinned).write.mode("append").format("parquet")
+        .saveAsTable(statsTable(physical))
+    }
 
   /** Guarded streaming append of engine batch `batchId`: skipped when
     * [[committed]], else [[append]] of `rows(batchId)` with the ledger

@@ -36,15 +36,15 @@ import graft.io.Readers.table
   *
   * Scale shape, per round: pair counting is one map-side-combinable
   * aggregation (key space bounded by live pair vocabulary); the
-  * argmax is a TakeOrdered(1); the rule is attached as a broadcast
-  * single-row join (NO driver collect — the loop is k fixed rounds,
-  * so the continuation never needs a driver scalar, unlike
-  * [[Iterate.untilFixpoint]] consumers); the fold is row-local. The
-  * only non-codegen piece is the `aggregate` HOF, paid once per
-  * vocab row per round. Rounds localCheckpoint via [[Iterate.fixed]]
-  * (every round: each state is consumed twice — pair counting and
-  * rule application — so materializing it avoids recomputing the
-  * whole prior chain, and truncates the k-round lineage).
+  * argmax is a TakeOrdered(1) whose 0-or-1 row is COLLECTED — the
+  * rule is the model parameter itself, k-bounded driver data — and
+  * inlined as literals into the row-local fold, so rule application
+  * needs no join. The only non-codegen piece is the `aggregate` HOF,
+  * paid once per vocab row per round. Each round's state is
+  * localCheckpoint'd (it is read twice — pair counting and the next
+  * fold — and the pin truncates the k-round lineage); the trained
+  * vocabulary is the initial one with the collected rules replayed
+  * ([[applyRules]]).
   */
 object Bpe {
 
@@ -68,16 +68,11 @@ object Bpe {
         concat(slice(acc, lit(1), size(acc) - 1), array(concat(a, b))))
         .otherwise(concat(acc, array(s))))
 
-  /** One merge round over vocabulary state (w, cnt, syms). With
-    * `minCount > 1`, a round whose best pair falls below the
-    * threshold finds an EMPTY rule and no-ops — and since a no-op
-    * leaves the state (hence every later round's pair counts)
-    * unchanged, the first sub-threshold round makes all remaining
-    * rounds no-ops too: count-threshold STOPPING expressed inside
-    * the lazy plan, no driver scalar, fixed plan depth.
+  /** A round's rule: the state's occurrence-weighted adjacent pair
+    * counts (pa, pb, pc), argmax under the total order; empty when no
+    * pair reaches `minCount`.
     */
-  /** Occurrence-weighted adjacent-pair counts of a vocabulary state. */
-  private def pairCounts(state: DataFrame): DataFrame = state
+  private[graft] def bestRule(state: DataFrame, minCount: Long): DataFrame = state
     .filter(size(col("syms")) >= 2)
     .select(col("cnt"), explode(transform(
       sequence(lit(1), size(col("syms")) - 1),
@@ -85,29 +80,15 @@ object Bpe {
         element_at(col("syms"), i + 1).as("pb")))).as("p"))
     .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
     .agg(sum(col("cnt")).as("pc"))
-
-  /** The round's rule under the total order, with its count; empty
-    * when no pair reaches `minCount`.
-    */
-  private def bestRule(pc: DataFrame, minCount: Long): DataFrame = pc
     .filter(col("pc") >= minCount)
     .orderBy(col("pc").desc, col("pa"), col("pb"))
     .limit(1)
 
-  /** Apply a 0-or-1-row rule relation to the state. */
-  private def applyBest(state: DataFrame, best: DataFrame): DataFrame =
-    // Left join on TRUE, not crossJoin: an exhausted vocabulary (every
-    // word a single symbol → empty best) must leave state unchanged,
-    // and a cross join against an empty side would erase it. The null
-    // rule then fails the fold's match predicate on every row.
-    state.join(broadcast(best.select(col("pa"), col("pb"))), lit(true), "left")
-      .select(col("w"), col("cnt"),
-        when(col("pa").isNull || size(col("syms")) < 2, col("syms"))
-          .otherwise(foldMerge(col("syms"), col("pa"), col("pb")))
-          .as("syms"))
-
-  private[ops] def mergeRound(state: DataFrame, minCount: Long = 1L): DataFrame =
-    applyBest(state, bestRule(pairCounts(state), minCount))
+  /** Apply rule (pa, pb) to every word of a vocabulary state. */
+  private def applyRule(state: DataFrame, pa: String, pb: String): DataFrame =
+    state.select(col("w"), col("cnt"),
+      when(size(col("syms")) < 2, col("syms"))
+        .otherwise(foldMerge(col("syms"), lit(pa), lit(pb))).as("syms"))
 
   /** Initial state: distinct words with occurrence counts, each split
     * into single-character symbols. Same tokenizer as
@@ -121,60 +102,13 @@ object Bpe {
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .withColumn("syms", split(col("w"), ""))
 
-  /** The trained vocabulary after k (optionally threshold-stopped)
-    * merge rounds: (w, cnt, syms) — the tokenizer model relation the
-    * training keys render and [[textBpeTokenize]] applies.
-    */
-  private[graft] def trainedVocab(docs: DataFrame, k: Int,
-      minCount: Long = 1L): DataFrame =
-    Iterate.fixed(0 until k, _ => true)(vocab(docs))(
-      (st, _) => mergeRound(st, minCount))
-
-  /** Driver-measured training loop (§8.r11.3): identical semantics to
-    * [[trainedVocab]], but the per-round argmax rule is COLLECTED
-    * (0-or-1 rows — the model parameter itself, the same bounded-
-    * driver-scalar class as [[Iterate.untilFixpoint]]'s count) and a
-    * sub-threshold round EXITS instead of planning a no-op. Two wins
-    * when k far exceeds the effective depth: dead rounds are skipped
-    * entirely (the in-plan form still pays a full pair-count + fold
-    * pass per dead round), and the live rule is inlined as literals,
-    * so rule application needs no broadcast join at all. A/B at
-    * k = 32 / minCount = 1500 on sf0.01 (threshold binds at round
-    * 10): BASELINE.md r10-resume row. The in-plan form remains the
-    * right shape when k ≈ effective depth and the plan must stay
-    * fully lazy (one action total); this is the right shape when the
-    * stop is expected early.
-    */
-  private[graft] def trainedVocabDriver(docs: DataFrame, k: Int,
-      minCount: Long = 1L): DataFrame = {
-    var st = vocab(docs).localCheckpoint()
-    var round = 0
-    var live = true
-    while (round < k && live) {
-      val best = bestRule(pairCounts(st), minCount)
-        .select(col("pa"), col("pb")).collect()
-      if (best.isEmpty) live = false
-      else {
-        val (pa, pb) = (best(0).getString(0), best(0).getString(1))
-        val prev = st
-        st = st.select(col("w"), col("cnt"),
-          when(size(col("syms")) < 2, col("syms"))
-            .otherwise(foldMerge(col("syms"), lit(pa), lit(pb))).as("syms"))
-          .localCheckpoint()
-        Checkpoints.free(prev) // superseded round state (r18 hygiene)
-        round += 1
-      }
-    }
-    st
-  }
-
   /** k merge rounds over `docs` (optionally threshold-stopped);
     * output one row per distinct word: its merged segmentation
     * (space-joined), symbol count, and corpus occurrence count.
     */
   private[graft] def mergeRounds(docs: DataFrame, k: Int,
       minCount: Long = 1L): DataFrame =
-    trainedVocab(docs, k, minCount)
+    applyRules(vocab(docs), ruleList(rulesTable(docs, k, minCount)))
       .select(col("w"), concat_ws(" ", col("syms")).as("merged"),
         size(col("syms")).cast("long").as("n_syms"), col("cnt").as("n_occ"))
       .orderBy("w")
@@ -185,9 +119,9 @@ object Bpe {
   /** Depth variant (§8.r11.1, pulled into round 10): up to 8 rounds,
     * stopping once no pair reaches `TrainMinCount` — how real
     * tokenizer training terminates (merge until the argmax count is
-    * no longer worth a rule). The stopping is data-dependent but the
-    * PLAN depth is fixed (see [[mergeRound]]'s no-op argument), so
-    * the loop stays lazy end-to-end.
+    * no longer worth a rule): the first sub-threshold round ends the
+    * loop, since a round without a rule leaves every later round's
+    * pair counts unchanged.
     */
   private val TrainRounds = 8
   private val TrainMinCount = 1500L
@@ -232,53 +166,28 @@ object Bpe {
   /** The RULE TABLE itself — the tokenizer artifact a serving system
     * loads: one row per executed merge round (round index, the pair,
     * its count at selection time), under the training parameters.
-    * Threshold-stopped rounds emit no row, so the table's length IS
-    * the effective training depth. Mirrors [[textBpeTrain]]'s loop
-    * but renders the per-round argmax instead of the final state
-    * (the loop is hand-rolled rather than Iterate.fixed because each
-    * round yields TWO relations: the next state and the rule row).
+    * Each round's 0-or-1-row argmax is COLLECTED (k-bounded driver
+    * data — the rule rows ARE the output) and a sub-threshold or
+    * exhausted round ends the loop, so the table's length IS the
+    * effective training depth and dead rounds cost nothing (2.7× at
+    * k = 32 where 22 rounds are dead — BASELINE.md r10-resume).
     */
   private[graft] def rulesTable(docs: DataFrame, k: Int,
-      minCount: Long): DataFrame = {
-    var st = vocab(docs).localCheckpoint()
-    val rules = (0 until k).map { r =>
-      val best = bestRule(pairCounts(st), minCount).localCheckpoint()
-      val prev = st
-      st = applyBest(st, best).localCheckpoint()
-      Checkpoints.free(prev) // superseded; `best` stays (the output reads it)
-      best.select(lit(r).as("round"), col("pa"), col("pb"), col("pc"))
-    }
-    Checkpoints.free(st) // the final state feeds nothing — rules are the output
-    rules.reduce(_ unionAll _).orderBy("round")
-  }
-
-  /** [[rulesTable]] through the driver loop (§8.r11.3 follow-up):
-    * identical rule list, but each round's 0-or-1-row argmax is
-    * COLLECTED (k-bounded driver data — the rule rows ARE the
-    * output), dead rounds exit instead of planning, and the round
-    * needs one checkpoint instead of two plus no broadcast join.
-    * A/B'd vs the in-plan form (BASELINE.md r10-resume row);
-    * spec-pinned equal in BpeMergeSpec.
-    */
-  private[graft] def rulesTableDriver(docs: DataFrame, k: Int,
       minCount: Long): DataFrame = {
     val spark = docs.sparkSession
     var st = vocab(docs).localCheckpoint()
     val rules = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var live = true
     while (rules.length < k && live) {
-      val best = bestRule(pairCounts(st), minCount)
+      val best = bestRule(st, minCount)
         .select(col("pa"), col("pb"), col("pc")).collect()
       if (best.isEmpty) live = false
       else {
         val (pa, pb) = (best(0).getString(0), best(0).getString(1))
         rules += ((rules.length, pa, pb, best(0).getLong(2)))
         val prev = st
-        st = st.select(col("w"), col("cnt"),
-          when(size(col("syms")) < 2, col("syms"))
-            .otherwise(foldMerge(col("syms"), lit(pa), lit(pb))).as("syms"))
-          .localCheckpoint()
-        Checkpoints.free(prev) // superseded round state (r18 hygiene)
+        st = applyRule(st, pa, pb).localCheckpoint()
+        Checkpoints.free(prev) // superseded round state
       }
     }
     Checkpoints.free(st) // rules are driver data; the state feeds nothing
@@ -286,6 +195,11 @@ object Bpe {
     spark.createDataset(rules.toSeq).toDF("round", "pa", "pb", "pc")
       .orderBy("round")
   }
+
+  /** The (pa, pb) rules of a [[rulesTable]] in training order. */
+  private def ruleList(rules: DataFrame): Seq[(String, String)] =
+    rules.orderBy("round").select(col("pa"), col("pb")).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
 
   /** Session-shared trained tokenizer (round 15): FIVE keys consume
     * the identical (TrainRounds, TrainMinCount) model — the rule
@@ -296,18 +210,18 @@ object Bpe {
     * at sf0.1, isolated). One [[SessionCache]] entry per artifact
     * now holds them, which is also the deployment truth: a
     * tokenizer is TRAINED ONCE and served everywhere; no consumer
-    * retrains per query. The rules build runs the driver loop once;
+    * retrains per query. The rules build runs [[rulesTable]] once;
     * the state entry replays the collected rules over the initial
     * vocabulary with row-local folds ([[applyRules]] — no pair
     * counting, no per-round checkpoints), which is exactly the
     * trained state by the left-greedy replay argument
-    * ([[textBpeApply]]'s serving path, spec-pinned equal to the
-    * in-plan chain in BpeMergeSpec).
+    * ([[textBpeApply]]'s serving path, spec-pinned against a
+    * reference scan in BpeMergeSpec).
     */
   private[graft] def trainedRulesShared(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     SessionCache.of(s, dir, "bpe-rules-k8") {
-      rulesTableDriver(table(s, dir, "documents"), TrainRounds, TrainMinCount)
+      rulesTable(table(s, dir, "documents"), TrainRounds, TrainMinCount)
     }
 
   /** The collected (pa, pb) rule list of [[trainedRulesShared]] in
@@ -315,9 +229,7 @@ object Bpe {
     */
   private def trainedRuleList(s: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(String, String)] =
-    trainedRulesShared(s, dir).orderBy("round")
-      .select(col("pa"), col("pb")).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
+    ruleList(trainedRulesShared(s, dir))
 
   /** Session-shared trained vocabulary state (w, cnt, syms) under the
     * training parameters — see [[trainedRulesShared]].
@@ -328,12 +240,8 @@ object Bpe {
       applyRules(vocab(table(s, dir, "documents")), trainedRuleList(s, dir))
     }
 
-  /** Ships the DRIVER form: the collected per-round rule rows are the
-    * key's own k-bounded output (the IVF-centroid class of permitted
-    * driver data), and the loop measured faster even with every round
-    * live (1.05 vs 1.26 s warm at k=8; 2.7× at k=32 where 22 rounds
-    * are dead — BASELINE.md r10-resume). The in-plan [[rulesTable]]
-    * stays as the all-lazy alternative and the A/B control.
+  /** The collected per-round rule rows are the key's own k-bounded
+    * output (the IVF-centroid class of permitted driver data).
     */
   val textBpeRules: Q = (s, dir) =>
     trainedRulesShared(s, dir).orderBy("round")
@@ -347,11 +255,7 @@ object Bpe {
     */
   private[graft] def applyRules(targetVocab: DataFrame,
       ruleList: Seq[(String, String)]): DataFrame =
-    ruleList.foldLeft(targetVocab) { case (st, (pa, pb)) =>
-      st.select(col("w"), col("cnt"),
-        when(size(col("syms")) < 2, col("syms"))
-          .otherwise(foldMerge(col("syms"), lit(pa), lit(pb))).as("syms"))
-    }
+    ruleList.foldLeft(targetVocab) { case (st, (pa, pb)) => applyRule(st, pa, pb) }
 
   /** Cross-corpus tokenizer application (train here, serve there):
     * learn the rule list on `documents` under the training

@@ -24,14 +24,28 @@ import org.apache.spark.sql.DataFrame
   * long-lived or externally-visible frames (spec surfaces, returned
   * results) must NOT free them.
   *
+  * SCOPED LIFETIME: a frame pinned and dead within one call is pinned
+  * through [[scoped]], which frees it when the body returns OR throws
+  * — the one place a checkpoint is freed in a `finally`. The body may
+  * pin any number of frames; it must finish every read of them before
+  * it returns, so it may return driver data, a write's effect, or a
+  * frame that reads none of its pins, never a lazy frame over a pin.
+  * The body may lend `pin` to a callee, whose pins then share the
+  * scope ([[IncrementalCuration.curateBatch]] lends it to its probes).
+  * [[Streaming.sink]] runs every micro-batch through it, so each
+  * sink's batch pin lives exactly as long as its batch. Loop states
+  * superseded round by round ([[Iterate]], Graph's round loops) and
+  * frames a callee pinned keep their explicit [[free]].
+  *
   * CLUSTER-MODE SWAP (r19 verdict item 4 — the engine-wide trade
   * named in one place): `localCheckpoint` stores blocks in executor
   * memory/disk with NO recompute path, so on a real cluster a lost
   * executor fails the job instead of recomputing — acceptable in
   * this single-JVM local harness, not at 100 TB. The distributed
   * deployment sets `spark.sparkContext.setCheckpointDir(<HDFS/object
-  * store path>)` and swaps these call sites to RELIABLE
-  * `Dataset.checkpoint()` (same plan-truncation semantics, blocks on
+  * store path>)` and swaps to RELIABLE `Dataset.checkpoint()` — in
+  * [[scoped]]'s `pin` for every call-scoped frame, at the remaining
+  * sites for loop states (same plan-truncation semantics, blocks on
   * fault-tolerant storage, survives executor loss), or materializes
   * stage outputs as durable tables (the [[IngestPipeline]]
   * discipline). [[free]]'s analogue there is dropping the checkpoint
@@ -44,10 +58,9 @@ private[graft] object Checkpoints {
     * leaf-set, not handle-only: passing a frame DERIVED from
     * checkpoints frees all the checkpoints it reads — which is the
     * point when a lazily-composed result's inputs are all dead, and a
-    * data-loss bug when any of them is still referenced elsewhere
-    * (r18 review: the earlier "derived frames are a safe no-op"
-    * claim here was wrong). Discipline: call only when every
-    * checkpoint leaf under `df` is dead. Non-checkpoint LogicalRDD
+    * data-loss bug when any of them is still referenced elsewhere.
+    * Discipline: call only when every checkpoint leaf under `df` is
+    * dead. Non-checkpoint LogicalRDD
     * leaves (`createDataFrame(rdd)` relations) are never persisted,
     * so their unpersist is a true no-op.
     */
@@ -55,6 +68,16 @@ private[graft] object Checkpoints {
     df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
+
+  /** Run `body` with a `pin` that materializes a frame
+    * (`localCheckpoint()`) and returns its handle; every frame `body`
+    * pinned is freed when `body` returns or throws (object scaladoc).
+    */
+  def scoped[T](body: (DataFrame => DataFrame) => T): T = {
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => val ck = df.localCheckpoint(); pinned += ck; ck }
+    finally pinned.foreach(free)
+  }
 
   /** Is `df` itself a materialized checkpoint handle (its plan is a
     * bare `LogicalRDD` leaf)? Lets an operator that must read a frame

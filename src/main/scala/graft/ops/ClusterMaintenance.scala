@@ -43,23 +43,23 @@ object ClusterMaintenance {
     * (appearing in no edge) stay absent, per the CC contract.
     */
   def updateLabels(labels: DataFrame, newEdges: DataFrame): DataFrame = {
-    val edges = newEdges
-      .select(col("a_id").cast("long").as("a_id"),
-        col("b_id").cast("long").as("b_id"))
-      .filter(col("a_id") =!= col("b_id"))
-      .localCheckpoint()
-    val endpoints = edges.select(col("a_id").as("id"))
-      .union(edges.select(col("b_id").as("id"))).distinct()
-    val touchedComps = labels
-      .join(endpoints, "id", "left_semi")
-      .select(col("comp")).distinct()
-    val touchedLabels = labels
-      .join(touchedComps, Seq("comp"), "left_semi")
-    val stars = touchedLabels.filter(col("id") =!= col("comp"))
-      .select(col("comp").as("a_id"), col("id").as("b_id"))
-    val local = Llm.connectedComponents(stars.unionAll(edges))
-    // the closure pinned its input eagerly, so nothing left reads `edges`
-    Checkpoints.free(edges)
+    // the closure pins its input eagerly, so `local` never reads `edges`
+    val local = Checkpoints.scoped { pin =>
+      val edges = pin(newEdges
+        .select(col("a_id").cast("long").as("a_id"),
+          col("b_id").cast("long").as("b_id"))
+        .filter(col("a_id") =!= col("b_id")))
+      val endpoints = edges.select(col("a_id").as("id"))
+        .union(edges.select(col("b_id").as("id"))).distinct()
+      val touchedComps = labels
+        .join(endpoints, "id", "left_semi")
+        .select(col("comp")).distinct()
+      val touchedLabels = labels
+        .join(touchedComps, Seq("comp"), "left_semi")
+      val stars = touchedLabels.filter(col("id") =!= col("comp"))
+        .select(col("comp").as("a_id"), col("id").as("b_id"))
+      Llm.connectedComponents(stars.unionAll(edges))
+    }
     labels.join(local, Seq("id"), "left_anti").unionAll(local)
   }
 
@@ -216,14 +216,9 @@ object ClusterMaintenance {
       p: Int = 19, q: Int = 20): org.apache.spark.sql.streaming.StreamingQuery =
     Streaming.sink(stream, checkpointDir) { (batch, batchId) =>
       val s = batch.sparkSession
-      val b = batch.localCheckpoint() // pin: consumed by probe, intra join, and append
-      // freed once the batch's writes have returned; a replay re-reads
-      // the source
-      try {
-        if (!b.isEmpty)
-          ingestCommitted(s, batchId, b, indexedProfilesOf(s),
-            indexName, labelsName, p = p, q = q)
-      } finally Checkpoints.free(b)
+      if (!batch.isEmpty)
+        ingestCommitted(s, batchId, batch, indexedProfilesOf(s),
+          indexName, labelsName, p = p, q = q)
     }
 
   // ---- the self-contained tri-store pipeline (§8.r11 item 2) -------
@@ -248,19 +243,17 @@ object ClusterMaintenance {
   def bootstrap(profiles: DataFrame, snapshotPath: String, indexName: String,
       labelsName: String, nBuckets: Int = 16, buckets: Int = 8,
       p: Int = 19, q: Int = 20): Unit = {
-    val prof = profiles.localCheckpoint()
-    // the collapsed join reads `prof` in place: freeing `pairs` frees
-    // it too, so both frees wait for the last read
-    val pairs = Bipartite.deletionPairsCollapsed(prof, p, q, ProfileIndex.Depth)
-      .select("a_id", "b_id")
-    try {
+    Checkpoints.scoped { pin =>
+      val prof = pin(profiles)
+      // the collapsed join reads `prof` in place: freeing `pairs` frees
+      // it too, so that free waits for the last read
+      val pairs = Bipartite.deletionPairsCollapsed(prof, p, q, ProfileIndex.Depth)
+        .select("a_id", "b_id")
       Streaming.upsertBatchInto(snapshotPath,
         prof.withColumn("bucket", profileBucket(nBuckets)), -1L, mergeProfiles)
       ProfileIndex.buildIndex(prof, indexName, buckets)
       bootstrapLabels(Llm.connectedComponents(pairs), labelsName, buckets)
-    } finally {
-      Checkpoints.free(pairs)
-      Checkpoints.free(prof)
+      Checkpoints.free(pairs) // the collapsed join's own pins
     }
   }
 
@@ -283,12 +276,9 @@ object ClusterMaintenance {
       nBuckets: Int = 16, p: Int = 19,
       q: Int = 20): org.apache.spark.sql.streaming.StreamingQuery =
     Streaming.sink(stream, checkpointDir) { (batch, batchId) =>
-      val b = batch.localCheckpoint()
-      try {
-        if (!b.isEmpty)
-          pipelineBatch(batchId, b, snapshotPath, indexName, labelsName,
-            nBuckets, p, q)
-      } finally Checkpoints.free(b) // as in labelMaintenanceSink
+      if (!batch.isEmpty)
+        pipelineBatch(batchId, batch, snapshotPath, indexName, labelsName,
+          nBuckets, p, q)
     }
 
   /** One [[profilePipeline]] batch — split out so the crash-matrix

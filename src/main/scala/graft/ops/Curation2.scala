@@ -352,7 +352,7 @@ object Curation2 {
     * are row-local expressions — the filter is embarrassingly
     * parallel and belongs BEFORE any shuffle-bearing dedup step in a
     * pipeline (cheapest gate first, same ordering
-    * [[TrainingPipeline]] uses).
+    * [[CurationPipeline]] uses).
     */
   /** The Gopher rule relation over an arbitrary documents frame —
     * shared by the registry key and [[CurationPipeline]]'s quality

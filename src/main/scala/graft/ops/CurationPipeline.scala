@@ -5,10 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Readers.table
 
-/** The end-to-end curation composite over the CURRENT operator era
-  * (round 16 — the r15 verdict's item 6): [[TrainingPipeline]] (round
-  * 2) predates the gopher/decontaminate/mixture/pack/BPE operators;
-  * this is the chain a training-data user actually runs today, each
+/** The end-to-end training-data curation composite — the chain a
+  * training-data user runs (round 16 — the r15 verdict's item 6), each
   * stage the SHARED frame-level form of a shipped registry operator,
   * so the composite and the per-key contracts cannot drift:
   *
@@ -115,8 +113,9 @@ object CurationPipeline {
 
     // 3. n-gram near-dedup — exact τ = 0.5 jaccard pairs on the
     //    survivors, transitive closure, min id per cluster keeps
-    //    (single-link semantics; per-pair drops over-keep local
-    //    minima — see TrainingPipeline's stage-5 note)
+    //    (single-link semantics: per-pair "drop the higher id" would
+    //    keep every LOCAL min — pairs (1,3) and (2,3) keep both 1 and
+    //    2 of the one cluster {1,2,3}; the closure keeps exactly 1)
     val dupIds = Llm.connectedComponents(
         Llm2.jaccardPairsOf(exact).select(col("a_id"), col("b_id")))
       .filter(col("id") =!= col("comp"))

@@ -1027,63 +1027,65 @@ object Graph {
       // the shuffle form (DataSketches HLL unions are merge-order-
       // sensitive at mid-density; hop 0 stays exact) — inside the
       // lgK-10 register error the spec gates.
-      val esSrc = edges
-        .union(nodes.select(col("node").as("src"), col("node").as("dst")))
-        .repartition(col("src")).localCheckpoint()
-      // r19 ADVICE: only a BROADCAST failure may trigger the shuffle
-      // retry — a blanket SparkException catch would silently rerun
-      // (and mask) hopStats collect failures, data-corruption task
-      // failures, or maxResultSize on an unrelated collect. A real
-      // broadcast failure always carries the evidence somewhere in
-      // its chain: a BroadcastExchange/broadcast frame or message
-      // (timeout, "Not enough memory to build and broadcast"), or an
-      // OOM from the build.
-      def broadcastRelated(t: Throwable): Boolean = {
-        val seen = java.util.Collections.newSetFromMap(
-          new java.util.IdentityHashMap[Throwable, java.lang.Boolean]())
-        var c: Throwable = t
-        while (c != null && seen.add(c)) {
-          if (c.isInstanceOf[OutOfMemoryError]) return true
-          if (Option(c.getMessage).getOrElse("").toLowerCase.contains("broadcast"))
-            return true
-          if (c.getStackTrace.exists(_.getClassName.toLowerCase.contains("broadcast")))
-            return true
-          c = c.getCause
+      Checkpoints.scoped { pin =>
+        val esSrc = pin(edges
+          .union(nodes.select(col("node").as("src"), col("node").as("dst")))
+          .repartition(col("src")))
+        // r19 ADVICE: only a BROADCAST failure may trigger the shuffle
+        // retry — a blanket SparkException catch would silently rerun
+        // (and mask) hopStats collect failures, data-corruption task
+        // failures, or maxResultSize on an unrelated collect. A real
+        // broadcast failure always carries the evidence somewhere in
+        // its chain: a BroadcastExchange/broadcast frame or message
+        // (timeout, "Not enough memory to build and broadcast"), or an
+        // OOM from the build.
+        def broadcastRelated(t: Throwable): Boolean = {
+          val seen = java.util.Collections.newSetFromMap(
+            new java.util.IdentityHashMap[Throwable, java.lang.Boolean]())
+          var c: Throwable = t
+          while (c != null && seen.add(c)) {
+            if (c.isInstanceOf[OutOfMemoryError]) return true
+            if (Option(c.getMessage).getOrElse("").toLowerCase.contains("broadcast"))
+              return true
+            if (c.getStackTrace.exists(_.getClassName.toLowerCase.contains("broadcast")))
+              return true
+            c = c.getCause
+          }
+          false
         }
-        false
+        try {
+          for (h <- 1 to 3) {
+            val next = esSrc
+              .join(bcast(reg.select(col("node").as("dst"), col("reg").as("nreg"))), "dst")
+              .groupBy(col("src").as("node"))
+              .agg(hll_union_agg(col("nreg"), lit(false)).as("reg"))
+              .localCheckpoint()
+            Checkpoints.free(reg) // its hop row is already collected
+            reg = next
+            rows += hopStats(h, reg)
+          }
+        } catch {
+          // r18 ADVICE: between the measured 1.25 M nodes and the 2 M-row
+          // gate, a default-configured driver (spark.driver.memory /
+          // maxResultSize 1g) can fail the per-round BroadcastExchange
+          // where the shuffle form would complete slowly — degrade to
+          // slow-but-safe instead of surfacing a hard failure. Register
+          // state may be mid-round, so restart from the seed — hop rows
+          // past 0 are dropped and recomputed exactly. If the shuffle
+          // retry fails too, ITS error surfaces with the original
+          // broadcast failure attached (r19 ADVICE: never lose the
+          // first failure class).
+          case e: org.apache.spark.SparkException if broadcastRelated(e) =>
+            System.err.println(
+              s"[graph] hyperball register broadcast failed (${e.getMessage}); " +
+                "retrying via the shuffle form")
+            Checkpoints.free(reg)
+            rows.dropRightInPlace(rows.size - 1)
+            reg = seedReg()
+            try shuffleRounds()
+            catch { case retry: Throwable => retry.addSuppressed(e); throw retry }
+        }
       }
-      try {
-        for (h <- 1 to 3) {
-          val next = esSrc
-            .join(bcast(reg.select(col("node").as("dst"), col("reg").as("nreg"))), "dst")
-            .groupBy(col("src").as("node"))
-            .agg(hll_union_agg(col("nreg"), lit(false)).as("reg"))
-            .localCheckpoint()
-          Checkpoints.free(reg) // its hop row is already collected
-          reg = next
-          rows += hopStats(h, reg)
-        }
-      } catch {
-        // r18 ADVICE: between the measured 1.25 M nodes and the 2 M-row
-        // gate, a default-configured driver (spark.driver.memory /
-        // maxResultSize 1g) can fail the per-round BroadcastExchange
-        // where the shuffle form would complete slowly — degrade to
-        // slow-but-safe instead of surfacing a hard failure. Register
-        // state may be mid-round, so restart from the seed — hop rows
-        // past 0 are dropped and recomputed exactly. If the shuffle
-        // retry fails too, ITS error surfaces with the original
-        // broadcast failure attached (r19 ADVICE: never lose the
-        // first failure class).
-        case e: org.apache.spark.SparkException if broadcastRelated(e) =>
-          System.err.println(
-            s"[graph] hyperball register broadcast failed (${e.getMessage}); " +
-              "retrying via the shuffle form")
-          Checkpoints.free(reg)
-          rows.dropRightInPlace(rows.size - 1)
-          reg = seedReg()
-          try shuffleRounds()
-          catch { case retry: Throwable => retry.addSuppressed(e); throw retry }
-      } finally Checkpoints.free(esSrc) // exactly once on every path
     } else shuffleRounds()
     Checkpoints.free(reg)
     rows.toSeq

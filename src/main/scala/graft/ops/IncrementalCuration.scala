@@ -248,12 +248,11 @@ object IncrementalCuration {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(watchDir)
     Streaming.sink(stream, checkpointDir) { (batch, batchId) =>
-      val led = curateBatch(batch, hashIndex, bandIndex,
-        verifyCorpus = verifyCorpus.map(_()))
-      led.write.mode("overwrite").parquet(s"$ledgerPath/batch=$batchId")
-      // durable now — free the per-batch checkpoint (r18 review: a
-      // forever-stream otherwise leaks one ledger frame per batch)
-      Checkpoints.free(led)
+      Checkpoints.scoped { pin =>
+        curateBatch(batch, hashIndex, bandIndex,
+          verifyCorpus = verifyCorpus.map(_()), pinLedger = pin)
+          .write.mode("overwrite").parquet(s"$ledgerPath/batch=$batchId")
+      }
     }
   }
 
@@ -338,12 +337,14 @@ object IncrementalCuration {
     * scanned map-only (partition-/file-prunable when the caller's
     * store is keyed on doc_id) and NOTHING corpus-sized shuffles or
     * computes shingles; the shingle work and the verify join are
-    * O(candidates). Plan-audited in IncrementalCurationSpec.
+    * O(candidates). Plan-audited in IncrementalCurationSpec. `pin`
+    * materializes the candidates ([[IncrementalDedup.matchAgainstIndex]]'s
+    * ownership rule).
     */
   private[graft] def verifiedPairs(cand0: DataFrame, aId: String,
       aDocs: DataFrame, bId: String, bDocs: DataFrame,
-      tau: Double): DataFrame = {
-    val cand = cand0.select(col(aId), col(bId)).localCheckpoint()
+      tau: Double, pin: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+    val cand = pin(cand0.select(col(aId), col(bId)))
     def side(d: DataFrame, id: String, pre: String) = d
       .join(broadcast(cand.select(col(id).as("doc_id")).distinct()),
         Seq("doc_id"), "left_semi")
@@ -385,136 +386,120 @@ object IncrementalCuration {
     * language block before it may drop a doc (scaladoc above; both
     * the index probe and the within-batch pairs verify, so the two
     * near tiers keep one semantics).
+    *
+    * `pinLedger` materializes the returned ledger: by default the
+    * caller owns that checkpoint, while [[curateStream]] passes its
+    * scope's pin, so the ledger is freed with the batch. Every other
+    * frame this call pins is freed before it returns or throws.
     */
   def curateBatch(delta: DataFrame,
       hashIndex: String, bandIndex: String,
       minAgree: Double = 0.5,
       verifyCorpus: Option[DataFrame] = None,
-      tau: Double = 0.5): DataFrame = {
-    // reads and writes ride the delta's session, refreshed first (the
-    // staleness guard in the object scaladoc); resolve fails fast on a
-    // missing index or an older schema version
-    val sess = delta.sparkSession
-    sess.catalog.refreshTable(resolveHashTable(sess, hashIndex))
-    sess.catalog.refreshTable(IncrementalDedup.resolveTable(sess, bandIndex))
-    val d0 = delta.filter(trim(col("text")) =!= "")
-      .select(col("doc_id"), col("lang"), col("text"))
-    val withQ = d0.join(
-      Curation2.gopherScored(d0).select(col("doc_id"), col("pass")), "doc_id")
-    val q = withQ.filter(col("pass")).drop("pass")
+      tau: Double = 0.5,
+      pinLedger: DataFrame => DataFrame = _.localCheckpoint()): DataFrame =
+    Checkpoints.scoped { pin =>
+      // reads and writes ride the delta's session, refreshed first (the
+      // staleness guard in the object scaladoc); resolve fails fast on a
+      // missing index or an older schema version
+      val sess = delta.sparkSession
+      sess.catalog.refreshTable(resolveHashTable(sess, hashIndex))
+      sess.catalog.refreshTable(IncrementalDedup.resolveTable(sess, bandIndex))
+      val d0 = delta.filter(trim(col("text")) =!= "")
+        .select(col("doc_id"), col("lang"), col("text"))
+      val withQ = d0.join(
+        Curation2.gopherScored(d0).select(col("doc_id"), col("pass")), "doc_id")
+      val q = withQ.filter(col("pass")).drop("pass")
 
-    // exact probe, directory-pruned O(touched) read. The probe result
-    // is materialized ONCE: the ledger's branches, the near stage's
-    // inputs, and the hash-row keeper join all read `probed` — lazy,
-    // each consumer would re-run the index join.
-    val withHash = q.withColumn("text_hash", hashOf(col("text"))).localCheckpoint()
-    val probed = hashProbe(withHash, hashIndex).localCheckpoint()
-    val fresh = probed.filter(col("keep_id").isNull)
-    val keepB = fresh.groupBy(col("text_hash")).agg(min(col("doc_id")).as("kid"))
-    val exactSurv = fresh.join(keepB, "text_hash")
-      .filter(col("doc_id") === col("kid"))
-      .select(col("doc_id"), col("lang"), col("text"))
+      // exact probe, directory-pruned O(touched) read. The probe result
+      // is materialized ONCE: the ledger's branches, the near stage's
+      // inputs, and the hash-row keeper join all read `probed` — lazy,
+      // each consumer would re-run the index join.
+      val withHash = pin(q.withColumn("text_hash", hashOf(col("text"))))
+      val probed = pin(hashProbe(withHash, hashIndex))
+      val fresh = probed.filter(col("keep_id").isNull)
+      val keepB = fresh.groupBy(col("text_hash")).agg(min(col("doc_id")).as("kid"))
+      val exactSurv = fresh.join(keepB, "text_hash")
+        .filter(col("doc_id") === col("kid"))
+        .select(col("doc_id"), col("lang"), col("text"))
 
-    // near probe against the band index, then within-batch closure
-    val idxCand =
-      IncrementalDedup.matchAgainstIndex(sess, exactSurv, bandIndex, minAgree)
-    val idxPairs = verifyCorpus.fold(idxCand)(corpus =>
-        verifiedPairs(idxCand, "new_id", exactSurv, "indexed_id", corpus, tau))
-      .select(col("new_id"), col("indexed_id"))
-      .localCheckpoint() // read by the near filter AND the keeper join —
-                         // on the verified path the exact-verify joins
-                         // must not run twice (r18 review)
-    val idxMatched = idxPairs.select(col("new_id").as("doc_id")).distinct()
-    val nearSurv = exactSurv.join(idxMatched, Seq("doc_id"), "left_anti")
-    val nb = IncrementalDedup.bandRows(nearSurv)
-      .select(col("bk"), col("doc_id"), col("sig"))
-    val batchPairs0 = nb.as("a").join(nb.as("b"),
-        col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
-      .withColumn("agree",
-        aggregate(zip_with(col("a.sig"), col("b.sig"),
-          (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, x) => acc + x)
-          .cast("double") / size(col("a.sig")))
-      .filter(col("agree") >= minAgree)
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-    val batchPairs = verifyCorpus.fold(batchPairs0)(_ =>
-      verifiedPairs(batchPairs0, "a_id", nearSurv, "b_id", nearSurv, tau))
-    val cc = Llm.connectedComponents(batchPairs)
-    val batchLosers = cc.filter(col("id") =!= col("comp"))
-      .select(col("id").as("doc_id"))
+      // near probe against the band index, then within-batch closure
+      val idxCand =
+        IncrementalDedup.matchAgainstIndex(sess, exactSurv, bandIndex, minAgree, pin)
+      // read by the near filter AND the keeper join — on the verified
+      // path the exact-verify joins must not run twice
+      val idxPairs = pin(verifyCorpus.fold(idxCand)(corpus =>
+          verifiedPairs(idxCand, "new_id", exactSurv, "indexed_id", corpus, tau, pin))
+        .select(col("new_id"), col("indexed_id")))
+      val idxMatched = idxPairs.select(col("new_id").as("doc_id")).distinct()
+      val nearSurv = exactSurv.join(idxMatched, Seq("doc_id"), "left_anti")
+      val nb = IncrementalDedup.bandRows(nearSurv)
+        .select(col("bk"), col("doc_id"), col("sig"))
+      val batchPairs0 = nb.as("a").join(nb.as("b"),
+          col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
+        .withColumn("agree",
+          aggregate(zip_with(col("a.sig"), col("b.sig"),
+            (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, x) => acc + x)
+            .cast("double") / size(col("a.sig")))
+        .filter(col("agree") >= minAgree)
+        .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
+        .distinct()
+      val batchPairs = verifyCorpus.fold(batchPairs0)(_ =>
+        verifiedPairs(batchPairs0, "a_id", nearSurv, "b_id", nearSurv, tau, pin))
+      val cc = Llm.connectedComponents(batchPairs)
+      val batchLosers = cc.filter(col("id") =!= col("comp"))
+        .select(col("id").as("doc_id"))
 
-    def tag(df: DataFrame, status: String): DataFrame =
-      df.select(col("doc_id"), lit(status).as("status"))
-    val ledger = tag(withQ.filter(!col("pass")), "drop_quality")
-      .unionAll(tag(probed.filter(col("keep_id") === col("doc_id")), "readmitted"))
-      .unionAll(tag(probed.filter(col("keep_id").isNotNull &&
-        col("keep_id") =!= col("doc_id")), "drop_exact_index"))
-      .unionAll(tag(fresh.join(keepB, "text_hash")
-        .filter(col("doc_id") =!= col("kid")), "drop_exact_batch"))
-      .unionAll(tag(exactSurv.join(idxMatched, Seq("doc_id"), "left_semi"),
-        "drop_near_index"))
-      .unionAll(tag(nearSurv.join(batchLosers, Seq("doc_id"), "left_semi"),
-        "drop_near_batch"))
-      .unionAll(tag(nearSurv.join(batchLosers, Seq("doc_id"), "left_anti"),
-        "admitted"))
-      .localCheckpoint() // BEFORE appends — see the scaladoc contract
+      def tag(df: DataFrame, status: String): DataFrame =
+        df.select(col("doc_id"), lit(status).as("status"))
+      // BEFORE appends — see the scaladoc contract
+      val ledger = pinLedger(tag(withQ.filter(!col("pass")), "drop_quality")
+        .unionAll(tag(probed.filter(col("keep_id") === col("doc_id")), "readmitted"))
+        .unionAll(tag(probed.filter(col("keep_id").isNotNull &&
+          col("keep_id") =!= col("doc_id")), "drop_exact_index"))
+        .unionAll(tag(fresh.join(keepB, "text_hash")
+          .filter(col("doc_id") =!= col("kid")), "drop_exact_batch"))
+        .unionAll(tag(exactSurv.join(idxMatched, Seq("doc_id"), "left_semi"),
+          "drop_near_index"))
+        .unionAll(tag(nearSurv.join(batchLosers, Seq("doc_id"), "left_semi"),
+          "drop_near_batch"))
+        .unionAll(tag(nearSurv.join(batchLosers, Seq("doc_id"), "left_anti"),
+          "admitted")))
 
-    // NEAR-DROP HASH TOMBSTONES: every FRESH text_hash appends one
-    // row mapped to its resolved cluster keeper — not just the
-    // admitted docs' self-rows. A near-dropped doc's keeper is the
-    // smallest verified index match (an admitted doc by construction:
-    // only admitted docs band-index) or its within-batch component
-    // root (admitted: id = comp survives the closure). Without the
-    // tombstone, an exact duplicate of a near-dropped doc re-enters in
-    // a later batch — its canonical's hash was never indexed and its
-    // own bands need not reach the keeper (the chain ran THROUGH the
-    // dropped doc, whose bands are not indexed). With it, the dup
-    // reads back as drop_exact_index against the keeper.
-    val keeper = nearSurv.join(batchLosers, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("keep_id"))
-      .unionAll(idxPairs.groupBy(col("new_id"))
-        .agg(min(col("indexed_id")).as("keep_id"))
-        .select(col("new_id").as("doc_id"), col("keep_id")))
-      .unionAll(cc.filter(col("id") =!= col("comp"))
-        .select(col("id").as("doc_id"), col("comp").as("keep_id")))
-    val hashRows = keepB.select(col("text_hash"), col("kid").as("doc_id"))
-      .join(keeper, "doc_id")
-      .select(col("text_hash"), col("keep_id"))
-      .localCheckpoint() // BEFORE appends, like the ledger
+      // NEAR-DROP HASH TOMBSTONES: every FRESH text_hash appends one
+      // row mapped to its resolved cluster keeper — not just the
+      // admitted docs' self-rows. A near-dropped doc's keeper is the
+      // smallest verified index match (an admitted doc by construction:
+      // only admitted docs band-index) or its within-batch component
+      // root (admitted: id = comp survives the closure). Without the
+      // tombstone, an exact duplicate of a near-dropped doc re-enters in
+      // a later batch — its canonical's hash was never indexed and its
+      // own bands need not reach the keeper (the chain ran THROUGH the
+      // dropped doc, whose bands are not indexed). With it, the dup
+      // reads back as drop_exact_index against the keeper.
+      val keeper = nearSurv.join(batchLosers, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("doc_id").as("keep_id"))
+        .unionAll(idxPairs.groupBy(col("new_id"))
+          .agg(min(col("indexed_id")).as("keep_id"))
+          .select(col("new_id").as("doc_id"), col("keep_id")))
+        .unionAll(cc.filter(col("id") =!= col("comp"))
+          .select(col("id").as("doc_id"), col("comp").as("keep_id")))
+      val hashRows = pin(keepB.select(col("text_hash"), col("kid").as("doc_id"))
+        .join(keeper, "doc_id")
+        .select(col("text_hash"), col("keep_id"))) // BEFORE appends, like the ledger
 
-    val admitted = q
-      .join(ledger.filter(col("status") === "admitted").select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .localCheckpoint() // lineage must not re-read the indexes post-append
-    try {
+      // lineage must not re-read the indexes post-append
+      val admitted = pin(q
+        .join(ledger.filter(col("status") === "admitted").select("doc_id"),
+          Seq("doc_id"), "left_semi"))
       // band rows FIRST — the crash-window direction the replay
       // contract relies on (see the object scaladoc): a crash between
       // the appends leaves band-present/hash-absent, which replays as
       // fresh and converges; hash-first would leave a `readmitted`
-      // read with permanently missing bands.
+      // read with permanently missing bands. cc's terminal state frees
+      // inside connectedComponents' endgame.
       if (!admitted.isEmpty) IncrementalDedup.appendToIndex(admitted, bandIndex)
       if (!hashRows.isEmpty) appendHashRows(hashRows, hashIndex)
-    } catch { case t: Throwable =>
-      // an aborted batch returns nothing — its ledger frame would
-      // otherwise leak alongside the five below (r18 review: repeated
-      // transient append failures must not accumulate residue)
-      Checkpoints.free(ledger)
-      throw t
-    } finally {
-      // free the batch-scoped checkpoints THIS call created whether
-      // the appends committed or aborted (r18 review: a stream runs
-      // curateBatch forever, and per-batch residue left to GC is the
-      // pressure class this round eliminated). The returned ledger
-      // keeps its checkpoint on success — the caller reads it. cc's
-      // terminal state frees inside connectedComponents' endgame;
-      // verifiedPairs' candidate frames are O(candidates) and stay
-      // GC-reclaimed.
-      Checkpoints.free(withHash)
-      Checkpoints.free(probed)
-      Checkpoints.free(idxPairs)
-      Checkpoints.free(hashRows)
-      Checkpoints.free(admitted)
+      ledger
     }
-    ledger
-  }
 }

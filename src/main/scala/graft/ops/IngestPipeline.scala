@@ -19,11 +19,10 @@ import org.apache.spark.sql.types.StructType
   *      parses them PERMISSIVE against `schema`: a row that fails
   *      type conversion or shape lands with its raw line in
   *      `_corrupt_record` and NULLed data columns.
-  *   2. The batch is `localCheckpoint`ed once — both splits read the
-  *      materialized rows (a CSV relation whose only referenced
-  *      column is the corrupt-record column is disallowed by Spark,
-  *      and re-parsing per split would double the scan), and freed
-  *      once both writes end: a replay re-reads the source.
+  *   2. [[Streaming.sink]] hands the batch over pinned — both splits
+  *      read the materialized rows (a CSV relation whose only
+  *      referenced column is the corrupt-record column is disallowed
+  *      by Spark, and re-parsing per split would double the scan).
   *   3. Bad rows (raw line, source file, batch id) OVERWRITE the
   *      batch-keyed quarantine partition `batch=<id>` — overwrite
   *      makes the quarantine exactly-once under replay without any
@@ -99,26 +98,25 @@ object IngestPipeline {
   }
 
   /** One micro-batch of the composite — factored out so the spec can
-    * also drive edge cases directly. See the object scaladoc for the
+    * also drive edge cases directly. `batch` is read twice (one read
+    * per split), so it should be materialized, as [[Streaming.sink]]
+    * hands it over. See the object scaladoc for the
     * ordering/idempotence argument.
     */
   private[graft] def ingestBatch(batch: DataFrame, batchId: Long,
       snapshotPath: String, quarantinePath: String, nBuckets: Int,
       beforeCommit: () => Unit, afterCommit: () => Unit): Unit = {
-    val b = batch.localCheckpoint()
-    try {
-      val bad = b.filter(col("_corrupt_record").isNotNull)
-        .select(col("_corrupt_record").as("raw"),
-          col("_src_file").as("src_file"))
-      // overwrite of the batch-keyed partition = exactly-once quarantine
-      // under at-least-once replay
-      bad.write.mode("overwrite").parquet(s"$quarantinePath/batch=$batchId")
-      val good = b.filter(col("_corrupt_record").isNull)
-        .drop("_corrupt_record", "_src_file")
-      Streaming.upsertBatchInto(snapshotPath,
-        good.withColumn("bucket", Streaming.upsertBucket(nBuckets)),
-        batchId, Streaming.upsertLatest, beforeCommit, afterCommit)
-    } finally Checkpoints.free(b)
+    val bad = batch.filter(col("_corrupt_record").isNotNull)
+      .select(col("_corrupt_record").as("raw"),
+        col("_src_file").as("src_file"))
+    // overwrite of the batch-keyed partition = exactly-once quarantine
+    // under at-least-once replay
+    bad.write.mode("overwrite").parquet(s"$quarantinePath/batch=$batchId")
+    val good = batch.filter(col("_corrupt_record").isNull)
+      .drop("_corrupt_record", "_src_file")
+    Streaming.upsertBatchInto(snapshotPath,
+      good.withColumn("bucket", Streaming.upsertBucket(nBuckets)),
+      batchId, Streaming.upsertLatest, beforeCommit, afterCommit)
   }
 
   /** Read the accumulated quarantine (all batches). Before the first

@@ -526,7 +526,7 @@ object Llm {
 
   /** Pair → cluster closure for the MinHash family: components over
     * [[dedupMinhashLsh]]'s verified pair set — the same composition
-    * TrainingPipeline applies to SimHash pairs, exposed as its own
+    * [[CurationPipeline]] applies to its jaccard pairs, exposed as its own
     * key so the MinHash path's dedup loop (pairs → clusters → keep
     * min-id per cluster) closes inside the library too. Seeded MinHash
     * ⇒ no SQL oracle; LlmSpec asserts the clusters equal the

@@ -157,13 +157,21 @@ object Streaming {
     * checkpoint advances only after `f` returns, so a restart replays
     * the last batch under the same `batchId`, and each `f` carries its
     * own replay guard.
+    *
+    * `f` receives the batch PINNED ([[Checkpoints.scoped]]): every
+    * sink reads its batch at least twice (an emptiness check, then the
+    * work), and the pin makes those one read of the source. The pin is
+    * freed when `f` returns or throws; a replay re-reads the source.
+    * `f` may free frames that read the pin itself (a callee's edge
+    * frame over its input, say) — a second `unpersist` of the same
+    * blocks is a no-op.
     */
   def sink(stream: DataFrame, checkpointDir: String)(
       f: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        f(batch.toDF(), batchId)
+        Checkpoints.scoped(pin => f(pin(batch.toDF()), batchId))
       }
       .start()
 

@@ -96,15 +96,23 @@ class BpeMergeSpec extends SparkSpec {
     val rnd = new scala.util.Random(99)
     val words = Seq.fill(60)((1 to (1 + rnd.nextInt(6)))
       .map(_ => ('a' + rnd.nextInt(3)).toChar).mkString)
-    val docs = words.grouped(10).map(_.mkString(" ")).toSeq
-    val wordCounts = words.groupBy(identity).map { case (w, g) => w -> g.size.toLong }
-    val expect = refRounds(wordCounts, 8, minCount = 5L)
-    val got = ops.Bpe.mergeRounds(docsDf(docs), 8, minCount = 5L)
-      .as[(String, String, Long, Long)].collect()
-      .map { case (w, m, _, _) => w -> m }.toMap
-    assert(got.keySet === expect.keySet)
-    expect.foreach { case (w, syms) =>
-      assert(got(w) === syms.mkString(" "), s"word $w")
+    // plus an early stop: minCount 3 binds after one round ("aa"
+    // repeats, the rest is noise), so the loop must exit at k 10 with
+    // the one live rule applied
+    val inputs = Seq(
+      (words.grouped(10).map(_.mkString(" ")).toSeq, 8, 5L),
+      (Seq("aa aa aa aa", "aa ab ba", "cd ce"), 10, 3L))
+    inputs.foreach { case (docs, k, minCount) =>
+      val wordCounts = docs.flatMap(_.split(" ")).groupBy(identity)
+        .map { case (w, g) => w -> g.size.toLong }
+      val expect = refRounds(wordCounts, k, minCount)
+      val got = ops.Bpe.mergeRounds(docsDf(docs), k, minCount)
+        .as[(String, String, Long, Long)].collect()
+        .map { case (w, m, _, _) => w -> m }.toMap
+      assert(got.keySet === expect.keySet)
+      expect.foreach { case (w, syms) =>
+        assert(got(w) === syms.mkString(" "), s"word $w (k $k, minCount $minCount)")
+      }
     }
   }
 
@@ -132,26 +140,6 @@ class BpeMergeSpec extends SparkSpec {
       assert(nb >= nw && nb <= nc, s"doc $d: words=$nw bpe=$nb chars=$nc")
       assert(math.abs(r - nc.toDouble / nb.toDouble) < 1e-12, s"doc $d ratio")
     }
-  }
-
-  test("driver-measured training equals the in-plan form under an early stop") {
-    // corpus where minCount=3 binds after ~1 round: "aa" repeats, the
-    // rest is noise — the driver loop must exit early yet land on the
-    // exact vocabulary the k-plan-rounds form produces
-    val docs = Seq("aa aa aa aa", "aa ab ba", "cd ce")
-    val inPlan = ops.Bpe.trainedVocab(docsDf(docs), 10, 3L)
-      .select("w", "syms", "cnt").as[(String, Seq[String], Long)].collect().toSet
-    val driver = ops.Bpe.trainedVocabDriver(docsDf(docs), 10, 3L)
-      .select("w", "syms", "cnt").as[(String, Seq[String], Long)].collect().toSet
-    assert(driver === inPlan)
-    assert(inPlan.contains(("aa", Seq("aa"), 5L))) // the one live rule fired
-    // and the rule TABLE forms agree under the same early stop
-    val rulesIn = ops.Bpe.rulesTable(docsDf(docs), 10, 3L)
-      .as[(Int, String, String, Long)].collect().toSeq
-    val rulesDr = ops.Bpe.rulesTableDriver(docsDf(docs), 10, 3L)
-      .as[(Int, String, String, Long)].collect().toSeq
-    assert(rulesDr === rulesIn)
-    assert(rulesIn.head === ((0, "a", "a", 5L)))
   }
 
   test("applyRules: ordered left-greedy transfer to a foreign vocabulary") {

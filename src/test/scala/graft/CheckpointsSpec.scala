@@ -9,8 +9,8 @@ import org.apache.spark.storage.StorageLevel
   * through the loop drivers / curateBatch / the composite):
   * free() reclaims at the call; freeing is FINAL (no recompute path);
   * the semantic is LEAF-SET (a derived frame frees every checkpoint
-  * it reads); non-checkpoint frames are safe no-ops; isHandle
-  * distinguishes the bare handle.
+  * it reads); scoped() frees its pins on every path; non-checkpoint
+  * frames are safe no-ops; isHandle distinguishes the bare handle.
   */
 class CheckpointsSpec extends SparkSpec {
 
@@ -45,6 +45,29 @@ class CheckpointsSpec extends SparkSpec {
     assert((leafRdds(a) ++ leafRdds(b))
       .forall(_.getStorageLevel === StorageLevel.NONE),
       "both input checkpoints must be freed through the derived frame")
+  }
+
+  test("scoped frees every pin when its body returns, and when it throws") {
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val n = ops.Checkpoints.scoped { pin =>
+      pins += pin(spark.range(0, 100).toDF("id"))
+      pins += pin(spark.range(0, 50).toDF("id"))
+      assert(pins.forall(ops.Checkpoints.isHandle))
+      pins.map(_.count()).sum
+    }
+    assert(n === 150L, "the body reads its pins before the scope ends")
+    assert(pins.flatMap(leafRdds).forall(_.getStorageLevel === StorageLevel.NONE),
+      "a returning body's pins are freed")
+    pins.clear()
+    intercept[IllegalStateException] {
+      ops.Checkpoints.scoped { pin =>
+        pins += pin(spark.range(0, 10).toDF("id"))
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(pins.size === 1 &&
+      pins.flatMap(leafRdds).forall(_.getStorageLevel === StorageLevel.NONE),
+      "a throwing body's pins are freed")
   }
 
   test("non-checkpoint frames are safe no-ops: scans, local relations, rdd-backed frames") {

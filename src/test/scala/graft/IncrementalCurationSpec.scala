@@ -161,6 +161,8 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalDedup.buildIndex(seed, "ic4_band")
 
     drop("f1.csv", 100L -> text("f100"), 101L -> text("st1"))
+    val blocks = new RddBlocks
+    spark.sparkContext.addSparkListener(blocks)
     val q = ops.IncrementalCuration.curateStream(spark, watch, schema,
       "ic4_hash", "ic4_band", ledger, ckpt)
     try {
@@ -173,12 +175,19 @@ class IncrementalCurationSpec extends SparkSpec {
       // batch-0 admission is in the indexes by the time batch 1 runs
       drop("f2.csv", 110L -> nearOf("f100"), 111L -> text("f111"))
       q.processAllAvailable()
+      q.stop()
+      // every pin of every batch — the sink's, curateBatch's, the
+      // ledger's — is freed once its batch ends
+      blocks.assertNoneLive()
       val l2 = ops.IncrementalCuration.readLedger(spark, ledger)
         .filter(col("batch") === 1)
         .select(col("doc_id").cast("long"), col("status"))
         .as[(Long, String)].collect().toSet
       assert(l2 === Set((110L, "drop_near_index"), (111L, "admitted")), l2)
-    } finally q.stop()
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(blocks)
+    }
   }
 
   test("crash window: a duplicate band append cannot evict or re-admit") {

@@ -695,7 +695,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text_bpe_merge: argmax is TakeOrdered(1), pair counts partial-agg") {
-    val df = ops.Bpe.textBpeMerge(spark, dir)
+    // a training round's rule selection (text_bpe_merge replays the
+    // collected rules, so its own plan holds only the folds)
+    val df = ops.Bpe.bestRule(ops.Bpe.vocab(io.Readers.table(spark, dir, "documents")), 1L)
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), p)
     // per-round rule argmax never global-sorts

@@ -134,6 +134,8 @@ class QuantileServiceSpec extends SparkSpec {
     val name = "qsvc_stream"
     val ckpt = java.nio.file.Files.createTempDirectory("qsvc_ckpt").toString
     val stream = MemoryStream[(java.sql.Timestamp, Double)]
+    val blocks = new RddBlocks
+    spark.sparkContext.addSparkListener(blocks)
     val q = ops.Streaming.sink(
       stream.toDF().toDF("ts", "value"), ckpt)(ops.Streaming.applyQuantileBatch(name))
     try {
@@ -146,6 +148,9 @@ class QuantileServiceSpec extends SparkSpec {
       stream.addData(Seq((ts("2024-03-01 12:00:00"), 3.0),
         (ts("2024-03-02 09:00:00"), 4.0)))
       q.processAllAvailable()
+      q.stop()
+      // the sink pins each batch and frees the pin when the batch ends
+      blocks.assertNoneLive()
       val t = spark.table(io.TableManifest.resolve(spark, name,
         ops.QuantileService.SchemaVersion))
         .select("day", "n").as[(String, Long)].collect().toMap
@@ -163,6 +168,7 @@ class QuantileServiceSpec extends SparkSpec {
       assert(ops.QuantileService.quantiles(spark, name, Seq(0.5)).head._2 == 2.0)
     } finally {
       q.stop()
+      spark.sparkContext.removeSparkListener(blocks)
       io.TableManifest.drop(spark, name)
     }
   }

@@ -283,6 +283,8 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("upsert").toString
     val snap = s"$dir/snapshot"
     val stream = MemoryStream[Ev]
+    val blocks = new RddBlocks
+    spark.sparkContext.addSparkListener(blocks)
     val q = ops.Streaming.foreachBatchUpsert(stream.toDF(), snap, s"$dir/ckpt")
     try {
       stream.addData(Seq(ev(1, "2024-01-01 10:00:00", 1, "click", 1.0),
@@ -290,12 +292,18 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       stream.addData(Seq(ev(3, "2024-01-01 11:00:00", 1, "click", 9.0))) // supersedes ev1
       q.processAllAvailable()
+      q.stop()
+      // the sink pins each batch and frees the pin when the batch ends
+      blocks.assertNoneLive()
       val r = io.Manifest.readSnapshot(spark, snap)
         .select("user_id", "event_id", "value").as[(Long, Long, Double)].collect()
         .map(t => t._1 -> (t._2, t._3)).toMap
       assert(r(1L) === (3L, 9.0), "second batch must supersede first for user 1")
       assert(r(2L) === (2L, 2.0))
-    } finally q.stop()
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(blocks)
+    }
   }
 
   test("bucketed upsert leaves untouched buckets byte-identical (files AND manifest entries)") {

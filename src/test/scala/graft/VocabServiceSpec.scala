@@ -66,11 +66,15 @@ class VocabServiceSpec extends SparkSpec {
     val crashDocs = docs.filter(col("doc_id") % 3 === 1)
     val nextDocs = docs.filter(col("doc_id") % 3 === 2)
     ops.VocabService.build(spark, "vsvc_mc", half1)
+    val blocks = new RddBlocks
+    spark.sparkContext.addSparkListener(blocks)
     try {
       intercept[RuntimeException] {
         ops.VocabService.appendDocs(crashDocs, "vsvc_mc",
           afterPartialsAppend = () => throw new RuntimeException("boom"))
       }
+      // the crashed append's pin is freed at the throw, not left to GC
+      blocks.assertNoneLive()
       ops.VocabService.appendDocs(nextDocs, "vsvc_mc")
       val got = counts(ops.VocabService.countsOver(spark, "vsvc_mc"))
       val want = counts(ops.InfoTheory.vocabCounts(half1.unionByName(nextDocs)))
@@ -79,7 +83,11 @@ class VocabServiceSpec extends SparkSpec {
       ops.VocabService.appendDocs(crashDocs, "vsvc_mc")
       val all = counts(ops.VocabService.countsOver(spark, "vsvc_mc"))
       assert(all === counts(ops.InfoTheory.vocabCounts(docs)), "retry completes")
-    } finally io.TableManifest.drop(spark, "vsvc_mc")
+      blocks.assertNoneLive()
+    } finally {
+      spark.sparkContext.removeSparkListener(blocks)
+      io.TableManifest.drop(spark, "vsvc_mc")
+    }
   }
 
   test("crash between partials and ledger: replay converges exactly, orphan rows invisible") {
