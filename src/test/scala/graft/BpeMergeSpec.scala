@@ -142,6 +142,37 @@ class BpeMergeSpec extends SparkSpec {
     }
   }
 
+  test("driver-measured training equals the in-plan form under an early stop") {
+    // corpus where minCount=3 binds after ~1 round: "aa" repeats, the
+    // rest is noise — the driver loop must exit early yet land on the
+    // exact vocabulary and rule table of the in-plan form, which plans
+    // all k rounds and lets a sub-threshold round no-op instead of
+    // ending the loop (rebuilt here from bestRule + applyRules)
+    val docs = Seq("aa aa aa aa", "aa ab ba", "cd ce")
+    val (inPlanState, rulesIn) = (0 until 10).foldLeft(
+        (ops.Bpe.vocab(docsDf(docs)), Seq.empty[(Int, String, String, Long)])) {
+      case ((st, rules), _) =>
+        ops.Bpe.bestRule(st, 3L).select("pa", "pb", "pc")
+          .as[(String, String, Long)].collect().headOption match {
+          case Some((pa, pb, pc)) =>
+            (ops.Bpe.applyRules(st, Seq((pa, pb))), rules :+ ((rules.length, pa, pb, pc)))
+          case None => (st, rules)
+        }
+    }
+    val inPlan = inPlanState
+      .select("w", "syms", "cnt").as[(String, Seq[String], Long)].collect().toSet
+    val driver = ops.Bpe.mergeRounds(docsDf(docs), 10, 3L)
+      .as[(String, String, Long, Long)].collect()
+      .map { case (w, m, _, c) => (w, m.split(" ").toSeq, c) }.toSet
+    assert(driver === inPlan)
+    assert(inPlan.contains(("aa", Seq("aa"), 5L))) // the one live rule fired
+    // and the rule TABLE forms agree under the same early stop
+    val rulesDr = ops.Bpe.rulesTable(docsDf(docs), 10, 3L)
+      .as[(Int, String, String, Long)].collect().toSeq
+    assert(rulesDr === rulesIn)
+    assert(rulesIn.head === ((0, "a", "a", 5L)))
+  }
+
   test("applyRules: ordered left-greedy transfer to a foreign vocabulary") {
     // rules learned elsewhere, applied in order: (a,a) then (aa,a)
     val target = Seq((1L, "aaa aaaa ab"))
