@@ -108,7 +108,8 @@ object Bpe {
     */
   private[graft] def mergeRounds(docs: DataFrame, k: Int,
       minCount: Long = 1L): DataFrame =
-    applyRules(vocab(docs), ruleList(rulesTable(docs, k, minCount)))
+    applyRules(vocab(docs),
+        trainRules(docs, k, minCount).map { case (pa, pb, _) => (pa, pb) })
       .select(col("w"), concat_ws(" ", col("syms")).as("merged"),
         size(col("syms")).cast("long").as("n_syms"), col("cnt").as("n_occ"))
       .orderBy("w")
@@ -163,20 +164,17 @@ object Bpe {
       .orderBy("doc_id")
   }
 
-  /** The RULE TABLE itself — the tokenizer artifact a serving system
-    * loads: one row per executed merge round (round index, the pair,
-    * its count at selection time), under the training parameters.
-    * Each round's 0-or-1-row argmax is COLLECTED (k-bounded driver
-    * data — the rule rows ARE the output) and a sub-threshold or
-    * exhausted round ends the loop, so the table's length IS the
-    * effective training depth and dead rounds cost nothing (2.7× at
-    * k = 32 where 22 rounds are dead — BASELINE.md r10-resume).
+  /** The training loop: the executed rounds' rules (pa, pb, pc) in
+    * training order. Each round's 0-or-1-row argmax is COLLECTED
+    * (k-bounded driver data — the rules ARE the model) and a
+    * sub-threshold or exhausted round ends the loop, so dead rounds
+    * cost nothing (2.7× at k = 32 where 22 rounds are dead —
+    * BASELINE.md r10-resume).
     */
-  private[graft] def rulesTable(docs: DataFrame, k: Int,
-      minCount: Long): DataFrame = {
-    val spark = docs.sparkSession
+  private def trainRules(docs: DataFrame, k: Int,
+      minCount: Long): Seq[(String, String, Long)] = {
     var st = vocab(docs).localCheckpoint()
-    val rules = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    val rules = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var live = true
     while (rules.length < k && live) {
       val best = bestRule(st, minCount)
@@ -184,22 +182,30 @@ object Bpe {
       if (best.isEmpty) live = false
       else {
         val (pa, pb) = (best(0).getString(0), best(0).getString(1))
-        rules += ((rules.length, pa, pb, best(0).getLong(2)))
+        rules += ((pa, pb, best(0).getLong(2)))
         val prev = st
         st = applyRule(st, pa, pb).localCheckpoint()
         Checkpoints.free(prev) // superseded round state
       }
     }
     Checkpoints.free(st) // rules are driver data; the state feeds nothing
-    import spark.implicits._
-    spark.createDataset(rules.toSeq).toDF("round", "pa", "pb", "pc")
-      .orderBy("round")
+    rules.toSeq
   }
 
-  /** The (pa, pb) rules of a [[rulesTable]] in training order. */
-  private def ruleList(rules: DataFrame): Seq[(String, String)] =
-    rules.orderBy("round").select(col("pa"), col("pb")).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
+  /** The RULE TABLE itself — the tokenizer artifact a serving system
+    * loads: one row per executed merge round (round index, the pair,
+    * its count at selection time), under the training parameters.
+    * The table's length IS the effective training depth.
+    */
+  private[graft] def rulesTable(docs: DataFrame, k: Int,
+      minCount: Long): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    spark.createDataset(trainRules(docs, k, minCount).zipWithIndex
+        .map { case ((pa, pb, pc), round) => (round, pa, pb, pc) })
+      .toDF("round", "pa", "pb", "pc")
+      .orderBy("round")
+  }
 
   /** Session-shared trained tokenizer (round 15): FIVE keys consume
     * the identical (TrainRounds, TrainMinCount) model — the rule
@@ -210,7 +216,7 @@ object Bpe {
     * at sf0.1, isolated). One [[SessionCache]] entry per artifact
     * now holds them, which is also the deployment truth: a
     * tokenizer is TRAINED ONCE and served everywhere; no consumer
-    * retrains per query. The rules build runs [[rulesTable]] once;
+    * retrains per query. The rules build runs [[trainRules]] once;
     * the state entry replays the collected rules over the initial
     * vocabulary with row-local folds ([[applyRules]] — no pair
     * counting, no per-round checkpoints), which is exactly the
@@ -229,7 +235,9 @@ object Bpe {
     */
   private def trainedRuleList(s: org.apache.spark.sql.SparkSession,
       dir: String): Seq[(String, String)] =
-    ruleList(trainedRulesShared(s, dir))
+    trainedRulesShared(s, dir).orderBy("round")
+      .select(col("pa"), col("pb")).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
 
   /** Session-shared trained vocabulary state (w, cnt, syms) under the
     * training parameters — see [[trainedRulesShared]].

@@ -30,8 +30,9 @@ import org.apache.spark.sql.DataFrame
   * pin any number of frames; it must finish every read of them before
   * it returns, so it may return driver data, a write's effect, or a
   * frame that reads none of its pins, never a lazy frame over a pin.
-  * The body may lend `pin` to a callee, whose pins then share the
-  * scope ([[IncrementalCuration.curateBatch]] lends it to its probes).
+  * The body may lend `pin` to a callee whose result it reads, so
+  * that result dies with the scope ([[IncrementalCuration.curateBatch]]
+  * pins its ledger through the caller's scope).
   * [[Streaming.sink]] runs every micro-batch through it, so each
   * sink's batch pin lives exactly as long as its batch. Loop states
   * superseded round by round ([[Iterate]], Graph's round loops) and

@@ -249,11 +249,12 @@ object ClusterMaintenance {
       // it too, so that free waits for the last read
       val pairs = Bipartite.deletionPairsCollapsed(prof, p, q, ProfileIndex.Depth)
         .select("a_id", "b_id")
-      Streaming.upsertBatchInto(snapshotPath,
-        prof.withColumn("bucket", profileBucket(nBuckets)), -1L, mergeProfiles)
-      ProfileIndex.buildIndex(prof, indexName, buckets)
-      bootstrapLabels(Llm.connectedComponents(pairs), labelsName, buckets)
-      Checkpoints.free(pairs) // the collapsed join's own pins
+      try {
+        Streaming.upsertBatchInto(snapshotPath,
+          prof.withColumn("bucket", profileBucket(nBuckets)), -1L, mergeProfiles)
+        ProfileIndex.buildIndex(prof, indexName, buckets)
+        bootstrapLabels(Llm.connectedComponents(pairs), labelsName, buckets)
+      } finally Checkpoints.free(pairs) // the collapsed join's own pins
     }
   }
 

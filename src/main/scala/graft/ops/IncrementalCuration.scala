@@ -249,8 +249,8 @@ object IncrementalCuration {
       .csv(watchDir)
     Streaming.sink(stream, checkpointDir) { (batch, batchId) =>
       Checkpoints.scoped { pin =>
-        curateBatch(batch, hashIndex, bandIndex,
-          verifyCorpus = verifyCorpus.map(_()), pinLedger = pin)
+        curateBatch(batch, hashIndex, bandIndex, pin,
+          verifyCorpus = verifyCorpus.map(_()))
           .write.mode("overwrite").parquet(s"$ledgerPath/batch=$batchId")
       }
     }
@@ -337,14 +337,12 @@ object IncrementalCuration {
     * scanned map-only (partition-/file-prunable when the caller's
     * store is keyed on doc_id) and NOTHING corpus-sized shuffles or
     * computes shingles; the shingle work and the verify join are
-    * O(candidates). Plan-audited in IncrementalCurationSpec. `pin`
-    * materializes the candidates ([[IncrementalDedup.matchAgainstIndex]]'s
-    * ownership rule).
+    * O(candidates). Plan-audited in IncrementalCurationSpec.
     */
   private[graft] def verifiedPairs(cand0: DataFrame, aId: String,
       aDocs: DataFrame, bId: String, bDocs: DataFrame,
-      tau: Double, pin: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    val cand = pin(cand0.select(col(aId), col(bId)))
+      tau: Double): DataFrame = {
+    val cand = cand0.select(col(aId), col(bId)).localCheckpoint()
     def side(d: DataFrame, id: String, pre: String) = d
       .join(broadcast(cand.select(col(id).as("doc_id")).distinct()),
         Seq("doc_id"), "left_semi")
@@ -387,17 +385,17 @@ object IncrementalCuration {
     * the index probe and the within-batch pairs verify, so the two
     * near tiers keep one semantics).
     *
-    * `pinLedger` materializes the returned ledger: by default the
-    * caller owns that checkpoint, while [[curateStream]] passes its
-    * scope's pin, so the ledger is freed with the batch. Every other
+    * `pinLedger` materializes the returned ledger, so the caller owns
+    * its lifetime: callers pass the pin of their own
+    * [[Checkpoints.scoped]] and read the ledger inside it. Every other
     * frame this call pins is freed before it returns or throws.
     */
   def curateBatch(delta: DataFrame,
       hashIndex: String, bandIndex: String,
+      pinLedger: DataFrame => DataFrame,
       minAgree: Double = 0.5,
       verifyCorpus: Option[DataFrame] = None,
-      tau: Double = 0.5,
-      pinLedger: DataFrame => DataFrame = _.localCheckpoint()): DataFrame =
+      tau: Double = 0.5): DataFrame =
     Checkpoints.scoped { pin =>
       // reads and writes ride the delta's session, refreshed first (the
       // staleness guard in the object scaladoc); resolve fails fast on a
@@ -425,11 +423,11 @@ object IncrementalCuration {
 
       // near probe against the band index, then within-batch closure
       val idxCand =
-        IncrementalDedup.matchAgainstIndex(sess, exactSurv, bandIndex, minAgree, pin)
+        IncrementalDedup.matchAgainstIndex(sess, exactSurv, bandIndex, minAgree)
       // read by the near filter AND the keeper join — on the verified
       // path the exact-verify joins must not run twice
       val idxPairs = pin(verifyCorpus.fold(idxCand)(corpus =>
-          verifiedPairs(idxCand, "new_id", exactSurv, "indexed_id", corpus, tau, pin))
+          verifiedPairs(idxCand, "new_id", exactSurv, "indexed_id", corpus, tau))
         .select(col("new_id"), col("indexed_id")))
       val idxMatched = idxPairs.select(col("new_id").as("doc_id")).distinct()
       val nearSurv = exactSurv.join(idxMatched, Seq("doc_id"), "left_anti")
@@ -445,7 +443,7 @@ object IncrementalCuration {
         .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
         .distinct()
       val batchPairs = verifyCorpus.fold(batchPairs0)(_ =>
-        verifiedPairs(batchPairs0, "a_id", nearSurv, "b_id", nearSurv, tau, pin))
+        verifiedPairs(batchPairs0, "a_id", nearSurv, "b_id", nearSurv, tau))
       val cc = Llm.connectedComponents(batchPairs)
       val batchLosers = cc.filter(col("id") =!= col("comp"))
         .select(col("id").as("doc_id"))

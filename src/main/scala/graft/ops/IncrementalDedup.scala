@@ -140,17 +140,13 @@ object IncrementalDedup {
     * (new_id, indexed_id) candidate pair whose estimated Jaccard
     * (signature agreement) reaches `minAgree`. The batch's partition
     * set (≤ 256 values, driver-bounded by construction) prunes the
-    * index scan to the touched directories before the join. The
-    * batch's band rows are read twice (the partition probe + the
-    * join), so `pin` materializes them: by default the result owns
-    * that checkpoint, while a caller inside [[Checkpoints.scoped]]
-    * passes its scope's pin and must materialize the result there.
+    * index scan to the touched directories before the join.
     */
   def matchAgainstIndex(spark: SparkSession, newDocs: DataFrame,
-      tableName: String, minAgree: Double = 0.5,
-      pin: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
-    val nb = pin(bandRows(newDocs)
-      .select(col("bk"), col("doc_id").as("new_id"), col("sig").as("new_sig")))
+      tableName: String, minAgree: Double = 0.5): DataFrame = {
+    val nb = bandRows(newDocs)
+      .select(col("bk"), col("doc_id").as("new_id"), col("sig").as("new_sig"))
+      .localCheckpoint() // read twice: the partition probe + the join
     val bps = withBp(nb).select(col("bp")).distinct().collect().map(_.getInt(0))
     val idx = spark.table(resolveTable(spark, tableName))
       .filter(col("bp").isin(bps.map(Int.box): _*))

@@ -30,6 +30,19 @@ class IncrementalCurationSpec extends SparkSpec {
     df.select(col("doc_id").cast("long"), col("status"))
       .as[(Long, String)].collect().toMap
 
+  /** Is live RDD `id` matchAgainstIndex's band rows, a callee pin that
+    * curateBatch leaves to GC? Of the frames a batch of at most `docs`
+    * docs pins, only those hold more rows (one per band per doc).
+    */
+  private def probeRows(docs: Int)(id: Int): Boolean =
+    spark.sparkContext.getPersistentRDDs.get(id)
+      .exists(r => scala.util.Try(r.count() > docs).getOrElse(false))
+
+  /** A curateBatch ledger, read inside the scope that pins it. */
+  private def curated(curate: (org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame): Map[Long, String] =
+    ops.Checkpoints.scoped(pin => ledgerMap(curate(pin)))
+
   private def hashCount(name: String): Long =
     spark.table(ops.IncrementalCuration.resolveHashTable(spark, name)).count()
 
@@ -49,8 +62,8 @@ class IncrementalCurationSpec extends SparkSpec {
       14L -> text("b13"),                  // exact dup of 13 WITHIN the batch
       15L -> nearOf("b13"),                // near dup of 13 WITHIN the batch
       16L -> text("b16"))                  // fresh
-    val led = ledgerMap(ops.IncrementalCuration.curateBatch(
-      batch, hashIdx, bandIdx))
+    val led = curated(ops.IncrementalCuration.curateBatch(
+      batch, hashIdx, bandIdx, _))
     assert(led === Map(
       10L -> "drop_quality",
       11L -> "drop_exact_index",
@@ -71,8 +84,8 @@ class IncrementalCurationSpec extends SparkSpec {
     // drop_exact_index — they hit their own tombstones (round 18; the
     // admitted/dropped partition is what re-presentation preserves,
     // attribution shifts to the exact tier by design)
-    val led2 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      batch, hashIdx, bandIdx))
+    val led2 = curated(ops.IncrementalCuration.curateBatch(
+      batch, hashIdx, bandIdx, _))
     assert(led2(13L) === "readmitted" && led2(16L) === "readmitted", led2.toString)
     assert(led2(10L) === "drop_quality")
     assert(led2(11L) === "drop_exact_index")
@@ -83,9 +96,9 @@ class IncrementalCurationSpec extends SparkSpec {
 
     // cross-batch: a near dup of batch-1's admission drops against the
     // index (and tombstones); genuinely new content admits
-    val led3 = ledgerMap(ops.IncrementalCuration.curateBatch(
+    val led3 = curated(ops.IncrementalCuration.curateBatch(
       docs(20L -> nearOf("b16"), 21L -> text("b21")),
-      hashIdx, bandIdx))
+      hashIdx, bandIdx, _))
     assert(led3 === Map(20L -> "drop_near_index", 21L -> "admitted"), led3.toString)
     assert(hashCount(hashIdx) === h0 + 6)
 
@@ -94,8 +107,8 @@ class IncrementalCurationSpec extends SparkSpec {
     // presented in a later batch must drop against 12's tombstone —
     // before tombstones its hash probe missed (12 never indexed) and
     // its admission depended on banding against the keeper
-    val led4 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      docs(30L -> nearOf("s2")), hashIdx, bandIdx))
+    val led4 = curated(ops.IncrementalCuration.curateBatch(
+      docs(30L -> nearOf("s2")), hashIdx, bandIdx, _))
     assert(led4 === Map(30L -> "drop_exact_index"),
       s"an exact dup of a near-dropped doc must hit the tombstone: $led4")
     assert(hashCount(hashIdx) === h0 + 6, "a tombstone hit appends nothing")
@@ -178,7 +191,7 @@ class IncrementalCurationSpec extends SparkSpec {
       q.stop()
       // every pin of every batch — the sink's, curateBatch's, the
       // ledger's — is freed once its batch ends
-      blocks.assertNoneLive()
+      blocks.assertNoneLive(probeRows(2))
       val l2 = ops.IncrementalCuration.readLedger(spark, ledger)
         .filter(col("batch") === 1)
         .select(col("doc_id").cast("long"), col("status"))
@@ -195,20 +208,20 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalCuration.buildHashIndex(seed, "ic2_hash")
     ops.IncrementalDedup.buildIndex(seed, "ic2_band")
     val batch = docs(30L -> text("c30"))
-    val led = ledgerMap(ops.IncrementalCuration.curateBatch(
-      batch, "ic2_hash", "ic2_band"))
+    val led = curated(ops.IncrementalCuration.curateBatch(
+      batch, "ic2_hash", "ic2_band", _))
     assert(led === Map(30L -> "admitted"))
     // simulate the replayed half-write: the band append runs AGAIN for
     // the already-admitted doc (crash after hash append + band append,
     // replay re-appends bands)
     ops.IncrementalDedup.appendToIndex(batch, "ic2_band")
-    val led2 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      batch, "ic2_hash", "ic2_band"))
+    val led2 = curated(ops.IncrementalCuration.curateBatch(
+      batch, "ic2_hash", "ic2_band", _))
     assert(led2 === Map(30L -> "readmitted"),
       "duplicate band rows must not change the admission read")
     // and a near dup still drops against the duplicated bands
-    val led3 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      docs(31L -> nearOf("c30")), "ic2_hash", "ic2_band"))
+    val led3 = curated(ops.IncrementalCuration.curateBatch(
+      docs(31L -> nearOf("c30")), "ic2_hash", "ic2_band", _))
     assert(led3 === Map(31L -> "drop_near_index"))
 
     // compaction collapses append growth into a fresh version; every
@@ -216,8 +229,8 @@ class IncrementalCurationSpec extends SparkSpec {
     val before = hashCount("ic2_hash")
     ops.IncrementalCuration.compactHashIndex(spark, "ic2_hash")
     assert(hashCount("ic2_hash") === before, "compaction must not lose rows")
-    val led4 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      batch, "ic2_hash", "ic2_band"))
+    val led4 = curated(ops.IncrementalCuration.curateBatch(
+      batch, "ic2_hash", "ic2_band", _))
     assert(led4 === Map(30L -> "readmitted"),
       "admission reads identically through the compacted version")
   }
@@ -237,19 +250,41 @@ class IncrementalCurationSpec extends SparkSpec {
     // the hash append never ran
     ops.IncrementalDedup.appendToIndex(batch, "ic5_band")
     val before = hashCount("ic5_hash")
-    val led = ledgerMap(ops.IncrementalCuration.curateBatch(
-      batch, "ic5_hash", "ic5_band"))
+    val led = curated(ops.IncrementalCuration.curateBatch(
+      batch, "ic5_hash", "ic5_band", _))
     assert(led === Map(40L -> "admitted"),
       s"stranded bands must not read back as already-admitted: $led")
     assert(hashCount("ic5_hash") === before + 1, "the replay completes the hash append")
     // converged: re-presentation is now the no-op, and the doc's
     // (duplicated) bands detect future near-dups
-    val led2 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      batch, "ic5_hash", "ic5_band"))
+    val led2 = curated(ops.IncrementalCuration.curateBatch(
+      batch, "ic5_hash", "ic5_band", _))
     assert(led2 === Map(40L -> "readmitted"))
-    val led3 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      docs(41L -> nearOf("d40")), "ic5_hash", "ic5_band"))
+    val led3 = curated(ops.IncrementalCuration.curateBatch(
+      docs(41L -> nearOf("d40")), "ic5_hash", "ic5_band", _))
     assert(led3 === Map(41L -> "drop_near_index"))
+  }
+
+  test("aborted batch: a failing index append frees the ledger and every pin curateBatch made") {
+    ops.IncrementalCuration.buildHashIndex(docs(1L -> text("ab1")), "ic9_hash")
+    ops.IncrementalDedup.buildIndex(docs(1L -> text("ab1")), "ic9_band")
+    val blocks = new RddBlocks
+    spark.sparkContext.addSparkListener(blocks)
+    // the appends are the batch's only parquet writes, and no LZO codec
+    // ships with the engine: the band append throws after every pin,
+    // the ledger's included, is materialized
+    spark.conf.set("spark.sql.parquet.compression.codec", "lzo")
+    try {
+      intercept[Exception](curated(ops.IncrementalCuration.curateBatch(
+        docs(10L -> text("ab10")), "ic9_hash", "ic9_band", _)))
+      blocks.assertNoneLive(probeRows(1))
+    } finally {
+      spark.conf.unset("spark.sql.parquet.compression.codec")
+      spark.sparkContext.removeSparkListener(blocks)
+    }
+    assert(curated(ops.IncrementalCuration.curateBatch(
+      docs(10L -> text("ab10")), "ic9_hash", "ic9_band", _)) === Map(10L -> "admitted"),
+      "an aborted batch replays as fresh")
   }
 
   /** In-Scala word-bigram Jaccard mirroring `word_shingles(text, 2)`:
@@ -314,8 +349,8 @@ class IncrementalCurationSpec extends SparkSpec {
 
     ops.IncrementalCuration.buildHashIndex(docs(k * 2L -> fpA(k)), "ic6_hash")
     ops.IncrementalDedup.buildIndex(docs(k * 2L -> fpA(k)), "ic6_band")
-    val unverified = ledgerMap(ops.IncrementalCuration.curateBatch(
-      docs(k * 2L + 1L -> fpB(k)), "ic6_hash", "ic6_band"))
+    val unverified = curated(ops.IncrementalCuration.curateBatch(
+      docs(k * 2L + 1L -> fpB(k)), "ic6_hash", "ic6_band", _))
     assert(unverified === Map(k * 2L + 1L -> "drop_near_index"),
       s"the estimator false positive must drop on the default path: $unverified")
     // round 18: the default-path drop TOMBSTONED the doc's hash — its
@@ -324,8 +359,8 @@ class IncrementalCurationSpec extends SparkSpec {
     // encode the policy that wrote them — the policy-stability
     // contract in the object scaladoc; a verified deployment uses
     // verified indexes from the start)
-    val represented = ledgerMap(ops.IncrementalCuration.curateBatch(
-      docs(k * 2L + 1L -> fpB(k)), "ic6_hash", "ic6_band",
+    val represented = curated(ops.IncrementalCuration.curateBatch(
+      docs(k * 2L + 1L -> fpB(k)), "ic6_hash", "ic6_band", _,
       verifyCorpus = Some(docs(k * 2L -> fpA(k)))))
     assert(represented === Map(k * 2L + 1L -> "drop_exact_index"),
       s"a default-path tombstone outlives the estimator decision: $represented")
@@ -333,8 +368,8 @@ class IncrementalCurationSpec extends SparkSpec {
     // bigram jaccard rescues the doc
     ops.IncrementalCuration.buildHashIndex(docs(k * 2L -> fpA(k)), "ic6v_hash")
     ops.IncrementalDedup.buildIndex(docs(k * 2L -> fpA(k)), "ic6v_band")
-    val verified = ledgerMap(ops.IncrementalCuration.curateBatch(
-      docs(k * 2L + 1L -> fpB(k)), "ic6v_hash", "ic6v_band",
+    val verified = curated(ops.IncrementalCuration.curateBatch(
+      docs(k * 2L + 1L -> fpB(k)), "ic6v_hash", "ic6v_band", _,
       verifyCorpus = Some(docs(k * 2L -> fpA(k)))))
     assert(verified === Map(k * 2L + 1L -> "admitted"),
       s"exact verification must admit the estimator's false positive: $verified")
@@ -358,8 +393,8 @@ class IncrementalCurationSpec extends SparkSpec {
     val batch = docs(idA -> fpA(k), idB -> fpB(k))
     ops.IncrementalCuration.buildHashIndex(seed, "icA_hash")
     ops.IncrementalDedup.buildIndex(seed, "icA_band")
-    val led = ledgerMap(ops.IncrementalCuration.curateBatch(
-      batch, "icA_hash", "icA_band", verifyCorpus = Some(store)))
+    val led = curated(ops.IncrementalCuration.curateBatch(
+      batch, "icA_hash", "icA_band", _, verifyCorpus = Some(store)))
     assert(led === Map(idA -> "admitted", idB -> "admitted"),
       s"the rescued pair must co-admit: $led")
 
@@ -368,8 +403,8 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalCuration.buildHashIndex(seed, "icB_hash")
     ops.IncrementalDedup.buildIndex(seed, "icB_band")
     ops.IncrementalDedup.appendToIndex(batch, "icB_band")
-    val led2 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      batch, "icB_hash", "icB_band", verifyCorpus = Some(store)))
+    val led2 = curated(ops.IncrementalCuration.curateBatch(
+      batch, "icB_hash", "icB_band", _, verifyCorpus = Some(store)))
     assert(led2 === Map(idA -> "admitted", idB -> "admitted"),
       s"stranded bands of a rescued pair must not become mutual drops: $led2")
   }
@@ -456,8 +491,8 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalDedup.buildIndex(seed, "ic7_band")
     var store = seed
     def admitOne(id: Long, t: String): String = {
-      val led = ledgerMap(ops.IncrementalCuration.curateBatch(
-        docs(id -> t), "ic7_hash", "ic7_band", verifyCorpus = Some(store)))
+      val led = curated(ops.IncrementalCuration.curateBatch(
+        docs(id -> t), "ic7_hash", "ic7_band", _, verifyCorpus = Some(store)))
       if (led(id) == "admitted")
         store = store.unionByName(docs(id -> t))
       led(id)
@@ -489,8 +524,8 @@ class IncrementalCurationSpec extends SparkSpec {
     // idB (near-drops + tombstones) and a fresh doc 5
     ops.IncrementalCuration.buildHashIndex(docs(idA -> fpA(k)), "ic8_hash")
     ops.IncrementalDedup.buildIndex(docs(idA -> fpA(k)), "ic8_band")
-    val led1 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      docs(idB -> fpB(k), 5L -> text("ps5")), "ic8_hash", "ic8_band"))
+    val led1 = curated(ops.IncrementalCuration.curateBatch(
+      docs(idB -> fpB(k), 5L -> text("ps5")), "ic8_hash", "ic8_band", _))
     assert(led1 === Map(idB -> "drop_near_index", 5L -> "admitted"), led1.toString)
 
     // the admitted store after the stream: seed + admitted batch docs
@@ -507,23 +542,23 @@ class IncrementalCurationSpec extends SparkSpec {
     // CONVERGENCE: re-presenting the whole admitted store against the
     // rebuilt indexes is a no-op stream — every doc reads back
     // readmitted, nothing appends, no drop appears
-    val led2 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      store, "ic8v_hash", "ic8v_band", verifyCorpus = Some(store)))
+    val led2 = curated(ops.IncrementalCuration.curateBatch(
+      store, "ic8v_hash", "ic8v_band", _, verifyCorpus = Some(store)))
     assert(led2 === Map(idA -> "readmitted", 5L -> "readmitted"), led2.toString)
     assert(hashCount("ic8v_hash") === h0, "re-presentation must not append")
 
     // RECOVERY: the doc the default policy over-dropped re-enters —
     // its old tombstone is gone, the estimator match vs idA reaches
     // the verify stage, and the exact tau = 0.5 bigram jaccard admits
-    val led3 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      docs(idB -> fpB(k)), "ic8v_hash", "ic8v_band",
+    val led3 = curated(ops.IncrementalCuration.curateBatch(
+      docs(idB -> fpB(k)), "ic8v_hash", "ic8v_band", _,
       verifyCorpus = Some(store)))
     assert(led3 === Map(idB -> "admitted"),
       s"the rebuilt verified indexes must rescue the FP drop: $led3")
     // and the continued stream is stable: re-presenting the rescued
     // doc converges to readmitted on its own appended row
-    val led4 = ledgerMap(ops.IncrementalCuration.curateBatch(
-      docs(idB -> fpB(k)), "ic8v_hash", "ic8v_band",
+    val led4 = curated(ops.IncrementalCuration.curateBatch(
+      docs(idB -> fpB(k)), "ic8v_hash", "ic8v_band", _,
       verifyCorpus = Some(store.unionByName(docs(idB -> fpB(k))))))
     assert(led4 === Map(idB -> "readmitted"), led4.toString)
   }
@@ -595,12 +630,13 @@ class IncrementalCurationSpec extends SparkSpec {
     val seed = docs(1L -> text("lv"))
     ops.IncrementalCuration.buildHashIndex(seed, "icv_hash")
     ops.IncrementalDedup.buildIndex(seed, "icv_band")
-    def runBatch(bid: Long, rows: (Long, String)*): Map[Long, String] = {
-      val led = ops.IncrementalCuration.curateBatch(
-        docs(rows: _*), "icv_hash", "icv_band")
-      led.write.mode("overwrite").parquet(s"$ledger/batch=$bid")
-      ledgerMap(led)
-    }
+    def runBatch(bid: Long, rows: (Long, String)*): Map[Long, String] =
+      ops.Checkpoints.scoped { pin =>
+        val led = ops.IncrementalCuration.curateBatch(
+          docs(rows: _*), "icv_hash", "icv_band", pin)
+        led.write.mode("overwrite").parquet(s"$ledger/batch=$bid")
+        ledgerMap(led)
+      }
     def batches(): Set[Long] = ops.IncrementalCuration
       .readLedger(spark, ledger)
       .select(col("batch").cast("long")).distinct().as[Long].collect().toSet
@@ -641,8 +677,8 @@ class IncrementalCurationSpec extends SparkSpec {
     def compact(beforeCommit: () => Unit = () => ()): Unit =
       ops.IncrementalCuration.compactHashIndex(spark, hashIdx, beforeCommit)
     def admit(rows: (Long, String)*): Map[Long, String] =
-      ledgerMap(ops.IncrementalCuration.curateBatch(
-        docs(rows: _*), hashIdx, bandIdx))
+      curated(ops.IncrementalCuration.curateBatch(
+        docs(rows: _*), hashIdx, bandIdx, _))
 
     assert(admit(10L -> text(s"${tg}a")) === Map(10L -> "admitted"))
     val h1 = hashCount(hashIdx)

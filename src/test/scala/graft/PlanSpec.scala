@@ -695,8 +695,11 @@ class PlanSpec extends SparkSpec {
   }
 
   test("text_bpe_merge: argmax is TakeOrdered(1), pair counts partial-agg") {
-    // a training round's rule selection (text_bpe_merge replays the
-    // collected rules, so its own plan holds only the folds)
+    // the key replays its collected rules, so its own plan holds only
+    // the row-local folds; the argmax and the pair counts live in each
+    // training round's rule selection (Bpe.bestRule), planned below
+    val key = ops.Bpe.textBpeMerge(spark, dir).queryExecution.executedPlan.toString
+    assert(!key.contains("CartesianProduct"), key)
     val df = ops.Bpe.bestRule(ops.Bpe.vocab(io.Readers.table(spark, dir, "documents")), 1L)
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"), p)
