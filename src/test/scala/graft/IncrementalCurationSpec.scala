@@ -31,8 +31,9 @@ class IncrementalCurationSpec extends SparkSpec {
       .as[(Long, String)].collect().toMap
 
   /** Is live RDD `id` matchAgainstIndex's band rows, a callee pin that
-    * curateBatch leaves to GC? Of the frames a batch of at most `docs`
-    * docs pins, only those hold more rows (one per band per doc).
+    * curateBatch leaves to GC? They hold one row per band per doc; every
+    * other frame the batches below pin holds at most one row per doc,
+    * so at most `docs` rows.
     */
   private def probeRows(docs: Int)(id: Int): Boolean =
     spark.sparkContext.getPersistentRDDs.get(id)
