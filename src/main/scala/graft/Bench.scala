@@ -39,7 +39,9 @@ object Bench {
     if (warmDir.nonEmpty && new java.io.File(warmDir).isDirectory)
       (1 to warmReps).foreach { _ =>
         selected.foreach { case (_, fn) =>
-          try fn(spark, warmDir).count() catch { case _: Throwable => () }
+          ops.Checkpoints.scoped {
+            try fn(spark, warmDir).count() catch { case _: Throwable => () }
+          }
         }
       }
     // Round 16 (r15 verdict item 5 — per-key attribution for shared
@@ -87,24 +89,32 @@ object Bench {
         // Collect other queries' garbage outside the timed region so a
         // query's number reflects its own allocation behavior.
         System.gc()
-        val g0 = gcNow()
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable =>
-          // A failed query would otherwise clock near-zero and silently
-          // flatter the total — surface it in the JSON and on stderr.
-          if (!errors.contains(name)) errors += name
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        // the key's scope frees its pins after the timed region
+        // (graft.ops.Checkpoints), so no key's blocks are left to a GC
+        // inside a later key's region
+        ops.Checkpoints.scoped {
+          val g0 = gcNow()
+          val t0 = System.nanoTime()
+          try fn(spark, sfDir).count()
+          catch { case e: Throwable =>
+            // A failed query would otherwise clock near-zero and silently
+            // flatter the total — surface it in the JSON and on stderr.
+            if (!errors.contains(name)) errors += name
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          }
+          last = (System.nanoTime() - t0) / 1e9
+          // collector centiseconds INSIDE this key's timed region (last
+          // rep, matching `last`); the System.gc() above is outside both
+          gcByKey(name) = (gcNow() - g0) / 10
         }
-        last = (System.nanoTime() - t0) / 1e9
-        // collector centiseconds INSIDE this key's timed region (last
-        // rep, matching `last`); the System.gc() above is outside both
-        gcByKey(name) = (gcNow() - g0) / 10
       }
       // Per-key progress, opt-in (SPARK_GRAFT_VERBOSE=1 → stderr;
       // SPARK_GRAFT_KEYLOG=path → timestamped file, append+flush per
       // key, for correlating keys against an external monitor — sbt
-      // buffers stderr too coarsely for that). Local diagnosis only;
+      // buffers stderr too coarsely for that; its last field is the MB
+      // of RDD blocks still live once the key's scope has closed, i.e.
+      // the SessionCache entries plus whatever the key left unowned).
+      // Local diagnosis only;
       // stderr lines land BEFORE the final JSON println, so the
       // driver's 2000-char output tail still ends with the artifact.
       if (sys.env.get("SPARK_GRAFT_VERBOSE").contains("1"))
@@ -113,7 +123,9 @@ object Bench {
       if (keylogOk) sys.env.get("SPARK_GRAFT_KEYLOG").foreach { p =>
         try {
           val w = new java.io.FileWriter(p, true)
-          try w.write(f"${System.currentTimeMillis()} $name $last%.3f ${gcByKey(name)}\n")
+          val liveMb = spark.sparkContext.getRDDStorageInfo
+            .map(i => i.memSize + i.diskSize).sum / 1048576.0
+          try w.write(f"${System.currentTimeMillis()} $name $last%.3f ${gcByKey(name)} $liveMb%.1f\n")
           finally w.close()
         } catch { case e: Throwable =>
           keylogOk = false

@@ -24,9 +24,10 @@ object Explain {
     new java.io.File(outDir).mkdirs()
     keysCsv.split(",").map(_.trim).filter(_.nonEmpty).foreach { key =>
       val fn = SparkEntry.queries(key)
-      val df = fn(spark, sfDir)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val txt = ops.Checkpoints.scoped {
+        fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      }
       val p = java.nio.file.Paths.get(outDir, s"${key}_$suffix.txt")
       java.nio.file.Files.write(p, txt.getBytes("UTF-8"))
       println(s"[explain] wrote $p (${txt.length} chars)")

@@ -13,10 +13,13 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      // the key's pins are freed once its result is written
+      ops.Checkpoints.scoped {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -121,8 +121,8 @@ object LedgerTable {
     */
   def append(spark: SparkSession, physical: String, rows: DataFrame,
       ledgerRow: DataFrame => DataFrame, afterRowsAppend: () => Unit): Unit =
-    graft.ops.Checkpoints.scoped { pin =>
-      val pinned = pin(rows)
+    graft.ops.Checkpoints.scoped {
+      val pinned = graft.ops.Checkpoints.pin(rows)
       TableManifest.append(spark, physical, pinned)
       afterRowsAppend()
       ledgerRow(pinned).write.mode("append").format("parquet")

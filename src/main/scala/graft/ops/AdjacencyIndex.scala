@@ -122,10 +122,9 @@ object AdjacencyIndex {
     * in-plan form over the same edge set).
     */
   def modularityOver(spark: SparkSession, name: String): DataFrame =
-    Graph.modularityCells(
+    Graph.modularityCells(Checkpoints.pin(
       edges(spark, name).filter(col("src") < col("dst"))
-        .select(col("src").as("u"), col("dst").as("v"))
-        .localCheckpoint())
+        .select(col("src").as("u"), col("dst").as("v"))))
 
   /** PageRank of the stored (undirected) graph (round 13) —
     * [[Graph]]'s scaled-integer Pregel loop driven off the persisted
@@ -139,7 +138,7 @@ object AdjacencyIndex {
     */
   def pagerankOver(spark: SparkSession, name: String): DataFrame = {
     val e = edges(spark, name)
-    val nodes = e.select(col("src").as("node")).distinct().localCheckpoint()
+    val nodes = Checkpoints.pin(e.select(col("src").as("node")).distinct())
     val n = nodes.count()
     if (n == 0) nodes.select(col("node"), lit(0.0).as("rank"))
     else Graph.pagerankLoop(nodes, e, n)

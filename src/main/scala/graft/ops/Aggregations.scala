@@ -97,18 +97,15 @@ object Aggregations {
     // the module's materialize-before-multi-consumer discipline: the
     // narrow scan feeds three step branches, and each per-user step
     // relation feeds both its successor and its own count
-    val ev = table(s, dir, "events")
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .localCheckpoint()
-    val s1 = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id")).agg(min(col("ts")).as("t_signup"))
-      .localCheckpoint()
-    val s2 = ev.filter(col("event_type") === "click")
+    val ev = Checkpoints.pin(table(s, dir, "events")
+      .select(col("user_id"), col("ts"), col("event_type")))
+    val s1 = Checkpoints.pin(ev.filter(col("event_type") === "signup")
+      .groupBy(col("user_id")).agg(min(col("ts")).as("t_signup")))
+    val s2 = Checkpoints.pin(ev.filter(col("event_type") === "click")
       .join(s1, "user_id")
       .filter(col("ts") >= col("t_signup") &&
         col("ts") <= col("t_signup") + expr("INTERVAL 7 DAYS"))
-      .groupBy(col("user_id")).agg(min(col("ts")).as("t_click"))
-      .localCheckpoint()
+      .groupBy(col("user_id")).agg(min(col("ts")).as("t_click")))
     val s3 = ev.filter(col("event_type") === "purchase")
       .join(s2, "user_id")
       .filter(col("ts") >= col("t_click") &&

@@ -82,10 +82,10 @@ object Analytics {
     * BASELINE.md r5 row).
     */
   val aggWeightedMedian: Q = (s, dir) => {
-    val t = table(s, dir, "lineitem")
+    // narrow relation, scanned by every kernel phase
+    val t = Checkpoints.pin(table(s, dir, "lineitem")
       .select(col("l_returnflag"), dec(col("l_extendedprice")).as("price"),
-        dec(col("l_quantity")).as("qty"))
-      .localCheckpoint() // narrow relation, scanned by every kernel phase
+        dec(col("l_quantity")).as("qty")))
     SpineRank.exactQuantiles(t, Seq("l_returnflag"), "price", col("qty"), Seq(50))
       .select(col("l_returnflag"), col("qv").cast("double").as("weighted_median"))
       .orderBy("l_returnflag")
@@ -102,9 +102,9 @@ object Analytics {
     * its pivot bucket from one running count.
     */
   val aggQuantilesBucketed: Q = (s, dir) => {
-    val t = table(s, dir, "lineitem")
-      .select(col("l_returnflag"), dec(col("l_extendedprice")).as("price"))
-      .localCheckpoint() // narrow relation, scanned by every kernel phase
+    // narrow relation, scanned by every kernel phase
+    val t = Checkpoints.pin(table(s, dir, "lineitem")
+      .select(col("l_returnflag"), dec(col("l_extendedprice")).as("price")))
     SpineRank.exactQuantiles(t, Seq("l_returnflag"), "price", lit(1L),
         Seq(25, 50, 75, 90))
       .select(col("l_returnflag"), col("q"),
@@ -132,25 +132,22 @@ object Analytics {
     // ONE checkpoint of the narrow relation; the med pass and the flag
     // pass derive from it with map-only work (projection / broadcast
     // join)
-    val ev = table(s, dir, "events")
-      .select(col("event_id"), col("event_type"), dec(col("value")).as("v"))
-      .localCheckpoint()
+    val ev = Checkpoints.pin(table(s, dir, "events")
+      .select(col("event_id"), col("event_type"), dec(col("value")).as("v")))
     // med is a |event_type|-row relation: checkpointing it is free
     // and stops every scan of `dev` from re-running the whole first
     // quantile pipeline. The mad pass materializes `dev`'s two columns
     // once — rebuilding dev per kernel scan trades one narrow
     // materialization for three more scheduled jobs, and the job
     // floor costs more (A/B'd: 4.7 s vs 2.4 s at sf0.1).
-    val med = SpineRank.exactQuantiles(ev, Seq("event_type"), "v", lit(1L), Seq(50))
-      .select(col("event_type"), col("qv").as("med"))
-      .localCheckpoint()
+    val med = Checkpoints.pin(SpineRank.exactQuantiles(ev, Seq("event_type"), "v", lit(1L), Seq(50))
+      .select(col("event_type"), col("qv").as("med")))
     val dev = ev.join(broadcast(med), "event_type")
       .withColumn("dev", abs(col("v") - col("med")))
-    val mad = SpineRank.exactQuantiles(
-        dev.select(col("event_type"), col("dev")).localCheckpoint(),
+    val mad = Checkpoints.pin(SpineRank.exactQuantiles(
+        Checkpoints.pin(dev.select(col("event_type"), col("dev"))),
         Seq("event_type"), "dev", lit(1L), Seq(50))
-      .select(col("event_type"), col("qv").as("mad"))
-      .localCheckpoint()
+      .select(col("event_type"), col("qv").as("mad")))
     dev.join(broadcast(mad), "event_type")
       .filter(col("mad") > 0 &&
         col("dev").cast("double") > lit(4.4478) * col("mad").cast("double"))
@@ -475,12 +472,11 @@ object Analytics {
       .agg(max(col("ts")).as("last_ts"), count(lit(1)).as("freq"),
         sum(dec(col("value"))).cast("double").as("monetary"))
     val maxd = p.agg(max(col("ts")).as("corpus_max")).select(to_date(col("corpus_max")).as("corpus_max"))
-    val base = perUser.crossJoin(broadcast(maxd))
+    // narrow per-user relation, scanned by the boundary phases AND the final assignment
+    val base = Checkpoints.pin(perUser.crossJoin(broadcast(maxd))
       .select(col("user_id"),
         datediff(col("corpus_max"), to_date(col("last_ts"))).as("r_days"),
-        col("freq"), col("monetary"))
-      .localCheckpoint() // narrow per-user relation, scanned by the
-                         // boundary phases AND the final assignment
+        col("freq"), col("monetary")))
     // asc-aligned order keys; desc metrics negate so bucket order is
     // uniform, and floor() gives per-value buckets for the integer
     // metrics and unit-width range buckets for monetary
@@ -613,11 +609,10 @@ object Analytics {
     * instead of re-scanning lineitem.
     */
   val ordersMarketBasket: Q = (s, dir) => {
-    val basket = table(s, dir, "lineitem")
+    val basket = Checkpoints.pin(table(s, dir, "lineitem")
       .select(col("l_orderkey").as("okey"), col("l_partkey").as("item"))
       .repartition(col("okey"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val nOrders = basket.select(countDistinct(col("okey")).as("n_orders"))
     val supp = basket.groupBy(col("item")).agg(count(lit(1)).as("cnt"))
     basket.select(col("okey"), col("item").as("a"))
@@ -669,15 +664,14 @@ object Analytics {
     */
   val ordersAssociationRules: Q = (s, dir) => {
     val MinSupportPpm = 1000L // rules below 0.1% support are noise
-    val basket = table(s, dir, "lineitem")
+    val basket = Checkpoints.pin(table(s, dir, "lineitem")
       .select(col("l_orderkey").as("okey"), col("l_partkey"))
       .join(broadcast(table(s, dir, "part")
         .select(col("p_partkey"), col("p_brand").as("brand"))),
         col("l_partkey") === col("p_partkey"))
       .select(col("okey"), col("brand"))
       .repartition(col("okey"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // basket count straight off lineitem: every line has a brand (FK),
     // so distinct orderkeys of lineitem = distinct baskets — no join,
     // no (okey,brand) distinct, just a partial-deduped count

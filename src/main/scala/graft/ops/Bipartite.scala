@@ -171,7 +171,7 @@ object Bipartite {
     require(2 * p > q, s"deletionPairs requires tau > 1/2 (got $p/$q): " +
       "signatureRows' small-signature pruning assumes an i<=1 qualifying " +
       "pair can only be two identical singletons")
-    val prof = profilesDf.localCheckpoint()
+    val prof = Checkpoints.pin(profilesDf)
     val sigs = signatureRows(prof, depth)
     val stage1 = sigs
       .select(col("sig"), col("c").as("a_id"), col("sz").as("sza"), col("sl").as("sla"))
@@ -223,13 +223,11 @@ object Bipartite {
   /** The (distinct-profile groups, member mapping) pair both collapsed
     * operators below share. `groups`: (brands, gid, g); `members`:
     * (c, gid, g, sz). The profiles are read twice, so they are pinned
-    * first — unless the caller passed a checkpoint handle, which is
-    * then read in place (freeing the result's leaves frees it too).
+    * first (a caller's handle is read in place).
     */
   private def collapsedParts(profilesDf: DataFrame): (DataFrame, DataFrame) = {
-    val prof =
-      if (Checkpoints.isHandle(profilesDf)) profilesDf else profilesDf.localCheckpoint()
-    val groups = collapseProfiles(prof).localCheckpoint()
+    val prof = Checkpoints.pin(profilesDf)
+    val groups = Checkpoints.pin(collapseProfiles(prof))
     val members = prof.join(groups, "brands")
       .select(col("c"), col("gid"), col("g"), size(col("brands")).as("sz"))
     (groups, members)

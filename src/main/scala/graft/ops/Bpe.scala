@@ -169,11 +169,12 @@ object Bpe {
     * (k-bounded driver data — the rules ARE the model) and a
     * sub-threshold or exhausted round ends the loop, so dead rounds
     * cost nothing (2.7× at k = 32 where 22 rounds are dead —
-    * BASELINE.md r10-resume).
+    * BASELINE.md r10-resume). The rules are driver data, so the loop
+    * runs in its own scope, which frees the final state.
     */
   private def trainRules(docs: DataFrame, k: Int,
-      minCount: Long): Seq[(String, String, Long)] = {
-    var st = vocab(docs).localCheckpoint()
+      minCount: Long): Seq[(String, String, Long)] = Checkpoints.scoped {
+    var st = Checkpoints.pin(vocab(docs))
     val rules = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
     var live = true
     while (rules.length < k && live) {
@@ -184,11 +185,10 @@ object Bpe {
         val (pa, pb) = (best(0).getString(0), best(0).getString(1))
         rules += ((pa, pb, best(0).getLong(2)))
         val prev = st
-        st = applyRule(st, pa, pb).localCheckpoint()
+        st = Checkpoints.pin(applyRule(st, pa, pb))
         Checkpoints.free(prev) // superseded round state
       }
     }
-    Checkpoints.free(st) // rules are driver data; the state feeds nothing
     rules.toSeq
   }
 

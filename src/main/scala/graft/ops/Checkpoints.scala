@@ -1,58 +1,85 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Deterministic reclamation for `localCheckpoint` blocks (round 18 —
-  * the r17 verdict's checkpoint-hygiene item: 99 checkpoint sites,
-  * zero frees; reclamation was left to ContextCleaner, i.e. to GC
+import scala.collection.mutable.ArrayBuffer
+
+/** The engine's one materialization point, [[pin]], and the owners
+  * that free what it pins (round 18 started deterministic
+  * reclamation: reclamation left to ContextCleaner is left to GC
   * timing, and block-manager pressure accumulated across a 286-query
   * suite is exactly the state an external driver run can build up
   * differently than a local one).
   *
-  * A `Dataset.localCheckpoint()` materializes the plan into the block
-  * manager and returns a frame whose analyzed plan is a single
-  * `LogicalRDD` leaf over the checkpointed RDD. [[free]] unpersists
-  * that RDD's blocks directly — the storage is reclaimed at the call,
-  * not at some later GC.
+  * [[pin]] materializes a frame (`localCheckpoint()`) and returns a
+  * handle whose analyzed plan is a single `LogicalRDD` leaf over the
+  * checkpointed RDD; a frame that already is such a handle comes back
+  * unchanged, so an operator that must read its input twice pins it
+  * without re-checkpointing what its caller materialized. [[free]]
+  * unpersists a handle's blocks at the call, not at some later GC.
   *
   * CONTRACT: freeing truncated lineage is FINAL — a checkpoint has no
-  * recompute path, so a freed frame must never be read again. Call
-  * [[free]] only on the handle `localCheckpoint()` returned, and only
-  * once every consumer of that frame has materialized (loop states
-  * superseded by the next round's checkpoint, pipeline stages whose
-  * successor stage and summary row are both computed). Callers with
-  * long-lived or externally-visible frames (spec surfaces, returned
-  * results) must NOT free them.
+  * recompute path, so a freed frame must never be read again. A frame
+  * is freed only once every consumer of it has materialized.
   *
-  * SCOPED LIFETIME: a frame pinned and dead within one call is pinned
-  * through [[scoped]], which frees it when the body returns OR throws
-  * — the one place a checkpoint is freed in a `finally`. The body may
-  * pin any number of frames; it must finish every read of them before
-  * it returns, so it may return driver data, a write's effect, or a
-  * frame that reads none of its pins, never a lazy frame over a pin.
-  * The body may lend `pin` to a callee whose result it reads, so
-  * that result dies with the scope ([[IncrementalCuration.curateBatch]]
-  * pins its ledger through the caller's scope).
-  * [[Streaming.sink]] runs every micro-batch through it, so each
-  * sink's batch pin lives exactly as long as its batch. Loop states
-  * superseded round by round ([[Iterate]], Graph's round loops) and
-  * frames a callee pinned keep their explicit [[free]].
+  * OWNERS. A new pin belongs to the innermost owner open on the
+  * calling thread, which frees it when it closes:
+  *  - [[scoped]] — a call-scoped body, closed when it returns or
+  *    throws. Its callees pin into it too, so the body must finish
+  *    every read of its own and its callees' pins before it returns:
+  *    it may return driver data, a write's effect, or a frame that
+  *    reads none of them. A function whose result reads a pin opens
+  *    no scope; its pins fall to its caller's owner.
+  *    [[Streaming.sink]] runs each micro-batch in one.
+  *  - a [[SessionCache]] entry ([[detached]]) — it belongs to the
+  *    cache even when first built inside another owner; the pins its
+  *    build made are freed once the entry has materialized, and the
+  *    cache frees an entry when it drops it.
+  *  - the per-key driver scope: [[graft.Bench]], [[graft.Verify]] and
+  *    [[graft.Explain]] run each registry key in [[scoped]], closed
+  *    once the key's count, write or plan is taken (in Bench, after
+  *    the timed region).
+  * Loop and stage states superseded before their owner closes are
+  * freed by their loop as soon as their successor has materialized
+  * ([[Iterate]], Graph's round loops, the BPE loop, the curation
+  * composite's stage release); the owner's later free is a no-op. A
+  * pin made outside every owner (specs that call keys directly, a
+  * harness that runs keys without the driver scope) is left to
+  * ContextCleaner, which unpersists it once GC collects its frame.
+  * The owner stack is a plain `ThreadLocal`, not an inheritable one:
+  * a streaming query's thread opens its own scopes and never sees the
+  * scope that started the query.
   *
-  * CLUSTER-MODE SWAP (r19 verdict item 4 — the engine-wide trade
-  * named in one place): `localCheckpoint` stores blocks in executor
-  * memory/disk with NO recompute path, so on a real cluster a lost
-  * executor fails the job instead of recomputing — acceptable in
-  * this single-JVM local harness, not at 100 TB. The distributed
-  * deployment sets `spark.sparkContext.setCheckpointDir(<HDFS/object
-  * store path>)` and swaps to RELIABLE `Dataset.checkpoint()` — in
-  * [[scoped]]'s `pin` for every call-scoped frame, at the remaining
-  * sites for loop states (same plan-truncation semantics, blocks on
-  * fault-tolerant storage, survives executor loss), or materializes
-  * stage outputs as durable tables (the [[IngestPipeline]]
-  * discipline). [[free]]'s analogue there is dropping the checkpoint
-  * directory/staging table once the last consumer has materialized.
+  * CLUSTER-MODE SWAP (r19 verdict item 4): `localCheckpoint` stores
+  * blocks in executor memory/disk with NO recompute path, so on a
+  * real cluster a lost executor fails the job instead of recomputing
+  * — acceptable in this single-JVM local harness, not at 100 TB. The
+  * distributed deployment sets
+  * `spark.sparkContext.setCheckpointDir(<HDFS/object store path>)`
+  * and swaps [[pin]]'s `localCheckpoint()` for RELIABLE
+  * `Dataset.checkpoint()` (same plan truncation, blocks on
+  * fault-tolerant storage, survives executor loss) — one line for
+  * every site; [[free]]'s analogue there is dropping the checkpoint
+  * files once the last consumer has materialized.
   */
 private[graft] object Checkpoints {
+
+  /** Open owners of this thread, innermost first. */
+  private val owners = new ThreadLocal[List[ArrayBuffer[DataFrame]]] {
+    override def initialValue(): List[ArrayBuffer[DataFrame]] = Nil
+  }
+
+  /** Materialize `df` and register the handle with the innermost
+    * owner (object scaladoc); a handle comes back unchanged.
+    */
+  def pin(df: DataFrame): DataFrame =
+    if (isHandle(df)) df
+    else {
+      val ck = df.localCheckpoint()
+      owners.get.headOption.foreach(_ += ck)
+      ck
+    }
 
   /** Unpersist the checkpoint blocks behind EVERY `LogicalRDD` leaf
     * in `df`'s analyzed plan (non-blocking). The semantic is
@@ -60,32 +87,45 @@ private[graft] object Checkpoints {
     * checkpoints frees all the checkpoints it reads — which is the
     * point when a lazily-composed result's inputs are all dead, and a
     * data-loss bug when any of them is still referenced elsewhere.
-    * Discipline: call only when every checkpoint leaf under `df` is
-    * dead. Non-checkpoint LogicalRDD
-    * leaves (`createDataFrame(rdd)` relations) are never persisted,
-    * so their unpersist is a true no-op.
+    * Non-checkpoint LogicalRDD leaves (`createDataFrame(rdd)`
+    * relations) are never persisted, so their unpersist is a no-op.
     */
   def free(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      case l: LogicalRDD => l.rdd
     }.foreach(_.unpersist(blocking = false))
 
-  /** Run `body` with a `pin` that materializes a frame
-    * (`localCheckpoint()`) and returns its handle; every frame `body`
-    * pinned is freed when `body` returns or throws (object scaladoc).
+  /** Run `body` as the innermost owner: every pin it or its callees
+    * make is freed when `body` returns or throws (object scaladoc).
     */
-  def scoped[T](body: (DataFrame => DataFrame) => T): T = {
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try body { df => val ck = df.localCheckpoint(); pinned += ck; ck }
-    finally pinned.foreach(free)
+  def scoped[T](body: => T): T = {
+    val pinned = ArrayBuffer.empty[DataFrame]
+    owners.set(pinned :: owners.get)
+    try body
+    finally {
+      owners.set(owners.get.tail)
+      pinned.foreach(free)
+    }
   }
 
-  /** Is `df` itself a materialized checkpoint handle (its plan is a
-    * bare `LogicalRDD` leaf)? Lets an operator that must read a frame
-    * twice skip re-checkpointing an input the caller already
-    * materialized — the caller keeps the handle and the free.
+  /** [[pin]] `build` for an owner outside the stack (a
+    * [[SessionCache]] entry): the handle joins no scope, and every
+    * other pin the build made is freed once the handle has
+    * materialized. `build` must not return a handle another owner
+    * holds.
     */
-  def isHandle(df: DataFrame): Boolean =
-    df.queryExecution.analyzed
-      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+  def detached(build: => DataFrame): DataFrame = scoped {
+    val ck = pin(build)
+    owners.get.head -= ck // a handle the build pinned itself
+    ck
+  }
+
+  /** Is `df` itself a materialized checkpoint (its plan is a bare
+    * `LogicalRDD` leaf over a checkpointed RDD)?
+    */
+  private def isHandle(df: DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD => l.rdd.isCheckpointed
+      case _ => false
+    }
 }

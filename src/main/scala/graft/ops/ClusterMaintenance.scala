@@ -43,23 +43,20 @@ object ClusterMaintenance {
     * (appearing in no edge) stay absent, per the CC contract.
     */
   def updateLabels(labels: DataFrame, newEdges: DataFrame): DataFrame = {
-    // the closure pins its input eagerly, so `local` never reads `edges`
-    val local = Checkpoints.scoped { pin =>
-      val edges = pin(newEdges
-        .select(col("a_id").cast("long").as("a_id"),
-          col("b_id").cast("long").as("b_id"))
-        .filter(col("a_id") =!= col("b_id")))
-      val endpoints = edges.select(col("a_id").as("id"))
-        .union(edges.select(col("b_id").as("id"))).distinct()
-      val touchedComps = labels
-        .join(endpoints, "id", "left_semi")
-        .select(col("comp")).distinct()
-      val touchedLabels = labels
-        .join(touchedComps, Seq("comp"), "left_semi")
-      val stars = touchedLabels.filter(col("id") =!= col("comp"))
-        .select(col("comp").as("a_id"), col("id").as("b_id"))
-      Llm.connectedComponents(stars.unionAll(edges))
-    }
+    val edges = Checkpoints.pin(newEdges
+      .select(col("a_id").cast("long").as("a_id"),
+        col("b_id").cast("long").as("b_id"))
+      .filter(col("a_id") =!= col("b_id")))
+    val endpoints = edges.select(col("a_id").as("id"))
+      .union(edges.select(col("b_id").as("id"))).distinct()
+    val touchedComps = labels
+      .join(endpoints, "id", "left_semi")
+      .select(col("comp")).distinct()
+    val touchedLabels = labels
+      .join(touchedComps, Seq("comp"), "left_semi")
+    val stars = touchedLabels.filter(col("id") =!= col("comp"))
+      .select(col("comp").as("a_id"), col("id").as("b_id"))
+    val local = Llm.connectedComponents(stars.unionAll(edges))
     labels.join(local, Seq("id"), "left_anti").unionAll(local)
   }
 
@@ -79,17 +76,14 @@ object ClusterMaintenance {
     * signatures — harmless for correctness, since the probe drops
     * self-matches and duplicate collisions dedupe in stage 1's
     * groupBy, but it grows the index; dedupe arrivals upstream, as
-    * with [[IncrementalDedup]]). A `newProfiles` that is a checkpoint
-    * handle is read in place and freed on return with the batch's
-    * edges: the caller must not read it afterwards.
+    * with [[IncrementalDedup]]).
     */
   def ingest(spark: SparkSession, labels: DataFrame, newProfiles: DataFrame,
       indexedProfiles: DataFrame, tableName: String, p: Int, q: Int): DataFrame = {
     val (cross, intra) = batchEdges(spark, newProfiles, indexedProfiles, tableName, p, q)
-    val updated = updateLabels(labels, cross.unionAll(intra))
-      .localCheckpoint() // pin before the index mutates under the lazy plan
+    // pin before the index mutates under the lazy plan
+    val updated = Checkpoints.pin(updateLabels(labels, cross.unionAll(intra)))
     ProfileIndex.appendToIndex(newProfiles, tableName)
-    Checkpoints.free(intra) // after the batch's last read: it may free its pin
     updated
   }
 
@@ -98,11 +92,7 @@ object ClusterMaintenance {
     * via the collapsed join. Duplicate edges across the two paths
     * (possible when the index already holds part of the batch, e.g. a
     * crash replay) are harmless — [[updateLabels]] consumes their
-    * union as a connectivity relation. The checkpoints under `intra`
-    * are the collapsed join's own plus, when `newProfiles` is a
-    * checkpoint handle, that handle (read in place): callers free
-    * `intra` only after their last read of `newProfiles`; `cross`
-    * reads the caller's frames and is never freed here.
+    * union as a connectivity relation.
     */
   private def batchEdges(spark: SparkSession, newProfiles: DataFrame,
       indexedProfiles: DataFrame, tableName: String, p: Int,
@@ -185,11 +175,7 @@ object ClusterMaintenance {
       val t = graft.io.TableManifest.physicalName(labelsName, batchId + 1)
       spark.sql(s"DROP TABLE IF EXISTS $t") // unreferenced leftover staging only
       graft.io.Sinks.writeBucketed(updated.select("id", "comp"), t, "comp", buckets)
-      // the closure's state, when it is not driver-side; `labels` is a
-      // table scan
-      Checkpoints.free(updated)
       ProfileIndex.appendToIndex(newProfiles, indexName)
-      Checkpoints.free(intra) // after the batch's last read (batchEdges)
       beforeCommit()
       graft.io.TableManifest.commit(spark, labelsName, batchId + 1,
         LabelSchemaVersion)
@@ -243,18 +229,14 @@ object ClusterMaintenance {
   def bootstrap(profiles: DataFrame, snapshotPath: String, indexName: String,
       labelsName: String, nBuckets: Int = 16, buckets: Int = 8,
       p: Int = 19, q: Int = 20): Unit = {
-    Checkpoints.scoped { pin =>
-      val prof = pin(profiles)
-      // the collapsed join reads `prof` in place: freeing `pairs` frees
-      // it too, so that free waits for the last read
+    Checkpoints.scoped {
+      val prof = Checkpoints.pin(profiles)
       val pairs = Bipartite.deletionPairsCollapsed(prof, p, q, ProfileIndex.Depth)
         .select("a_id", "b_id")
-      try {
-        Streaming.upsertBatchInto(snapshotPath,
-          prof.withColumn("bucket", profileBucket(nBuckets)), -1L, mergeProfiles)
-        ProfileIndex.buildIndex(prof, indexName, buckets)
-        bootstrapLabels(Llm.connectedComponents(pairs), labelsName, buckets)
-      } finally Checkpoints.free(pairs) // the collapsed join's own pins
+      Streaming.upsertBatchInto(snapshotPath,
+        prof.withColumn("bucket", profileBucket(nBuckets)), -1L, mergeProfiles)
+      ProfileIndex.buildIndex(prof, indexName, buckets)
+      bootstrapLabels(Llm.connectedComponents(pairs), labelsName, buckets)
     }
   }
 

@@ -33,7 +33,7 @@ import graft.io.Readers.table
   * the stages compose frame-level forms instead of filtering the
   * registry keys' raw-corpus outputs.
   *
-  * Each stage's survivor frame is localCheckpoint'd: the narrow
+  * Each stage's survivor frame is pinned ([[Checkpoints.pin]]): the narrow
   * (doc_id, lang, text) relations are consumed by the next stage AND
   * the stage-summary aggregates, and at 100 TB a real pipeline
   * materializes stage outputs as durable tables anyway (the
@@ -83,7 +83,7 @@ object CurationPipeline {
     *
     * `mat` materializes each stage frame (called with the ledger
     * stage name, or "7_split" for the curated frame). The default
-    * localCheckpoints and RETAINS every frame — the returned [[
+    * pins and RETAINS every frame — the returned [[
     * Stages]] are all readable. A release-mode caller may free
     * superseded checkpoints inside its hook, in which case the
     * returned frames must not be read again (the hook owns the
@@ -92,7 +92,7 @@ object CurationPipeline {
   private[graft] def stages(s: org.apache.spark.sql.SparkSession, dir: String,
       budget: Int = 256,
       mat: (String, DataFrame) => DataFrame =
-        (_, df) => df.localCheckpoint()): Stages = {
+        (_, df) => Checkpoints.pin(df)): Stages = {
     val raw = mat("0_raw", table(s, dir, "documents")
       .filter(trim(col("text")) =!= "")
       .select(col("doc_id"), col("lang"), col("text")))
@@ -122,12 +122,6 @@ object CurationPipeline {
       .select(col("id").as("doc_id"))
     val neardup = mat("3_near_dedup",
       exact.join(dupIds, Seq("doc_id"), "left_anti"))
-    // the closure's terminal state is dead once neardup materialized —
-    // free its checkpoint leaves in BOTH modes (r18 review). This
-    // catches the converged-star exit, whose output frame reads the
-    // terminal checkpoint; the driver-endgame exit returns a
-    // LocalRelation and frees its own terminal state internally.
-    Checkpoints.free(dupIds)
 
     // 4. substring-span removal — cut shared >= 4-token runs from the
     //    larger doc; a doc whose text was entirely duplicated content
@@ -251,15 +245,14 @@ object CurationPipeline {
     * a stage's checkpoint blocks are freed the moment its last
     * consumer has materialized: quality..temperature free their
     * predecessor; raw survives to the decontamination stage (its eval
-    * side reads the RAW corpus); the split frame is freed after the
-    * pack and BPE scans. The key therefore holds at most TWO stage
-    * checkpoints at any instant and leaves no STAGE-frame residue —
-    * operator-internal checkpoints (pair-join candidate frames,
-    * shared-build relations) are O(candidates)/session-shared and
-    * stay GC-reclaimed. At 100 TB the analogous discipline is
+    * side reads the RAW corpus). The key therefore holds at most TWO
+    * stage checkpoints at any instant; its result is driver data, so
+    * it runs in its own [[Checkpoints.scoped]], which frees the split
+    * frame and every operator-internal pin once the pack and BPE
+    * scans are collected. At 100 TB the analogous discipline is
     * dropping each stage's staging table once the next is durable.
     */
-  val pipelineCurationStages: Q = (s, dir) => {
+  val pipelineCurationStages: Q = (s, dir) => Checkpoints.scoped {
     val timings = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val ledger = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
     val live = scala.collection.mutable.Map.empty[String, DataFrame]
@@ -287,7 +280,7 @@ object CurationPipeline {
       tPrev = now
     }
     val st = stages(s, dir, mat = (stage, df) => {
-      val ck = df.localCheckpoint()
+      val ck = Checkpoints.pin(df)
       if (stage != "7_split") collect1(stageRow(stage, ck))
       freeAfter.getOrElse(stage, Nil)
         .foreach(n => live.remove(n).foreach(Checkpoints.free))
@@ -299,15 +292,6 @@ object CurationPipeline {
     mark("7_pack_train")
     collect1(bpeRow(st.bpe))
     mark("8_bpe_tokens")
-    live.remove("7_split").foreach(Checkpoints.free)
-    // the pack frame's analyzed plan has exactly ONE checkpoint leaf:
-    // packSequences' internal `counted` checkpoint (the 7_split
-    // checkpoint is upstream OF that checkpoint, truncated behind it,
-    // and freed separately above). Its two in-operator consumers are
-    // done once packRow collected — the one operator-INTERNAL residue
-    // this key can free. Ordered AFTER the bpe collect only because
-    // bpe reads the split checkpoint freed in the same block above.
-    Checkpoints.free(st.packs)
     lastStageSeconds = timings.toList
     import s.implicits._
     ledger.toSeq.toDF("stage", "n_docs", "n_tokens").orderBy("stage")

@@ -131,10 +131,9 @@ object Graph {
     */
   val graphPagerank: Q = (s, dir) => {
     val edges = directedEdgesCached(s, dir)
-    val nodes = edges.select(col("src").as("node"))
+    val nodes = Checkpoints.pin(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val n = nodes.count() // bounded driver scalar: one long
     // degenerate corpus (no qualifying edges): n = 0 would divide by
     // zero below — yield the empty result with the output schema
@@ -145,11 +144,10 @@ object Graph {
   private[graft] def pagerankLoop(nodes: DataFrame, edges: DataFrame, n: Long): DataFrame = {
     // (src, dst, deg) in ONE relation, checkpointed: the out-degree
     // join happens once, not once per iteration.
-    val edgesD = edges
+    val edgesD = Checkpoints.pin(edges
       .join(edges.groupBy(col("src").as("onode")).agg(count(lit(1)).as("deg")),
         col("src") === col("onode"))
-      .select(col("src"), col("dst"), col("deg"))
-      .localCheckpoint()
+      .select(col("src"), col("dst"), col("deg")))
     val teleport = 150000000000L / n // 0.15 · 10¹² / n, exact integer
     val r0 = 1000000000000L / n
     // The loop state is the CONTRIBUTION relation (node, s), not the
@@ -161,10 +159,9 @@ object Graph {
     // shuffle (down from two broadcasts + a join — barriers are the
     // measured cost here, see above). Iteration 1 needs no join at
     // all: the uniform r0 rides the edge scan as a literal.
-    val contrib0 = edgesD
+    val contrib0 = Checkpoints.pin(edgesD
       .groupBy(col("dst").as("cnode"))
-      .agg(sum(expr(s"$r0 div deg")).as("s"))
-      .localCheckpoint()
+      .agg(sum(expr(s"$r0 div deg")).as("s")))
     // every-3 cadence: the measured optimum for this loop (Iterate's
     // scaladoc has the 11.1 / 6.1 / 4.1 s A/B at 10 iterations)
     val contrib = Iterate.fixed(2 to 5, _ % 3 == 0)(contrib0) { (c, _) =>
@@ -279,10 +276,10 @@ object Graph {
     val nodes = und.select(col("u").as("node"))
       .union(und.select(col("v").as("node")))
       .distinct()
-    val adj = und.select(col("u").as("src"), col("v").as("dst"))
+    // static across iterations, scanned 3×
+    val adj = Checkpoints.pin(und.select(col("u").as("src"), col("v").as("dst"))
       .union(und.select(col("v").as("src"), col("u").as("dst")))
-      .union(nodes.select(col("node").as("src"), col("node").as("dst")))
-      .localCheckpoint() // static across iterations, scanned 3×
+      .union(nodes.select(col("node").as("src"), col("node").as("dst"))))
     Iterate.fixed(1 to 3, Iterate.never)(
       nodes.select(col("node"), col("node").as("label"))) { (l, _) =>
       adj
@@ -316,10 +313,10 @@ object Graph {
     // community (measured: 1 cell at every SF — Q degenerates to 0);
     // the sampled graph fractures into real communities, which is the
     // regime a modularity screen exists for
-    val und = canonicalUndirectedEdges(s, dir)
+    // labels + degrees + internal count re-scan it
+    val und = Checkpoints.pin(canonicalUndirectedEdges(s, dir)
       .filter(Llm.hashBucket("graft-modularity")(
-        concat_ws("|", col("u"), col("v"))) < 10)
-      .localCheckpoint() // labels + degrees + internal count re-scan it
+        concat_ws("|", col("u"), col("v"))) < 10))
     modularityCells(und)
   }
 
@@ -384,10 +381,10 @@ object Graph {
     */
   val graphKCore: Q = (s, dir) => {
     val k = 2
-    val edges0 = canonicalUndirectedEdges(s, dir)
+    // static base; consumed by round 1 only
+    val edges0 = Checkpoints.pin(canonicalUndirectedEdges(s, dir)
       .filter(Llm.hashBucket("graft-kcore")(
-        concat_ws("|", col("u"), col("v"))) < 10)
-      .localCheckpoint() // static base; consumed by round 1 only
+        concat_ws("|", col("u"), col("v"))) < 10))
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node")).union(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -410,13 +407,12 @@ object Graph {
     var e = edges0
     var prev = edges0
     for (_ <- 1 to 3) {
-      val surv = degrees(e).filter(col("deg") >= k).select(col("node"))
-        .localCheckpoint() // ≤ first-round node count — broadcast side
-      val next = e
+      // ≤ first-round node count — broadcast side
+      val surv = Checkpoints.pin(degrees(e).filter(col("deg") >= k).select(col("node")))
+      val next = Checkpoints.pin(e
         .join(broadcast(surv.withColumnRenamed("node", "u")), Seq("u"), "left_semi")
         .join(broadcast(surv.withColumnRenamed("node", "v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .localCheckpoint()
+        .select(col("u"), col("v")))
       Checkpoints.free(surv) // baked into next
       Checkpoints.free(prev) // superseded round state
       prev = next
@@ -453,10 +449,9 @@ object Graph {
     * membership a pure function of (u, v) in both engines).
     */
   val graphKTruss: Q = (s, dir) => {
-    val e0 = canonicalUndirectedEdges(s, dir)
+    val e0 = Checkpoints.pin(canonicalUndirectedEdges(s, dir)
       .filter(Llm.hashBucket("graft-ktruss")(
-        concat_ws("|", col("u"), col("v"))) < 30)
-      .localCheckpoint()
+        concat_ws("|", col("u"), col("v"))) < 30))
     // minSupp = 1 → k = 3 (k = 4 measured degenerate — scaladoc)
     trussEdges(e0, minSupp = 1L, rounds = 2)
   }
@@ -500,10 +495,9 @@ object Graph {
     for (_ <- 1 to rounds) {
       // zero-triangle edges never reach the support relation, so the
       // single semi join both peels low-support edges AND drops them
-      val next = e.join(trussSupport(e).filter(col("supp") >= minSupp)
+      val next = Checkpoints.pin(e.join(trussSupport(e).filter(col("supp") >= minSupp)
           .select(col("u"), col("v")),
-        Seq("u", "v"), "left_semi")
-        .localCheckpoint()
+        Seq("u", "v"), "left_semi"))
       if (prev != null) Checkpoints.free(prev)
       prev = next
       e = next
@@ -666,14 +660,14 @@ object Graph {
   // exchange-bound. Kept as the plain shuffle join (BASELINE row).
   private[graft] def bfsLayers(edges: org.apache.spark.sql.DataFrame,
       seeds: org.apache.spark.sql.DataFrame, maxHop: Int): org.apache.spark.sql.DataFrame = {
-    var frontier = seeds.select(col("node"), lit(0L).as("hop")).localCheckpoint()
+    var frontier = Checkpoints.pin(seeds.select(col("node"), lit(0L).as("hop")))
     var dist = frontier
     for (h <- 1 to maxHop) {
       val nbrs = frontier.select(col("node").as("src"))
         .join(edges, "src")
         .select(col("dst").as("node")).distinct()
-      val fresh = nbrs.join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(h.toLong).as("hop")).localCheckpoint()
+      val fresh = Checkpoints.pin(nbrs.join(dist, Seq("node"), "left_anti")
+        .select(col("node"), lit(h.toLong).as("hop")))
       dist = dist.union(fresh)
       frontier = fresh
     }
@@ -863,8 +857,8 @@ object Graph {
   private[graft] def harmonicLoop(edges: DataFrame, gate: Long): DataFrame = {
     val seeds = edges.select(col("src").as("node")).distinct()
       .filter(col("node") % 389 === 0)
-    var frontier = seeds.select(col("node").as("seed"), col("node"),
-      lit(0L).as("hop")).localCheckpoint()
+    var frontier = Checkpoints.pin(seeds.select(col("node").as("seed"), col("node"),
+      lit(0L).as("hop")))
     var dist = frontier
     for (h <- 1 to 3) {
       val fSide = frontier.select(col("seed"), col("node").as("src"))
@@ -875,7 +869,7 @@ object Graph {
         .select(col("seed"), col("node"), lit(h.toLong).as("hop"))
       // the last round's frontier feeds only the final rollup — no
       // re-join ahead, so skip its materialization
-      val fresh = if (h < 3) freshLazy.localCheckpoint() else freshLazy
+      val fresh = if (h < 3) Checkpoints.pin(freshLazy) else freshLazy
       dist = dist.union(fresh)
       frontier = fresh
     }
@@ -977,21 +971,20 @@ object Graph {
       // on AQE's own future), so fault injection is the only reliable
       // trigger. Production call sites use the default.
       bcast: DataFrame => DataFrame = org.apache.spark.sql.functions.broadcast)
-      : Seq[org.apache.spark.sql.Row] = {
+      : Seq[org.apache.spark.sql.Row] = Checkpoints.scoped {
     val est = hll_sketch_estimate(col("reg"))
     // Per-hop stats are collected EAGERLY (4 rows of 5 scalars — the
     // release-mode composite's ledger precedent), so each superseded
     // register checkpoint frees deterministically instead of living
-    // until the final action; the key's returned frame is a
-    // LocalRelation.
+    // until the final action, and the loop's own scope frees the rest;
+    // the key's returned frame is a LocalRelation.
     def hopStats(h: Int, reg: DataFrame): org.apache.spark.sql.Row = {
       val r = reg.agg(count(lit(1)), sum(est), min(est), max(est)).head()
       def nz(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
       org.apache.spark.sql.Row(h.toLong, r.getLong(0), nz(1), nz(2), nz(3))
     }
-    def seedReg(): DataFrame = nodes.groupBy(col("node"))
-      .agg(hll_sketch_agg(col("node"), lit(10)).as("reg"))
-      .localCheckpoint()
+    def seedReg(): DataFrame = Checkpoints.pin(nodes.groupBy(col("node"))
+      .agg(hll_sketch_agg(col("node"), lit(10)).as("reg")))
     var reg = seedReg()
     val rows = scala.collection.mutable.ArrayBuffer(hopStats(0, reg))
     val nNodes = rows.head.getLong(1)
@@ -1005,11 +998,10 @@ object Graph {
           .join(reg.select(col("node").as("dst"), col("reg").as("nreg")), "dst")
           .groupBy(col("src").as("node"))
           .agg(hll_union_agg(col("nreg"), lit(false)).as("nbr"))
-        val next = reg.join(contrib, Seq("node"), "left")
+        val next = Checkpoints.pin(reg.join(contrib, Seq("node"), "left")
           .select(col("node"),
             when(col("nbr").isNull, col("reg"))
-              .otherwise(hll_union(col("reg"), col("nbr"))).as("reg"))
-          .localCheckpoint()
+              .otherwise(hll_union(col("reg"), col("nbr"))).as("reg")))
         Checkpoints.free(reg)
         reg = next
         rows += hopStats(h, reg)
@@ -1027,67 +1019,63 @@ object Graph {
       // the shuffle form (DataSketches HLL unions are merge-order-
       // sensitive at mid-density; hop 0 stays exact) — inside the
       // lgK-10 register error the spec gates.
-      Checkpoints.scoped { pin =>
-        val esSrc = pin(edges
-          .union(nodes.select(col("node").as("src"), col("node").as("dst")))
-          .repartition(col("src")))
-        // r19 ADVICE: only a BROADCAST failure may trigger the shuffle
-        // retry — a blanket SparkException catch would silently rerun
-        // (and mask) hopStats collect failures, data-corruption task
-        // failures, or maxResultSize on an unrelated collect. A real
-        // broadcast failure always carries the evidence somewhere in
-        // its chain: a BroadcastExchange/broadcast frame or message
-        // (timeout, "Not enough memory to build and broadcast"), or an
-        // OOM from the build.
-        def broadcastRelated(t: Throwable): Boolean = {
-          val seen = java.util.Collections.newSetFromMap(
-            new java.util.IdentityHashMap[Throwable, java.lang.Boolean]())
-          var c: Throwable = t
-          while (c != null && seen.add(c)) {
-            if (c.isInstanceOf[OutOfMemoryError]) return true
-            if (Option(c.getMessage).getOrElse("").toLowerCase.contains("broadcast"))
-              return true
-            if (c.getStackTrace.exists(_.getClassName.toLowerCase.contains("broadcast")))
-              return true
-            c = c.getCause
-          }
-          false
+      val esSrc = Checkpoints.pin(edges
+        .union(nodes.select(col("node").as("src"), col("node").as("dst")))
+        .repartition(col("src")))
+      // r19 ADVICE: only a BROADCAST failure may trigger the shuffle
+      // retry — a blanket SparkException catch would silently rerun
+      // (and mask) hopStats collect failures, data-corruption task
+      // failures, or maxResultSize on an unrelated collect. A real
+      // broadcast failure always carries the evidence somewhere in
+      // its chain: a BroadcastExchange/broadcast frame or message
+      // (timeout, "Not enough memory to build and broadcast"), or an
+      // OOM from the build.
+      def broadcastRelated(t: Throwable): Boolean = {
+        val seen = java.util.Collections.newSetFromMap(
+          new java.util.IdentityHashMap[Throwable, java.lang.Boolean]())
+        var c: Throwable = t
+        while (c != null && seen.add(c)) {
+          if (c.isInstanceOf[OutOfMemoryError]) return true
+          if (Option(c.getMessage).getOrElse("").toLowerCase.contains("broadcast"))
+            return true
+          if (c.getStackTrace.exists(_.getClassName.toLowerCase.contains("broadcast")))
+            return true
+          c = c.getCause
         }
-        try {
-          for (h <- 1 to 3) {
-            val next = esSrc
-              .join(bcast(reg.select(col("node").as("dst"), col("reg").as("nreg"))), "dst")
-              .groupBy(col("src").as("node"))
-              .agg(hll_union_agg(col("nreg"), lit(false)).as("reg"))
-              .localCheckpoint()
-            Checkpoints.free(reg) // its hop row is already collected
-            reg = next
-            rows += hopStats(h, reg)
-          }
-        } catch {
-          // r18 ADVICE: between the measured 1.25 M nodes and the 2 M-row
-          // gate, a default-configured driver (spark.driver.memory /
-          // maxResultSize 1g) can fail the per-round BroadcastExchange
-          // where the shuffle form would complete slowly — degrade to
-          // slow-but-safe instead of surfacing a hard failure. Register
-          // state may be mid-round, so restart from the seed — hop rows
-          // past 0 are dropped and recomputed exactly. If the shuffle
-          // retry fails too, ITS error surfaces with the original
-          // broadcast failure attached (r19 ADVICE: never lose the
-          // first failure class).
-          case e: org.apache.spark.SparkException if broadcastRelated(e) =>
-            System.err.println(
-              s"[graph] hyperball register broadcast failed (${e.getMessage}); " +
-                "retrying via the shuffle form")
-            Checkpoints.free(reg)
-            rows.dropRightInPlace(rows.size - 1)
-            reg = seedReg()
-            try shuffleRounds()
-            catch { case retry: Throwable => retry.addSuppressed(e); throw retry }
+        false
+      }
+      try {
+        for (h <- 1 to 3) {
+          val next = Checkpoints.pin(esSrc
+            .join(bcast(reg.select(col("node").as("dst"), col("reg").as("nreg"))), "dst")
+            .groupBy(col("src").as("node"))
+            .agg(hll_union_agg(col("nreg"), lit(false)).as("reg")))
+          Checkpoints.free(reg) // its hop row is already collected
+          reg = next
+          rows += hopStats(h, reg)
         }
+      } catch {
+        // r18 ADVICE: between the measured 1.25 M nodes and the 2 M-row
+        // gate, a default-configured driver (spark.driver.memory /
+        // maxResultSize 1g) can fail the per-round BroadcastExchange
+        // where the shuffle form would complete slowly — degrade to
+        // slow-but-safe instead of surfacing a hard failure. Register
+        // state may be mid-round, so restart from the seed — hop rows
+        // past 0 are dropped and recomputed exactly. If the shuffle
+        // retry fails too, ITS error surfaces with the original
+        // broadcast failure attached (r19 ADVICE: never lose the
+        // first failure class).
+        case e: org.apache.spark.SparkException if broadcastRelated(e) =>
+          System.err.println(
+            s"[graph] hyperball register broadcast failed (${e.getMessage}); " +
+              "retrying via the shuffle form")
+          Checkpoints.free(reg)
+          rows.dropRightInPlace(rows.size - 1)
+          reg = seedReg()
+          try shuffleRounds()
+          catch { case retry: Throwable => retry.addSuppressed(e); throw retry }
       }
     } else shuffleRounds()
-    Checkpoints.free(reg)
     rows.toSeq
   }
 

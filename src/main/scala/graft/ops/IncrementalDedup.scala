@@ -144,9 +144,9 @@ object IncrementalDedup {
     */
   def matchAgainstIndex(spark: SparkSession, newDocs: DataFrame,
       tableName: String, minAgree: Double = 0.5): DataFrame = {
-    val nb = bandRows(newDocs)
-      .select(col("bk"), col("doc_id").as("new_id"), col("sig").as("new_sig"))
-      .localCheckpoint() // read twice: the partition probe + the join
+    // read twice: the partition probe + the join
+    val nb = Checkpoints.pin(bandRows(newDocs)
+      .select(col("bk"), col("doc_id").as("new_id"), col("sig").as("new_sig")))
     val bps = withBp(nb).select(col("bp")).distinct().collect().map(_.getInt(0))
     val idx = spark.table(resolveTable(spark, tableName))
       .filter(col("bp").isin(bps.map(Int.box): _*))

@@ -297,11 +297,10 @@ object Insights {
     // join), and each consumer re-derived the full lineitem scan +
     // partkey shuffle; one |parts|-row checkpoint serves them all
     // (lineitem scans 5 → 2: this rollup + the monthly rollup)
-    val rev = li.groupBy(col("l_partkey"))
+    val rev = Checkpoints.pin(li.groupBy(col("l_partkey"))
       .agg(sum((col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long") *
         (lit(100) - (col("l_discount").cast("decimal(18,2)") * 100).cast("long")))
-        .as("rev_e4"))
-      .localCheckpoint()
+        .as("rev_e4")))
     val monthly = li
       .select(col("l_partkey"), trunc(col("l_shipdate"), "month").as("m"),
         col("l_quantity").cast("long").as("q"))
@@ -820,12 +819,11 @@ object Insights {
     // is consumed THREE times (each axis's spine rollup + the
     // join-back), and each consumer re-derived the orders rollup +
     // customer join; one |customers|-row checkpoint serves all three
-    val c = table(s, dir, "customer")
+    val c = Checkpoints.pin(table(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment").as("segment"),
         (dec(col("c_acctbal")) * 100).cast("long").as("bal_cents"))
       .join(rev, col("o_custkey") === col("c_custkey"), "left_outer")
-      .withColumn("rev_cents", coalesce(col("rev_cents"), lit(0L)))
-      .localCheckpoint()
+      .withColumn("rev_cents", coalesce(col("rev_cents"), lit(0L))))
     // doubled-midrank spine for one axis: every row holding value v
     // in `segment` has 2·midrank = 2·cumt(v) − cnt(v) + 1. Round 16:
     // the spine cumulative dispatches through SpineRank (per-segment
@@ -1542,10 +1540,10 @@ object Insights {
       .groupBy(col("mask")).agg(count(lit(1)).as("m"))
     val subsets = s.range(1L << nCh).select(col("id").as("s"))
     // containment mask ⊆ S ⟺ mask & S = mask
-    val v = subsets.join(broadcast(convMask),
+    // ≤2^|C| rows, read twice below
+    val v = Checkpoints.pin(subsets.join(broadcast(convMask),
         col("mask").bitwiseAND(col("s")) === col("mask"), "left")
-      .groupBy(col("s")).agg(coalesce(sum(col("m")), lit(0L)).as("v"))
-      .localCheckpoint() // ≤2^|C| rows, read twice below
+      .groupBy(col("s")).agg(coalesce(sum(col("m")), lit(0L)).as("v")))
     val fact = (0 to nCh).map(k => (1 to k).product.toLong)
     val wCase = (1 until nCh).foldLeft(
       when(col("popS") === 0, lit(fact(0) * fact(nCh - 1)))) { (acc, k) =>
@@ -1709,13 +1707,13 @@ object Insights {
     * Then a broadcast join back and one map-side rollup.
     */
   val statLeveneCells: Q = (s, dir) => {
-    val o = table(s, dir, "orders")
+    // probe + median + final rollup all read it
+    val o = Checkpoints.pin(table(s, dir, "orders")
       .join(broadcast(table(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment").as("segment"))),
         col("o_custkey") === col("c_custkey"))
       .select(col("segment"), col("o_orderkey"),
-        (dec(col("o_totalprice")) * 100).cast("long").as("v"))
-      .localCheckpoint() // probe + median + final rollup all read it
+        (dec(col("o_totalprice")) * 100).cast("long").as("v")))
     val med =
       if (SpineRank.maxGroupRows(o, Seq("segment")) <= SpineRank.WindowSpineRows) {
         val wVal = Window.partitionBy(col("segment"))

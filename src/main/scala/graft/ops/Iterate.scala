@@ -40,14 +40,13 @@ private[ops] object Iterate {
     // checkpoint hygiene (round 18): a cadence checkpoint's only
     // consumer is the chain up to the NEXT cadence checkpoint, so
     // once that one materializes the older blocks are dead — free
-    // them deterministically instead of waiting on GC. The LAST
-    // checkpoint is never freed (the returned lazy tail reads it);
-    // the caller's init is never ours to free.
+    // them deterministically instead of waiting on GC; the caller's
+    // init is never ours to free.
     var lastCkpt: Option[DataFrame] = None
     rounds.foldLeft(init) { (state, k) =>
       val next = step(state, k)
       if (checkpointAt(k) && k != rounds.last) {
-        val ck = next.localCheckpoint()
+        val ck = Checkpoints.pin(next)
         lastCkpt.foreach(Checkpoints.free)
         lastCkpt = Some(ck)
         ck
@@ -56,7 +55,7 @@ private[ops] object Iterate {
   }
 
   /** Terminal state of [[untilFixpoint]]: the last state (always
-    * localCheckpoint'd), its measure, rounds executed, and which exit
+    * pinned), its measure, rounds executed, and which exit
     * fired (`converged` per the caller's test; `!converged` means the
     * measure fell to `exitBelow` or `maxRounds` ran out — the caller
     * distinguishes those two from `measure`/`rounds`).
@@ -73,9 +72,9 @@ private[ops] object Iterate {
     * CONTINUATION depends on that scalar — Spark has no
     * iterate-until-empty plan node, so a driver-side count per round
     * is the minimum possible driver involvement, and it doubles as
-    * the per-round lineage barrier (each state is localCheckpoint'd
-    * here, not in `step`; a cluster deployment swaps in reliable
-    * `checkpoint`, see [[fixed]]'s cadence discussion).
+    * the per-round lineage barrier (each state is pinned here, not in
+    * `step`; `init` must not be a checkpoint handle, since its pin is
+    * freed once superseded).
     *
     * Loop shape (exactly the while-loop it replaces): while the
     * previous measure is above `exitBelow`, rounds remain, and the
@@ -87,12 +86,12 @@ private[ops] object Iterate {
   def untilFixpoint(init: DataFrame, measure: DataFrame => Long,
       exitBelow: Long, maxRounds: Int)(step: DataFrame => DataFrame)(
       test: (Long, DataFrame, Long) => Boolean): Fixpoint = {
-    var state = init.localCheckpoint()
+    var state = Checkpoints.pin(init)
     var m = measure(state)
     var round = 0
     var converged = false
     while (!converged && m > exitBelow && round < maxRounds) {
-      val next = step(state).localCheckpoint()
+      val next = Checkpoints.pin(step(state))
       val m2 = measure(next)
       converged = test(m, next, m2)
       // `state` is superseded: `next` is materialized and measured,

@@ -179,9 +179,8 @@ object IvfIndex {
     // nondeterministic probe source (sample/limit) could rank into a
     // cell the collected filter set missed, silently dropping
     // candidates
-    val p = probes.select(col("p_id"), col("pv"),
-        explode(slice(centroidRanks(col("pv"), cents), 1, nprobe)).as("p_cell"))
-      .localCheckpoint()
+    val p = Checkpoints.pin(probes.select(col("p_id"), col("pv"),
+        explode(slice(centroidRanks(col("pv"), cents), 1, nprobe)).as("p_cell")))
     // the union of probed cells is ⊆ {0..nlist−1} — a bounded collect
     // (same discipline as the centroid sidecar) that turns cell
     // pruning into a static PartitionFilter on the scan; DPP's

@@ -83,11 +83,10 @@ object Llm {
     // branch AND both sides of the verify join — without it the
     // tokenize pass runs 3–4× (exchange reuse does not fire across
     // aliased self-join sides; see dedup_simhash note)
-    val docs = table(s, dir, "documents")
+    val docs = Checkpoints.pin(table(s, dir, "documents")
       .select(col("doc_id"),
         graft.functions.TextExpressions.wordShingles(col("text"), 3).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .localCheckpoint()
+      .filter(size(col("shingles")) > 0))
 
     // Signatures in one native pass per row (no explode, no shuffle) —
     // element-identical to the former explode → groupBy(min(xxhash64(
@@ -101,11 +100,10 @@ object Llm {
           .map(i => element_at(col("sig"), i + 1)): _*)
           .as("bh")).as(s"b$b")
     }
-    val banded = sigs.select(col("doc_id") +: bandCols: _*)
+    // narrow (id, band, hash) rows — materialize before the self-join
+    val banded = Checkpoints.pin(sigs.select(col("doc_id") +: bandCols: _*)
       .select(col("doc_id"), explode(array((0 until bands).map(b => col(s"b$b")): _*)).as("e"))
-      .select(col("doc_id"), col("e.band").as("band"), col("e.bh").as("bh"))
-      // narrow (id, band, hash) rows — materialize before the self-join
-      .localCheckpoint()
+      .select(col("doc_id"), col("e.band").as("band"), col("e.bh").as("bh")))
 
     val cand = banded.as("a")
       .join(banded.as("b"),
@@ -222,12 +220,11 @@ object Llm {
       // aliased sides never share an exchange, so without this the
       // sig+explode subtree (16 cosine evals per row over the parquet
       // scan) runs once PER SIDE — measured 2.9 → 1.6 s at sf0.1
-      val banded = emb
+      val banded = Checkpoints.pin(emb
         .select(col("vec_id"), col("label"),
           explode(SignLsh.bands(SignLsh.sig(col("v")))).as("e"))
         .select(col("vec_id"), col("label"),
-          col("e.band").as("band"), col("e.bv").as("bv"))
-        .localCheckpoint()
+          col("e.band").as("band"), col("e.bv").as("bv")))
       val cand = banded.as("a").join(banded.as("b"),
           col("a.label") === col("b.label") && col("a.band") === col("b.band") &&
             col("a.bv") === col("b.bv") && col("a.vec_id") < col("b.vec_id"))
@@ -412,10 +409,8 @@ object Llm {
     *     the edge count stops shrinking, so shrinking rounds pay one
     *     count each.
     *
-    * Lineage is truncated per round with `localCheckpoint` (iterative
-    * DataFrame loops otherwise stack an exponentially deep plan); a
-    * multi-node cluster run would use `checkpoint` against a
-    * fault-tolerant dir instead.
+    * Lineage is truncated per round by [[Checkpoints.pin]] (iterative
+    * DataFrame loops otherwise stack an exponentially deep plan).
     *
     * Output: one (id, component) row per node that appears in ≥ 1
     * pair; component = min node id reachable. Isolated docs are their
@@ -799,7 +794,9 @@ object Llm {
     */
   val sampleTokenBudget: Q = (s, dir) => {
     val budget = 2000L
-    val counted = table(s, dir, "documents")
+    // one corpus scan: the bucket-offset aggregation and the final
+    // join both consume this narrow relation
+    val counted = Checkpoints.pin(table(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         when(trim(col("text")) === "", 0L)
           .otherwise(size(split(trim(col("text")), "\\s+")).cast("long")).as("n_toks"),
@@ -808,10 +805,7 @@ object Llm {
       .withColumn("bucket", conv(substring(col("h"), 1, 2), 16, 10).cast("int"))
       .withColumn("run",
         sum(col("n_toks")).over(
-          Window.partitionBy(col("lang"), col("bucket")).orderBy(col("h"), col("doc_id"))))
-      // one corpus scan: the bucket-offset aggregation and the final
-      // join both consume this narrow relation
-      .localCheckpoint()
+          Window.partitionBy(col("lang"), col("bucket")).orderBy(col("h"), col("doc_id")))))
     val offsets = counted.groupBy("lang", "bucket").agg(sum(col("n_toks")).as("btot"))
       .withColumn("off",
         sum(col("btot")).over(Window.partitionBy(col("lang")).orderBy(col("bucket")))

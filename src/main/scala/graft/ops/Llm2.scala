@@ -207,17 +207,16 @@ object Llm2 {
       .filter(size(col("grams")) > 0)
       .select(col("doc_id"),
         graft.functions.TextExpressions.simHash64(col("grams")).as("simhash"))
-    val banded = sig.select(col("doc_id"), col("simhash"),
+    // materialize the signature relation ONCE before the self-join:
+    // Spark does not reuse the exchange across the two aliased sides
+    // (verified in-plan), so without this the tokenize→simhash
+    // subtree runs twice — measured 1.73 s → 0.74 s at sf0.1. Same
+    // deliberate materialization point a cluster run would persist.
+    val banded = Checkpoints.pin(sig.select(col("doc_id"), col("simhash"),
         explode(array((0 until 8).map(k =>
           struct(lit(k).as("band"),
             shiftright(col("simhash"), k * 8).bitwiseAND(0xFFL).as("bv"))): _*)).as("e"))
-      .select(col("doc_id"), col("simhash"), col("e.band").as("band"), col("e.bv").as("bv"))
-      // materialize the signature relation ONCE before the self-join:
-      // Spark does not reuse the exchange across the two aliased sides
-      // (verified in-plan), so without this the tokenize→simhash
-      // subtree runs twice — measured 1.73 s → 0.74 s at sf0.1. Same
-      // deliberate materialization point a cluster run would persist.
-      .localCheckpoint()
+      .select(col("doc_id"), col("simhash"), col("e.band").as("band"), col("e.bv").as("bv")))
     // Hamming-filter BEFORE deduplicating band collisions: the filter
     // is a per-row bit_count over columns already in hand, while
     // distinct() is a shuffle — run the shuffle only over the few
@@ -582,13 +581,12 @@ object Llm2 {
     // unpartitioned WindowExec (the shape the PlanSpec global-sort
     // gate bans outright) — a broadcast predecessors-count self-join
     // over the materialized 20-row relation gives the same ranks
-    val top = table(s, dir, "documents")
+    val top = Checkpoints.pin(table(s, dir, "documents")
       .select(explode(grams).as("gram"))
       .groupBy("gram")
       .agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("gram").asc)
-      .limit(20)
-      .localCheckpoint() // 20 rows; both self-join sides read it
+      .limit(20)) // 20 rows; both self-join sides read it
     top.as("a")
       .join(broadcast(top.as("b")),
         col("b.df") > col("a.df") ||
@@ -709,18 +707,17 @@ object Llm2 {
     // empty/whitespace-only docs hold ZERO tokens: split("") yields
     // [""] (size 1), so an unguarded size() would put a phantom token
     // into the manifest and shift every later slice in its pack —
-    // the explicit empty case makes the n > 0 filter real
-    val counted = docs
+    // the explicit empty case makes the n > 0 filter real. One corpus
+    // scan: offsets aggregation AND the final join both consume this
+    // relation (narrow rows — the module's materialize-before-multi-
+    // consumer discipline)
+    val counted = Checkpoints.pin(docs
       .select(col("doc_id"),
         when(trim(col("text")) === "", 0L)
           .otherwise(size(split(trim(col("text")), "\\s+")).cast("long")).as("n"))
       .filter(col("n") > 0)
       .withColumn("bucket", expr(s"doc_id div $bucketSize"))
-      .withColumn("run", sum(col("n")).over(wIn))
-      // one corpus scan: offsets aggregation AND the final join both
-      // consume this relation (narrow rows — the module's
-      // materialize-before-multi-consumer discipline)
-      .localCheckpoint()
+      .withColumn("run", sum(col("n")).over(wIn)))
     val bOff = counted.groupBy("bucket").agg(sum(col("n")).as("btot"))
       .withColumn("super", expr(s"bucket div $superSize"))
       .withColumn("brun", sum(col("btot")).over(wSup))

@@ -365,11 +365,10 @@ private[graft] object PairJoins {
     }
     // both sides of the self-join read the banded relation;
     // localCheckpoint computes the signatures once
-    val banded = sigs.select(col("doc_id"), col("lang"), col("gsz"),
+    val banded = Checkpoints.pin(sigs.select(col("doc_id"), col("lang"), col("gsz"),
         explode(array(bandCols: _*)).as("e"))
       .select(col("doc_id"), col("lang"), col("gsz"),
-        col("e.band").as("band"), col("e.bh").as("bh"))
-      .localCheckpoint()
+        col("e.band").as("band"), col("e.bh").as("bh")))
     banded.as("a").join(banded.as("b"),
         col("a.lang") === col("b.lang") && col("a.band") === col("b.band") &&
         col("a.bh") === col("b.bh") && col("a.doc_id") < col("b.doc_id") &&

@@ -18,8 +18,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[reset]] (everything) at the mutation boundary, or it will read
   * the pre-mutation rollup — the staleness the ADVICE entry names.
   *
-  * LIFECYCLE: entries pin localCheckpoint blocks and the building
-  * SparkSession. A `SparkListener` registered per session drops that
+  * LIFECYCLE: entries pin checkpoint blocks ([[Checkpoints.detached]]:
+  * an entry belongs to the cache even when first built inside a
+  * key's scope, and its build's own pins are freed once it has
+  * materialized) and the building SparkSession. A `SparkListener` registered per session drops that
   * session's entries on application end, so a long-lived JVM that
   * cycles sessions (tests, notebook restarts) does not accumulate
   * dead references.
@@ -73,10 +75,16 @@ object SessionCache {
     val existing = cache.get(key)
     if (existing != null) existing
     else {
-      val built = build.localCheckpoint()
+      val built = Checkpoints.detached(build)
       val prev = cache.putIfAbsent(key, built)
       if (prev != null) prev else built
     }
+  }
+
+  /** The live entries (the block-ownership specs tell them apart). */
+  private[graft] def live: Seq[DataFrame] = {
+    import scala.jdk.CollectionConverters._
+    cache.values.asScala.toSeq
   }
 
   /** Drop every cached relation derived from `dir` — the hook for an

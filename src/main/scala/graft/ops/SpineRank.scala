@@ -100,10 +100,9 @@ private[graft] object SpineRank {
       nB: Int): DataFrame = {
     require(!t.columns.contains("bucket"), "balancedBuckets writes `bucket`")
     val fracs = array((1 until nB).map(i => lit(i.toDouble / nB)): _*)
-    val bounds = t.sample(withReplacement = false, 0.1, seed = 42)
+    val bounds = Checkpoints.pin(t.sample(withReplacement = false, 0.1, seed = 42)
       .groupBy(groups.map(col): _*)
-      .agg(percentile_approx(col(value).cast("double"), fracs, lit(100)).as("bnds"))
-      .localCheckpoint()
+      .agg(percentile_approx(col(value).cast("double"), fracs, lit(100)).as("bnds")))
     t.join(broadcast(bounds), groups, "left")
       .withColumn("bucket",
         coalesce(
@@ -194,7 +193,7 @@ private[graft] object SpineRank {
       withTotals: Boolean = false,
       thresholdRows: Long = WindowSpineRows, nB: Int = 32): DataFrame = {
     val wCols = weights.zipWithIndex.map { case ((c, _), i) => c.as(s"_w$i") }
-    val spine = spine0.select(col("*") +: wCols: _*).localCheckpoint()
+    val spine = Checkpoints.pin(spine0.select(col("*") +: wCols: _*))
     val outs = weights.map(_._2)
     val result =
       if (maxGroupRows(spine, groups) <= thresholdRows) {
@@ -216,10 +215,10 @@ private[graft] object SpineRank {
         val gb = groups :+ "bucket"
         // per-bucket partial sums → offsets over the TINY bucket
         // relation (≤ |groups|·nB rows)
-        val per = b.groupBy(gb.map(col): _*)
+        // tiny; read by offsets and (opt) totals
+        val per = Checkpoints.pin(b.groupBy(gb.map(col): _*)
           .agg(sum(col("_w0")).as("_bw0"),
-            outs.indices.tail.map(i => sum(col(s"_w$i")).as(s"_bw$i")): _*)
-          .localCheckpoint() // tiny; read by offsets and (opt) totals
+            outs.indices.tail.map(i => sum(col(s"_w$i")).as(s"_bw$i")): _*))
         val wB = Window.partitionBy(groups.map(col): _*).orderBy(col("bucket"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val offs = outs.indices.foldLeft(per) { case (df, i) =>
@@ -269,7 +268,7 @@ private[graft] object SpineRank {
   def topK(df0: DataFrame, groups: Seq[String], order: Seq[Column], k: Int,
       saltCol: Column, thresholdRows: Long = WindowSpineRows,
       salts: Int = 32): DataFrame = {
-    val df = df0.localCheckpoint()
+    val df = Checkpoints.pin(df0)
     if (maxGroupRows(df, groups) <= thresholdRows) {
       val w = Window.partitionBy(groups.map(col): _*).orderBy(order: _*)
       df.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -9,8 +10,10 @@ import org.apache.spark.storage.StorageLevel
   * through the loop drivers / curateBatch / the composite):
   * free() reclaims at the call; freeing is FINAL (no recompute path);
   * the semantic is LEAF-SET (a derived frame frees every checkpoint
-  * it reads); scoped() frees its pins on every path; non-checkpoint
-  * frames are safe no-ops; isHandle distinguishes the bare handle.
+  * it reads); pin() returns a handle unchanged; each pin belongs to
+  * the innermost owner — scoped() frees its pins on every path,
+  * detached() hands its handle to no scope; non-checkpoint frames are
+  * safe no-ops.
   */
 class CheckpointsSpec extends SparkSpec {
 
@@ -18,8 +21,8 @@ class CheckpointsSpec extends SparkSpec {
     df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
 
   test("free reclaims the handle's blocks at the call; the freed frame is unreadable (reclamation is final)") {
-    val ck = spark.range(0, 10000).toDF("id").localCheckpoint()
-    assert(ops.Checkpoints.isHandle(ck))
+    val ck = ops.Checkpoints.pin(spark.range(0, 10000).toDF("id"))
+    assert(ops.Checkpoints.pin(ck) eq ck, "a handle is pinned in place")
     val Seq(rdd) = leafRdds(ck)
     assert(rdd.getStorageLevel != StorageLevel.NONE,
       "a localCheckpoint's blocks are its storage — it must be persisted")
@@ -39,7 +42,6 @@ class CheckpointsSpec extends SparkSpec {
     val a = Seq((1L, "x"), (2L, "y")).toDF("id", "v").localCheckpoint()
     val b = Seq((1L, 10L), (2L, 20L)).toDF("id", "w").localCheckpoint()
     val derived = a.join(b, "id")
-    assert(!ops.Checkpoints.isHandle(derived), "a join is not a bare handle")
     assert(derived.count() === 2L)
     ops.Checkpoints.free(derived)
     assert((leafRdds(a) ++ leafRdds(b))
@@ -49,10 +51,10 @@ class CheckpointsSpec extends SparkSpec {
 
   test("scoped frees every pin when its body returns, and when it throws") {
     val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val n = ops.Checkpoints.scoped { pin =>
-      pins += pin(spark.range(0, 100).toDF("id"))
-      pins += pin(spark.range(0, 50).toDF("id"))
-      assert(pins.forall(ops.Checkpoints.isHandle))
+    def callee(n: Long): DataFrame = ops.Checkpoints.pin(spark.range(0, n).toDF("id"))
+    val n = ops.Checkpoints.scoped {
+      pins += ops.Checkpoints.pin(spark.range(0, 100).toDF("id"))
+      pins += callee(50) // a callee pins into its caller's scope
       pins.map(_.count()).sum
     }
     assert(n === 150L, "the body reads its pins before the scope ends")
@@ -60,8 +62,8 @@ class CheckpointsSpec extends SparkSpec {
       "a returning body's pins are freed")
     pins.clear()
     intercept[IllegalStateException] {
-      ops.Checkpoints.scoped { pin =>
-        pins += pin(spark.range(0, 10).toDF("id"))
+      ops.Checkpoints.scoped {
+        pins += ops.Checkpoints.pin(spark.range(0, 10).toDF("id"))
         throw new IllegalStateException("boom")
       }
     }
@@ -70,10 +72,40 @@ class CheckpointsSpec extends SparkSpec {
       "a throwing body's pins are freed")
   }
 
+  test("each pin belongs to the innermost owner; detached hands its handle to none; unowned pins stay") {
+    def live(df: DataFrame) = leafRdds(df).forall(_.getStorageLevel != StorageLevel.NONE)
+    val unowned = ops.Checkpoints.pin(spark.range(0, 7).toDF("id"))
+    val (outerPin, innerPin, entry, buildPin) = ops.Checkpoints.scoped {
+      val outerPin = ops.Checkpoints.pin(spark.range(0, 5).toDF("id"))
+      val innerPin = ops.Checkpoints.scoped {
+        val p = ops.Checkpoints.pin(spark.range(0, 3).toDF("id"))
+        assert(ops.Checkpoints.pin(outerPin) eq outerPin,
+          "re-pinning an outer handle must not hand it to the inner scope")
+        p
+      }
+      assert(!live(innerPin) && live(outerPin),
+        "closing the inner scope frees its pins only")
+      var buildPin: DataFrame = null
+      val entry = ops.Checkpoints.detached {
+        buildPin = ops.Checkpoints.pin(spark.range(0, 4).toDF("id"))
+        buildPin.select((col("id") * 2).as("id"))
+      }
+      assert(!live(buildPin) && live(entry), "the build's pins are freed once the entry materialized")
+      (outerPin, innerPin, entry, buildPin)
+    }
+    assert(!live(outerPin) && !live(innerPin) && !live(buildPin))
+    assert(live(entry) && entry.count() === 4L, "a detached handle outlives every scope")
+    // a handle the build returns itself moves out of the build's scope
+    val own = ops.Checkpoints.scoped(ops.Checkpoints.detached(
+      ops.Checkpoints.pin(spark.range(0, 6).toDF("id"))))
+    assert(live(own) && own.count() === 6L)
+    assert(live(unowned) && unowned.count() === 7L, "a pin made outside every owner is not freed")
+    Seq(unowned, entry, own).foreach(ops.Checkpoints.free)
+  }
+
   test("non-checkpoint frames are safe no-ops: scans, local relations, rdd-backed frames") {
     import spark.implicits._
     val local = Seq((1L, "a")).toDF("id", "v")
-    assert(!ops.Checkpoints.isHandle(local))
     ops.Checkpoints.free(local) // LocalRelation: no LogicalRDD leaf
     assert(local.count() === 1L)
     val scan = io.Readers.table(spark, "/root/testdata/sf0.001", "region")
@@ -84,10 +116,13 @@ class CheckpointsSpec extends SparkSpec {
     val rddBacked = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L))),
       new org.apache.spark.sql.types.StructType().add("id", "long"))
-    assert(!ops.Checkpoints.isHandle(rddBacked) ||
-      leafRdds(rddBacked).forall(_.getStorageLevel === StorageLevel.NONE))
+    assert(leafRdds(rddBacked).forall(_.getStorageLevel === StorageLevel.NONE))
     ops.Checkpoints.free(rddBacked)
     assert(rddBacked.count() === 1L,
       "an unpersisted rdd-backed frame recomputes fine after free")
+    // ... and is not a handle: pin materializes it
+    val pinned = ops.Checkpoints.pin(rddBacked)
+    assert(!(pinned eq rddBacked) && pinned.count() === 1L)
+    ops.Checkpoints.free(pinned)
   }
 }

@@ -152,8 +152,8 @@ class CurationPipelineSpec extends SparkSpec {
       allIds.grouped(math.ceil(allIds.length.toDouble / nBatches).toInt)
         .foreach { chunk =>
           val batch = corpus.filter(col("doc_id").between(chunk.head, chunk.last))
-          val led = ops.Checkpoints.scoped(pin => ops.IncrementalCuration
-            .curateBatch(batch, hashIdx, bandIdx, pin, verifyCorpus = Some(store))
+          val led = ops.Checkpoints.scoped(ops.IncrementalCuration
+            .curateBatch(batch, hashIdx, bandIdx, verifyCorpus = Some(store))
             .select(col("doc_id").cast("long"), col("status"))
             .as[(Long, String)].collect().toMap)
           ledger ++= led

@@ -30,19 +30,9 @@ class IncrementalCurationSpec extends SparkSpec {
     df.select(col("doc_id").cast("long"), col("status"))
       .as[(Long, String)].collect().toMap
 
-  /** Is live RDD `id` matchAgainstIndex's band rows, a callee pin that
-    * curateBatch leaves to GC? They hold one row per band per doc; every
-    * other frame the batches below pin holds at most one row per doc,
-    * so at most `docs` rows.
-    */
-  private def probeRows(docs: Int)(id: Int): Boolean =
-    spark.sparkContext.getPersistentRDDs.get(id)
-      .exists(r => scala.util.Try(r.count() > docs).getOrElse(false))
-
-  /** A curateBatch ledger, read inside the scope that pins it. */
-  private def curated(curate: (org.apache.spark.sql.DataFrame =>
-      org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame): Map[Long, String] =
-    ops.Checkpoints.scoped(pin => ledgerMap(curate(pin)))
+  /** A curateBatch ledger, read inside the scope that owns its pins. */
+  private def curated(ledger: => org.apache.spark.sql.DataFrame): Map[Long, String] =
+    ops.Checkpoints.scoped(ledgerMap(ledger))
 
   private def hashCount(name: String): Long =
     spark.table(ops.IncrementalCuration.resolveHashTable(spark, name)).count()
@@ -64,7 +54,7 @@ class IncrementalCurationSpec extends SparkSpec {
       15L -> nearOf("b13"),                // near dup of 13 WITHIN the batch
       16L -> text("b16"))                  // fresh
     val led = curated(ops.IncrementalCuration.curateBatch(
-      batch, hashIdx, bandIdx, _))
+      batch, hashIdx, bandIdx))
     assert(led === Map(
       10L -> "drop_quality",
       11L -> "drop_exact_index",
@@ -86,7 +76,7 @@ class IncrementalCurationSpec extends SparkSpec {
     // admitted/dropped partition is what re-presentation preserves,
     // attribution shifts to the exact tier by design)
     val led2 = curated(ops.IncrementalCuration.curateBatch(
-      batch, hashIdx, bandIdx, _))
+      batch, hashIdx, bandIdx))
     assert(led2(13L) === "readmitted" && led2(16L) === "readmitted", led2.toString)
     assert(led2(10L) === "drop_quality")
     assert(led2(11L) === "drop_exact_index")
@@ -99,7 +89,7 @@ class IncrementalCurationSpec extends SparkSpec {
     // index (and tombstones); genuinely new content admits
     val led3 = curated(ops.IncrementalCuration.curateBatch(
       docs(20L -> nearOf("b16"), 21L -> text("b21")),
-      hashIdx, bandIdx, _))
+      hashIdx, bandIdx))
     assert(led3 === Map(20L -> "drop_near_index", 21L -> "admitted"), led3.toString)
     assert(hashCount(hashIdx) === h0 + 6)
 
@@ -109,7 +99,7 @@ class IncrementalCurationSpec extends SparkSpec {
     // before tombstones its hash probe missed (12 never indexed) and
     // its admission depended on banding against the keeper
     val led4 = curated(ops.IncrementalCuration.curateBatch(
-      docs(30L -> nearOf("s2")), hashIdx, bandIdx, _))
+      docs(30L -> nearOf("s2")), hashIdx, bandIdx))
     assert(led4 === Map(30L -> "drop_exact_index"),
       s"an exact dup of a near-dropped doc must hit the tombstone: $led4")
     assert(hashCount(hashIdx) === h0 + 6, "a tombstone hit appends nothing")
@@ -192,7 +182,7 @@ class IncrementalCurationSpec extends SparkSpec {
       q.stop()
       // every pin of every batch — the sink's, curateBatch's, the
       // ledger's — is freed once its batch ends
-      blocks.assertNoneLive(probeRows(2))
+      blocks.assertNoneLive()
       val l2 = ops.IncrementalCuration.readLedger(spark, ledger)
         .filter(col("batch") === 1)
         .select(col("doc_id").cast("long"), col("status"))
@@ -210,19 +200,19 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalDedup.buildIndex(seed, "ic2_band")
     val batch = docs(30L -> text("c30"))
     val led = curated(ops.IncrementalCuration.curateBatch(
-      batch, "ic2_hash", "ic2_band", _))
+      batch, "ic2_hash", "ic2_band"))
     assert(led === Map(30L -> "admitted"))
     // simulate the replayed half-write: the band append runs AGAIN for
     // the already-admitted doc (crash after hash append + band append,
     // replay re-appends bands)
     ops.IncrementalDedup.appendToIndex(batch, "ic2_band")
     val led2 = curated(ops.IncrementalCuration.curateBatch(
-      batch, "ic2_hash", "ic2_band", _))
+      batch, "ic2_hash", "ic2_band"))
     assert(led2 === Map(30L -> "readmitted"),
       "duplicate band rows must not change the admission read")
     // and a near dup still drops against the duplicated bands
     val led3 = curated(ops.IncrementalCuration.curateBatch(
-      docs(31L -> nearOf("c30")), "ic2_hash", "ic2_band", _))
+      docs(31L -> nearOf("c30")), "ic2_hash", "ic2_band"))
     assert(led3 === Map(31L -> "drop_near_index"))
 
     // compaction collapses append growth into a fresh version; every
@@ -231,7 +221,7 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalCuration.compactHashIndex(spark, "ic2_hash")
     assert(hashCount("ic2_hash") === before, "compaction must not lose rows")
     val led4 = curated(ops.IncrementalCuration.curateBatch(
-      batch, "ic2_hash", "ic2_band", _))
+      batch, "ic2_hash", "ic2_band"))
     assert(led4 === Map(30L -> "readmitted"),
       "admission reads identically through the compacted version")
   }
@@ -252,17 +242,17 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalDedup.appendToIndex(batch, "ic5_band")
     val before = hashCount("ic5_hash")
     val led = curated(ops.IncrementalCuration.curateBatch(
-      batch, "ic5_hash", "ic5_band", _))
+      batch, "ic5_hash", "ic5_band"))
     assert(led === Map(40L -> "admitted"),
       s"stranded bands must not read back as already-admitted: $led")
     assert(hashCount("ic5_hash") === before + 1, "the replay completes the hash append")
     // converged: re-presentation is now the no-op, and the doc's
     // (duplicated) bands detect future near-dups
     val led2 = curated(ops.IncrementalCuration.curateBatch(
-      batch, "ic5_hash", "ic5_band", _))
+      batch, "ic5_hash", "ic5_band"))
     assert(led2 === Map(40L -> "readmitted"))
     val led3 = curated(ops.IncrementalCuration.curateBatch(
-      docs(41L -> nearOf("d40")), "ic5_hash", "ic5_band", _))
+      docs(41L -> nearOf("d40")), "ic5_hash", "ic5_band"))
     assert(led3 === Map(41L -> "drop_near_index"))
   }
 
@@ -277,14 +267,14 @@ class IncrementalCurationSpec extends SparkSpec {
     spark.conf.set("spark.sql.parquet.compression.codec", "lzo")
     try {
       intercept[Exception](curated(ops.IncrementalCuration.curateBatch(
-        docs(10L -> text("ab10")), "ic9_hash", "ic9_band", _)))
-      blocks.assertNoneLive(probeRows(1))
+        docs(10L -> text("ab10")), "ic9_hash", "ic9_band")))
+      blocks.assertNoneLive()
     } finally {
       spark.conf.unset("spark.sql.parquet.compression.codec")
       spark.sparkContext.removeSparkListener(blocks)
     }
     assert(curated(ops.IncrementalCuration.curateBatch(
-      docs(10L -> text("ab10")), "ic9_hash", "ic9_band", _)) === Map(10L -> "admitted"),
+      docs(10L -> text("ab10")), "ic9_hash", "ic9_band")) === Map(10L -> "admitted"),
       "an aborted batch replays as fresh")
   }
 
@@ -351,7 +341,7 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalCuration.buildHashIndex(docs(k * 2L -> fpA(k)), "ic6_hash")
     ops.IncrementalDedup.buildIndex(docs(k * 2L -> fpA(k)), "ic6_band")
     val unverified = curated(ops.IncrementalCuration.curateBatch(
-      docs(k * 2L + 1L -> fpB(k)), "ic6_hash", "ic6_band", _))
+      docs(k * 2L + 1L -> fpB(k)), "ic6_hash", "ic6_band"))
     assert(unverified === Map(k * 2L + 1L -> "drop_near_index"),
       s"the estimator false positive must drop on the default path: $unverified")
     // round 18: the default-path drop TOMBSTONED the doc's hash — its
@@ -361,7 +351,7 @@ class IncrementalCurationSpec extends SparkSpec {
     // contract in the object scaladoc; a verified deployment uses
     // verified indexes from the start)
     val represented = curated(ops.IncrementalCuration.curateBatch(
-      docs(k * 2L + 1L -> fpB(k)), "ic6_hash", "ic6_band", _,
+      docs(k * 2L + 1L -> fpB(k)), "ic6_hash", "ic6_band",
       verifyCorpus = Some(docs(k * 2L -> fpA(k)))))
     assert(represented === Map(k * 2L + 1L -> "drop_exact_index"),
       s"a default-path tombstone outlives the estimator decision: $represented")
@@ -370,7 +360,7 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalCuration.buildHashIndex(docs(k * 2L -> fpA(k)), "ic6v_hash")
     ops.IncrementalDedup.buildIndex(docs(k * 2L -> fpA(k)), "ic6v_band")
     val verified = curated(ops.IncrementalCuration.curateBatch(
-      docs(k * 2L + 1L -> fpB(k)), "ic6v_hash", "ic6v_band", _,
+      docs(k * 2L + 1L -> fpB(k)), "ic6v_hash", "ic6v_band",
       verifyCorpus = Some(docs(k * 2L -> fpA(k)))))
     assert(verified === Map(k * 2L + 1L -> "admitted"),
       s"exact verification must admit the estimator's false positive: $verified")
@@ -395,7 +385,7 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalCuration.buildHashIndex(seed, "icA_hash")
     ops.IncrementalDedup.buildIndex(seed, "icA_band")
     val led = curated(ops.IncrementalCuration.curateBatch(
-      batch, "icA_hash", "icA_band", _, verifyCorpus = Some(store)))
+      batch, "icA_hash", "icA_band", verifyCorpus = Some(store)))
     assert(led === Map(idA -> "admitted", idB -> "admitted"),
       s"the rescued pair must co-admit: $led")
 
@@ -405,7 +395,7 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalDedup.buildIndex(seed, "icB_band")
     ops.IncrementalDedup.appendToIndex(batch, "icB_band")
     val led2 = curated(ops.IncrementalCuration.curateBatch(
-      batch, "icB_hash", "icB_band", _, verifyCorpus = Some(store)))
+      batch, "icB_hash", "icB_band", verifyCorpus = Some(store)))
     assert(led2 === Map(idA -> "admitted", idB -> "admitted"),
       s"stranded bands of a rescued pair must not become mutual drops: $led2")
   }
@@ -493,7 +483,7 @@ class IncrementalCurationSpec extends SparkSpec {
     var store = seed
     def admitOne(id: Long, t: String): String = {
       val led = curated(ops.IncrementalCuration.curateBatch(
-        docs(id -> t), "ic7_hash", "ic7_band", _, verifyCorpus = Some(store)))
+        docs(id -> t), "ic7_hash", "ic7_band", verifyCorpus = Some(store)))
       if (led(id) == "admitted")
         store = store.unionByName(docs(id -> t))
       led(id)
@@ -526,7 +516,7 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalCuration.buildHashIndex(docs(idA -> fpA(k)), "ic8_hash")
     ops.IncrementalDedup.buildIndex(docs(idA -> fpA(k)), "ic8_band")
     val led1 = curated(ops.IncrementalCuration.curateBatch(
-      docs(idB -> fpB(k), 5L -> text("ps5")), "ic8_hash", "ic8_band", _))
+      docs(idB -> fpB(k), 5L -> text("ps5")), "ic8_hash", "ic8_band"))
     assert(led1 === Map(idB -> "drop_near_index", 5L -> "admitted"), led1.toString)
 
     // the admitted store after the stream: seed + admitted batch docs
@@ -544,7 +534,7 @@ class IncrementalCurationSpec extends SparkSpec {
     // rebuilt indexes is a no-op stream — every doc reads back
     // readmitted, nothing appends, no drop appears
     val led2 = curated(ops.IncrementalCuration.curateBatch(
-      store, "ic8v_hash", "ic8v_band", _, verifyCorpus = Some(store)))
+      store, "ic8v_hash", "ic8v_band", verifyCorpus = Some(store)))
     assert(led2 === Map(idA -> "readmitted", 5L -> "readmitted"), led2.toString)
     assert(hashCount("ic8v_hash") === h0, "re-presentation must not append")
 
@@ -552,14 +542,14 @@ class IncrementalCurationSpec extends SparkSpec {
     // its old tombstone is gone, the estimator match vs idA reaches
     // the verify stage, and the exact tau = 0.5 bigram jaccard admits
     val led3 = curated(ops.IncrementalCuration.curateBatch(
-      docs(idB -> fpB(k)), "ic8v_hash", "ic8v_band", _,
+      docs(idB -> fpB(k)), "ic8v_hash", "ic8v_band",
       verifyCorpus = Some(store)))
     assert(led3 === Map(idB -> "admitted"),
       s"the rebuilt verified indexes must rescue the FP drop: $led3")
     // and the continued stream is stable: re-presenting the rescued
     // doc converges to readmitted on its own appended row
     val led4 = curated(ops.IncrementalCuration.curateBatch(
-      docs(idB -> fpB(k)), "ic8v_hash", "ic8v_band", _,
+      docs(idB -> fpB(k)), "ic8v_hash", "ic8v_band",
       verifyCorpus = Some(store.unionByName(docs(idB -> fpB(k))))))
     assert(led4 === Map(idB -> "readmitted"), led4.toString)
   }
@@ -632,9 +622,9 @@ class IncrementalCurationSpec extends SparkSpec {
     ops.IncrementalCuration.buildHashIndex(seed, "icv_hash")
     ops.IncrementalDedup.buildIndex(seed, "icv_band")
     def runBatch(bid: Long, rows: (Long, String)*): Map[Long, String] =
-      ops.Checkpoints.scoped { pin =>
+      ops.Checkpoints.scoped {
         val led = ops.IncrementalCuration.curateBatch(
-          docs(rows: _*), "icv_hash", "icv_band", pin)
+          docs(rows: _*), "icv_hash", "icv_band")
         led.write.mode("overwrite").parquet(s"$ledger/batch=$bid")
         ledgerMap(led)
       }
@@ -679,7 +669,7 @@ class IncrementalCurationSpec extends SparkSpec {
       ops.IncrementalCuration.compactHashIndex(spark, hashIdx, beforeCommit)
     def admit(rows: (Long, String)*): Map[Long, String] =
       curated(ops.IncrementalCuration.curateBatch(
-        docs(rows: _*), hashIdx, bandIdx, _))
+        docs(rows: _*), hashIdx, bandIdx))
 
     assert(admit(10L -> text(s"${tg}a")) === Map(10L -> "admitted"))
     val h1 = hashCount(hashIdx)

@@ -158,8 +158,8 @@ class IndexManifestSpec extends SparkSpec {
       val fresh = Seq((2L, "en", (Seq("the", "of") ++ (1 to 18).map(i => s"wnewx$i")).mkString(" ")))
         .toDF("doc_id", "lang", "text")
       val e3 = intercept[IllegalStateException] {
-        ops.Checkpoints.scoped(pin =>
-          ops.IncrementalCuration.curateBatch(fresh, hash, band, pin).collect())
+        ops.Checkpoints.scoped(
+          ops.IncrementalCuration.curateBatch(fresh, hash, band).collect())
       }
       assert(e3.getMessage.contains("schema v1"), e3.getMessage)
       assert(Seq(bandT, hashT).map(spark.table(_).count()) === rows,

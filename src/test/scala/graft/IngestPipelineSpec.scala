@@ -96,6 +96,9 @@ class IngestPipelineSpec extends SparkSpec {
       q3.processAllAvailable()
     }
     q3.stop()
+    // right after the crash, before later batches' allocations can let
+    // a GC reclaim a leak: the crashed attempt's pins are freed
+    blocks.assertNoneLive()
     assert(snapshotRows(snap) === s2,
       "crash before the manifest rename leaves readers on the old snapshot")
     val q4 = start()
@@ -118,6 +121,7 @@ class IngestPipelineSpec extends SparkSpec {
       q5.processAllAvailable()
     }
     q5.stop()
+    blocks.assertNoneLive()
     assert(snapshotRows(snap)((3L, "click")) === (30L, 5.5),
       "post-rename state is visible despite the crash")
     val q6 = start()

@@ -14,7 +14,9 @@ class RddBlocks extends org.apache.spark.scheduler.SparkListener {
     }
   override def onUnpersistRDD(e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
     live.remove(e.rddId)
-  /** `exempt` names RDDs the code under test leaves to GC by design. */
+  /** `exempt` names RDDs an owner outside the code under test keeps
+    * (SessionCache entries).
+    */
   def assertNoneLive(exempt: Int => Boolean = _ => false): Unit =
     org.scalatest.concurrent.Eventually.eventually(
         org.scalatest.concurrent.Eventually.timeout(
