@@ -114,9 +114,9 @@ object Bench {
       // buffers stderr too coarsely for that; its last field is the MB
       // of RDD blocks still live once the key's scope has closed, i.e.
       // the SessionCache entries plus whatever the key left unowned).
-      // Local diagnosis only;
-      // stderr lines land BEFORE the final JSON println, so the
-      // driver's 2000-char output tail still ends with the artifact.
+      // Local diagnosis only; stderr lines land BEFORE the final JSON
+      // println, so the driver's 2000-char output tail still ends with
+      // the artifact.
       if (sys.env.get("SPARK_GRAFT_VERBOSE").contains("1"))
         System.err.println(
           f"[bench-key] $name $last%.2f s gc=${gcByKey(name)}cs")

@@ -140,8 +140,9 @@ object Analytics {
     // once — rebuilding dev per kernel scan trades one narrow
     // materialization for three more scheduled jobs, and the job
     // floor costs more (A/B'd: 4.7 s vs 2.4 s at sf0.1).
-    val med = Checkpoints.pin(SpineRank.exactQuantiles(ev, Seq("event_type"), "v", lit(1L), Seq(50))
-      .select(col("event_type"), col("qv").as("med")))
+    val med = Checkpoints.pin(
+      SpineRank.exactQuantiles(ev, Seq("event_type"), "v", lit(1L), Seq(50))
+        .select(col("event_type"), col("qv").as("med")))
     val dev = ev.join(broadcast(med), "event_type")
       .withColumn("dev", abs(col("v") - col("med")))
     val mad = Checkpoints.pin(SpineRank.exactQuantiles(

@@ -364,7 +364,7 @@ private[graft] object PairJoins {
           .map(i => element_at(col("sig"), i + 1)): _*).as("bh")).as(s"b$b")
     }
     // both sides of the self-join read the banded relation;
-    // localCheckpoint computes the signatures once
+    // the pin computes the signatures once
     val banded = Checkpoints.pin(sigs.select(col("doc_id"), col("lang"), col("gsz"),
         explode(array(bandCols: _*)).as("e"))
       .select(col("doc_id"), col("lang"), col("gsz"),

@@ -21,7 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * LIFECYCLE: entries pin checkpoint blocks ([[Checkpoints.detached]]:
   * an entry belongs to the cache even when first built inside a
   * key's scope, and its build's own pins are freed once it has
-  * materialized) and the building SparkSession. A `SparkListener` registered per session drops that
+  * materialized) and the building SparkSession. A `SparkListener`
+  * registered per session drops that
   * session's entries on application end, so a long-lived JVM that
   * cycles sessions (tests, notebook restarts) does not accumulate
   * dead references.
