@@ -109,10 +109,11 @@ private[graft] object Checkpoints {
   }
 
   /** [[pin]] `build` for an owner outside the stack (a
-    * [[SessionCache]] entry): the handle joins no scope, and every
-    * other pin the build made is freed once the handle has
-    * materialized. `build` must not return a handle another owner
-    * holds.
+    * [[SessionCache]] entry, or a result its caller keeps past every
+    * open scope, as [[ClusterMaintenance.ingest]]'s labels): the
+    * handle joins no scope, and every other pin the build made is
+    * freed once the handle has materialized. `build` must not return
+    * a handle another owner holds.
     */
   def detached(build: => DataFrame): DataFrame = scoped {
     val ck = pin(build)

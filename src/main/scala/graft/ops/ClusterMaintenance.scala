@@ -76,13 +76,18 @@ object ClusterMaintenance {
     * signatures — harmless for correctness, since the probe drops
     * self-matches and duplicate collisions dedupe in stage 1's
     * groupBy, but it grows the index; dedupe arrivals upstream, as
-    * with [[IncrementalDedup]]).
+    * with [[IncrementalDedup]]). The returned labels are a
+    * [[Checkpoints.detached]] handle that outlives the call and every
+    * open scope; the batch's own pins are freed once it has
+    * materialized.
     */
   def ingest(spark: SparkSession, labels: DataFrame, newProfiles: DataFrame,
       indexedProfiles: DataFrame, tableName: String, p: Int, q: Int): DataFrame = {
-    val (cross, intra) = batchEdges(spark, newProfiles, indexedProfiles, tableName, p, q)
-    // pin before the index mutates under the lazy plan
-    val updated = Checkpoints.pin(updateLabels(labels, cross.unionAll(intra)))
+    // pinned before the index mutates under the lazy plan
+    val updated = Checkpoints.detached {
+      val (cross, intra) = batchEdges(spark, newProfiles, indexedProfiles, tableName, p, q)
+      updateLabels(labels, cross.unionAll(intra))
+    }
     ProfileIndex.appendToIndex(newProfiles, tableName)
     updated
   }

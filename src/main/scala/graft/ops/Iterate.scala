@@ -73,8 +73,7 @@ private[ops] object Iterate {
     * iterate-until-empty plan node, so a driver-side count per round
     * is the minimum possible driver involvement, and it doubles as
     * the per-round lineage barrier (each state is pinned here, not in
-    * `step`; `init` must not be a checkpoint handle, since its pin is
-    * freed once superseded).
+    * `step`).
     *
     * Loop shape (exactly the while-loop it replaces): while the
     * previous measure is above `exitBelow`, rounds remain, and the
@@ -96,9 +95,10 @@ private[ops] object Iterate {
       converged = test(m, next, m2)
       // `state` is superseded: `next` is materialized and measured,
       // and no caller ever sees an intermediate round — free its
-      // blocks now (round 18 checkpoint hygiene; init's checkpoint is
-      // OURS, the caller's frame is untouched)
-      Checkpoints.free(state)
+      // blocks now (round 18 checkpoint hygiene), unless it is the
+      // caller's own handle (`init` pinned in place) or `step`
+      // returned it unchanged as `next`
+      if (!(state eq init) && !(next eq state)) Checkpoints.free(state)
       state = next
       m = m2
       round += 1

@@ -82,12 +82,6 @@ object SessionCache {
     }
   }
 
-  /** The live entries (the block-ownership specs tell them apart). */
-  private[graft] def live: Seq[DataFrame] = {
-    import scala.jdk.CollectionConverters._
-    cache.values.asScala.toSeq
-  }
-
   /** Drop every cached relation derived from `dir` — the hook for an
     * in-session input mutation (tests, long-lived ingest sessions).
     */

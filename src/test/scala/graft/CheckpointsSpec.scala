@@ -42,6 +42,9 @@ class CheckpointsSpec extends SparkSpec {
     val a = Seq((1L, "x"), (2L, "y")).toDF("id", "v").localCheckpoint()
     val b = Seq((1L, 10L), (2L, 20L)).toDF("id", "w").localCheckpoint()
     val derived = a.join(b, "id")
+    val pinned = ops.Checkpoints.pin(derived)
+    assert(!(pinned eq derived), "a join is not a bare handle: pin materializes it")
+    ops.Checkpoints.free(pinned)
     assert(derived.count() === 2L)
     ops.Checkpoints.free(derived)
     assert((leafRdds(a) ++ leafRdds(b))
@@ -106,6 +109,9 @@ class CheckpointsSpec extends SparkSpec {
   test("non-checkpoint frames are safe no-ops: scans, local relations, rdd-backed frames") {
     import spark.implicits._
     val local = Seq((1L, "a")).toDF("id", "v")
+    val pinnedLocal = ops.Checkpoints.pin(local)
+    assert(!(pinnedLocal eq local), "a local relation is not a bare handle: pin materializes it")
+    ops.Checkpoints.free(pinnedLocal)
     ops.Checkpoints.free(local) // LocalRelation: no LogicalRDD leaf
     assert(local.count() === 1L)
     val scan = io.Readers.table(spark, "/root/testdata/sf0.001", "region")

@@ -71,8 +71,16 @@ class ClusterMaintenanceSpec extends SparkSpec {
           .select("a_id", "b_id"))
       var corpus = b1
       for (b <- Seq(b2, b3)) {
-        labels = ops.ClusterMaintenance.ingest(spark, labels, profDf(b),
-          profDf(corpus), "pidx_cm", 19, 20)
+        val blocks = new RddBlocks
+        spark.sparkContext.addSparkListener(blocks)
+        try {
+          labels = ops.ClusterMaintenance.ingest(spark, labels, profDf(b),
+            profDf(corpus), "pidx_cm", 19, 20)
+          // the batch's own pins are freed once the labels materialized
+          blocks.assertNoneLive(labels.queryExecution.analyzed.collect {
+            case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+          }.toSet)
+        } finally spark.sparkContext.removeSparkListener(blocks)
         corpus = corpus ++ b
         val scratch = ops.Llm.connectedComponents(
           ops.Bipartite.deletionPairsCollapsed(profDf(corpus), 19, 20, 1)

@@ -14,8 +14,8 @@ class RddBlocks extends org.apache.spark.scheduler.SparkListener {
     }
   override def onUnpersistRDD(e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
     live.remove(e.rddId)
-  /** `exempt` names RDDs an owner outside the code under test keeps
-    * (SessionCache entries).
+  /** `exempt` names RDDs that outlive the code under test on purpose
+    * (SessionCache entries, a handle it returns).
     */
   def assertNoneLive(exempt: Int => Boolean = _ => false): Unit =
     org.scalatest.concurrent.Eventually.eventually(
